@@ -882,10 +882,12 @@ class DMatrix(
     * lower output tiles only and mirrors (i,j)→(j,i) in a narrow
     * flatMap afterwards: roughly HALF the input replication (each source
     * block ships (it+1)+(gT−jt) ≈ gT+1 tile copies instead of 2·gT),
-    * half the dgemm flops, half the output bytes — and the result is
-    * exactly symmetric by construction (the mirror IS the transpose of
-    * the computed block; the full product's independently-folded (j,i)
-    * only matched to roundoff). A single-block-column operand (the
+    * half the dgemm flops, half the output bytes — and on these paths
+    * the result is exactly symmetric by construction (the mirror IS the
+    * transpose of the computed block). The deep-fallback path below runs
+    * the full `transpose.multiply(this)`, whose independently folded
+    * (j,i) blocks match (i,j) only to roundoff (exactly for the
+    * integer-domain fixtures). A single-block-column operand (the
     * tall-skinny QᵀQ / VᵀV shape) never shuffles at all: per-block local
     * syrk partials reduce into the one output block. Absent blocks mean
     * zero (same convention as [[multiply]]), so a triangular factor's

@@ -525,10 +525,15 @@ object LinAlg {
           val bcPanel = spark.sparkContext.broadcast(solved)
           bcRelease = bcPanel
           val kk = k
+          // an absent panel block is zero: its trailing updates vanish,
+          // as on the tile path
           state.mapValues { b =>
-            if (b.bj == kk) bcPanel.value(b.bi)
-            else if (b.bj > kk)
-              cholTrailingBlock(b, bcPanel.value(b.bi), bcPanel.value(b.bj))
+            val p = bcPanel.value
+            if (b.bj == kk) p.getOrElse(b.bi, b)
+            else if (b.bj > kk) (p.get(b.bi), p.get(b.bj)) match {
+              case (Some(lik), Some(ljk)) => cholTrailingBlock(b, lik, ljk)
+              case _                      => b
+            }
             else b                               // finalized (bj < k)
           }
         } else {

@@ -4,7 +4,8 @@ import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import scala.concurrent.{Await, ExecutionContext, Future, Promise}
 import scala.concurrent.duration.{Duration, FiniteDuration}
-import scala.util.Try
+import scala.util.{Failure, Success, Try}
+import java.util.concurrent.atomic.AtomicInteger
 
 /** Futures facade — the rebuild of Wukong's Dask-Distributed client API
   * (SURVEY.md §2.B5): `submit` (client.py:1423), `map` (:1524), `gather`
@@ -78,9 +79,23 @@ final class Client(val spark: SparkSession)(implicit ec: ExecutionContext = Dela
     promises.map(p => new GraftFuture(p.future))
   }
 
-  /** gather(futures): block for all results, first failure rethrown. */
-  def gather[T](fs: Seq[GraftFuture[T]]): Seq[T] =
-    Await.result(Future.sequence(fs.map(_.underlying)), Duration.Inf)
+  /** gather(futures): block for all results, first failure rethrown.
+    * One countdown over the futures — the fan-in counter of SURVEY A3
+    * applied to the client side: each future's one completion callback
+    * decrements it, the last success or the first failure completes the
+    * wait, so a failure surfaces even while earlier futures are still
+    * running. */
+  def gather[T](fs: Seq[GraftFuture[T]]): Seq[T] = {
+    val all = Promise[Unit]()
+    val left = new AtomicInteger(fs.size)
+    if (fs.isEmpty) all.success(())
+    fs.foreach(_.underlying.onComplete {
+      case Success(_) => if (left.decrementAndGet() == 0) all.trySuccess(())
+      case Failure(e) => all.tryFailure(e)
+    }(ExecutionContext.parasitic))
+    Await.result(all.future, Duration.Inf)
+    fs.map(_.underlying.value.get.get)
+  }
 
   /** scatter(data): ship a value to every executor once — broadcast. */
   def scatter[T: scala.reflect.ClassTag](v: T): Broadcast[T] =

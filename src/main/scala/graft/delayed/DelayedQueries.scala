@@ -40,8 +40,9 @@ object DelayedQueries {
     * linear_dag.py shape, scaled 3,300×) fanned into one pairwise
     * reduction tree (fan_in.py / tree_reduction.py shape). Every node is
     * a driver-local integer op, so the measured cost IS the scheduler
-    * overhead: promise-cache insertion, future chaining, and level
-    * parallelism across the 100 chains. Chain k starts at k and adds a
+    * overhead: indexing the DAG, one dependency-counter decrement per
+    * edge, each chain run by one thread that becomes its next step, and
+    * the chains invoked in parallel on the pool. Chain k starts at k and adds a
     * seeded LCG step per level — the total is closed-form for the oracle. */
   def deepWideDag(s: SparkSession, d: String): DataFrame = {
     import s.implicits._

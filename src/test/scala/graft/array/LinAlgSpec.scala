@@ -162,6 +162,20 @@ class LinAlgSpec extends SparkSpec {
     assert(maxAbs(lTile - bchol(spd.toLocal)) < 1e-6)
   }
 
+  test("cholesky of a block-diagonal SPD matrix: absent panel blocks are zero on both paths") {
+    // off-diagonal blocks are ABSENT, not zero-filled (the block-sparse
+    // shape gramian and multiply can emit): every panel below the
+    // diagonal is missing, which the broadcast path must read as zero
+    val b0 = DMatrix.randInt(spark, 64, 64, 16, 31L, mod = 10L)   // nb=4
+    val full = b0.transpose.multiply(b0) + (DMatrix.eye(spark, 64, 16) * 640.0)
+    val spd = new DMatrix(full.blocks.filter(b => b.bi == b.bj), 64, 64, 16)
+    val want = bchol(spd.toLocal)
+    for (budget <- Seq(0L, Long.MaxValue)) {
+      val l = LinAlg.choleskyLower(spd, bcBudgetOverride = Some(budget)).toLocal
+      assert(maxAbs(l - want) < 1e-6, s"budget $budget drifted from Breeze cholesky")
+    }
+  }
+
   test("cholStepPathFor: bench shape broadcasts throughout; production flips at the budget") {
     val mb64 = 64L << 20
     // a18's shape (nb=8, bs=256): whole panel column is 4 MB — broadcast

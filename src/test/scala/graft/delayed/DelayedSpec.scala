@@ -3,7 +3,10 @@ package graft.delayed
 import graft.SparkSpec
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
+import java.util.concurrent.CountDownLatch
 import java.util.concurrent.atomic.AtomicInteger
+import scala.concurrent.{Await, ExecutionContext, Future, Promise}
+import scala.concurrent.duration._
 
 /** Delayed-DAG semantics vs an in-memory interpreter (SURVEY.md §5:
   * property-based mirror of the reference's delayed examples,
@@ -84,6 +87,61 @@ class DelayedSpec extends SparkSpec {
     assert(e.getMessage == "task exploded")
   }
 
+  test("computeAll: a repeated root and a root nested inside another run once each") {
+    val calls = new AtomicInteger(0)
+    val a = Delayed { calls.incrementAndGet(); 5L }
+    val b = a.map(_ * 3)
+    assert(Delayed.computeAll(Seq(b, b)) == Seq(15L, 15L))
+    assert(calls.get() == 1)
+    assert(Delayed.computeAll(Seq(b.map(_ + 1), a, b, Delayed.value(7L))) == Seq(16L, 5L, 15L, 7L))
+    assert(calls.get() == 2, "one run per node per computeAll")
+  }
+
+  test("concurrent fan-in: 64 parents released together feed one child exactly once") {
+    val gate = new CountDownLatch(1)
+    val childRuns = new AtomicInteger(0)
+    val parents = (0 until 64).map(i => Delayed { gate.await(); i.toLong })
+    val child = Delayed.sequence(parents).map { vs => childRuns.incrementAndGet(); vs }
+    val result = child.computeAsync()
+    Thread.sleep(100)   // let every pool thread block on the gate
+    gate.countDown()
+    assert(Await.result(result, 30.seconds) == (0 until 64).map(_.toLong))
+    assert(childRuns.get() == 1)
+  }
+
+  test("a failure while a sibling still runs: no dependent runs, the original exception returns") {
+    val siblingStarted = new CountDownLatch(1)
+    val siblingGo = new CountDownLatch(1)
+    val dependentRuns = new AtomicInteger(0)
+    val sibling = Delayed { siblingStarted.countDown(); siblingGo.await(); 1L }
+    val boom = Delayed[Long] {
+      siblingStarted.await()
+      throw new IllegalStateException("task exploded mid-flight")
+    }
+    val viaBoom = boom.map { x => dependentRuns.incrementAndGet(); x }
+    val joined = boom.zip(sibling) { (a, b) => dependentRuns.incrementAndGet(); a + b }
+    val root = viaBoom.zip(joined) { (a, b) => dependentRuns.incrementAndGet(); a + b }
+    val e = intercept[IllegalStateException](root.compute())
+    assert(e.getMessage == "task exploded mid-flight")
+    siblingGo.countDown()   // the sibling finishes after the failure surfaced
+    Thread.sleep(200)
+    assert(dependentRuns.get() == 0, "a dependent of the failed node ran")
+  }
+
+  test("a 100,000-deep chain evaluates through compute and DaskGraph.get; cycles still fail") {
+    import DaskGraph._
+    val depth = 100000
+    val chain = (0 until depth).foldLeft(Delayed.value(0L))((d, _) => d.map(_ + 1))
+    assert(chain.compute() == depth.toLong)
+    val dsk: Map[String, Any] = Map("k0" -> 0L) ++ (1 to depth).map(i =>
+      s"k$i" -> GraphTask(args => args.head.asInstanceOf[Long] + 1, Seq(s"k${i - 1}")))
+    assert(DaskGraph.get(dsk, Seq(s"k$depth")) == Seq(depth.toLong))
+    val cyclic = Map[String, Any](
+      "a" -> GraphTask(_.head, Seq("b")), "b" -> GraphTask(_.head, Seq("c")), "c" -> "a")
+    val e = intercept[IllegalArgumentException](DaskGraph.get(cyclic, Seq("a")))
+    assert(e.getMessage.contains("cycle at a"))
+  }
+
   test("raw graph get(dsk, keys) with packed args and aliases") {
     import DaskGraph._
     val dsk = Map[String, Any](
@@ -106,6 +164,15 @@ class DelayedSpec extends SparkSpec {
     val bad = client.submit[Int] { throw new RuntimeException("remote failure") }
     val err = intercept[RuntimeException](client.gather(Seq(bad)))
     assert(err.getMessage == "remote failure")
+  }
+
+  test("client: gather fails fast on a failure behind a future that never completes") {
+    val client = new Client(spark)
+    val never = new GraftFuture(Promise[Int]().future)
+    val bad = client.submit[Int] { throw new IllegalArgumentException("late failure") }
+    val waiting = Future(client.gather(Seq(never, bad)))(ExecutionContext.global)
+    val e = intercept[IllegalArgumentException](Await.result(waiting, 10.seconds))
+    assert(e.getMessage == "late failure")
   }
 
   test("client: a 10⁶-element map executes as ONE Spark job, not 10⁶ driver futures") {
