@@ -1923,9 +1923,28 @@ object DMatrix {
   def eye(spark: SparkSession, n: Long, bs: Int): DMatrix =
     tabulate(spark, n, n, bs)((i, j) => if (i == j) 1.0 else 0.0)
 
-  /** In-memory local matrix → distributed (the `da.asarray` analog). */
-  def fromLocal(spark: SparkSession, local: BDM[Double], bs: Int): DMatrix =
-    tabulate(spark, local.rows, local.cols, bs)((i, j) => local(i.toInt, j.toInt))
+  /** In-memory local matrix → distributed (the `da.asarray` analog). The
+    * driver slices the matrix into its blocks and each task receives only
+    * the blocks of its own partition (a closure over `local` would ship
+    * the whole matrix to every task). Partition count matches
+    * [[tabulate]]'s. */
+  def fromLocal(spark: SparkSession, local: BDM[Double], bs: Int): DMatrix = {
+    import spark.implicits._
+    val m = local.rows; val n = local.cols
+    val blocks = for (bi <- 0 until nBlocks(m, bs); bj <- 0 until nBlocks(n, bs)) yield {
+      val rows = blockDim(m, bs, bi); val cols = blockDim(n, bs, bj)
+      val data = new Array[Double](rows * cols)
+      var j = 0
+      while (j < cols) {
+        var i = 0
+        while (i < rows) { data(i + j * rows) = local(bi * bs + i, bj * bs + j); i += 1 }
+        j += 1
+      }
+      Block(bi, bj, rows, cols, data)
+    }
+    val rdd = spark.sparkContext.parallelize(blocks, spark.sparkContext.defaultParallelism)
+    new DMatrix(spark.createDataset(rdd), m, n, bs)
+  }
 
   /** Ternary select `da.where(cond, a, b)` over three identically-
     * chunked matrices: ONE co-partitioned 3-way join on the block key

@@ -1,6 +1,7 @@
 package graft.array
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.Partitioner
+import org.apache.spark.rdd.RDD
 import breeze.linalg.{DenseMatrix => BDM, DenseVector => BDV, qr, svd, cholesky => bchol, inv}
 
 /** Distributed linear-algebra factorizations over [[DMatrix]] — the
@@ -12,10 +13,16 @@ import breeze.linalg.{DenseMatrix => BDM, DenseVector => BDV, qr, svd, cholesky 
   *                   10k×10k, README.md:243-247)
   *   - blocked Cholesky (`da.linalg.cholesky(X, lower=False)`,
   *                   examples.rst:84-100)
+  *   - blocked LU (`da.linalg.lu`), triangular solves, inverse
   *
-  * Everything distributed is a treeAggregate or a keyed shuffle over
-  * blocks; only n×n-small factors (R, B, U_r) ever live on the driver —
-  * never a full matrix. That is the property that survives 100 TB.
+  * Everything distributed is a treeAggregate, a keyed shuffle over
+  * blocks, or a map over blocks against a broadcast. The driver holds
+  * only factors that are small by construction or by a byte budget,
+  * never a full matrix: n×n factors (R, B, U_r), svdCompressed's l-wide
+  * sketch factors when max(m, n)·l·8 bytes fit `SPARK_GRAFT_BC_GEMM_BYTES`,
+  * and one Cholesky/LU panel when it fits `SPARK_GRAFT_CHOL_BC_BYTES`.
+  * Past those budgets the distributed paths take over. That is the
+  * property that survives 100 TB.
   */
 object LinAlg {
 
@@ -292,40 +299,124 @@ object LinAlg {
     (new DMatrix(uBlocks, a.nRows, a.nCols, a.blockSize), s, v)
   }
 
+  /** Which pipeline [[svdCompressed]] runs, as a pure function of the
+    * sketch shape (LinAlgSpec pins it — the [[DMatrix.multiplyPathFor]]
+    * discipline). `driver`: the tallest l-wide factor, max(m, n)×l
+    * doubles, fits the skinny-GEMM broadcast budget
+    * (`SPARK_GRAFT_BC_GEMM_BYTES`), so every factor stays a local matrix
+    * and each product with A is one job. `distributed`: the factors are
+    * pinned DMatrices and every QR is a TSQR. */
+  private[graft] def sketchPathFor(m: Long, n: Long, l: Int, budget: Long): String = {
+    val cells = math.max(m, n) * l
+    if (cells <= Int.MaxValue && 8L * cells <= budget) "driver" else "distributed"
+  }
+
+  /** One job over A's blocks against a local l-wide factor X: A·X for an
+    * n×l X (`left` false, result m×l) or Xᵀ·A for an m×l X (`left` true,
+    * result l×n). X ships as one broadcast sliced by A's block index, each
+    * block dgemms map-side, and only the l-wide partials reduce by block
+    * key on their way back to the driver; A never moves. Absent blocks
+    * contribute nothing (the [[DMatrix.multiply]] convention). */
+  private def sketchProduct(a: DMatrix, x: BDM[Double], left: Boolean): BDM[Double] = {
+    val bs = a.blockSize; val l = x.cols
+    val nSlices = if (left) a.nbRows else a.nbCols
+    // slice s holds X's rows of block index s: as l×rows (Xᵀ, left) or
+    // rows×l (right), column-major
+    val slices = Array.tabulate(nSlices) { s =>
+      val r0 = s * bs; val rows = DMatrix.blockDim(x.rows.toLong, bs, s)
+      val xs = x(r0 until r0 + rows, ::)
+      (if (left) xs.t.copy else xs.copy).data
+    }
+    val sc = a.blocks.sparkSession.sparkContext
+    val bc = sc.broadcast(slices)
+    val outStripes = if (left) a.nbCols else a.nbRows
+    val outParts = math.max(1, math.min(a.blocks.rdd.getNumPartitions, outStripes))
+    val partials = a.blocks.rdd.map { b =>
+      if (left) (b.bj, Gemm.multiply(bc.value(b.bi), l, b.rows, b.data, b.cols))
+      else (b.bi, Gemm.multiply(b.data, b.rows, b.cols, bc.value(b.bj), l))
+    }.reduceByKey(DMatrix.addInto _, outParts).collect()
+    bc.unpersist(false)
+    val out = if (left) BDM.zeros[Double](l, a.nCols.toInt) else BDM.zeros[Double](a.nRows.toInt, l)
+    partials.foreach { case (s, data) =>
+      val r0 = s * bs
+      if (left) out(::, r0 until r0 + data.length / l) := new BDM(l, data.length / l, data)
+      else out(r0 until r0 + data.length / l, ::) := new BDM(data.length / l, l, data)
+    }
+    out
+  }
+
+  /** Orthonormal basis of a local tall matrix by Householder QR, with the
+    * [[fixSigns]] normalization moved onto Q's columns: R's diagonal is
+    * non-negative, so Q is unique for a full-rank input and matches the
+    * distributed pipeline's A·R⁻¹ up to roundoff. */
+  private def orthonormalCols(y: BDM[Double]): BDM[Double] = {
+    val qr.QR(q, r) = qr.reduced(y)
+    var i = 0
+    while (i < r.cols) {
+      if (r(i, i) < 0) q(::, i) :*= -1.0
+      i += 1
+    }
+    q
+  }
+
   /** Randomized (compressed) SVD — the reference's `svd_compressed(X, k)`
     * on square-ish matrices: project onto a seeded random n×(k+p) sketch,
-    * orthonormalize (TSQR), form B = Qᵀ·A, finish with a local SVD of B.
+    * orthonormalize, form B = Qᵀ·A, finish with a local SVD of B.
     *
-    * Scale shape (VERDICT r14 finding #1 fixed): every product with a
-    * skinny factor — A·Ω, A·Q, Aᵀ·Q, and Qᵀ·A — routes through
-    * [[DMatrix.multiply]]'s broadcast-skinny paths, so the fat matrix A
-    * NEVER crosses an exchange: the ~1 MB sketch factor broadcasts, the
-    * dgemms run map-side over A's resident blocks, and only l-wide
-    * block partials shuffle (megabytes total, vs six full-A shuffles —
-    * 1.1 GB at the 10k² flagship, 80 GB+ at 100× — before).
-    *
-    * Every l-wide intermediate (y, z, each q) is EAGERLY PINNED
-    * (persist + materialize): each is consumed 2-3 times — tsqr pass,
-    * Q-map pass, next product — and without pinning each consumption
-    * re-walks the lineage back through the previous full-A products
-    * ~25× per run instead of the structural ~7 (measured on a16; see
-    * BENCH_NOTES round 9). The pins are tiny — max(m,n)×l doubles — and
-    * each is RELEASED the moment its successor materializes (r14
-    * directive #3: the old end-of-call release held ~10 cached
-    * DMatrices live across the whole run); only the final Q survives
-    * until the returned lazy U is cut free of it. */
+    * Every product with A reads A's resident blocks against a broadcast
+    * l-wide factor, so the fat matrix never crosses an exchange; only
+    * l-wide block partials shuffle. Two pipelines, chosen by
+    * [[sketchPathFor]]:
+    *  - `driver` (every factor within `SPARK_GRAFT_BC_GEMM_BYTES`, which
+    *    covers the a16 flagship's 400 KB sketch): Ω, Y, Q, Z and B are
+    *    local Breeze matrices. Each product with A is ONE job
+    *    ([[sketchProduct]]), each QR a local Householder QR, and
+    *    U = Q·U_B returns through [[DMatrix.fromLocal]] — 2 + 2·nPowerIter
+    *    jobs in all, nothing cached.
+    *  - `distributed` (sketches over the budget): every l-wide
+    *    intermediate is a DMatrix, EAGERLY PINNED (persist + materialize)
+    *    because each is consumed 2-3 times (TSQR pass, Q-map pass, next
+    *    product) and released as soon as its successor materializes; each
+    *    QR is [[qrFactor]]'s TSQR, and U's lineage is cut free of Q by an
+    *    eager localCheckpoint.
+    * `bcBudgetOverride` pins the budget (tests sweep both pipelines). */
   def svdCompressed(a: DMatrix, k: Int, oversample: Int = 10, seed: Long = 1234L,
-                    nPowerIter: Int = 2): (DMatrix, BDV[Double], BDM[Double]) = {
-    val spark = a.blocks.sparkSession
+                    nPowerIter: Int = 2,
+                    bcBudgetOverride: Option[Long] = None): (DMatrix, BDV[Double], BDM[Double]) = {
     val l = math.min(k + oversample, math.min(a.nRows, a.nCols).toInt)
     require(l <= a.blockSize, "sketch width must fit one block column")
-    val timing = sys.env.contains("GRAFT_LINALG_TIMING")
-    var t0 = System.nanoTime()
-    def phase(label: String): Unit = if (timing) {
-      val now = System.nanoTime()
-      System.err.println(f"[rsvd-phase] $label: ${(now - t0) / 1e9}%.2f s")
-      t0 = now
+    val budget = bcBudgetOverride.getOrElse(DMatrix.bcGemmBytes)
+    if (sketchPathFor(a.nRows, a.nCols, l, budget) == "driver")
+      svdCompressedLocal(a, k, l, seed, nPowerIter)
+    else svdCompressedPinned(a, k, l, seed, nPowerIter)
+  }
+
+  /** [[svdCompressed]]'s `driver` pipeline: one job per pass over A. */
+  private def svdCompressedLocal(a: DMatrix, k: Int, l: Int, seed: Long,
+                                 nPowerIter: Int): (DMatrix, BDV[Double], BDM[Double]) = {
+    val omega = BDM.tabulate(a.nCols.toInt, l)(
+      (i, j) => DMatrix.mixedUniform(i.toLong, j.toLong, l, seed) - 0.5)
+    var q = orthonormalCols(sketchProduct(a, omega, left = false))    // m × l
+    // subspace (power) iteration — dask's n_power_iter: Z = AᵀQ is the
+    // transpose of the Qᵀ·A pass
+    var t = 0
+    while (t < nPowerIter) {
+      val qz = orthonormalCols(sketchProduct(a, q, left = true).t.copy) // n × l
+      q = orthonormalCols(sketchProduct(a, qz, left = false))
+      t += 1
     }
+    val b = sketchProduct(a, q, left = true)                         // l × n
+    val svd.SVD(uB, s, vt) = robustSvd(b)
+    val u = q * uB(::, 0 until k)
+    (DMatrix.fromLocal(a.blocks.sparkSession, u, a.blockSize),
+     s(0 until k).copy, vt(0 until k, ::).t.copy)
+  }
+
+  /** [[svdCompressed]]'s `distributed` pipeline, for sketches over the
+    * broadcast budget. */
+  private def svdCompressedPinned(a: DMatrix, k: Int, l: Int, seed: Long,
+                                  nPowerIter: Int): (DMatrix, BDV[Double], BDM[Double]) = {
+    val spark = a.blocks.sparkSession
     def pin(x: DMatrix): DMatrix = {
       x.persist()
       x.blocks.rdd.count(): Unit   // eager: all consumers hit the cache
@@ -334,43 +425,32 @@ object LinAlg {
     val omega = DMatrix.tabulate(spark, a.nCols, l, a.blockSize)(
       (i, j) => DMatrix.mixedUniform(i, j, l, seed) - 0.5)
     val y0 = pin(a.multiply(omega))               // m × l, tall-skinny
-    phase("sketch Y0 = A*Omega")
-    // subspace (power) iteration — dask's n_power_iter: sharpens the
-    // captured spectrum when singular values decay slowly; QR between
-    // multiplies keeps the sketch numerically orthonormal. Each pinned
-    // intermediate is consumed only by the (already materialized) next
-    // pin — the skinny multiplies collect their broadcast operand at
-    // call time — so it unpersists immediately after.
+    // Each pinned intermediate is consumed only by the (already
+    // materialized) next pin — the skinny multiplies collect their
+    // broadcast operand at call time — so it unpersists immediately after.
     var q = pin(qrFactor(y0)._1)
     y0.unpersist()
-    phase("QR(Y0)")
     var t = 0
     while (t < nPowerIter) {
       val z = pin(a.transpose.multiply(q))        // n × l
       q.unpersist()
-      phase(s"power $t: Z = At*Q")
       val qz = pin(qrFactor(z)._1)
       z.unpersist()
       val y = pin(a.multiply(qz))                 // m × l
       qz.unpersist()
-      phase(s"power $t: Y = A*QR(Z).Q")
       q = pin(qrFactor(y)._1)
       y.unpersist()
-      phase(s"power $t: QR(Y)")
       t += 1
     }
     // B = Qᵀ·A through the broadcast-skinny-left multiply: Qᵀ is l×m in
-    // a single block-row (~1 MB at the flagship sketch), so A's blocks
-    // stay put — partials key on A's column-block index. The l×n result
-    // is driver-sized by construction (same bytes the old per-bj
-    // partials collect moved).
+    // a single block-row, so A's blocks stay put — partials key on A's
+    // column-block index. The l×n result is driver-sized by construction.
     val bs = a.blockSize; val nC = a.nCols
     val bMat = q.transpose.multiply(a)
     val bLocal = BDM.zeros[Double](l, nC.toInt)
     bMat.blocks.collect().foreach { b =>
       bLocal(::, b.bj * bs until b.bj * bs + b.cols) := b.toBreeze
     }
-    phase("B = Qt*A + collect")
     val svd.SVD(uB, s, vt) = robustSvd(bLocal)
     val uBk = uB(::, 0 until k).copy              // l × k, broadcast in closure
     import spark.implicits._
@@ -380,47 +460,14 @@ object LinAlg {
     }
     // Eager localCheckpoint cuts U's lineage free of Q so the final pin
     // can be released here too — a Dataset persist lives in the session
-    // CacheManager forever (each svdCompressed call would leak one
-    // cached Q for the JVM lifetime), while localCheckpoint blocks are
-    // reaped by the ContextCleaner once the result is unreferenced.
+    // CacheManager forever (each call would leak one cached Q for the JVM
+    // lifetime), while localCheckpoint blocks are reaped by the
+    // ContextCleaner once the result is unreferenced.
     val u = new DMatrix(uBlocks.localCheckpoint(), a.nRows, k, a.blockSize)
     q.unpersist()
     (u, s(0 until k).copy, vt(0 until k, ::).t.copy)
   }
 
-  /** Blocked right-looking Cholesky (reference `da.linalg.cholesky`,
-    * examples.rst:84-100): nb sequential panel steps — inherently
-    * iterative, exactly as the reference ran it (deep DAG). Per step:
-    * local chol of the bs×bs diagonal block, distributed panel solve,
-    * distributed rank-bs trailing update. Lineage is truncated with
-    * localCheckpoint every few steps (SURVEY §7.5 known-hard #5).
-    * Returns the lower factor L.
-    *
-    * Scale shape (r15 rewrite; CholeskyProbe measured the old two-join
-    * update moving nb³·bs²-law bytes — 148 MB for a 34 MB matrix at
-    * nb=8, ×7.7 for ×4 data at nb=16): the state matrix now lives on a
-    * FIXED block→tile partitioner and NEVER crosses an exchange after
-    * the single entry shuffle — panel solve and L_kk replacement are
-    * mapValues, the trailing update is a zipPartitions against
-    * tile-keyed PANEL COPIES (only the panel moves, one copy per t-wide
-    * tile instead of per block — the SUMMA replication law, ÷t), and
-    * the per-step diagonal pull is a partitioner-routed single-partition
-    * `lookup`, not an nb-task filter scan.
-    *
-    * Panel broadcast within budget (r16, guide §3.1 — the r15 VERDICT
-    * directive #2): a step whose REMAINING panel column ((nb−k)·bs²·8 B)
-    * fits `SPARK_GRAFT_CHOL_BC_BYTES` (default 64 MB, the same
-    * autoBroadcastJoinThreshold-style contract as the broadcast-GEMM
-    * budget) broadcasts the SOLVED panel instead of shuffling tile-keyed
-    * copies: the trailing update becomes a single narrow `mapValues`
-    * (zero shuffle, and the per-step diagonal lookup job disappears —
-    * the panel collect carries the diagonal block). Above the budget the
-    * tile path runs unchanged, so a production factorization starts on
-    * tile shuffles and flips to broadcast as the trailing panel shrinks
-    * under the budget. Both paths drive the same dgemm with the same
-    * explicit small transpose, so the factor is BIT-IDENTICAL across
-    * paths (LinAlgSpec pins budget∈{0,∞} ≡ Breeze); the dispatch rule is
-    * the pure function [[LinAlg.cholStepPathFor]]. */
   /** Which path step k of an nb-step blocked factorization takes, as a
     * pure function of the grid (unit-testable — LinAlgSpec pins the
     * bench shape to broadcast throughout and the production shape to a
@@ -428,7 +475,46 @@ object LinAlg {
     * plan; same discipline as [[DMatrix.multiplyPathFor]]). The panel
     * column at step k is (nb−k) blocks of bs²·8 bytes. */
   private[graft] def cholStepPathFor(nb: Int, k: Int, bs: Int, budget: Long): String =
-    if ((nb - k).toLong * bs * bs * 8 <= budget) "broadcast" else "tile-shuffle"
+    if (panelFits(nb - k, bs, budget)) "broadcast" else "tile-shuffle"
+
+  /** [[cholStepPathFor]]'s rule for [[lu]]: step k's panel is column k
+    * (nb−k blocks) plus row k (nb−k−1 blocks). */
+  private[graft] def luStepPathFor(nb: Int, k: Int, bs: Int, budget: Long): String =
+    if (panelFits(2 * (nb - k) - 1, bs, budget)) "broadcast" else "two-join"
+
+  /** The shared step budget: a panel of `panelBlocks` bs×bs blocks
+    * broadcasts when its dense bytes fit `budget`. */
+  private def panelFits(panelBlocks: Int, bs: Int, budget: Long): Boolean =
+    panelBlocks.toLong * bs * bs * 8 <= budget
+
+  /** Step budget of the blocked factorizations: `SPARK_GRAFT_CHOL_BC_BYTES`,
+    * default 64 MB. */
+  private def factorBcBytes: Long =
+    sys.env.get("SPARK_GRAFT_CHOL_BC_BYTES").map(_.toLong).getOrElse(64L << 20)
+
+  /** Block-key state of a blocked factorization: A's blocks that `keep`
+    * selects, keyed by (bi, bj), in ONE shuffle onto `part` — plus an
+    * all-zero block for every kept key A lacks. An absent block is zero
+    * in A but not in its factors: a trailing update L_ik·L_jkᵀ (or
+    * L_ik·U_kj) fills it in, so it must exist to receive that update.
+    * Each partition adds the missing keys it owns after reading its
+    * shuffle input, so the fill adds no stage and no job. */
+  private def factorState(a: DMatrix, part: Partitioner,
+                          keep: (Int, Int) => Boolean): RDD[((Int, Int), Block)] = {
+    val nb = a.nbRows; val n = a.nRows; val bs = a.blockSize
+    a.blocks.rdd.filter(b => keep(b.bi, b.bj)).map(b => ((b.bi, b.bj), b))
+      .partitionBy(part)
+      .mapPartitionsWithIndex({ (pid, it) =>
+        val seen = new java.util.HashSet[(Int, Int)]()
+        it.map { kv => seen.add(kv._1); kv } ++ (for {
+          i <- Iterator.range(0, nb); j <- Iterator.range(0, nb)
+          if keep(i, j) && part.getPartition((i, j)) == pid && !seen.contains((i, j))
+        } yield {
+          val rows = DMatrix.blockDim(n, bs, i); val cols = DMatrix.blockDim(n, bs, j)
+          (i, j) -> Block(i, j, rows, cols, new Array[Double](rows * cols))
+        })
+      }, preservesPartitioning = true)
+  }
 
   /** out = b − lik·ljkᵀ — the trailing-update dgemm (α=−1, β=1) with an
     * explicit small transpose of ljk (breeze's implicit-T multiply would
@@ -452,6 +538,40 @@ object LinAlg {
     b.copy(data = out)
   }
 
+  /** Blocked right-looking Cholesky (reference `da.linalg.cholesky`,
+    * examples.rst:84-100): nb sequential panel steps — inherently
+    * iterative, exactly as the reference ran it (deep DAG). Per step:
+    * local chol of the bs×bs diagonal block, distributed panel solve,
+    * distributed rank-bs trailing update. Lineage is truncated with
+    * localCheckpoint every few steps (SURVEY §7.5 known-hard #5).
+    * Returns the lower factor L.
+    *
+    * Scale shape (r15 rewrite; CholeskyProbe measured the old two-join
+    * update moving nb³·bs²-law bytes — 148 MB for a 34 MB matrix at
+    * nb=8, ×7.7 for ×4 data at nb=16): the state matrix now lives on a
+    * FIXED block→tile partitioner and NEVER crosses an exchange after
+    * the single entry shuffle (which also fills absent lower blocks with
+    * zeros — [[factorState]]) — panel solve and L_kk replacement are
+    * mapValues, the trailing update is a zipPartitions against
+    * tile-keyed PANEL COPIES (only the panel moves, one copy per t-wide
+    * tile instead of per block — the SUMMA replication law, ÷t), and
+    * the per-step diagonal pull is a partitioner-routed single-partition
+    * `lookup`, not an nb-task filter scan.
+    *
+    * Panel broadcast within budget (r16, guide §3.1 — the r15 VERDICT
+    * directive #2): a step whose REMAINING panel column ((nb−k)·bs²·8 B)
+    * fits `SPARK_GRAFT_CHOL_BC_BYTES` (default 64 MB, the same
+    * autoBroadcastJoinThreshold-style contract as the broadcast-GEMM
+    * budget) broadcasts the SOLVED panel instead of shuffling tile-keyed
+    * copies: the trailing update becomes a single narrow `mapValues`
+    * (zero shuffle, and the per-step diagonal lookup job disappears —
+    * the panel collect carries the diagonal block). Above the budget the
+    * tile path runs unchanged, so a production factorization starts on
+    * tile shuffles and flips to broadcast as the trailing panel shrinks
+    * under the budget. Both paths drive the same dgemm with the same
+    * explicit small transpose, so the factor is BIT-IDENTICAL across
+    * paths (LinAlgSpec pins budget∈{0,∞} ≡ Breeze); the dispatch rule is
+    * the pure function [[LinAlg.cholStepPathFor]]. */
   def choleskyLower(a: DMatrix, checkpointEvery: Int = 6,
                     tileOverride: Option[Int] = None,
                     bcBudgetOverride: Option[Long] = None): DMatrix = {
@@ -477,21 +597,13 @@ object LinAlg {
     // One partitioner for both sides: state keys are block coords, panel
     // copies are keyed by their target tile's REPRESENTATIVE block
     // (it·t, jt·t) — the same ÷tile landing spot.
-    val part = new org.apache.spark.Partitioner {
-      def numPartitions: Int = nParts
-      def getPartition(key: Any): Int = key match {
-        case (i: Int, j: Int) =>
-          java.lang.Math.floorMod((i / tile) * 131071 + (j / tile), nParts)
-      }
-    }
-    // keep only the lower triangle; key by (bi, bj); ONE entry shuffle
-    // onto the fixed partitioner — the state never moves again.
-    var state = a.blocks.rdd.filter(b => b.bi >= b.bj)
-      .map(b => ((b.bi, b.bj), b)).partitionBy(part).cache()
+    val part = new TilePartitioner(nParts, tile)
+    // keep only the lower triangle (absent blocks filled with zeros);
+    // ONE entry shuffle onto the fixed partitioner — the state never
+    // moves again.
+    var state = factorState(a, part, (i, j) => i >= j).cache()
     var prev = state
-    val bcBudget = bcBudgetOverride
-      .orElse(sys.env.get("SPARK_GRAFT_CHOL_BC_BYTES").map(_.toLong))
-      .getOrElse(64L << 20)
+    val bcBudget = bcBudgetOverride.getOrElse(factorBcBytes)
     def stepPath(k: Int): String = cholStepPathFor(nb, k, bs, bcBudget)
     // Column-(k) panel collected by the PREVIOUS step's materialization
     // job when that step already knew step k would broadcast — one
@@ -525,15 +637,11 @@ object LinAlg {
           val bcPanel = spark.sparkContext.broadcast(solved)
           bcRelease = bcPanel
           val kk = k
-          // an absent panel block is zero: its trailing updates vanish,
-          // as on the tile path
+          // factorState filled every absent block, so the panel is complete
           state.mapValues { b =>
             val p = bcPanel.value
-            if (b.bj == kk) p.getOrElse(b.bi, b)
-            else if (b.bj > kk) (p.get(b.bi), p.get(b.bj)) match {
-              case (Some(lik), Some(ljk)) => cholTrailingBlock(b, lik, ljk)
-              case _                      => b
-            }
+            if (b.bj == kk) p(b.bi)
+            else if (b.bj > kk) cholTrailingBlock(b, p(b.bi), p(b.bj))
             else b                               // finalized (bj < k)
           }
         } else {
@@ -574,8 +682,7 @@ object LinAlg {
                 else {
                   val lik = left.get(((b.bj / tile).toLong << 32) | b.bi)
                   val ljk = right.get(((b.bi / tile).toLong << 32) | b.bj)
-                  if (lik == null || ljk == null) (key, b)
-                  else (key, cholTrailingBlock(b, lik, ljk))
+                  (key, cholTrailingBlock(b, lik, ljk))
                 }
               }
           }
@@ -661,75 +768,122 @@ object LinAlg {
     (l, u)
   }
 
+  /** Step k of [[lu]]: the diagonal tile's local LU, and the panel solve
+    * it drives — L_ik = A_ik·U_kk⁻¹ below the diagonal, U_kj = L_kk⁻¹·A_kj
+    * right of it, and the packed Doolittle tile (strict-lower L_kk + U_kk)
+    * on it; every other block passes through. One object serves both step
+    * paths, so a panel is bit-identical whether the driver or an executor
+    * solved it. */
+  private final case class LuStep(k: Int, packed: Array[Double],
+                                  invLkk: BDM[Double], invUkk: BDM[Double]) {
+    def solve(b: Block): Block =
+      if (b.bi == k && b.bj == k) b.copy(data = packed)
+      else if (b.bj == k && b.bi > k) b.copy(data = (b.toBreeze * invUkk).data)
+      else if (b.bi == k && b.bj > k) b.copy(data = (invLkk * b.toBreeze).data)
+      else b
+  }
+
+  private def luStep(k: Int, diag: Block): LuStep = {
+    val (lkk, ukk) = localLu(diag.toBreeze)
+    val packed = ukk.copy
+    var j = 0
+    while (j < packed.cols) {
+      var i = j + 1
+      while (i < packed.rows) { packed(i, j) = lkk(i, j); i += 1 }
+      j += 1
+    }
+    LuStep(k, packed.data, inv(lkk), inv(ukk))
+  }
+
+  /** out = b − lik·ukj — the trailing-update dgemm (α=−1, β=1). ONE body
+    * shared by the two-join and broadcast paths so the factors are
+    * bit-identical whichever path delivered the panels. */
+  private def luTrailingBlock(b: Block, lik: Block, ukj: Block): Block = {
+    val out = b.data.clone()
+    Gemm.dgemm(b.rows, b.cols, lik.cols, -1.0, lik.data, 0, lik.rows,
+      ukj.data, 0, ukj.rows, 1.0, out, 0, b.rows)
+    b.copy(data = out)
+  }
+
   /** Blocked right-looking LU without pivoting — dask `da.linalg.lu`
     * (dask also factorizes blockwise with no cross-chunk pivoting and
     * documents the square-chunked, well-conditioned contract). Same
-    * distributed shape as [[choleskyLower]]: nb sequential panel steps;
-    * per step a bs×bs-local tile LU, one distributed map finishing the
-    * panel column (L_ik = A_ik·U_kk⁻¹) and panel row (U_kj = L_kk⁻¹·A_kj),
-    * and a rank-bs trailing update A_ij −= L_ik·U_kj via two keyed joins —
-    * panels are never broadcast (they are m×bs and would not fit at
-    * scale), and lineage is truncated with localCheckpoint periodically.
-    * Returns (L unit-lower, U upper) as sparse block sets (absent blocks
-    * are zero, like [[DMatrix.tril]]'s output). */
-  def lu(a: DMatrix, checkpointEvery: Int = 6): (DMatrix, DMatrix) = {
+    * design as [[choleskyLower]]: ONE entry shuffle onto a fixed
+    * partitioner (absent blocks become zero blocks there, since the
+    * trailing updates fill them in), then nb sequential panel steps, each
+    * materialized by one job that also collects the next step's panel
+    * when that step broadcasts. Per step the path is
+    * [[luStepPathFor]]'s:
+    *  - `broadcast` (the panel — column k plus row k, (2(nb−k)−1)·bs²·8
+    *    bytes — fits `SPARK_GRAFT_CHOL_BC_BYTES`): the driver factors the
+    *    diagonal tile, solves the panel ([[LuStep]]) and broadcasts it;
+    *    the trailing update A_ij −= L_ik·U_kj is one narrow `mapValues`.
+    *    A factorization that broadcasts throughout runs nb + 1 jobs.
+    *  - `two-join` (panels over the budget): the panel is solved on the
+    *    executors and the trailing blocks join the column panel on i,
+    *    then the row panel on j.
+    * Both paths solve with the same [[LuStep]] and update with the same
+    * dgemm ([[luTrailingBlock]]), so the factors are bit-identical across
+    * budgets (LinAlgSpec pins it). Lineage is truncated with
+    * localCheckpoint every `checkpointEvery` steps. Returns (L unit-lower,
+    * U upper) as block sets over their triangles. */
+  def lu(a: DMatrix, checkpointEvery: Int = 6,
+         bcBudgetOverride: Option[Long] = None): (DMatrix, DMatrix) = {
     require(a.nRows == a.nCols, "lu needs a square matrix")
     val spark = a.blocks.sparkSession
+    val sc = spark.sparkContext
+    val bs = a.blockSize
     val nb = a.nbRows
-    val nParts = math.max(2, math.min(spark.sparkContext.defaultParallelism, nb * nb))
-    var state = a.blocks.rdd.map(b => ((b.bi, b.bj), b)).cache()
+    val nParts = math.max(2, math.min(sc.defaultParallelism, nb * nb))
+    var state = factorState(a, new TilePartitioner(nParts, 1), (_, _) => true).cache()
     var prev = state
+    val bcBudget = bcBudgetOverride.getOrElse(factorBcBytes)
+    def stepPath(k: Int): String = luStepPathFor(nb, k, bs, bcBudget)
+    def panelOf(rdd: RDD[((Int, Int), Block)], k: Int): Map[(Int, Int), Block] =
+      rdd.flatMap { case ((i, j), b) =>
+        if ((j == k && i >= k) || (i == k && j > k)) Iterator(b) else Iterator.empty
+      }.collect().map(b => (b.bi, b.bj) -> b).toMap
+    // step k's panel, collected by the job that materialized step k−1
+    var panelNext: Map[(Int, Int), Block] = null
     for (k <- 0 until nb) {
-      val diag = state.filter(_._1 == (k, k)).values.first()
-      val (lkk, ukk) = localLu(new BDM(diag.rows, diag.cols, diag.data))
-      val invUkk = inv(ukk)            // bs×bs-small, shipped in closures
-      val invLkk = inv(lkk)
-      val updated = state.flatMap { case ((bi, bj), b) =>
-        if (bi == k && bj == k) None                       // replaced below
-        else if (bj == k && bi > k) {                      // panel column
-          val lik = b.toBreeze * invUkk
-          Some(((bi, bj), b.copy(data = lik.data)))
-        } else if (bi == k && bj > k) {                    // panel row
-          val ukj = invLkk * b.toBreeze
-          Some(((bi, bj), b.copy(data = ukj.data)))
-        } else Some(((bi, bj), b))
-      }
-      val colPanel = updated.filter { case ((bi, bj), _) => bj == k && bi > k }
-        .map { case ((bi, _), b) => (bi, b) }
-      val rowPanel = updated.filter { case ((bi, bj), _) => bi == k && bj > k }
-        .map { case ((_, bj), b) => (bj, b) }
-      val settled = updated.filter { case ((bi, bj), _) => bi <= k || bj <= k }
-      // A_ij -= L_ik · U_kj for i > k, j > k: join on i, then on j
-      val newTrailing = updated.filter { case ((bi, bj), _) => bi > k && bj > k }
-        .map { case ((bi, bj), b) => (bi, (bj, b)) }
-        .leftOuterJoin(colPanel, nParts)
-        .map { case (bi, ((bj, b), likOpt)) => (bj, (bi, b, likOpt)) }
-        .leftOuterJoin(rowPanel, nParts)
-        .map { case (bj, ((bi, b, likOpt), ukjOpt)) =>
-          (likOpt, ukjOpt) match {
-            case (Some(lik), Some(ukj)) =>
-              val upd = b.toBreeze - lik.toBreeze * ukj.toBreeze
-              ((bi, bj), b.copy(data = upd.data))
-            case _ => ((bi, bj), b)
+      var bcRelease: org.apache.spark.broadcast.Broadcast[_] = null
+      val next0 =
+        if (stepPath(k) == "broadcast") {
+          val panel = if (panelNext != null) panelNext else panelOf(state, k)
+          val step = luStep(k, panel((k, k)))
+          val bcPanel = sc.broadcast(panel.map { case (key, b) => key -> step.solve(b) })
+          bcRelease = bcPanel
+          state.mapValues { b =>
+            val p = bcPanel.value
+            if (b.bi < k || b.bj < k) b                              // finalized
+            else if (b.bi == k || b.bj == k) p((b.bi, b.bj))
+            else luTrailingBlock(b, p((b.bi, k)), p((k, b.bj)))
           }
+        } else {
+          val step = luStep(k, state.lookup((k, k)).head)
+          val updated = state.mapValues(step.solve)
+          val colPanel = updated.filter { case ((bi, bj), _) => bj == k && bi > k }
+            .map { case ((bi, _), b) => (bi, b) }
+          val rowPanel = updated.filter { case ((bi, bj), _) => bi == k && bj > k }
+            .map { case ((_, bj), b) => (bj, b) }
+          val settled = updated.filter { case ((bi, bj), _) => bi <= k || bj <= k }
+          // A_ij −= L_ik · U_kj for i > k, j > k: join on i, then on j
+          val newTrailing = updated.filter { case ((bi, bj), _) => bi > k && bj > k }
+            .map { case ((bi, _), b) => (bi, b) }
+            .join(colPanel, nParts)
+            .map { case (_, (b, lik)) => (b.bj, (b, lik)) }
+            .join(rowPanel, nParts)
+            .map { case (_, ((b, lik), ukj)) => ((b.bi, b.bj), luTrailingBlock(b, lik, ukj)) }
+          settled.union(newTrailing).coalesce(nParts)
         }
-      // packed diag tile: strict-lower(L_kk) + U_kk (Doolittle storage)
-      val packed = {
-        val d = ukk.copy
-        var j = 0
-        while (j < d.cols) {
-          var i = j + 1
-          while (i < d.rows) { d(i, j) = lkk(i, j); i += 1 }
-          j += 1
-        }
-        ((k, k), diag.copy(data = d.data))
-      }
-      var next = settled.union(newTrailing)
-        .union(spark.sparkContext.parallelize(Seq(packed), 1))
-        .coalesce(nParts)
+      var next = next0
       if ((k + 1) % checkpointEvery == 0) next.localCheckpoint()
       next = next.cache()
-      next.count()
+      // materialize before dropping the parent; when the next step
+      // broadcasts, the same job collects its panel
+      if (k + 1 < nb && stepPath(k + 1) == "broadcast") panelNext = panelOf(next, k + 1)
+      else { panelNext = null; next.count() }
+      if (bcRelease != null) bcRelease.unpersist(false)
       prev.unpersist(false)
       prev = next
       state = next
@@ -944,5 +1098,16 @@ object LinAlg {
     val l = LinAlg.choleskyLower(a)
     val y = solveTriangular(l, b, lower = true)
     solveTriangular(l.transpose, y, lower = false)
+  }
+}
+
+/** (bi, bj) → the partition of its t×t tile: the one fixed partitioner a
+  * blocked factorization's state, and the tile-keyed panel copies that
+  * meet it, share (keys of one tile land together). */
+private class TilePartitioner(parts: Int, tile: Int) extends Partitioner {
+  def numPartitions: Int = parts
+  def getPartition(key: Any): Int = key match {
+    case (i: Int, j: Int) => java.lang.Math.floorMod((i / tile) * 131071 + (j / tile), parts)
+    case other => throw new IllegalArgumentException(s"unexpected key $other")
   }
 }

@@ -20,6 +20,21 @@ class ArraySpec extends SparkSpec {
     assert(DMatrix.eye(spark, 9, 4).toLocal == BDM.eye[Double](9))
   }
 
+  test("fromLocal/toLocal round-trip on ragged grids, transposed views included") {
+    val local = BDM.tabulate(37, 23)((i, j) => i * 100.0 + j + 0.25)
+    for (bs <- Seq(8, 23, 64)) {        // ragged both ways, ragged rows only, one block
+      val m = DMatrix.fromLocal(spark, local, bs)
+      assert(m.blocks.count() == m.nbRows.toLong * m.nbCols, s"bs=$bs block count")
+      assert(m.toLocal == local, s"bs=$bs round-trip")
+    }
+    // a transposed view is read through its own index map
+    assert(DMatrix.fromLocal(spark, local.t, 8).toLocal == local.t.copy)
+    // same partition count as the seeded constructors, so multiply's
+    // dispatch sees the same operand however it was built
+    assert(DMatrix.fromLocal(spark, local, 8).blocks.rdd.getNumPartitions ==
+      DMatrix.zeros(spark, 37, 23, 8).blocks.rdd.getNumPartitions)
+  }
+
   test("matmul matches Breeze, including non-divisible block edges") {
     val a = DMatrix.randInt(spark, 37, 23, 8, 3L)
     val b = DMatrix.randInt(spark, 23, 19, 8, 5L)

@@ -9,6 +9,56 @@ class LinAlgSpec extends SparkSpec {
 
   private def maxAbs(m: BDM[Double]): Double = breeze.linalg.max(breeze.numerics.abs(m))
 
+  /** Runs `body` under a fresh job group and returns its result with the
+    * number of Spark jobs it started. A sentinel job in the same group
+    * marks the end: the listener bus delivers in order, so once the
+    * sentinel's start arrives every earlier job of the group has too. */
+  private def countJobs[T](body: => T): (T, Int) = {
+    import org.apache.spark.scheduler._
+    val sc = spark.sparkContext
+    val group = s"linalg-job-audit-${System.nanoTime}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val done = new java.util.concurrent.CountDownLatch(1)
+    val lis = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = {
+        val props = Option(j.properties)
+        if (props.map(_.getProperty("spark.jobGroup.id")).contains(group)) {
+          if (props.flatMap(p => Option(p.getProperty("linalg.audit.sentinel"))).isDefined)
+            done.countDown()
+          else jobs.incrementAndGet(): Unit
+        }
+      }
+    }
+    sc.addSparkListener(lis)
+    try {
+      sc.setJobGroup(group, "linalg job audit")
+      val out = try body finally {
+        sc.setLocalProperty("linalg.audit.sentinel", "1")
+        sc.parallelize(Seq(1), 1).count()
+        sc.setLocalProperty("linalg.audit.sentinel", null)
+        sc.clearJobGroup()
+      }
+      assert(done.await(30, java.util.concurrent.TimeUnit.SECONDS), "listener bus never drained")
+      (out, jobs.get())
+    } finally sc.removeSparkListener(lis)
+  }
+
+  /** 96² SPD arrowhead, bs = 32: a dense first block row and column and
+    * dense diagonal blocks; blocks (1,2) and (2,1) are ABSENT. Step 0's
+    * trailing update fills them in (L_20·L_10ᵀ ≠ 0), so a factorization
+    * that only updates existing blocks leaves a wrong zero there. */
+  private def arrowhead(): (DMatrix, BDM[Double]) = {
+    val n = 96; val bs = 32
+    val local = BDM.tabulate(n, n) { (i, j) =>
+      val (bi, bj) = (i / bs, j / bs)
+      if (bi != bj && bi != 0 && bj != 0) 0.0
+      else if (i == j) 10.0 * n
+      else (DMatrix.lcg(math.min(i, j), math.max(i, j), n, 37L) % 10).toDouble
+    }
+    val full = DMatrix.fromLocal(spark, local, bs)
+    (new DMatrix(full.blocks.filter(b => b.bi == 0 || b.bj == 0 || b.bi == b.bj), n, n, bs), local)
+  }
+
   test("tsqr: R is upper-triangular and RtR = AtA") {
     val a = DMatrix.rand(spark, 500, 20, 64, 3L)
     val r = LinAlg.tsqr(a)
@@ -174,6 +224,99 @@ class LinAlgSpec extends SparkSpec {
       val l = LinAlg.choleskyLower(spd, bcBudgetOverride = Some(budget)).toLocal
       assert(maxAbs(l - want) < 1e-6, s"budget $budget drifted from Breeze cholesky")
     }
+  }
+
+  test("block-sparse input: cholesky and lu fill in absent trailing blocks on every path") {
+    val (a, local) = arrowhead()
+    assert(a.blocks.count() == 7, "precondition: two off-diagonal blocks absent")
+    for (budget <- Seq(0L, Long.MaxValue)) {
+      val l = LinAlg.choleskyLower(a, bcBudgetOverride = Some(budget)).toLocal
+      assert(maxAbs(l * l.t - local) < 1e-9, s"cholesky budget $budget: L·Lᵀ ≠ A")
+      assert(maxAbs(l - bchol(local)) < 1e-9, s"cholesky budget $budget drifted from Breeze")
+      val (lf, uf) = LinAlg.lu(a, bcBudgetOverride = Some(budget))
+      assert(maxAbs(lf.toLocal * uf.toLocal - local) < 1e-9, s"lu budget $budget: L·U ≠ A")
+    }
+  }
+
+  test("lu step budget selects a plan, never a result (0 / flip / ∞ are bit-identical)") {
+    val n = 160; val bs = 16                         // nb = 10
+    val a = DMatrix.randInt(spark, n, n, bs, 97L, mod = 10L) +
+      (DMatrix.eye(spark, n, bs) * (10.0 * n))
+    def factors(budget: Long) = {
+      val (l, u) = LinAlg.lu(a, checkpointEvery = 3, bcBudgetOverride = Some(budget))
+      (l.toLocal, u.toLocal)
+    }
+    val (lJoin, uJoin) = factors(0L)
+    val (lBc, uBc) = factors(Long.MaxValue)
+    // (2·(10−k)−1)·16²·8 ≤ 8192 ⇔ k ≥ 8: two-join steps, then broadcast
+    val (lFlip, uFlip) = factors(8192L)
+    assert(LinAlg.luStepPathFor(10, 7, bs, 8192L) == "two-join")
+    assert(LinAlg.luStepPathFor(10, 8, bs, 8192L) == "broadcast")
+    assert(lJoin.data.sameElements(lBc.data) && uJoin.data.sameElements(uBc.data),
+      "broadcast path drifted from the two-join path")
+    assert(lJoin.data.sameElements(lFlip.data) && uJoin.data.sameElements(uFlip.data),
+      "mixed-path run drifted from the two-join path")
+    assert(maxAbs(lBc * uBc - a.toLocal) < 1e-9)
+  }
+
+  test("svdCompressed: driver and distributed pipelines agree on s, U and V to 1e-8") {
+    val a = DMatrix.tabulate(spark, 300, 200, 64)(
+      (i, j) => DMatrix.mixedUniform(i, j, 200, 41L) - 0.5)
+    assert(LinAlg.sketchPathFor(300, 200, 8, 0L) == "distributed")
+    assert(LinAlg.sketchPathFor(300, 200, 8, Long.MaxValue) == "driver")
+    def run(budget: Long) = {
+      val (u, s, v) = LinAlg.svdCompressed(a, k = 4, oversample = 4, seed = 3L,
+        nPowerIter = 1, bcBudgetOverride = Some(budget))
+      (u.toLocal, s, v)
+    }
+    val (uD, sD, vD) = run(0L)
+    val (uL, sL, vL) = run(Long.MaxValue)
+    for (i <- 0 until 4) assert(math.abs(sD(i) - sL(i)) / sD(i) < 1e-8, s"sigma_$i")
+    assert(maxAbs(uD - uL) < 1e-8, s"U differs by ${maxAbs(uD - uL)}")
+    assert(maxAbs(vD - vL) < 1e-8, s"V differs by ${maxAbs(vD - vL)}")
+    assert(maxAbs(uL.t * uL - BDM.eye[Double](4)) < 1e-10, "driver-path U not orthonormal")
+  }
+
+  test("job audit: svdCompressed's driver path runs 2 + 2·nPowerIter jobs; broadcast lu at most nb + 1") {
+    val a = DMatrix.tabulate(spark, 600, 400, 128)(
+      (i, j) => DMatrix.mixedUniform(i, j, 400, 43L) - 0.5).persist()
+    a.blocks.rdd.count(): Unit                       // A's own build stays outside the group
+    try {
+      for (p <- Seq(0, 1, 2)) {
+        val (_, jobs) = countJobs(LinAlg.svdCompressed(a, k = 5, oversample = 5, seed = 9L,
+          nPowerIter = p, bcBudgetOverride = Some(Long.MaxValue)))
+        assert(jobs == 2 + 2 * p, s"nPowerIter=$p ran $jobs jobs")
+      }
+    } finally a.unpersist(): Unit
+    val n = 96; val bs = 16                          // nb = 6
+    val sq = DMatrix.randInt(spark, n, n, bs, 101L, mod = 10L) +
+      (DMatrix.eye(spark, n, bs) * (10.0 * n))
+    val ((l, u), jobs) = countJobs(LinAlg.lu(sq, bcBudgetOverride = Some(Long.MaxValue)))
+    info(s"broadcast lu, nb = 6: $jobs jobs")
+    assert(jobs <= 6 + 1, s"broadcast lu ran $jobs jobs")
+    assert(maxAbs(l.toLocal * u.toLocal - sq.toLocal) < 1e-9)
+  }
+
+  test("sketchPathFor / luStepPathFor pin the bench, a09, a16 and an over-budget shape") {
+    val mb64 = 64L << 20
+    // svdCompressed: max(m, n)·l·8 bytes against the GEMM broadcast budget
+    assert(LinAlg.sketchPathFor(1000, 1000, 5, mb64) == "driver")           // bench rsvd, 40 KB
+    assert(LinAlg.sketchPathFor(512, 512, 15, mb64) == "driver")            // a09, 61 KB
+    assert(LinAlg.sketchPathFor(10000, 10000, 5, mb64) == "driver")         // a16, 400 KB
+    assert(LinAlg.sketchPathFor(1000000, 1000000, 15, mb64) == "distributed") // 120 MB
+    assert(LinAlg.sketchPathFor(1000, 1000, 5, 0L) == "distributed")
+    // lu: column k plus row k, (2(nb−k)−1)·bs²·8 bytes
+    for (k <- 0 until 2) {
+      assert(LinAlg.luStepPathFor(2, k, 256, mb64) == "broadcast")          // bench lu 512²/256
+      assert(LinAlg.luStepPathFor(2, k, 500, mb64) == "broadcast")          // 1000²/500, 6 MB
+    }
+    for (k <- 0 until 4) assert(LinAlg.luStepPathFor(4, k, 128, mb64) == "broadcast") // 512²/128
+    // 10k² in 2000² blocks (32 MB each): 9, 7, 5, 3 blocks are over, the last one fits
+    for (k <- 0 until 4) assert(LinAlg.luStepPathFor(5, k, 2000, mb64) == "two-join")
+    assert(LinAlg.luStepPathFor(5, 4, 2000, mb64) == "broadcast")
+    // 40k² in 4000² blocks: one 128 MB block is already over the budget
+    for (k <- 0 until 10) assert(LinAlg.luStepPathFor(10, k, 4000, mb64) == "two-join")
+    assert(LinAlg.luStepPathFor(2, 1, 256, 0L) == "two-join")
   }
 
   test("cholStepPathFor: bench shape broadcasts throughout; production flips at the budget") {

@@ -6,6 +6,12 @@
 #
 #   tools/run_all.sh            # gate @ sf0.01 + sf0.1, bench @ sf0.1, plans
 #   tools/run_all.sh quick      # gate @ sf0.01 only, no bench
+#   tools/run_all.sh budgets    # gate @ sf0.01 with both broadcast budgets
+#                               # (SPARK_GRAFT_BC_GEMM_BYTES and
+#                               # SPARK_GRAFT_CHOL_BC_BYTES) at 0, then at
+#                               # Long.MaxValue: every budget-gated dispatch
+#                               # path runs on its fallback side, then on
+#                               # its broadcast side; no tests, no bench
 #
 # Bench passes merge best-of-samples per code state (see Bench.scala);
 # run the script twice for a tighter committed bench_out.json.
@@ -13,12 +19,27 @@ set -euo pipefail
 cd "$(dirname "$0")/.."
 MODE="${1:-full}"
 
+gate_sf001() {
+  sbt -batch "runMain graft.Verify /root/testdata/sf0.01 $1"
+  python3 tools/local_verify.py /root/testdata/sf0.01 "$1"
+}
+
+if [ "$MODE" = "budgets" ]; then
+  for budget in 0 9223372036854775807; do
+    echo "=== correctness gate @ sf0.01, broadcast budgets = $budget ==="
+    SPARK_GRAFT_BC_GEMM_BYTES=$budget SPARK_GRAFT_CHOL_BC_BYTES=$budget \
+      gate_sf001 "/tmp/graft_gate_sf001_budget_$budget"
+  done
+  echo "run_all: done ($MODE)"
+  exit 0
+fi
+
 echo "=== compile + test ==="
 sbt -batch compile test
+python3 -m unittest discover -s perfbench -p 'test_*.py'
 
 echo "=== correctness gate @ sf0.01 ==="
-sbt -batch "runMain graft.Verify /root/testdata/sf0.01 /tmp/graft_gate_sf001"
-python3 tools/local_verify.py /root/testdata/sf0.01 /tmp/graft_gate_sf001
+gate_sf001 /tmp/graft_gate_sf001
 
 if [ "$MODE" = "full" ]; then
   echo "=== correctness gate @ sf0.1 ==="
