@@ -1,5 +1,6 @@
 package graft.array
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.storage.StorageLevel
@@ -702,7 +703,7 @@ class DMatrix(
     * SPARK_GRAFT_BC_GEMM_BYTES instead: TorrentBroadcast distributes
     * peer-to-peer in O(log P) rounds, so a few hundred MB broadcast to
     * 1,000 executors is far cheaper than one full pass of an 80 TB
-    * operand through an exchange (let alone rSVD's six). The budget is
+    * operand through an exchange. The budget is
     * deliberately conservative for the single-JVM drive, where every
     * "executor" copy shares one heap. */
   def multiply(other: DMatrix): DMatrix = {
@@ -731,27 +732,21 @@ class DMatrix(
         // kilobytes per block against the operand's gigabytes. An inner
         // index absent from the broadcast contributes nothing (the
         // absent-means-zero convention of the join path).
-        val bByInner = other.blocks.sparkSession.sparkContext
-          .broadcast(other.blocks.collect().map(b => b.bi -> b).toMap)
-        val outParts = math.max(1, math.min(parts, nbRows))
-        blocks.rdd.flatMap { a =>
-          bByInner.value.get(a.bj).map { b =>
-            ((a.bi, 0), Gemm.multiply(a.data, a.rows, a.cols, b.data, b.cols))
-          }
-        }.reduceByKey(addInto _, outParts)
+        val bByInner = new Array[Array[Double]](nbCols)
+        other.blocks.collect().foreach(b => bByInner(b.bi) = b.data)
+        DMatrix.broadcastSkinny(blocks.rdd, spark.sparkContext.broadcast(bByInner),
+          n.toInt, left = false, math.max(1, math.min(parts, nbRows)))
+          .map { case (bi, data) => ((bi, 0), data) }
       case "broadcast-left" =>
         // Mirror case: A is one skinny block-row (the B = QᵀA shape —
         // qᵀ is l×m, ~1 MB at the flagship). A broadcasts keyed by its
         // column (= inner) block index; B's blocks never move; partials
         // reduce on B's column-block index.
-        val aByInner = blocks.sparkSession.sparkContext
-          .broadcast(blocks.collect().map(b => b.bj -> b).toMap)
-        val outParts = math.max(1, math.min(parts, other.nbCols))
-        other.blocks.rdd.flatMap { b =>
-          aByInner.value.get(b.bi).map { a =>
-            ((0, b.bj), Gemm.multiply(a.data, a.rows, a.cols, b.data, b.cols))
-          }
-        }.reduceByKey(addInto _, outParts)
+        val aByInner = new Array[Array[Double]](other.nbRows)
+        blocks.collect().foreach(b => aByInner(b.bj) = b.data)
+        DMatrix.broadcastSkinny(other.blocks.rdd, spark.sparkContext.broadcast(aByInner),
+          m.toInt, left = true, math.max(1, math.min(parts, other.nbCols)))
+          .map { case (bj, data) => ((0, bj), data) }
       case "deep-join" =>
         // Deep inner dimension (the usual at-scale case: plenty of join
         // keys): join on the inner block index, per-pair GEMM, reduce
@@ -1762,7 +1757,7 @@ object DMatrix {
   /** Broadcast budget for the skinny-GEMM paths — mirrors the spirit of
     * `spark.sql.autoBroadcastJoinThreshold`: an operand at most this many
     * bytes ships to every executor instead of joining. 64 MB default
-    * (the judge-adjudicated budget: the rSVD sketch factors this guards
+    * (the judge-adjudicated budget: the l-wide skinny factors this guards
     * are ~1 MB at the flagship); env-overridable for probes/tests. */
   private[graft] def bcGemmBytes: Long =
     sys.env.get("SPARK_GRAFT_BC_GEMM_BYTES").map(_.toLong).getOrElse(64L << 20)
@@ -1849,6 +1844,25 @@ object DMatrix {
         t.toLong * t * bs * bs * 8 <= accCapBytes
     }.getOrElse(1)
   }
+
+  /** The map-side broadcast product behind [[DMatrix.multiply]]'s
+    * broadcast-skinny paths and `LinAlg.svdCompressed`'s passes over A.
+    * `slices(s)` is the skinny operand's part for inner block index s,
+    * column-major and `w` wide: cols(X)×w on the right of a resident block
+    * X (`left` false: X·S, keyed on X's block row) or w×rows(X) on its
+    * left (`left` true: S·X, keyed on X's block column). The resident
+    * blocks never move; only the w-wide partials reduce, map-side
+    * combined, into `outParts` partitions. A null slice is an absent
+    * inner block and contributes nothing (absent means zero). */
+  private[array] def broadcastSkinny(resident: RDD[Block],
+                                     slices: Broadcast[Array[Array[Double]]], w: Int,
+                                     left: Boolean, outParts: Int): RDD[(Int, Array[Double])] =
+    resident.flatMap { x =>
+      val s = slices.value(if (left) x.bi else x.bj)
+      if (s == null) None
+      else if (left) Some((x.bj, Gemm.multiply(s, w, x.rows, x.data, x.cols)))
+      else Some((x.bi, Gemm.multiply(x.data, x.rows, x.cols, s, w)))
+    }.reduceByKey(addInto _, outParts)
 
   private[array] def addInto(x: Array[Double], y: Array[Double]): Array[Double] = {
     var i = 0

@@ -18,11 +18,11 @@ import breeze.linalg.{DenseMatrix => BDM, DenseVector => BDV, qr, svd, cholesky 
   * Everything distributed is a treeAggregate, a keyed shuffle over
   * blocks, or a map over blocks against a broadcast. The driver holds
   * only factors that are small by construction or by a byte budget,
-  * never a full matrix: n×n factors (R, B, U_r), svdCompressed's l-wide
-  * sketch factors when max(m, n)·l·8 bytes fit `SPARK_GRAFT_BC_GEMM_BYTES`,
-  * and one Cholesky/LU panel when it fits `SPARK_GRAFT_CHOL_BC_BYTES`.
-  * Past those budgets the distributed paths take over. That is the
-  * property that survives 100 TB.
+  * never a full matrix: n×n factors (R, B, U_r), svdCompressed's
+  * max(m, n)×l sketch factors (l = k + oversample: ~420 MB for a 100 TB
+  * square input at l = 15), and one Cholesky/LU panel when it fits
+  * `SPARK_GRAFT_CHOL_BC_BYTES`; past that budget only panel copies
+  * shuffle. That is the property that survives 100 TB.
   */
 object LinAlg {
 
@@ -299,42 +299,24 @@ object LinAlg {
     (new DMatrix(uBlocks, a.nRows, a.nCols, a.blockSize), s, v)
   }
 
-  /** Which pipeline [[svdCompressed]] runs, as a pure function of the
-    * sketch shape (LinAlgSpec pins it — the [[DMatrix.multiplyPathFor]]
-    * discipline). `driver`: the tallest l-wide factor, max(m, n)×l
-    * doubles, fits the skinny-GEMM broadcast budget
-    * (`SPARK_GRAFT_BC_GEMM_BYTES`), so every factor stays a local matrix
-    * and each product with A is one job. `distributed`: the factors are
-    * pinned DMatrices and every QR is a TSQR. */
-  private[graft] def sketchPathFor(m: Long, n: Long, l: Int, budget: Long): String = {
-    val cells = math.max(m, n) * l
-    if (cells <= Int.MaxValue && 8L * cells <= budget) "driver" else "distributed"
-  }
-
   /** One job over A's blocks against a local l-wide factor X: A·X for an
     * n×l X (`left` false, result m×l) or Xᵀ·A for an m×l X (`left` true,
-    * result l×n). X ships as one broadcast sliced by A's block index, each
-    * block dgemms map-side, and only the l-wide partials reduce by block
-    * key on their way back to the driver; A never moves. Absent blocks
-    * contribute nothing (the [[DMatrix.multiply]] convention). */
+    * result l×n). X ships as one broadcast sliced by A's block index and
+    * [[DMatrix.broadcastSkinny]] multiplies map-side; only the l-wide
+    * partials reduce on their way back to the driver, and A never moves. */
   private def sketchProduct(a: DMatrix, x: BDM[Double], left: Boolean): BDM[Double] = {
     val bs = a.blockSize; val l = x.cols
-    val nSlices = if (left) a.nbRows else a.nbCols
     // slice s holds X's rows of block index s: as l×rows (Xᵀ, left) or
     // rows×l (right), column-major
-    val slices = Array.tabulate(nSlices) { s =>
+    val slices = Array.tabulate(if (left) a.nbRows else a.nbCols) { s =>
       val r0 = s * bs; val rows = DMatrix.blockDim(x.rows.toLong, bs, s)
       val xs = x(r0 until r0 + rows, ::)
       (if (left) xs.t.copy else xs.copy).data
     }
-    val sc = a.blocks.sparkSession.sparkContext
-    val bc = sc.broadcast(slices)
+    val bc = a.blocks.sparkSession.sparkContext.broadcast(slices)
     val outStripes = if (left) a.nbCols else a.nbRows
     val outParts = math.max(1, math.min(a.blocks.rdd.getNumPartitions, outStripes))
-    val partials = a.blocks.rdd.map { b =>
-      if (left) (b.bj, Gemm.multiply(bc.value(b.bi), l, b.rows, b.data, b.cols))
-      else (b.bi, Gemm.multiply(b.data, b.rows, b.cols, bc.value(b.bj), l))
-    }.reduceByKey(DMatrix.addInto _, outParts).collect()
+    val partials = DMatrix.broadcastSkinny(a.blocks.rdd, bc, l, left, outParts).collect()
     bc.unpersist(false)
     val out = if (left) BDM.zeros[Double](l, a.nCols.toInt) else BDM.zeros[Double](a.nRows.toInt, l)
     partials.foreach { case (s, data) =>
@@ -347,8 +329,7 @@ object LinAlg {
 
   /** Orthonormal basis of a local tall matrix by Householder QR, with the
     * [[fixSigns]] normalization moved onto Q's columns: R's diagonal is
-    * non-negative, so Q is unique for a full-rank input and matches the
-    * distributed pipeline's A·R⁻¹ up to roundoff. */
+    * non-negative, so Q is unique for a full-rank input. */
   private def orthonormalCols(y: BDM[Double]): BDM[Double] = {
     val qr.QR(q, r) = qr.reduced(y)
     var i = 0
@@ -363,37 +344,20 @@ object LinAlg {
     * on square-ish matrices: project onto a seeded random n×(k+p) sketch,
     * orthonormalize, form B = Qᵀ·A, finish with a local SVD of B.
     *
-    * Every product with A reads A's resident blocks against a broadcast
-    * l-wide factor, so the fat matrix never crosses an exchange; only
-    * l-wide block partials shuffle. Two pipelines, chosen by
-    * [[sketchPathFor]]:
-    *  - `driver` (every factor within `SPARK_GRAFT_BC_GEMM_BYTES`, which
-    *    covers the a16 flagship's 400 KB sketch): Ω, Y, Q, Z and B are
-    *    local Breeze matrices. Each product with A is ONE job
-    *    ([[sketchProduct]]), each QR a local Householder QR, and
-    *    U = Q·U_B returns through [[DMatrix.fromLocal]] — 2 + 2·nPowerIter
-    *    jobs in all, nothing cached.
-    *  - `distributed` (sketches over the budget): every l-wide
-    *    intermediate is a DMatrix, EAGERLY PINNED (persist + materialize)
-    *    because each is consumed 2-3 times (TSQR pass, Q-map pass, next
-    *    product) and released as soon as its successor materializes; each
-    *    QR is [[qrFactor]]'s TSQR, and U's lineage is cut free of Q by an
-    *    eager localCheckpoint.
-    * `bcBudgetOverride` pins the budget (tests sweep both pipelines). */
+    * The l-wide factors Ω, Y, Q, Z and B are local Breeze matrices on the
+    * driver: max(m, n)·l doubles, 400 KB at the a16 flagship (10k², l = 5)
+    * and about 420 MB for a 100 TB square input at l = 15. Each product
+    * with A is ONE job ([[sketchProduct]]): the factor broadcasts, A's
+    * resident blocks multiply map-side and only l-wide partials come
+    * back, so the fat matrix never crosses an exchange. Each QR is a
+    * local Householder QR and U = Q·U_B returns through
+    * [[DMatrix.fromLocal]] — 2 + 2·nPowerIter jobs in all, nothing
+    * cached. */
   def svdCompressed(a: DMatrix, k: Int, oversample: Int = 10, seed: Long = 1234L,
-                    nPowerIter: Int = 2,
-                    bcBudgetOverride: Option[Long] = None): (DMatrix, BDV[Double], BDM[Double]) = {
+                    nPowerIter: Int = 2): (DMatrix, BDV[Double], BDM[Double]) = {
     val l = math.min(k + oversample, math.min(a.nRows, a.nCols).toInt)
-    require(l <= a.blockSize, "sketch width must fit one block column")
-    val budget = bcBudgetOverride.getOrElse(DMatrix.bcGemmBytes)
-    if (sketchPathFor(a.nRows, a.nCols, l, budget) == "driver")
-      svdCompressedLocal(a, k, l, seed, nPowerIter)
-    else svdCompressedPinned(a, k, l, seed, nPowerIter)
-  }
-
-  /** [[svdCompressed]]'s `driver` pipeline: one job per pass over A. */
-  private def svdCompressedLocal(a: DMatrix, k: Int, l: Int, seed: Long,
-                                 nPowerIter: Int): (DMatrix, BDV[Double], BDM[Double]) = {
+    require(math.max(a.nRows, a.nCols) * l <= Int.MaxValue,
+      "the l-wide sketch factors must fit driver arrays")
     val omega = BDM.tabulate(a.nCols.toInt, l)(
       (i, j) => DMatrix.mixedUniform(i.toLong, j.toLong, l, seed) - 0.5)
     var q = orthonormalCols(sketchProduct(a, omega, left = false))    // m × l
@@ -412,62 +376,6 @@ object LinAlg {
      s(0 until k).copy, vt(0 until k, ::).t.copy)
   }
 
-  /** [[svdCompressed]]'s `distributed` pipeline, for sketches over the
-    * broadcast budget. */
-  private def svdCompressedPinned(a: DMatrix, k: Int, l: Int, seed: Long,
-                                  nPowerIter: Int): (DMatrix, BDV[Double], BDM[Double]) = {
-    val spark = a.blocks.sparkSession
-    def pin(x: DMatrix): DMatrix = {
-      x.persist()
-      x.blocks.rdd.count(): Unit   // eager: all consumers hit the cache
-      x
-    }
-    val omega = DMatrix.tabulate(spark, a.nCols, l, a.blockSize)(
-      (i, j) => DMatrix.mixedUniform(i, j, l, seed) - 0.5)
-    val y0 = pin(a.multiply(omega))               // m × l, tall-skinny
-    // Each pinned intermediate is consumed only by the (already
-    // materialized) next pin — the skinny multiplies collect their
-    // broadcast operand at call time — so it unpersists immediately after.
-    var q = pin(qrFactor(y0)._1)
-    y0.unpersist()
-    var t = 0
-    while (t < nPowerIter) {
-      val z = pin(a.transpose.multiply(q))        // n × l
-      q.unpersist()
-      val qz = pin(qrFactor(z)._1)
-      z.unpersist()
-      val y = pin(a.multiply(qz))                 // m × l
-      qz.unpersist()
-      q = pin(qrFactor(y)._1)
-      y.unpersist()
-      t += 1
-    }
-    // B = Qᵀ·A through the broadcast-skinny-left multiply: Qᵀ is l×m in
-    // a single block-row, so A's blocks stay put — partials key on A's
-    // column-block index. The l×n result is driver-sized by construction.
-    val bs = a.blockSize; val nC = a.nCols
-    val bMat = q.transpose.multiply(a)
-    val bLocal = BDM.zeros[Double](l, nC.toInt)
-    bMat.blocks.collect().foreach { b =>
-      bLocal(::, b.bj * bs until b.bj * bs + b.cols) := b.toBreeze
-    }
-    val svd.SVD(uB, s, vt) = robustSvd(bLocal)
-    val uBk = uB(::, 0 until k).copy              // l × k, broadcast in closure
-    import spark.implicits._
-    val uBlocks = q.blocks.map { b =>
-      val u = Gemm.multiplyBDM(b.toBreeze, uBk)
-      Block(b.bi, 0, b.rows, k, u.data)
-    }
-    // Eager localCheckpoint cuts U's lineage free of Q so the final pin
-    // can be released here too — a Dataset persist lives in the session
-    // CacheManager forever (each call would leak one cached Q for the JVM
-    // lifetime), while localCheckpoint blocks are reaped by the
-    // ContextCleaner once the result is unreferenced.
-    val u = new DMatrix(uBlocks.localCheckpoint(), a.nRows, k, a.blockSize)
-    q.unpersist()
-    (u, s(0 until k).copy, vt(0 until k, ::).t.copy)
-  }
-
   /** Which path step k of an nb-step blocked factorization takes, as a
     * pure function of the grid (unit-testable — LinAlgSpec pins the
     * bench shape to broadcast throughout and the production shape to a
@@ -480,7 +388,7 @@ object LinAlg {
   /** [[cholStepPathFor]]'s rule for [[lu]]: step k's panel is column k
     * (nb−k blocks) plus row k (nb−k−1 blocks). */
   private[graft] def luStepPathFor(nb: Int, k: Int, bs: Int, budget: Long): String =
-    if (panelFits(2 * (nb - k) - 1, bs, budget)) "broadcast" else "two-join"
+    if (panelFits(2 * (nb - k) - 1, bs, budget)) "broadcast" else "panel-shuffle"
 
   /** The shared step budget: a panel of `panelBlocks` bs×bs blocks
     * broadcasts when its dense bytes fit `budget`. */
@@ -796,7 +704,7 @@ object LinAlg {
   }
 
   /** out = b − lik·ukj — the trailing-update dgemm (α=−1, β=1). ONE body
-    * shared by the two-join and broadcast paths so the factors are
+    * shared by the panel-shuffle and broadcast paths so the factors are
     * bit-identical whichever path delivered the panels. */
   private def luTrailingBlock(b: Block, lik: Block, ukj: Block): Block = {
     val out = b.data.clone()
@@ -819,9 +727,12 @@ object LinAlg {
     *    diagonal tile, solves the panel ([[LuStep]]) and broadcasts it;
     *    the trailing update A_ij −= L_ik·U_kj is one narrow `mapValues`.
     *    A factorization that broadcasts throughout runs nb + 1 jobs.
-    *  - `two-join` (panels over the budget): the panel is solved on the
-    *    executors and the trailing blocks join the column panel on i,
-    *    then the row panel on j.
+    *  - `panel-shuffle` (panels over the budget): the panel is solved on
+    *    the executors and only panel copies cross an exchange — L_ik to
+    *    each partition holding a trailing block of row i, U_kj to each
+    *    holding one of column j — and the trailing update is a narrow
+    *    `zipPartitions` against them; the state never leaves its
+    *    partitioner.
     * Both paths solve with the same [[LuStep]] and update with the same
     * dgemm ([[luTrailingBlock]]), so the factors are bit-identical across
     * budgets (LinAlgSpec pins it). Lineage is truncated with
@@ -835,7 +746,8 @@ object LinAlg {
     val bs = a.blockSize
     val nb = a.nbRows
     val nParts = math.max(2, math.min(sc.defaultParallelism, nb * nb))
-    var state = factorState(a, new TilePartitioner(nParts, 1), (_, _) => true).cache()
+    val part = new TilePartitioner(nParts, 1)
+    var state = factorState(a, part, (_, _) => true).cache()
     var prev = state
     val bcBudget = bcBudgetOverride.getOrElse(factorBcBytes)
     def stepPath(k: Int): String = luStepPathFor(nb, k, bs, bcBudget)
@@ -860,21 +772,30 @@ object LinAlg {
             else luTrailingBlock(b, p((b.bi, k)), p((k, b.bj)))
           }
         } else {
-          val step = luStep(k, state.lookup((k, k)).head)
+          val step = luStep(k, state.lookup((k, k)).head)   // single-partition job
           val updated = state.mapValues(step.solve)
-          val colPanel = updated.filter { case ((bi, bj), _) => bj == k && bi > k }
-            .map { case ((bi, _), b) => (bi, b) }
-          val rowPanel = updated.filter { case ((bi, bj), _) => bi == k && bj > k }
-            .map { case ((_, bj), b) => (bj, b) }
-          val settled = updated.filter { case ((bi, bj), _) => bi <= k || bj <= k }
-          // A_ij −= L_ik · U_kj for i > k, j > k: join on i, then on j
-          val newTrailing = updated.filter { case ((bi, bj), _) => bi > k && bj > k }
-            .map { case ((bi, _), b) => (bi, b) }
-            .join(colPanel, nParts)
-            .map { case (_, (b, lik)) => (b.bj, (b, lik)) }
-            .join(rowPanel, nParts)
-            .map { case (_, ((b, lik), ukj)) => ((b.bi, b.bj), luTrailingBlock(b, lik, ukj)) }
-          settled.union(newTrailing).coalesce(nParts)
+          // one copy of L_ik per partition holding a trailing block of row
+          // i, one of U_kj per partition holding one of column j; each
+          // copy is keyed by a trailing block of its target partition
+          val copies = updated.values.flatMap { p =>
+            val served =
+              if (p.bj == k && p.bi > k) Iterator.range(k + 1, nb).map(j => (p.bi, j))
+              else if (p.bi == k && p.bj > k) Iterator.range(k + 1, nb).map(i => (i, p.bj))
+              else Iterator.empty
+            served.map(key => part.getPartition(key) -> key).toMap.valuesIterator.map(_ -> p)
+          }.partitionBy(part)
+          // A_ij −= L_ik · U_kj for i > k, j > k: narrow on the state side
+          updated.zipPartitions(copies, preservesPartitioning = true) { (stateIt, copyIt) =>
+            val lCol = new java.util.HashMap[Int, Block]()   // i → L_ik
+            val uRow = new java.util.HashMap[Int, Block]()   // j → U_kj
+            copyIt.foreach { case (_, p) =>
+              if (p.bj == k) lCol.put(p.bi, p) else uRow.put(p.bj, p)
+            }
+            stateIt.map { case (key, b) =>
+              if (b.bi > k && b.bj > k) (key, luTrailingBlock(b, lCol.get(b.bi), uRow.get(b.bj)))
+              else (key, b)
+            }
+          }
         }
       var next = next0
       if ((k + 1) % checkpointEvery == 0) next.localCheckpoint()

@@ -29,8 +29,10 @@ import java.nio.file.{Files, Paths}
   *  - Randomized SVD (the a16 kernel — VERDICT r14's one weak mark,
   *    fixed by the broadcast-skinny multiply) across n ∈ {10k, 20k} at
   *    the flagship shape (rank-5 A, chunks 2000², k=5): A is cached
-  *    outside the window, so the measured pipeline is six map-side
-  *    skinny products + TSQRs — expected exponent vs volume ~1.0.
+  *    outside the window, so the measured pipeline is 2 + 2·nPowerIter
+  *    (= 6) one-job passes over A against a broadcast l-wide factor,
+  *    with the QRs local on the driver — expected exponent vs volume
+  *    ~1.0.
   *
   * Streaming input-rate scaling is covered by ScaleProbe's
   * st02_sessions entry over the key-offset replicated events table.
@@ -68,10 +70,10 @@ object LinalgScaleProbe {
     }
     // rSVD at the a16 shape family (n², chunks 2000², exact rank 5,
     // k=5): A is built + persisted OUTSIDE the timed window so the
-    // probe measures the svd_compressed pipeline itself — with the
-    // broadcast-skinny multiply (r15) its six products are map-side
-    // passes over cached A plus l-wide partial reduces, so the
-    // expected exponent against volume (n²) is ~1.0.
+    // probe measures the svd_compressed pipeline itself — its six
+    // products are one-job map-side passes over cached A plus l-wide
+    // partial reduces, so the expected exponent against volume (n²) is
+    // ~1.0.
     def rsvdPrep(n: Int): DMatrix = {
       val x = DMatrix.randInt(spark, n, 5, 2000, 81L, mod = 10L)
       val y = DMatrix.randInt(spark, 5, n, 2000, 83L, mod = 10L)

@@ -246,45 +246,43 @@ class LinAlgSpec extends SparkSpec {
       val (l, u) = LinAlg.lu(a, checkpointEvery = 3, bcBudgetOverride = Some(budget))
       (l.toLocal, u.toLocal)
     }
-    val (lJoin, uJoin) = factors(0L)
+    val (lShuf, uShuf) = factors(0L)
     val (lBc, uBc) = factors(Long.MaxValue)
-    // (2·(10−k)−1)·16²·8 ≤ 8192 ⇔ k ≥ 8: two-join steps, then broadcast
+    // (2·(10−k)−1)·16²·8 ≤ 8192 ⇔ k ≥ 8: panel-shuffle steps, then broadcast
     val (lFlip, uFlip) = factors(8192L)
-    assert(LinAlg.luStepPathFor(10, 7, bs, 8192L) == "two-join")
+    assert(LinAlg.luStepPathFor(10, 7, bs, 8192L) == "panel-shuffle")
     assert(LinAlg.luStepPathFor(10, 8, bs, 8192L) == "broadcast")
-    assert(lJoin.data.sameElements(lBc.data) && uJoin.data.sameElements(uBc.data),
-      "broadcast path drifted from the two-join path")
-    assert(lJoin.data.sameElements(lFlip.data) && uJoin.data.sameElements(uFlip.data),
-      "mixed-path run drifted from the two-join path")
+    assert(lShuf.data.sameElements(lBc.data) && uShuf.data.sameElements(uBc.data),
+      "broadcast path drifted from the panel-shuffle path")
+    assert(lShuf.data.sameElements(lFlip.data) && uShuf.data.sameElements(uFlip.data),
+      "mixed-path run drifted from the panel-shuffle path")
     assert(maxAbs(lBc * uBc - a.toLocal) < 1e-9)
   }
 
-  test("svdCompressed: driver and distributed pipelines agree on s, U and V to 1e-8") {
-    val a = DMatrix.tabulate(spark, 300, 200, 64)(
-      (i, j) => DMatrix.mixedUniform(i, j, 200, 41L) - 0.5)
-    assert(LinAlg.sketchPathFor(300, 200, 8, 0L) == "distributed")
-    assert(LinAlg.sketchPathFor(300, 200, 8, Long.MaxValue) == "driver")
-    def run(budget: Long) = {
-      val (u, s, v) = LinAlg.svdCompressed(a, k = 4, oversample = 4, seed = 3L,
-        nPowerIter = 1, bcBudgetOverride = Some(budget))
-      (u.toLocal, s, v)
-    }
-    val (uD, sD, vD) = run(0L)
-    val (uL, sL, vL) = run(Long.MaxValue)
-    for (i <- 0 until 4) assert(math.abs(sD(i) - sL(i)) / sD(i) < 1e-8, s"sigma_$i")
-    assert(maxAbs(uD - uL) < 1e-8, s"U differs by ${maxAbs(uD - uL)}")
-    assert(maxAbs(vD - vL) < 1e-8, s"V differs by ${maxAbs(vD - vL)}")
-    assert(maxAbs(uL.t * uL - BDM.eye[Double](4)) < 1e-10, "driver-path U not orthonormal")
+  test("svdCompressed on an exact rank-4 matrix: s matches Breeze, U·S·Vᵀ = A to 1e-8") {
+    // ragged 300×200 grid in 64² blocks; the sketch (l = 8) spans the
+    // whole range, so the factorization is exact up to roundoff
+    val x = DMatrix.tabulate(spark, 300, 4, 64)((i, j) => DMatrix.mixedUniform(i, j, 4, 41L) - 0.5)
+    val y = DMatrix.tabulate(spark, 4, 200, 64)((i, j) => DMatrix.mixedUniform(i, j, 200, 42L) - 0.5)
+    val a = x.multiply(y)
+    val local = a.toLocal
+    val (u, s, v) = LinAlg.svdCompressed(a, k = 4, oversample = 4, seed = 3L, nPowerIter = 1)
+    val want = bsvd.reduced(local).singularValues
+    for (i <- 0 until 4) assert(math.abs(s(i) - want(i)) / want(i) < 1e-8, s"sigma_$i")
+    val uL = u.toLocal
+    assert(maxAbs(uL.t * uL - BDM.eye[Double](4)) < 1e-10, "U not orthonormal")
+    assert(maxAbs(v.t * v - BDM.eye[Double](4)) < 1e-10, "V not orthonormal")
+    assert(maxAbs(uL * breeze.linalg.diag(s) * v.t - local) < 1e-8, "U·S·Vᵀ ≠ A")
   }
 
-  test("job audit: svdCompressed's driver path runs 2 + 2·nPowerIter jobs; broadcast lu at most nb + 1") {
+  test("job audit: svdCompressed runs 2 + 2·nPowerIter jobs; broadcast lu at most nb + 1") {
     val a = DMatrix.tabulate(spark, 600, 400, 128)(
       (i, j) => DMatrix.mixedUniform(i, j, 400, 43L) - 0.5).persist()
     a.blocks.rdd.count(): Unit                       // A's own build stays outside the group
     try {
       for (p <- Seq(0, 1, 2)) {
         val (_, jobs) = countJobs(LinAlg.svdCompressed(a, k = 5, oversample = 5, seed = 9L,
-          nPowerIter = p, bcBudgetOverride = Some(Long.MaxValue)))
+          nPowerIter = p))
         assert(jobs == 2 + 2 * p, s"nPowerIter=$p ran $jobs jobs")
       }
     } finally a.unpersist(): Unit
@@ -297,26 +295,21 @@ class LinAlgSpec extends SparkSpec {
     assert(maxAbs(l.toLocal * u.toLocal - sq.toLocal) < 1e-9)
   }
 
-  test("sketchPathFor / luStepPathFor pin the bench, a09, a16 and an over-budget shape") {
+  test("luStepPathFor pins the bench, a24, 10k² and an over-budget shape") {
     val mb64 = 64L << 20
-    // svdCompressed: max(m, n)·l·8 bytes against the GEMM broadcast budget
-    assert(LinAlg.sketchPathFor(1000, 1000, 5, mb64) == "driver")           // bench rsvd, 40 KB
-    assert(LinAlg.sketchPathFor(512, 512, 15, mb64) == "driver")            // a09, 61 KB
-    assert(LinAlg.sketchPathFor(10000, 10000, 5, mb64) == "driver")         // a16, 400 KB
-    assert(LinAlg.sketchPathFor(1000000, 1000000, 15, mb64) == "distributed") // 120 MB
-    assert(LinAlg.sketchPathFor(1000, 1000, 5, 0L) == "distributed")
-    // lu: column k plus row k, (2(nb−k)−1)·bs²·8 bytes
+    // column k plus row k, (2(nb−k)−1)·bs²·8 bytes
+    for (k <- 0 until 3) assert(LinAlg.luStepPathFor(3, k, 32, mb64) == "broadcast")   // a24 96²/32
     for (k <- 0 until 2) {
       assert(LinAlg.luStepPathFor(2, k, 256, mb64) == "broadcast")          // bench lu 512²/256
       assert(LinAlg.luStepPathFor(2, k, 500, mb64) == "broadcast")          // 1000²/500, 6 MB
     }
     for (k <- 0 until 4) assert(LinAlg.luStepPathFor(4, k, 128, mb64) == "broadcast") // 512²/128
     // 10k² in 2000² blocks (32 MB each): 9, 7, 5, 3 blocks are over, the last one fits
-    for (k <- 0 until 4) assert(LinAlg.luStepPathFor(5, k, 2000, mb64) == "two-join")
+    for (k <- 0 until 4) assert(LinAlg.luStepPathFor(5, k, 2000, mb64) == "panel-shuffle")
     assert(LinAlg.luStepPathFor(5, 4, 2000, mb64) == "broadcast")
     // 40k² in 4000² blocks: one 128 MB block is already over the budget
-    for (k <- 0 until 10) assert(LinAlg.luStepPathFor(10, k, 4000, mb64) == "two-join")
-    assert(LinAlg.luStepPathFor(2, 1, 256, 0L) == "two-join")
+    for (k <- 0 until 10) assert(LinAlg.luStepPathFor(10, k, 4000, mb64) == "panel-shuffle")
+    assert(LinAlg.luStepPathFor(2, 1, 256, 0L) == "panel-shuffle")
   }
 
   test("cholStepPathFor: bench shape broadcasts throughout; production flips at the budget") {
