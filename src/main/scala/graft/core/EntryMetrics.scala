@@ -1,6 +1,6 @@
 package graft.core
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
 
 /** Per-entry runtime breakdown (SURVEY §2A A19): the rebuild's analog of
@@ -9,7 +9,7 @@ import org.apache.spark.sql.SparkSession
   * scheduler ingests per task (`SS/wukong/scheduler.py:4164-4435`) to
   * explain where a job's wall time went. Here the unit of account is the
   * benchmark ENTRY, and the breakdown per entry is the Spark-native
-  * decomposition: stage/task counts, executor run + GC time, shuffle
+  * decomposition: job/stage/task counts, executor run + GC time, shuffle
   * bytes read/written, fetch-wait, spill, and scan input bytes.
   *
   * Mechanics: stage-completion events arrive asynchronously on the
@@ -17,7 +17,8 @@ import org.apache.spark.sql.SparkSession
   * stage whose event lands after the entry returns. Instead the harness
   * records wall-clock WINDOWS (entry name, start, end) around each rep,
   * the listener buffers every stage's metrics keyed by its SUBMISSION
-  * time, and attribution joins the two after the suite — entries run
+  * time (and every job start as a one-job record at its submission
+  * time), and attribution joins the two after the suite — entries run
   * sequentially, so windows are disjoint and the join is exact. `drain`
   * runs a marker job and waits for its event, proving (by per-queue
   * event ordering) every earlier stage event has been delivered.
@@ -28,13 +29,13 @@ import org.apache.spark.sql.SparkSession
   * 1000-executor cluster as on local[32]. */
 final class EntryMetrics extends SparkListener {
 
-  final case class Breakdown(stages: Int, tasks: Int, runMs: Long, gcMs: Long,
+  final case class Breakdown(jobs: Int, stages: Int, tasks: Int, runMs: Long, gcMs: Long,
                              shuffleReadBytes: Long, shuffleWriteBytes: Long,
                              fetchWaitMs: Long, shuffleWriteMs: Long,
                              spillMemBytes: Long, spillDiskBytes: Long,
                              inputBytes: Long, peakMemBytes: Long) {
     def +(o: Breakdown): Breakdown = Breakdown(
-      stages + o.stages, tasks + o.tasks, runMs + o.runMs, gcMs + o.gcMs,
+      jobs + o.jobs, stages + o.stages, tasks + o.tasks, runMs + o.runMs, gcMs + o.gcMs,
       shuffleReadBytes + o.shuffleReadBytes, shuffleWriteBytes + o.shuffleWriteBytes,
       fetchWaitMs + o.fetchWaitMs, shuffleWriteMs + o.shuffleWriteMs,
       spillMemBytes + o.spillMemBytes, spillDiskBytes + o.spillDiskBytes,
@@ -55,12 +56,15 @@ final class EntryMetrics extends SparkListener {
     val m = si.taskMetrics
     if (m != null) stages.add(StageRec(
       si.submissionTime.getOrElse(-1L),
-      Breakdown(1, si.numTasks, m.executorRunTime, m.jvmGCTime,
+      Breakdown(0, 1, si.numTasks, m.executorRunTime, m.jvmGCTime,
         m.shuffleReadMetrics.totalBytesRead, m.shuffleWriteMetrics.bytesWritten,
         m.shuffleReadMetrics.fetchWaitTime, m.shuffleWriteMetrics.writeTime / 1000000L,
         m.memoryBytesSpilled, m.diskBytesSpilled,
         m.inputMetrics.bytesRead, m.peakExecutionMemory)))
   }
+
+  override def onJobStart(js: SparkListenerJobStart): Unit =
+    stages.add(StageRec(js.time, Breakdown(1, 0, 0, 0L, 0L, 0L, 0L, 0L, 0L, 0L, 0L, 0L, 0L)))
 
   /** Record that `name` owned the wall-clock interval [startMs, endMs). */
   def window(name: String, startMs: Long, endMs: Long): Unit =
@@ -78,32 +82,38 @@ final class EntryMetrics extends SparkListener {
       Thread.sleep(50)
   }
 
-  /** Join stages to windows by submission time and aggregate. Stages
-    * outside every window (session setup, the drain marker, warmup) land
-    * under "_other" (summed). Per entry, the reported breakdown is the
-    * BEST rep's — the window with the smallest wall duration — not a sum
-    * across reps: summing made gc_sec accumulate every loaded rep and
-    * outlier re-run (r15 VERDICT #4: a16 gc_sec read 100.3 s while its
-    * wall fell), and since every rep executes the identical plan, byte
-    * metrics are per-rep quantities anyway. The best rep is the one the
-    * recorded wall time comes closest to, so attribution and timing
-    * describe the same execution. */
-  def breakdowns: Map[String, Breakdown] = {
+  /** Join stages and job starts to windows by submission time and
+    * aggregate. Records outside every window (session setup, the drain
+    * marker, warmup) land under "_other" (summed). Per entry, the
+    * reported breakdown is the BEST rep's — the window with the smallest
+    * wall duration — not a sum across reps: summing made gc_sec
+    * accumulate every loaded rep and outlier re-run (r15 VERDICT #4: a16
+    * gc_sec read 100.3 s while its wall fell), and since every rep
+    * executes the identical plan, byte metrics are per-rep quantities
+    * anyway. The best rep is the one the recorded wall time comes
+    * closest to, so attribution and timing describe the same execution.
+    * Each entry also carries that rep's index among its windows in start
+    * order (0 = first rep; -1 for "_other"). */
+  def selected: Map[String, (Int, Breakdown)] = {
     import scala.jdk.CollectionConverters._
     val ws = windows.asScala.toVector.sortBy(_._2)
     val byWindow = stages.asScala.toVector.groupBy { rec =>
       ws.find(w => rec.submittedMs >= w._2 && rec.submittedMs < w._3)
     }
     val other = byWindow.collect { case (None, recs) =>
-      "_other" -> recs.map(_.b).reduce(_ + _)
+      "_other" -> (-1, recs.map(_.b).reduce(_ + _))
     }
     val perEntry = byWindow.collect { case (Some(w), recs) =>
       (w, recs.map(_.b).reduce(_ + _))
     }.groupBy(_._1._1).map { case (name, reps) =>
-      name -> reps.minBy { case ((_, s, e), _) => e - s }._2
+      val (best, b) = reps.minBy { case ((_, s, e), _) => e - s }
+      name -> (ws.filter(_._1 == name).indexOf(best), b)
     }
     perEntry ++ other
   }
+
+  /** [[selected]] without the rep indices. */
+  def breakdowns: Map[String, Breakdown] = selected.map { case (k, (_, b)) => k -> b }
 
   /** One JSON object per entry, seconds/MB units, sorted by key — the
     * file the bench writes next to bench_out.json. */
@@ -112,9 +122,9 @@ final class EntryMetrics extends SparkListener {
       .replaceAll("[\\x00-\\x1f]", " ") + "\""
     def mb(b: Long) = f"${b / 1e6}%.2f"
     def sec(ms: Long) = f"${ms / 1e3}%.3f"
-    val entries = breakdowns.toSeq.sortBy(_._1).map { case (k, b) =>
+    val entries = selected.toSeq.sortBy(_._1).map { case (k, (rep, b)) =>
       s"${jstr(k)}:{" +
-        s""""stages":${b.stages},"tasks":${b.tasks},""" +
+        s""""rep":$rep,"jobs":${b.jobs},"stages":${b.stages},"tasks":${b.tasks},""" +
         s""""run_sec":${sec(b.runMs)},"gc_sec":${sec(b.gcMs)},""" +
         s""""shuffle_read_mb":${mb(b.shuffleReadBytes)},"shuffle_write_mb":${mb(b.shuffleWriteBytes)},""" +
         s""""fetch_wait_sec":${sec(b.fetchWaitMs)},"shuffle_write_sec":${sec(b.shuffleWriteMs)},""" +

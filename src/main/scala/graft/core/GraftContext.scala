@@ -1,7 +1,8 @@
 package graft.core
 
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.storage.StorageLevel
 import scala.collection.mutable
 
@@ -17,18 +18,50 @@ import scala.collection.mutable
   * loops whose lineage cannot grow unboundedly (localCheckpoint every N
   * steps — SURVEY §7.5 known-hard #5). `stop()` is the explicit
   * iteration-terminator (`<key>---iteration = -1`).
+  *
+  * Job discipline: one Spark job round trip costs tens of ms of driver
+  * time, the Spark analog of the invocation cost Wukong's "become"
+  * avoids. So materializing a frame is one pass over the persisted frame
+  * (not `count()`, which is two jobs under AQE), and [[iterate]]
+  * returns each step's statistics from that same job through
+  * `Dataset.observe` instead of running an aggregate per step.
   */
 final class GraftContext(val spark: SparkSession) {
   private val pinned = mutable.ListBuffer[DataFrame]()
+  private val Observed = "graft.step"
 
   /** persist: pin and eagerly materialize (Wukong persisted eagerly —
-    * the flag forced executor-side writes). Returns the same frame. */
+    * the flag forced executor-side writes). One job: a pass over the
+    * pinned frame fills its cache. Returns the same frame. */
   def persist(df: DataFrame,
               level: StorageLevel = StorageLevel.MEMORY_AND_DISK): DataFrame = {
-    df.persist(level)
-    df.count()
+    materialize(df, Nil, level)
     pinned += df
     df
+  }
+
+  /** Pins `df` and fills its cache in ONE job that also returns the
+    * values of the `observe` aggregates over its rows (an empty Row when
+    * none are asked for). The frame itself is persisted and its observed
+    * view is executed, so the cache entry is keyed by `df`'s plan — the
+    * plan the next reader of `df` looks up — while the view's
+    * CollectMetrics node tallies the aggregates in the same tasks: no
+    * exchange, no second action. Over an empty frame the aggregates take
+    * their empty-input values (count 0, sum null).
+    *
+    * The view runs as one tracked SQL execution of its own plan, and the
+    * metrics are read off that plan once the job returns (the driver
+    * merges task accumulators before the job completes). Not through
+    * `Observation`: that registers the session's ObservationManager,
+    * which is not serializable, and spark.ml closures that capture the
+    * session (LinearSVC's training summary) then fail to serialize. */
+  private def materialize(df: DataFrame, observe: Seq[Column],
+                          level: StorageLevel = StorageLevel.MEMORY_AND_DISK): Row = {
+    df.persist(level)
+    val viewed = if (observe.isEmpty) df else df.observe(Observed, observe.head, observe.tail: _*)
+    val qe = viewed.queryExecution
+    SQLExecution.withNewExecutionId(qe, Some("materialize"))(qe.toRdd.foreach(_ => ()))
+    if (observe.isEmpty) Row.empty else qe.observedMetrics(Observed)
   }
 
   /** scatter: ship a value to every executor once. */
@@ -38,27 +71,33 @@ final class GraftContext(val spark: SparkSession) {
   /** gather: small final results back to the driver. */
   def gather(df: DataFrame): Array[Row] = df.collect()
 
-  /** Iterative driver loop over a persisted frame: each step's output is
-    * materialized and pinned, its predecessor released, and lineage is
-    * truncated every `checkpointEvery` steps so 1000-iteration sessions
-    * do not accumulate a 1000-stage plan. */
-  def iterate(init: DataFrame, steps: Int, checkpointEvery: Int = 8)
-             (step: (DataFrame, Int) => DataFrame): DataFrame = {
+  /** Iterative driver loop over a persisted frame — one Spark job per
+    * step when the step's plan has no exchange (GraphX fuses each
+    * superstep's update with its convergence test the same way). Every
+    * frame, `init` included, is pinned and materialized together with
+    * the `observe` aggregates over its rows; the step receives the
+    * current frame, the current frame's observed values (a Row in
+    * `observe` order) and the step index, so convergence tests and
+    * running statistics cost no extra action. A step's predecessor is
+    * released once the step is materialized, and lineage is truncated
+    * every `checkpointEvery` steps so 1000-iteration sessions do not
+    * accumulate a 1000-stage plan. Returns the final frame (pinned
+    * until [[stop]]) and its observed values. */
+  def iterate(init: DataFrame, observe: Seq[Column], steps: Int, checkpointEvery: Int = 8)
+             (step: (DataFrame, Row, Int) => DataFrame): (DataFrame, Row) = {
     var cur = init
-    cur.persist(StorageLevel.MEMORY_AND_DISK)
-    cur.count()
+    var stats = materialize(cur, observe)
     for (i <- 0 until steps) {
-      var next = step(cur, i)
+      var next = step(cur, stats, i)
       if ((i + 1) % checkpointEvery == 0)
         next = next.localCheckpoint(false)
-      next.persist(StorageLevel.MEMORY_AND_DISK)
-      next.count()
+      stats = materialize(next, observe)
       cur.unpersist(false)
       cur = next
     }
     pinned += cur   // released by stop() — the final frame stays pinned
                     // only for the session's lifetime, not the JVM's
-    cur
+    (cur, stats)
   }
 
   /** Explicit session stop: release every pinned dataset (the
@@ -76,22 +115,24 @@ object IterativeQueries {
   /** i01: iterative outlier trimming — 3 rounds of "drop orders above
     * 1.5× the running average", entirely in the exact integer-cents
     * domain (2·cents·n > 3·sum ⇔ cents > 1.5·avg). Each round reuses the
-    * previous round's *persisted* frame: one scan of parquet total, then
-    * cached iterations — the Wukong iterative-session shape. */
+    * previous round's *persisted* frame and the (n, Σ) observed while it
+    * was cached: one scan of parquet total, then one job per cached
+    * iteration — the Wukong iterative-session shape. */
   def iterativeTrim(s: SparkSession, d: String): DataFrame = {
     val ctx = new GraftContext(s)
     val init = Tables.orders(s, d)
       .select(round(col("o_totalprice") * 100).cast("long").as("cents"))
-    val result = ctx.iterate(init, steps = 3, checkpointEvery = 2) { (cur, _) =>
-      val r = cur.agg(count(lit(1)).as("n"), sum(col("cents")).as("s")).head()
-      val (n, sum0) = (r.getLong(0), r.getLong(1))
-      cur.filter(col("cents") * (2L * n) <= lit(3L * sum0))
+    // each materialization observes (n, Σ) of the frame it caches: step
+    // i filters with its input's stats, and the final frame's stats are
+    // the answer — no aggregate job of its own anywhere in the loop
+    val (_, last) = ctx.iterate(init,
+        Seq(count(lit(1)).as("n"), sum(col("cents")).as("s")),
+        steps = 3, checkpointEvery = 2) { (cur, stats, _) =>
+      cur.filter(col("cents") * (2L * stats.getLong(0)) <= lit(3L * stats.getLong(1)))
     }
-    val out = result.agg(count(lit(1)).as("n_orders"), sum(col("cents")).as("sum_cents"))
-    val materialized = out.head()
     ctx.stop()
     import s.implicits._
-    Seq((materialized.getLong(0), materialized.getLong(1))).toDF("n_orders", "sum_cents")
+    Seq((last.getLong(0), last.getLong(1))).toDF("n_orders", "sum_cents")
   }
 
   /** i02: PageRank over the customer↔supplier interaction graph — the
@@ -138,7 +179,7 @@ object IterativeQueries {
       broadcast(edges.groupBy(col("src")).agg(count(lit(1)).as("od"))), "src"))
     val init = withDeg.select(col("src").as("v")).distinct()
       .select(col("v"), lit(10000L).as("r"))
-    val result = ctx.iterate(init, steps = 3, checkpointEvery = 2) { (cur, _) =>
+    val (result, _) = ctx.iterate(init, Nil, steps = 3, checkpointEvery = 2) { (cur, _, _) =>
       withDeg.join(cur, col("src") === cur("v"))
         .select(col("dst"), expr("(85 * r) div (100 * od)").as("c"))
         .groupBy(col("dst")).agg(sum(col("c")).as("acc"))
@@ -262,7 +303,7 @@ object IterativeQueries {
     val init = edges.select(col("src").as("v")).distinct()
       .filter(col("v") >= 10000000L && (col("v") - 10000000L) % 10 === 0)
       .select(col("v"), lit(0L).as("dist"))
-    val dists = ctx.iterate(init, steps = 3, checkpointEvery = 2) { (cur, _) =>
+    val (dists, _) = ctx.iterate(init, Nil, steps = 3, checkpointEvery = 2) { (cur, _, _) =>
       cur.unionByName(
           edges.join(cur, edges("src") === cur("v"))
             .select(edges("dst").as("v"), (col("dist") + 1L).as("dist")))
@@ -302,7 +343,7 @@ object IterativeQueries {
     val init = edges.select(col("src").as("v")).distinct()
       .filter(col("v") >= 10000000L && (col("v") - 10000000L) % 10 === 0)
       .select(col("v"), lit(0L).as("dist"))
-    val dists = ctx.iterate(init, steps = 3, checkpointEvery = 2) { (cur, _) =>
+    val (dists, _) = ctx.iterate(init, Nil, steps = 3, checkpointEvery = 2) { (cur, _, _) =>
       cur.unionByName(
           edges.join(cur, edges("src") === cur("v"))
             .select(edges("dst").as("v"), (col("dist") + col("w")).as("dist")))

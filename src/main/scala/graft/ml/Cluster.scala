@@ -1,7 +1,9 @@
 package graft.ml
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, LongType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
 import graft.core.Tables
 import graft.functions.ArrayDotLong
@@ -16,17 +18,20 @@ import graft.operators.{Similarity, TextSim}
   * Wukong's paper workloads include iterative ML); re-expressed
   * Spark-first.
   *
-  * Distributed shape per iteration — the canonical scalable k-means:
-  *  - ASSIGN is map-only: the k×64 codebook rides in the closure as
-  *    literal arrays; each row evaluates k fused [[ArrayDotLong]] dots
-  *    and a `least()` packed argmin (`d²·8 + id`, the e05 trick — exact
-  *    integers, deterministic ties toward the lower cell id). The corpus
-  *    is never shuffled to be assigned.
-  *  - UPDATE is one partial-aggregated shuffle: posexplode to
-  *    (cell, dim, v) rows, map-side-combined `sum/count` per (cell, dim)
-  *    — at most k·64 groups regardless of corpus size — then a k·64-row
-  *    collect builds the next codebook on the driver (the same
-  *    small-model residency as [[Predict]]'s broadcast-score contract).
+  * Distributed shape — the canonical scalable k-means, ONE Spark job per
+  * Lloyd round (the corpus is quantized once and cached as JVM rows, so
+  * no round re-plans a Catalyst query over a fresh literal codebook):
+  *  - ASSIGN is map-only: the k×64 codebook rides in the task closure;
+  *    each row takes the packed argmin over `d²·8 + id` (the e05 trick —
+  *    exact integers, deterministic ties toward the lower cell id). The
+  *    corpus is never shuffled to be assigned.
+  *  - UPDATE is fused into the same tasks, not a shuffle: each task folds
+  *    its assigned rows into per-cell partial sums (members, Σvec_id,
+  *    per-dim Σ and count — k·64 numbers regardless of corpus size), and
+  *    the driver merges the task results into the next codebook (the
+  *    same small-model residency as [[Predict]]'s broadcast-score
+  *    contract). The final round's sums also carry every per-cell
+  *    statistic ml04 and e06 report.
   *  - Centroid components are FLOORED integer means (`floor(sum/cnt)`):
   *    sums of quantized ints are < 2^53, so the double division is
   *    correctly rounded and bit-equal on any IEEE engine — which is what
@@ -41,85 +46,137 @@ object Cluster {
 
   private val KPack = 8L
 
-  /** Map-only assignment against a driver-resident codebook: packed
-    * argmin over `d²(q, C_j)·8 + j` — requires staged (qv, qn) columns. */
-  private def cellOf(cents: Seq[(Long, Array[Long])]): Column = {
-    require(cents.nonEmpty && cents.forall(_._1 < KPack))
-    val keys = cents.map { case (id, cv) =>
-      val cn = cv.map(x => x * x).sum // ≤ 64·(10^4)² ≈ 6.4e9 — packs safely
-      (col("qn") - lit(2L) * ArrayDotLong.dotLong(col("qv"), lit(cv)) + lit(cn)) *
-        lit(KPack) + lit(id)
-    }
-    (if (keys.size == 1) keys.head else least(keys: _*)) % lit(KPack)
+  /** A staged corpus row: the quantized vector and its squared norm. */
+  private[graft] final case class Staged(vecId: Long, qv: Array[Long], qn: Long)
+
+  /** A codebook: (cell id, integer centroid), sorted by cell id. */
+  private[graft] type Cents = Seq[(Long, Array[Long])]
+
+  /** Integer dot over the common prefix — [[ArrayDotLong]]'s semantics. */
+  private def dot(a: Array[Long], b: Array[Long]): Long = {
+    val n = math.min(a.length, b.length)
+    var acc = 0L; var i = 0
+    while (i < n) { acc += a(i) * b(i); i += 1 }
+    acc
   }
 
-  /** One codebook update: partial-aggregated (cell, dim) sums — k·64
-    * groups — collected to the driver as floored integer means. */
-  private[graft] def updateCents(assigned: DataFrame): Seq[(Long, Array[Long])] =
-    assigned
-      .select(col("cell"), posexplode(col("qv")).as(Seq("dim", "v")))
-      .groupBy(col("cell"), col("dim"))
-      .agg(sum(col("v")).as("s"), count(lit(1)).as("c"))
-      .collect()
-      .groupBy(_.getAs[Long]("cell"))
-      .toSeq
-      .map { case (cell, rows) =>
-        val cv = new Array[Long](64)
-        rows.foreach { r =>
-          cv(r.getAs[Int]("dim")) =
-            math.floor(r.getAs[Long]("s").toDouble / r.getAs[Long]("c")).toLong
-        }
-        cell -> cv
-      }
-      .sortBy(_._1)
+  /** The packed argmin `min_j (d²(q, C_j)·8 + j) % 8` over a codebook
+    * given as (id, centroid, ‖centroid‖²): exact integers, ties toward
+    * the lower cell id — the oracle's `min(... * 8 + c.cell) % 8`. */
+  private[graft] def nearest(s: Staged, book: Array[(Long, Array[Long], Long)]): Int = {
+    var best = Long.MaxValue; var j = 0
+    while (j < book.length) {
+      val (id, cv, cn) = book(j)
+      val key = (s.qn - 2L * dot(s.qv, cv) + cn) * KPack + id
+      if (key < best) best = key
+      j += 1
+    }
+    (best % KPack).toInt
+  }
 
-  /** The assignment after `iters` Lloyd rounds from the deterministic
-    * `vec_id < k` seed: (vec_id, qv, qn, cell), eagerly materialized
-    * (localCheckpoint) so downstream consumers — the kmeans stats
-    * aggregation, e06's within-cluster self-join — never re-drive the
-    * iteration lineage. */
-  private[graft] def assignDF(emb: DataFrame, k: Int = 8, iters: Int = 2): DataFrame = {
+  /** Per-cell partial sums of one Lloyd pass — members, Σvec_id, and
+    * per-dim Σ and count. Each task folds its rows into one; the driver
+    * merges the task results. */
+  private[graft] final class CellSums(k: Int) extends Serializable {
+    val n = new Array[Long](k)
+    val sumId = new Array[Long](k)
+    private val sum = Array.fill(k)(Array.emptyLongArray)
+    private val cnt = Array.fill(k)(Array.emptyLongArray)
+
+    private def widen(c: Int, dims: Int): Unit = if (sum(c).length < dims) {
+      sum(c) = java.util.Arrays.copyOf(sum(c), dims)
+      cnt(c) = java.util.Arrays.copyOf(cnt(c), dims)
+    }
+
+    def add(c: Int, s: Staged): this.type = {
+      n(c) += 1; sumId(c) += s.vecId
+      widen(c, s.qv.length)
+      var d = 0
+      while (d < s.qv.length) { sum(c)(d) += s.qv(d); cnt(c)(d) += 1; d += 1 }
+      this
+    }
+
+    def merge(o: CellSums): this.type = {
+      for (c <- 0 until k) {
+        n(c) += o.n(c); sumId(c) += o.sumId(c)
+        widen(c, o.sum(c).length)
+        for (d <- o.sum(c).indices) { sum(c)(d) += o.sum(c)(d); cnt(c)(d) += o.cnt(c)(d) }
+      }
+      this
+    }
+
+    /** The next codebook: FLOORED integer means of every non-empty
+      * cell. Empty cells drop out and keep their ids unassigned. */
+    def cents: Cents = (0 until k).filter(n(_) > 0).map { c =>
+      c.toLong -> Array.tabulate(sum(c).length)(d =>
+        math.floor(sum(c)(d).toDouble / cnt(c)(d)).toLong)
+    }
+  }
+
+  /** `iters` Lloyd rounds from the deterministic `vec_id < k` seed over
+    * the corpus staged once as cached JVM rows (quantization stays the
+    * Catalyst expression the oracle mirrors). Staging collects the seed;
+    * then each round is ONE job: every task assigns its rows against the
+    * codebook in its closure and folds them into a [[CellSums]], and the
+    * k-sized task results merge on the driver. Returns the final round's
+    * assignment and its sums, whose floored means are the final
+    * codebook; `keep` leaves that assignment cached. */
+  private def lloyd(emb: DataFrame, k: Int, iters: Int,
+                    keep: Boolean): (RDD[(Staged, Int)], CellSums) = {
     require(k <= KPack, s"packed argmin reserves ${KPack} cell ids")
+    require(iters >= 1, s"iters must be positive, got $iters")
     val staged = emb
       .select(col("vec_id"), Similarity.quantize(col("embedding")).as("qv"))
-      .withColumn("qn", ArrayDotLong.dotLong(col("qv"), col("qv")))
+      .queryExecution.toRdd
+      .map { r => val qv = r.getArray(1).toLongArray(); Staged(r.getLong(0), qv, dot(qv, qv)) }
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val seed: Seq[(Long, Array[Long])] = staged
-      .filter(col("vec_id") < k)
-      .select(col("vec_id"), col("qv"))
-      .collect()
-      .map(r => r.getAs[Long]("vec_id") -> r.getSeq[Long](1).toArray)
-      .sortBy(_._1)
-      .toSeq
-
-    // iters-1 full (assign + update) rounds, then the final assignment.
-    val cents = (1 until iters).foldLeft(seed) { (c, _) =>
-      updateCents(staged.withColumn("cell", cellOf(c)))
+    var cents: Cents = staged.filter(_.vecId < k).map(s => s.vecId -> s.qv)
+      .collect().sortBy(_._1).toSeq
+    require(cents.nonEmpty, s"no seed rows: the corpus has no vec_id < $k")
+    var last: (RDD[(Staged, Int)], CellSums) = null
+    for (round <- 1 to iters) {
+      val book = cents.map { case (id, cv) => (id, cv, dot(cv, cv)) }.toArray
+      val assigned = staged.map(s => (s, nearest(s, book)))
+      if (keep && round == iters) assigned.persist(StorageLevel.MEMORY_AND_DISK)
+      val sums = assigned.aggregate(new CellSums(k))((acc, r) => acc.add(r._2, r._1), _ merge _)
+      last = (assigned, sums)
+      cents = sums.cents
     }
-    val out = staged.withColumn("cell", cellOf(cents)).localCheckpoint(true)
     staged.unpersist(false)
-    out
+    last
   }
+
+  private val assignSchema = StructType(Seq(
+    StructField("vec_id", LongType), StructField("qv", ArrayType(LongType)),
+    StructField("qn", LongType), StructField("cell", LongType)))
+
+  /** The assignment after `iters` Lloyd rounds as (vec_id, qv, qn, cell)
+    * rows, cached by the final round's job so downstream consumers — e06's
+    * within-cluster self-join, e11's profile — never re-drive the rounds;
+    * with the final round's sums. */
+  private[graft] def fitted(emb: DataFrame, k: Int, iters: Int): (DataFrame, CellSums) = {
+    val (assigned, last) = lloyd(emb, k, iters, keep = true)
+    val rows = assigned.map { case (s, c) => Row(s.vecId, s.qv, s.qn, c.toLong) }
+    (emb.sparkSession.createDataFrame(rows, assignSchema), last)
+  }
+
+  /** The assignment after `iters` Lloyd rounds from the deterministic
+    * `vec_id < k` seed: (vec_id, qv, qn, cell), materialized. */
+  private[graft] def assignDF(emb: DataFrame, k: Int = 8, iters: Int = 2): DataFrame =
+    fitted(emb, k, iters)._1
 
   /** `iters` Lloyd iterations from the deterministic `vec_id < k` seed;
     * returns per-cell membership stats of the LAST assignment plus the
     * final codebook's component-sum checksum — every column an exact
-    * integer. */
+    * integer. All of it is read off the final round's sums: the ≤ k-row
+    * output is built on the driver. */
   def kmeans(emb: DataFrame, k: Int = 8, iters: Int = 2): DataFrame = {
     val spark = emb.sparkSession
-    val lastAssign = assignDF(emb, k, iters)
-    val finalCents = updateCents(lastAssign)
-
     import spark.implicits._
-    val centSums = finalCents.map { case (id, cv) => (id, cv.sum) }
-      .toDF("cell", "cent_sum")
-    val out = lastAssign
-      .groupBy(col("cell"))
-      .agg(count(lit(1)).as("n_members"), sum(col("vec_id")).as("sum_vec_id"))
-      .join(broadcast(centSums), "cell")
-      .select(col("cell"), col("n_members"), col("sum_vec_id"), col("cent_sum"))
-      .localCheckpoint(true)
-    out
+    val (_, last) = lloyd(emb, k, iters, keep = false)
+    last.cents.map { case (cell, cv) =>
+      (cell, last.n(cell.toInt), last.sumId(cell.toInt), cv.sum)
+    }.toDF("cell", "n_members", "sum_vec_id", "cent_sum")
   }
 
   def kmeansQuery(s: SparkSession, d: String): DataFrame =
@@ -145,7 +202,7 @@ object Cluster {
   def semanticDedup(emb: DataFrame, tau: Double = 0.3,
                     k: Int = 8, iters: Int = 2,
                     occupancyCap: Long = 4096L): DataFrame = {
-    val assigned = assignDF(emb, k, iters)
+    val (assigned, last) = fitted(emb, k, iters)
     val cosOf = ArrayDotLong.dotLong(col("qva"), col("qvb")).cast("double") /
       (sqrt(col("qna").cast("double")) * sqrt(col("qnb").cast("double")))
     // within-cell pairwise scoring, vectors carried through the equi-join
@@ -157,16 +214,14 @@ object Cluster {
         .filter(col("va") < col("vb"))
         .withColumn("cos", cosOf).filter(col("cos") >= tau)
         .select(col("vb"))
-    // cell-occupancy audit: ≤ k rows — the bounded-collect discipline.
+    // cell-occupancy audit: ≤ k counts, read off the final Lloyd round.
     // A dense directional core piles into one cell no matter how the
     // occupancy law sizes k (the e04 failure shape); cells above the cap
     // spill their pairs through the CONSERVATIVE PQ pre-verify
     // ([[Similarity.pqPreVerify]] — no false negatives) so the wasted
     // below-threshold candidates are pruned before any vector ships.
     // Output is bit-identical at any cap.
-    val occs = assigned.groupBy(col("cell")).agg(count(lit(1)).as("occ"))
-      .collect().map(r => r.getAs[Long]("cell") -> r.getAs[Long]("occ")).toMap
-    val bigCells = occs.collect { case (c, n) if n > occupancyCap => c }.toSeq
+    val bigCells = last.n.indices.filter(c => last.n(c) > occupancyCap).map(_.toLong)
     val pruned =
       (if (bigCells.isEmpty) pairsExact(assigned)
        else {
@@ -216,9 +271,10 @@ object Cluster {
   def clusterProfile(emb: DataFrame, k: Int = 8, iters: Int = 2): DataFrame = {
     val spark = emb.sparkSession
     import spark.implicits._
-    val lastAssign = assignDF(emb, k, iters)
-    val cents = updateCents(lastAssign)
-    val centDf = cents.map { case (cell, cv) => (cell, cv) }.toDF("cell", "cv")
+    val (lastAssign, last) = fitted(emb, k, iters)
+    // ≤ k rows (one per non-empty cell), so the broadcast hint is
+    // bounded by construction, whatever the corpus size
+    val centDf = last.cents.toDF("cell", "cv")
     val sq = col("qn") -
       lit(2L) * graft.functions.ArrayDotLong.dotLong(col("qv"), col("cv")) +
       graft.functions.ArrayDotLong.dotLong(col("cv"), col("cv"))

@@ -9,40 +9,6 @@ class LinAlgSpec extends SparkSpec {
 
   private def maxAbs(m: BDM[Double]): Double = breeze.linalg.max(breeze.numerics.abs(m))
 
-  /** Runs `body` under a fresh job group and returns its result with the
-    * number of Spark jobs it started. A sentinel job in the same group
-    * marks the end: the listener bus delivers in order, so once the
-    * sentinel's start arrives every earlier job of the group has too. */
-  private def countJobs[T](body: => T): (T, Int) = {
-    import org.apache.spark.scheduler._
-    val sc = spark.sparkContext
-    val group = s"linalg-job-audit-${System.nanoTime}"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val done = new java.util.concurrent.CountDownLatch(1)
-    val lis = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = {
-        val props = Option(j.properties)
-        if (props.map(_.getProperty("spark.jobGroup.id")).contains(group)) {
-          if (props.flatMap(p => Option(p.getProperty("linalg.audit.sentinel"))).isDefined)
-            done.countDown()
-          else jobs.incrementAndGet(): Unit
-        }
-      }
-    }
-    sc.addSparkListener(lis)
-    try {
-      sc.setJobGroup(group, "linalg job audit")
-      val out = try body finally {
-        sc.setLocalProperty("linalg.audit.sentinel", "1")
-        sc.parallelize(Seq(1), 1).count()
-        sc.setLocalProperty("linalg.audit.sentinel", null)
-        sc.clearJobGroup()
-      }
-      assert(done.await(30, java.util.concurrent.TimeUnit.SECONDS), "listener bus never drained")
-      (out, jobs.get())
-    } finally sc.removeSparkListener(lis)
-  }
-
   /** 96² SPD arrowhead, bs = 32: a dense first block row and column and
     * dense diagonal blocks; blocks (1,2) and (2,1) are ABSENT. Step 0's
     * trailing update fills them in (L_20·L_10ᵀ ≠ 0), so a factorization

@@ -55,4 +55,27 @@ class EntryMetricsSpec extends SparkSpec {
       assert(json.startsWith("{") && json.endsWith("}"))
     } finally spark.sparkContext.removeSparkListener(em)
   }
+
+  test("each entry reports its selected rep's job count and that rep's index") {
+    val em = new EntryMetrics()
+    spark.sparkContext.addSparkListener(em)
+    try {
+      // three reps of one entry, each exactly 3 single-stage jobs; the
+      // middle rep is the fastest (the others sleep), so it is selected
+      def rep(sleepMs: Long): Unit = {
+        val w0 = System.currentTimeMillis()
+        (1 to 3).foreach(_ => spark.sparkContext.parallelize(1 to 4, 2).count())
+        Thread.sleep(sleepMs)
+        em.window("e_reps", w0, System.currentTimeMillis())
+      }
+      rep(1000); rep(0); rep(1000)
+      em.drain(spark)
+      val (idx, b) = em.selected("e_reps")
+      assert(idx == 1, s"selected rep $idx")
+      assert(b.jobs == 3 && b.stages == 3, s"jobs ${b.jobs}, stages ${b.stages}")
+      assert(em.selected("_other")._1 == -1)
+      val json = em.toJson(Map.empty)
+      assert(json.contains("\"e_reps\":{\"rep\":1,\"jobs\":3,\"stages\":3,"), json)
+    } finally spark.sparkContext.removeSparkListener(em)
+  }
 }

@@ -53,11 +53,10 @@ class SessionSpec extends SparkSpec {
   }
 
   test("iterate: 10 steps converge, lineage stays bounded via checkpoints") {
-    import spark.implicits._
     val ctx = new GraftContext(spark)
     val init = spark.range(1024).toDF("v")
     // halve the row count every step: after 10 steps exactly 1 row
-    val out = ctx.iterate(init, steps = 10, checkpointEvery = 3) { (cur, _) =>
+    val (out, _) = ctx.iterate(init, Nil, steps = 10, checkpointEvery = 3) { (cur, _, _) =>
       cur.filter(col("v") % 2 === 0).select((col("v") / 2).cast("long").as("v"))
     }
     assert(out.count() == 1)
@@ -66,6 +65,78 @@ class SessionSpec extends SparkSpec {
     val planDepth = out.queryExecution.optimizedPlan.toString.linesIterator.size
     assert(planDepth < 12, s"lineage not truncated: plan depth $planDepth")
     ctx.stop()
+  }
+
+  test("job audit: iterate observing k aggregates runs 1 job for init plus 1 per step") {
+    val ctx = new GraftContext(spark)
+    val init = spark.range(0, 1024, 1, 4).toDF("v")
+    val seen = scala.collection.mutable.ArrayBuffer[(Long, Long)]()
+    val ((out, last), jobs) = countJobs(ctx.iterate(init,
+        Seq(count(lit(1)).as("n"), sum(col("v")).as("s"), max(col("v")).as("m")),
+        steps = 5, checkpointEvery = 2) { (cur, stats, _) =>
+      seen += stats.getLong(0) -> stats.getLong(1)
+      cur.filter(col("v") % 2 === 0).select((col("v") / 2).cast("long").as("v"))
+    })
+    assert(jobs == 1 + 5, s"iterate ran $jobs jobs")
+    // each step saw its input's (n, Σ): {0..2^(10-i)-1} has n = 2^(10-i)
+    val expect = (0 until 5).map { i => val n = 1024L >> i; n -> n * (n - 1) / 2 }
+    assert(seen.toSeq == expect, s"observed $seen")
+    assert(last.getLong(0) == 32L && last.getLong(1) == 31L * 32 / 2 && last.getLong(2) == 31L)
+    assert(last.getAs[Long]("n") == 32L, "the stats row carries the aggregates' names")
+    // the final frame is served from its cache: no job re-derives it
+    val (n, reread) = countJobs(out.collect().length)
+    assert(n == 32 && reread == 1, s"re-reading the final frame ran $reread jobs")
+    ctx.stop()
+  }
+
+  test("observed steps leave the session serializable for closures that capture it") {
+    // spark.ml's LinearSVC model captures the session in its scoring
+    // closure (ml03); Spark's Observation API would attach a
+    // non-serializable manager to the session and break that closure
+    val ctx = new GraftContext(spark)
+    ctx.iterate(spark.range(0, 64, 1, 2).toDF("v"), Seq(count(lit(1)).as("n")), steps = 1) {
+      (cur, _, _) => cur.filter(col("v") > 3)
+    }
+    ctx.stop()
+    new java.io.ObjectOutputStream(new java.io.ByteArrayOutputStream()).writeObject(spark)
+  }
+
+  test("job audit: ctx.persist materializes in 1 job") {
+    val ctx = new GraftContext(spark)
+    val (df, jobs) = countJobs(ctx.persist(spark.range(0, 5000, 1, 4).selectExpr("id * 3 AS x")))
+    assert(jobs == 1, s"persist ran $jobs jobs")
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    assert(df.queryExecution.withCachedData.collectFirst {
+      case r: InMemoryRelation => r.cacheBuilder.isCachedColumnBuffersLoaded
+    }.contains(true), "persist left the cache unfilled")
+    ctx.stop()
+  }
+
+  test("an observed step over an empty frame gets n = 0 and a null sum, without throwing or hanging") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration._
+    val schema = StructType(Seq(StructField("v", LongType)))
+    val inits = Seq(
+      "filtered to empty" -> spark.range(0, 100, 1, 2).toDF("v").filter(col("v") < 0),
+      "no partitions" -> spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema))
+    for ((what, init) <- inits) {
+      val ctx = new GraftContext(spark)
+      val steps = scala.collection.mutable.ArrayBuffer[Row]()
+      val run = Future(ctx.iterate(init,
+          Seq(count(lit(1)).as("n"), sum(col("v")).as("s")), steps = 2) { (cur, stats, _) =>
+        steps += stats
+        cur.filter(col("v") > 0)
+      })
+      val (out, last) = Await.result(run, 2.minutes)
+      (steps :+ last).foreach { r =>
+        assert(r.getLong(0) == 0L && r.isNullAt(1), s"$what: observed $r")
+      }
+      assert(out.count() == 0)
+      ctx.stop()
+    }
   }
 
   test("iterative trim matches a driver-side reference loop") {
@@ -80,6 +151,14 @@ class SessionSpec extends SparkSpec {
     }
     assert(got.getLong(0) == cents.size.toLong)
     assert(got.getLong(1) == cents.sum)
+  }
+
+  test("job audit: i01 runs one job per materialized frame") {
+    // the parquet reader's schema job, then init and 3 steps, one
+    // observed pass each; the output is a driver-side row (no job)
+    val (rows, jobs) = countJobs(IterativeQueries.iterativeTrim(spark, sfDir).collect())
+    assert(rows.length == 1)
+    assert(jobs == 1 + 1 + 3, s"i01 ran $jobs jobs")
   }
 
   test("i06 k-core peel matches a local reference loop and strictly shrinks") {
