@@ -48,29 +48,29 @@ object Bench {
 
   /** Identifies the configuration this sample measured, so best-of-samples
     * never merges medians across different code OR different
-    * timing-relevant env (core count, scratch mode — a 8-core or
-    * disk-scratch sample must not lose to a stale 32-core tmpfs minimum
-    * and then masquerade as that config's number). Unknown → unique id →
-    * never merges (fail-safe).
+    * timing-relevant env (core count, scratch mode, a plan-shape budget —
+    * a 8-core or disk-scratch sample must not lose to a stale 32-core
+    * tmpfs minimum and then masquerade as that config's number). Unknown
+    * → unique id → never merges (fail-safe).
     */
   private def codeId(): String = try {
     import scala.sys.process._
     val devNull = ProcessLogger(_ => ())
     val head = Process(Seq("git", "rev-parse", "HEAD")).!!(devNull).trim
     val dirty = Process(Seq("git", "status", "--porcelain", "--", "src", "build.sbt")).!!(devNull).trim.nonEmpty
-    val env = Seq(
-      sys.env.get("SPARK_GRAFT_CPUS").map("cpus=" + _),
-      sys.env.get("SPARK_GRAFT_NO_TMPFS").map(_ => "notmpfs"),
-      // plan-shape overrides: a sample probed at a pinned SUMMA tile or
-      // a different broadcast-GEMM budget measures a different plan
-      sys.env.get("SPARK_GRAFT_GEMM_TILE").map("tile=" + _),
-      sys.env.get("SPARK_GRAFT_BC_GEMM_BYTES").map("bcgemm=" + _),
-      sys.env.get("SPARK_GRAFT_CHOL_TILE").map("choltile=" + _),
-      sys.env.get("SPARK_GRAFT_CHOL_BC_BYTES").map("bcchol=" + _),
-      sys.env.get("SPARK_GRAFT_CONF").map(c => "conf=" + c.hashCode.toHexString)).flatten
-    head + (if (dirty) "+dirty" else "") +
-      (if (env.isEmpty) "" else env.mkString("@", ",", ""))
+    head + (if (dirty) "+dirty" else "") + envTag(sys.env)
   } catch { case _: Throwable => s"unknown-${System.nanoTime()}" }
+
+  /** The env part of [[codeId]]: every `SPARK_GRAFT_*` variable that is
+    * set, sorted by name, as `@NAME=value,…` ("" when none is set). A
+    * value outside `[A-Za-z0-9._/-]` (a `k=v;k=v` conf string, a size
+    * list) enters as its hash, so the separators stay unambiguous. */
+  private[graft] def envTag(env: Map[String, String]): String = {
+    val tags = env.toSeq.filter(_._1.startsWith("SPARK_GRAFT_")).sortBy(_._1).map { case (k, v) =>
+      k + "=" + (if (v.matches("[A-Za-z0-9._/-]*")) v else "#" + v.hashCode.toHexString)
+    }
+    if (tags.isEmpty) "" else tags.mkString("@", ",", "")
+  }
 
   /** Minimal extraction of {"queries":{...},"spread":{...},"code":...,"sf":...,"samples":N}
     * from a previous bench_out.json via Jackson (on Spark's classpath).

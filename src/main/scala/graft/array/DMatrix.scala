@@ -700,7 +700,7 @@ class DMatrix(
     * Deployment note (100 TB): a skinny factor that OUTGROWS the 64 MB
     * budget (m ≳ 5·10⁵ rows at l = 15) silently falls back to the join
     * path, which re-shuffles the fat side — at that scale raise
-    * SPARK_GRAFT_BC_GEMM_BYTES instead: TorrentBroadcast distributes
+    * SPARK_GRAFT_BC_BYTES instead: TorrentBroadcast distributes
     * peer-to-peer in O(log P) rounds, so a few hundred MB broadcast to
     * 1,000 executors is far cheaper than one full pass of an 80 TB
     * operand through an exchange. The budget is
@@ -787,12 +787,11 @@ class DMatrix(
         // roundoff variance otherwise (same contract as tsqr's tree
         // combine).
         val nbr = nbRows; val nbc = other.nbCols
-        // SPARK_GRAFT_GEMM_TILE pins t for A/B probes (BENCH_NOTES r14).
         // The accumulator cap sizes against the driver/executor JVM's
         // own heap share per concurrent slot (local mode: this JVM; on a
         // cluster the executor running the task) — ¼ of the share, so
         // the retained stripe lists and shuffle buffers keep headroom.
-        val tile = sys.env.get("SPARK_GRAFT_GEMM_TILE").map(_.toInt).getOrElse {
+        val tile = {
           val slots = math.max(1, spark.sparkContext.defaultParallelism)
           val accCap = Runtime.getRuntime.maxMemory / (4L * slots)
           DMatrix.summaTileFor(nbr, nbc, bs, parts, accCap)
@@ -900,7 +899,7 @@ class DMatrix(
     val parts = math.max(1, blocks.rdd.getNumPartitions)
     val slots = math.max(1, spark.sparkContext.defaultParallelism)
     val path = DMatrix.gramPathFor(q, 8L * nRows * nCols, slots,
-      bcOverride.getOrElse(DMatrix.bcGemmBytes))
+      bcOverride.getOrElse(DMatrix.bcBytes))
     // Degenerate triangular grid (r15 ADVICE #1): very few block-columns
     // over a matrix too big to broadcast would funnel the whole product
     // through q(q+1)/2 ≪ slots serial stripe-streaming tasks; the deep
@@ -928,7 +927,7 @@ class DMatrix(
       } else if (path == "broadcast") {
         // Whole-operand broadcast (r16, guide §3.1 — the same budgeted
         // broadcast-join law as [[multiply]]'s skinny regimes and the
-        // cholesky panel): a matrix within SPARK_GRAFT_BC_GEMM_BYTES
+        // cholesky panel): a matrix within SPARK_GRAFT_BC_BYTES
         // ships ONCE to every executor and each lower output block
         // G_ij = Σ_k A(k,i)ᵀ·A(k,j) is computed map-side with ZERO
         // shuffle — at a18's recon the tiled path moved 151 MB through
@@ -962,9 +961,8 @@ class DMatrix(
         // Triangular tiled SUMMA: same stream-fold as multiply's tiled
         // path, restricted to lower output tiles (it ≥ jt). Tile width
         // follows the same ≥¾-wave + accumulator-cap rule, counted over
-        // the TRIANGULAR grid (SPARK_GRAFT_GEMM_TILE pins it for probes
-        // — already part of the bench merge fingerprint).
-        val tile = sys.env.get("SPARK_GRAFT_GEMM_TILE").map(_.toInt).getOrElse {
+        // the TRIANGULAR grid.
+        val tile = {
           val slots = math.max(1, spark.sparkContext.defaultParallelism)
           val accCap = Runtime.getRuntime.maxMemory / (4L * slots)
           DMatrix.gramTileFor(q, bs, parts, accCap)
@@ -1754,13 +1752,14 @@ object DMatrix {
   def blockDim(dim: Long, bs: Int, bIdx: Int): Int =
     math.min(bs.toLong, dim - bIdx.toLong * bs).toInt
 
-  /** Broadcast budget for the skinny-GEMM paths — mirrors the spirit of
+  /** The one broadcast budget — mirrors the spirit of
     * `spark.sql.autoBroadcastJoinThreshold`: an operand at most this many
-    * bytes ships to every executor instead of joining. 64 MB default
-    * (the judge-adjudicated budget: the l-wide skinny factors this guards
-    * are ~1 MB at the flagship); env-overridable for probes/tests. */
-  private[graft] def bcGemmBytes: Long =
-    sys.env.get("SPARK_GRAFT_BC_GEMM_BYTES").map(_.toLong).getOrElse(64L << 20)
+    * bytes ships to every executor instead of joining. It gates the
+    * skinny-GEMM and gramian paths here and the Cholesky/LU panel steps
+    * in [[LinAlg]]. `SPARK_GRAFT_BC_BYTES`, default 64 MB (the l-wide
+    * skinny factors it guards are ~1 MB at the flagship). */
+  private[graft] def bcBytes: Long =
+    sys.env.get("SPARK_GRAFT_BC_BYTES").map(_.toLong).getOrElse(64L << 20)
 
   /** Which physical plan [[DMatrix.multiply]] takes, as a pure function
     * of the operand shapes (unit-testable — MultiplyPathSpec pins the
@@ -1786,7 +1785,7 @@ object DMatrix {
   private[graft] def multiplyPathFor(
       aNbRows: Int, aNbCols: Int, aBytes: Long,
       bNbRows: Int, bNbCols: Int, bBytes: Long,
-      parts: Int, bcLimit: Long = bcGemmBytes): String =
+      parts: Int, bcLimit: Long = bcBytes): String =
     if (bNbCols == 1 && bBytes <= bcLimit) "broadcast-right"
     else if (aNbRows == 1 && aBytes <= bcLimit) "broadcast-left"
     else {
@@ -1817,7 +1816,7 @@ object DMatrix {
     *  - `single-column`: q = 1 — per-block map-side syrk partials reduce
     *    into the one output block, zero data-sized shuffle;
     *  - `broadcast`: the whole operand fits the broadcast budget
-    *    (`SPARK_GRAFT_BC_GEMM_BYTES`, dense upper bound) — ships once,
+    *    (`SPARK_GRAFT_BC_BYTES`, dense upper bound) — ships once,
     *    every lower block computes map-side, zero shuffle;
     *  - `tri-summa`: the triangular tiled stream (one partition per
     *    lower tile);
@@ -1826,7 +1825,7 @@ object DMatrix {
     *    `transpose.multiply` (deep join, `parts`-way parallel) instead
     *    of ≤q(q+1)/2 serial stripe streams (r15 ADVICE #1). */
   private[graft] def gramPathFor(q: Int, denseBytes: Long, slots: Int,
-                                 bcLimit: Long = bcGemmBytes): String =
+                                 bcLimit: Long = bcBytes): String =
     if (q == 1) "single-column"
     else if (denseBytes <= bcLimit) "broadcast"
     else if (q.toLong * (q + 1) / 2 >= math.max(1, (slots * 3) / 4)) "tri-summa"

@@ -5,7 +5,8 @@ package graft.array
   * On hosts without a native BLAS (this harness: JNIBLAS absent, netlib
   * resolves to `VectorBLAS`), the Java dgemm's throughput collapses once a
   * single call's dimensions leave the kernel's cache-blocking regime:
-  * measured single-threaded on this box (tools/DgemmMicro) —
+  * measured single-threaded on this box (BENCH_NOTES.md, the dgemm
+  * microbenchmark) —
   *
   *   1000³ monolithic      9.3–17.8 GFLOP/s
   *   1500³ monolithic      1.5 GFLOP/s

@@ -21,8 +21,8 @@ import breeze.linalg.{DenseMatrix => BDM, DenseVector => BDV, qr, svd, cholesky 
   * never a full matrix: n×n factors (R, B, U_r), svdCompressed's
   * max(m, n)×l sketch factors (l = k + oversample: ~420 MB for a 100 TB
   * square input at l = 15), and one Cholesky/LU panel when it fits
-  * `SPARK_GRAFT_CHOL_BC_BYTES`; past that budget only panel copies
-  * shuffle. That is the property that survives 100 TB.
+  * the broadcast budget `SPARK_GRAFT_BC_BYTES`; past that budget only
+  * panel copies shuffle. That is the property that survives 100 TB.
   */
 object LinAlg {
 
@@ -376,14 +376,14 @@ object LinAlg {
      s(0 until k).copy, vt(0 until k, ::).t.copy)
   }
 
-  /** Which path step k of an nb-step blocked factorization takes, as a
-    * pure function of the grid (unit-testable — LinAlgSpec pins the
-    * bench shape to broadcast throughout and the production shape to a
-    * tile→broadcast flip, so a budget tweak cannot silently change a
-    * plan; same discipline as [[DMatrix.multiplyPathFor]]). The panel
-    * column at step k is (nb−k) blocks of bs²·8 bytes. */
+  /** Which path step k of an nb-step blocked Cholesky takes, as a pure
+    * function of the grid (unit-testable — LinAlgSpec pins the bench
+    * shape to broadcast throughout and the production shape to a
+    * panel-shuffle→broadcast flip, so a budget tweak cannot silently
+    * change a plan; same discipline as [[DMatrix.multiplyPathFor]]). The
+    * panel at step k is column k: (nb−k) blocks of bs²·8 bytes. */
   private[graft] def cholStepPathFor(nb: Int, k: Int, bs: Int, budget: Long): String =
-    if (panelFits(nb - k, bs, budget)) "broadcast" else "tile-shuffle"
+    if (panelFits(nb - k, bs, budget)) "broadcast" else "panel-shuffle"
 
   /** [[cholStepPathFor]]'s rule for [[lu]]: step k's panel is column k
     * (nb−k blocks) plus row k (nb−k−1 blocks). */
@@ -395,218 +395,150 @@ object LinAlg {
   private def panelFits(panelBlocks: Int, bs: Int, budget: Long): Boolean =
     panelBlocks.toLong * bs * bs * 8 <= budget
 
-  /** Step budget of the blocked factorizations: `SPARK_GRAFT_CHOL_BC_BYTES`,
-    * default 64 MB. */
-  private def factorBcBytes: Long =
-    sys.env.get("SPARK_GRAFT_CHOL_BC_BYTES").map(_.toLong).getOrElse(64L << 20)
+  /** Step k of a blocked factorization, built on the driver from the
+    * diagonal block: `solve` maps a state block to its value after the
+    * panel solve (the diagonal block becomes its factor, the other panel
+    * blocks their solved panels, every other block passes through). One
+    * object serves both step paths, so a panel is bit-identical whether
+    * the driver or an executor solved it. */
+  private[array] sealed trait PanelStep extends Serializable {
+    def solve(b: Block): Block
+  }
 
-  /** Block-key state of a blocked factorization: A's blocks that `keep`
-    * selects, keyed by (bi, bj), in ONE shuffle onto `part` — plus an
-    * all-zero block for every kept key A lacks. An absent block is zero
-    * in A but not in its factors: a trailing update L_ik·L_jkᵀ (or
-    * L_ik·U_kj) fills it in, so it must exist to receive that update.
-    * Each partition adds the missing keys it owns after reading its
-    * shuffle input, so the fill adds no stage and no job. */
-  private def factorState(a: DMatrix, part: Partitioner,
-                          keep: (Int, Int) => Boolean): RDD[((Int, Int), Block)] = {
+  /** What one blocked right-looking factorization adds to
+    * [[factorSteps]], the step driver [[choleskyLower]] and [[lu]] share.
+    * Step k's panel is block column k from the diagonal down plus, where
+    * the state keeps it, block row k right of the diagonal. Trailing
+    * block (i, j), i, j > k, is updated from the panel blocks (i, k) and
+    * `right(i, j, k)`. */
+  private[array] sealed trait Factorization[R] extends Serializable {
+    /** The triangle of block keys the state keeps. */
+    def keep(i: Int, j: Int): Boolean
+    /** The pure step-path rule: `broadcast` or `panel-shuffle`. */
+    def stepPath(nb: Int, k: Int, bs: Int, budget: Long): String
+    /** Factors step k's diagonal block. */
+    def step(k: Int, diag: Block): PanelStep
+    /** The second panel block trailing block (i, j) reads at step k. */
+    def right(i: Int, j: Int, k: Int): (Int, Int)
+    /** The trailing keys whose update reads panel block p at step k. */
+    def feeds(p: Block, k: Int, nb: Int): Iterator[(Int, Int)]
+    /** b − l·r, the trailing-update dgemm (α = −1, β = 1). */
+    def update(b: Block, l: Block, r: Block): Block
+    /** The factor(s), from the final state. */
+    def unpack(state: RDD[((Int, Int), Block)], a: DMatrix): R
+
+    /** [[update]], where an absent (null) panel block is zero. */
+    final def trail(b: Block, l: Block, r: Block): Block =
+      if (l == null || r == null) b else update(b, l, r)
+  }
+
+  /** The block keys a factorization's state holds: A's kept keys, every
+    * diagonal key, and the fill-in. A trailing key (i, j) fills in at
+    * step k when both panel blocks its update reads are held, so the
+    * pattern is symbolic elimination over the growing pattern on the
+    * nb×nb key grid, not one pass over A's keys. Every other key stays
+    * zero through every step and is never stored: a block-diagonal input
+    * factors block by block. Pure; runs on the driver. */
+  private[array] def fillPattern(f: Factorization[_], nb: Int,
+                                 present: Iterable[(Int, Int)]): Set[(Int, Int)] = {
+    val held = Array.ofDim[Boolean](nb, nb)
+    present.foreach { case (i, j) => held(i)(j) = true }
+    for (d <- 0 until nb) held(d)(d) = true
+    for (k <- 0 until nb; i <- k + 1 until nb if held(i)(k); j <- k + 1 until nb
+         if f.keep(i, j) && !held(i)(j)) {
+      val (ri, rj) = f.right(i, j, k)
+      held(i)(j) = held(ri)(rj)
+    }
+    (for (i <- 0 until nb; j <- 0 until nb if held(i)(j)) yield (i, j)).toSet
+  }
+
+  /** The step loop of a blocked right-looking factorization: nb
+    * sequential panel steps — inherently iterative, exactly as the
+    * reference ran it (deep DAG) — over a block-key state that lives on
+    * ONE fixed partitioner from its entry shuffle to its unpack.
+    *  - Entry: A's kept blocks shuffle once onto `part`. The job that
+    *    reads them back returns every key and the blocks step 0 reads on
+    *    the driver; each partition then adds the [[fillPattern]] keys it
+    *    owns as zero blocks, which adds no job.
+    *  - Step k takes the path `f.stepPath` picks for `budget`. On
+    *    `broadcast` the driver factors the diagonal block, solves the
+    *    panel and broadcasts it, and the trailing update is one narrow
+    *    `mapValues`. On `panel-shuffle` the driver factors only the
+    *    diagonal block, the executors solve the panel, and one copy of a
+    *    panel block ships to each partition holding a trailing block it
+    *    feeds; the trailing update is a narrow `zipPartitions` against
+    *    those copies. The state never leaves its partitioner.
+    *  - One job materializes step k and collects what step k+1 reads on
+    *    the driver: its whole panel when it broadcasts, else its diagonal
+    *    block. A factorization runs nb + 1 jobs on either path.
+    *  - Lineage is truncated with localCheckpoint every
+    *    `checkpointEvery` steps (SURVEY §7.5 known-hard #5).
+    * An absent panel block is zero, so the updates it would feed are
+    * skipped. Both paths solve with the same [[PanelStep]] and update
+    * with the same dgemm, so the factors are bit-identical across budgets
+    * (LinAlgSpec pins budget 0, a mid-run flip and ∞). */
+  private[array] def factorSteps[R](a: DMatrix, f: Factorization[R], part: TilePartitioner,
+                                    checkpointEvery: Int, budget: Long): R = {
+    val sc = a.blocks.sparkSession.sparkContext
     val nb = a.nbRows; val n = a.nRows; val bs = a.blockSize
-    a.blocks.rdd.filter(b => keep(b.bi, b.bj)).map(b => ((b.bi, b.bj), b))
-      .partitionBy(part)
-      .mapPartitionsWithIndex({ (pid, it) =>
-        val seen = new java.util.HashSet[(Int, Int)]()
-        it.map { kv => seen.add(kv._1); kv } ++ (for {
-          i <- Iterator.range(0, nb); j <- Iterator.range(0, nb)
-          if keep(i, j) && part.getPartition((i, j)) == pid && !seen.contains((i, j))
-        } yield {
-          val rows = DMatrix.blockDim(n, bs, i); val cols = DMatrix.blockDim(n, bs, j)
-          (i, j) -> Block(i, j, rows, cols, new Array[Double](rows * cols))
-        })
-      }, preservesPartitioning = true)
-  }
-
-  /** out = b − lik·ljkᵀ — the trailing-update dgemm (α=−1, β=1) with an
-    * explicit small transpose of ljk (breeze's implicit-T multiply would
-    * hit the >1024 JVM-dgemm cliff at production block sizes — Gemm
-    * scaladoc). ONE body shared by the tile-shuffle and broadcast paths
-    * so the factor is bit-identical whichever path delivered the panel. */
-  private def cholTrailingBlock(b: Block, lik: Block, ljk: Block): Block = {
-    val ck = lik.cols
-    val ljkT = new Array[Double](ljk.rows * ck)
-    var c = 0
-    while (c < ck) {
-      var r = 0
-      while (r < ljk.rows) {
-        ljkT(c + r * ck) = ljk.data(r + c * ljk.rows); r += 1
-      }
-      c += 1
+    def broadcasts(k: Int): Boolean = f.stepPath(nb, k, bs, budget) == "broadcast"
+    // the keys step k reads on the driver
+    def driverKeys(k: Int): ((Int, Int)) => Boolean =
+      if (k >= nb) _ => false
+      else if (broadcasts(k)) { case (i, j) => (j == k && i >= k) || (i == k && j > k) }
+      else _ == ((k, k))
+    val entry = a.blocks.rdd.filter(b => f.keep(b.bi, b.bj)).map(b => ((b.bi, b.bj), b))
+      .partitionBy(part).cache()
+    val need0 = driverKeys(0)
+    val keyed = entry.map { case (key, b) => key -> Option.when(need0(key))(b) }.collect()
+    val present = keyed.map(_._1)
+    val fill = (fillPattern(f, nb, present) -- present).toArray
+    def zero(i: Int, j: Int): Block = {
+      val rows = DMatrix.blockDim(n, bs, i); val cols = DMatrix.blockDim(n, bs, j)
+      Block(i, j, rows, cols, new Array[Double](rows * cols))
     }
-    val out = b.data.clone()
-    Gemm.dgemm(b.rows, b.cols, ck, -1.0, lik.data, 0, lik.rows,
-      ljkT, 0, ck, 1.0, out, 0, b.rows)
-    b.copy(data = out)
-  }
-
-  /** Blocked right-looking Cholesky (reference `da.linalg.cholesky`,
-    * examples.rst:84-100): nb sequential panel steps — inherently
-    * iterative, exactly as the reference ran it (deep DAG). Per step:
-    * local chol of the bs×bs diagonal block, distributed panel solve,
-    * distributed rank-bs trailing update. Lineage is truncated with
-    * localCheckpoint every few steps (SURVEY §7.5 known-hard #5).
-    * Returns the lower factor L.
-    *
-    * Scale shape (r15 rewrite; CholeskyProbe measured the old two-join
-    * update moving nb³·bs²-law bytes — 148 MB for a 34 MB matrix at
-    * nb=8, ×7.7 for ×4 data at nb=16): the state matrix now lives on a
-    * FIXED block→tile partitioner and NEVER crosses an exchange after
-    * the single entry shuffle (which also fills absent lower blocks with
-    * zeros — [[factorState]]) — panel solve and L_kk replacement are
-    * mapValues, the trailing update is a zipPartitions against
-    * tile-keyed PANEL COPIES (only the panel moves, one copy per t-wide
-    * tile instead of per block — the SUMMA replication law, ÷t), and
-    * the per-step diagonal pull is a partitioner-routed single-partition
-    * `lookup`, not an nb-task filter scan.
-    *
-    * Panel broadcast within budget (r16, guide §3.1 — the r15 VERDICT
-    * directive #2): a step whose REMAINING panel column ((nb−k)·bs²·8 B)
-    * fits `SPARK_GRAFT_CHOL_BC_BYTES` (default 64 MB, the same
-    * autoBroadcastJoinThreshold-style contract as the broadcast-GEMM
-    * budget) broadcasts the SOLVED panel instead of shuffling tile-keyed
-    * copies: the trailing update becomes a single narrow `mapValues`
-    * (zero shuffle, and the per-step diagonal lookup job disappears —
-    * the panel collect carries the diagonal block). Above the budget the
-    * tile path runs unchanged, so a production factorization starts on
-    * tile shuffles and flips to broadcast as the trailing panel shrinks
-    * under the budget. Both paths drive the same dgemm with the same
-    * explicit small transpose, so the factor is BIT-IDENTICAL across
-    * paths (LinAlgSpec pins budget∈{0,∞} ≡ Breeze); the dispatch rule is
-    * the pure function [[LinAlg.cholStepPathFor]]. */
-  def choleskyLower(a: DMatrix, checkpointEvery: Int = 6,
-                    tileOverride: Option[Int] = None,
-                    bcBudgetOverride: Option[Long] = None): DMatrix = {
-    require(a.nRows == a.nCols, "cholesky needs a square matrix")
-    val spark = a.blocks.sparkSession
-    val bs = a.blockSize
-    val nb = a.nbRows
-    val slots = spark.sparkContext.defaultParallelism
-    // Tile width: largest t whose step-0 trailing tile grid still fills
-    // ≥¾ of a wave (same rule as the GEMM tiles). Panel traffic per
-    // step is (nb−k)²·bs²·8/t bytes; small grids keep t=1 (parallelism
-    // over traffic — the whole factorization is sub-second there),
-    // production-depth grids (nb ≳ 16) get t ≥ 2.
-    val tile = tileOverride
-      .orElse(sys.env.get("SPARK_GRAFT_CHOL_TILE").map(_.toInt)).getOrElse {
-      Seq(4, 2, 1).find { tt =>
-        val g = (nb + tt - 1) / tt
-        g.toLong * (g + 1) / 2 >= math.max(1, (slots * 3) / 4)
-      }.getOrElse(1)
-    }
-    val gT = (nb + tile - 1) / tile
-    val nParts = math.max(2, math.min(slots, gT * (gT + 1) / 2))
-    // One partitioner for both sides: state keys are block coords, panel
-    // copies are keyed by their target tile's REPRESENTATIVE block
-    // (it·t, jt·t) — the same ÷tile landing spot.
-    val part = new TilePartitioner(nParts, tile)
-    // keep only the lower triangle (absent blocks filled with zeros);
-    // ONE entry shuffle onto the fixed partitioner — the state never
-    // moves again.
-    var state = factorState(a, part, (i, j) => i >= j).cache()
-    var prev = state
-    val bcBudget = bcBudgetOverride.getOrElse(factorBcBytes)
-    def stepPath(k: Int): String = cholStepPathFor(nb, k, bs, bcBudget)
-    // Column-(k) panel collected by the PREVIOUS step's materialization
-    // job when that step already knew step k would broadcast — one
-    // driver round trip per step instead of lookup + count.
-    var panelNext: Map[Int, Block] = null
+    var state = entry.mapPartitionsWithIndex({ (pid, it) =>
+      it ++ fill.iterator.filter(part.getPartition(_) == pid).map { case (i, j) => (i, j) -> zero(i, j) }
+    }, preservesPartitioning = true)
+    var got: Map[(Int, Int), Block] = keyed.collect { case (key, Some(b)) => key -> b }.toMap
+    var prev: RDD[_] = entry
     for (k <- 0 until nb) {
+      // A lacks (0, 0) only when A_00 is zero; the factorization then fails on it
+      val step = f.step(k, got.getOrElse((k, k), zero(k, k)))
       var bcRelease: org.apache.spark.broadcast.Broadcast[_] = null
       val next0 =
-        if (stepPath(k) == "broadcast") {
-          // ---- broadcast path: zero shuffle this step ----
-          val panel: Map[Int, Block] =
-            if (panelNext != null) panelNext
-            else {
-              // entering broadcast mode (k=0 or a tile→broadcast flip):
-              // read only the ≤gT partitions that can hold column k
-              val colParts = (k until nb).map(i => part.getPartition((i, k))).toSet
-              org.apache.spark.rdd.PartitionPruningRDD.create(state, colParts.contains)
-                .flatMap { case ((i, j), b) =>
-                  if (j == k && i >= k) Iterator(b) else Iterator.empty }
-                .collect().map(b => b.bi -> b).toMap
-            }
-          val diag = panel(k)
-          val lkk = bchol(new BDM(diag.rows, diag.cols, diag.data))
-          val invLkkT = inv(lkk.t)
-          // driver-side panel solve — the SAME breeze product the tile
-          // path's executor-side solve computes, so bits are identical
-          val solved: Map[Int, Block] = panel.map { case (i, b) =>
-            if (i == k) i -> b.copy(data = lkk.data)
-            else i -> b.copy(data = (b.toBreeze * invLkkT).data)
-          }
-          val bcPanel = spark.sparkContext.broadcast(solved)
+        if (broadcasts(k)) {
+          val bcPanel = sc.broadcast(got.map { case (key, b) => key -> step.solve(b) })
           bcRelease = bcPanel
-          val kk = k
-          // factorState filled every absent block, so the panel is complete
           state.mapValues { b =>
             val p = bcPanel.value
-            if (b.bj == kk) p(b.bi)
-            else if (b.bj > kk) cholTrailingBlock(b, p(b.bi), p(b.bj))
-            else b                               // finalized (bj < k)
+            if (b.bi > k && b.bj > k)
+              f.trail(b, p.getOrElse((b.bi, k), null), p.getOrElse(f.right(b.bi, b.bj, k), null))
+            else p.getOrElse((b.bi, b.bj), b)   // a solved panel block, or a finalized one
           }
         } else {
-          // ---- tile-shuffle path: only panel copies cross an exchange ----
-          val diag = state.lookup((k, k)).head   // single-partition job
-          val lkk = bchol(new BDM(diag.rows, diag.cols, diag.data))
-          val invLkkT = inv(lkk.t)   // bs×bs-small, shipped in closures
-          val lkkData = lkk.data
-          val updated = state.mapValues { b =>
-            if (b.bi == k && b.bj == k) b.copy(data = lkkData)
-            else if (b.bj == k && b.bi > k) b.copy(data = (b.toBreeze * invLkkT).data)
-            else b                               // finalized (bj<k) or trailing (bj>k)
-          }
-          // Panel copies, tile-keyed: L_ik serves every trailing block of
-          // row i (one copy per tile COLUMN it meets), L_jk every block of
-          // column j (one copy per tile ROW). role 0 = left factor (keyed
-          // by the serving row i), 1 = right (keyed by column j).
-          val contribs = updated.filter { case ((_, bj), b) => bj == k && b.bi > k }
-            .values.flatMap { p =>
-              val leftTiles = ((k + 1) / tile to p.bi / tile).iterator
-                .map(jt => (((p.bi / tile) * tile, jt * tile), (0, p)))
-              val rightTiles = (p.bi / tile to (nb - 1) / tile).iterator
-                .map(it => ((it * tile, (p.bi / tile) * tile), (1, p)))
-              leftTiles ++ rightTiles
-            }.partitionBy(part)
-          // A_ij -= L_ik · L_jkᵀ for i ≥ j > k: narrow on the state side —
-          // both inputs share `part`, so only the panel copies shuffled.
-          updated.zipPartitions(contribs, preservesPartitioning = true) {
-            (stateIt, contribIt) =>
-              val left = new java.util.HashMap[Long, Block]()   // (jt<<32)|i → L_ik
-              val right = new java.util.HashMap[Long, Block]()  // (it<<32)|j → L_jk
-              contribIt.foreach { case ((ri, rj), (role, p)) =>
-                if (role == 0) left.put(((rj / tile).toLong << 32) | p.bi, p): Unit
-                else right.put(((ri / tile).toLong << 32) | p.bi, p): Unit
-              }
-              stateIt.map { case (key, b) =>
-                if (b.bj <= k) (key, b)
-                else {
-                  val lik = left.get(((b.bj / tile).toLong << 32) | b.bi)
-                  val ljk = right.get(((b.bi / tile).toLong << 32) | b.bj)
-                  (key, cholTrailingBlock(b, lik, ljk))
-                }
-              }
+          val updated = state.mapValues(step.solve)
+          // one copy of a panel block per partition holding a trailing
+          // block it feeds, keyed by one of those trailing blocks
+          val copies = updated.values.flatMap { p =>
+            f.feeds(p, k, nb).map(key => part.getPartition(key) -> key).toMap
+              .valuesIterator.map(_ -> p)
+          }.partitionBy(part)
+          updated.zipPartitions(copies, preservesPartitioning = true) { (stateIt, copyIt) =>
+            val panel = new java.util.HashMap[(Int, Int), Block]()
+            copyIt.foreach { case (_, p) => panel.put((p.bi, p.bj), p) }
+            stateIt.map { case (key, b) =>
+              if (b.bi > k && b.bj > k)
+                key -> f.trail(b, panel.get((b.bi, k)), panel.get(f.right(b.bi, b.bj, k)))
+              else key -> b
+            }
           }
         }
       var next = next0
       if ((k + 1) % checkpointEvery == 0) next.localCheckpoint()
       next = next.cache()
-      // Materialize before dropping the parent; when the NEXT step
-      // broadcasts, the same job also collects its panel column (fused
-      // count+collect — saves one driver round trip per step).
-      if (k + 1 < nb && stepPath(k + 1) == "broadcast") {
-        val kn = k + 1
-        panelNext = next.flatMap { case ((i, j), b) =>
-          if (j == kn && i >= kn) Iterator(b) else Iterator.empty
-        }.collect().map(b => b.bi -> b).toMap
-      } else { panelNext = null; next.count() }
+      val need = driverKeys(k + 1)
+      got = next.filter { case (key, _) => need(key) }.collect().toMap
       // executor copies released now that `next` is materialized; the
       // driver keeps the value, so a cache-evicted partition can still
       // recompute (unpersist, never destroy)
@@ -615,20 +547,105 @@ object LinAlg {
       prev = next
       state = next
     }
-    import spark.implicits._
-    val lower = state.values.map { b =>
-      if (b.bi == b.bj) {          // zero the strictly-upper entries of diag blocks
-        val out = b.data.clone()
-        var j = 0
-        while (j < b.cols) {
-          var i = 0
-          while (i < b.rows) { if (j > i) out(i + j * b.rows) = 0.0; i += 1 }
-          j += 1
-        }
-        b.copy(data = out)
-      } else b
+    f.unpack(state, a)
+  }
+
+  /** A diagonal block's lower (or upper) triangle, the rest zeroed;
+    * `unit` sets its diagonal to 1. */
+  private def triangleOf(b: Block, lower: Boolean, unit: Boolean): Block = {
+    val out = b.data.clone()
+    var j = 0
+    while (j < b.cols) {
+      var i = 0
+      while (i < b.rows) {
+        if (if (lower) j > i else i > j) out(i + j * b.rows) = 0.0
+        else if (unit && i == j) out(i + j * b.rows) = 1.0
+        i += 1
+      }
+      j += 1
     }
-    new DMatrix(spark.createDataset(lower), a.nRows, a.nCols, bs)
+    b.copy(data = out)
+  }
+
+  /** Step k of [[choleskyLower]]: L_kk = chol(A_kk) on the diagonal and
+    * L_ik = A_ik·L_kk⁻ᵀ below it. */
+  private final case class CholStep(k: Int, lkk: Array[Double], invLkkT: BDM[Double])
+      extends PanelStep {
+    def solve(b: Block): Block =
+      if (b.bi == k && b.bj == k) b.copy(data = lkk)
+      else if (b.bj == k && b.bi > k) b.copy(data = (b.toBreeze * invLkkT).data)
+      else b
+  }
+
+  /** [[choleskyLower]]'s part of [[factorSteps]]: the lower triangle,
+    * and A_ij −= L_ik·L_jkᵀ. */
+  private[array] object Cholesky extends Factorization[DMatrix] {
+    def keep(i: Int, j: Int): Boolean = i >= j
+    def stepPath(nb: Int, k: Int, bs: Int, budget: Long): String = cholStepPathFor(nb, k, bs, budget)
+    def step(k: Int, diag: Block): PanelStep = {
+      val lkk = bchol(new BDM(diag.rows, diag.cols, diag.data))
+      CholStep(k, lkk.data, inv(lkk.t))
+    }
+    def right(i: Int, j: Int, k: Int): (Int, Int) = (j, k)
+    // L_ik is the left factor of (i, j) for k < j ≤ i, the right one of (j, i) for j ≥ i
+    def feeds(p: Block, k: Int, nb: Int): Iterator[(Int, Int)] =
+      if (p.bj != k || p.bi <= k) Iterator.empty
+      else Iterator.range(k + 1, p.bi + 1).map(j => (p.bi, j)) ++
+        Iterator.range(p.bi, nb).map(j => (j, p.bi))
+    /** An explicit small transpose of r: breeze's implicit-T multiply
+      * would hit the >1024 JVM-dgemm cliff at production block sizes
+      * (Gemm scaladoc). */
+    def update(b: Block, l: Block, r: Block): Block = {
+      val ck = l.cols
+      val rT = new Array[Double](r.rows * ck)
+      var c = 0
+      while (c < ck) {
+        var i = 0
+        while (i < r.rows) { rT(c + i * ck) = r.data(i + c * r.rows); i += 1 }
+        c += 1
+      }
+      val out = b.data.clone()
+      Gemm.dgemm(b.rows, b.cols, ck, -1.0, l.data, 0, l.rows, rT, 0, ck, 1.0, out, 0, b.rows)
+      b.copy(data = out)
+    }
+    def unpack(state: RDD[((Int, Int), Block)], a: DMatrix): DMatrix = {
+      val spark = a.blocks.sparkSession
+      import spark.implicits._
+      val lower = state.values.map(b => if (b.bi == b.bj) triangleOf(b, lower = true, unit = false) else b)
+      new DMatrix(spark.createDataset(lower), a.nRows, a.nCols, a.blockSize)
+    }
+  }
+
+  /** Blocked right-looking Cholesky (reference `da.linalg.cholesky`,
+    * examples.rst:84-100) on [[factorSteps]]: per step, local chol of the
+    * bs×bs diagonal block, panel solve, rank-bs trailing update over the
+    * lower triangle. Returns the lower factor L.
+    *
+    * The state lives on a FIXED block→tile partitioner (measurements of
+    * the old two-join update, which moved nb³·bs²-law bytes, are in
+    * BENCH_NOTES.md). Keys of one t×t tile land in one partition, so a
+    * panel copy serves a whole tile row or column: panel traffic per
+    * shuffled step falls as 1/t, the SUMMA replication law. A step
+    * broadcasts its panel when column k fits the broadcast budget
+    * (`SPARK_GRAFT_BC_BYTES`, default 64 MB — [[cholStepPathFor]]), so a
+    * production factorization starts on panel shuffles and flips to
+    * broadcast as the trailing panel shrinks under the budget. */
+  def choleskyLower(a: DMatrix, checkpointEvery: Int = 6,
+                    bcBudgetOverride: Option[Long] = None): DMatrix = {
+    require(a.nRows == a.nCols, "cholesky needs a square matrix")
+    val nb = a.nbRows
+    val slots = a.blocks.sparkSession.sparkContext.defaultParallelism
+    // Tile width: largest t whose step-0 trailing tile grid still fills
+    // ≥¾ of a wave (same rule as the GEMM tiles). Small grids keep t=1
+    // (parallelism over traffic — the whole factorization is sub-second
+    // there), production-depth grids (nb ≳ 16) get t ≥ 2.
+    val tile = Seq(4, 2, 1).find { t =>
+      val g = (nb + t - 1) / t
+      g.toLong * (g + 1) / 2 >= math.max(1, (slots * 3) / 4)
+    }.getOrElse(1)
+    val gT = (nb + tile - 1) / tile
+    val part = new TilePartitioner(math.max(2, math.min(slots, gT * (gT + 1) / 2)), tile)
+    factorSteps(a, Cholesky, part, checkpointEvery, bcBudgetOverride.getOrElse(DMatrix.bcBytes))
   }
 
   /** SVD of a SHORT-FAT matrix (m < n) — dask's `da.linalg.svd` routes
@@ -676,14 +693,11 @@ object LinAlg {
     (l, u)
   }
 
-  /** Step k of [[lu]]: the diagonal tile's local LU, and the panel solve
-    * it drives — L_ik = A_ik·U_kk⁻¹ below the diagonal, U_kj = L_kk⁻¹·A_kj
-    * right of it, and the packed Doolittle tile (strict-lower L_kk + U_kk)
-    * on it; every other block passes through. One object serves both step
-    * paths, so a panel is bit-identical whether the driver or an executor
-    * solved it. */
+  /** Step k of [[lu]]: L_ik = A_ik·U_kk⁻¹ below the diagonal, U_kj =
+    * L_kk⁻¹·A_kj right of it, and the packed Doolittle tile
+    * (strict-lower L_kk + U_kk) on it. */
   private final case class LuStep(k: Int, packed: Array[Double],
-                                  invLkk: BDM[Double], invUkk: BDM[Double]) {
+                                  invLkk: BDM[Double], invUkk: BDM[Double]) extends PanelStep {
     def solve(b: Block): Block =
       if (b.bi == k && b.bj == k) b.copy(data = packed)
       else if (b.bj == k && b.bi > k) b.copy(data = (b.toBreeze * invUkk).data)
@@ -691,155 +705,62 @@ object LinAlg {
       else b
   }
 
-  private def luStep(k: Int, diag: Block): LuStep = {
-    val (lkk, ukk) = localLu(diag.toBreeze)
-    val packed = ukk.copy
-    var j = 0
-    while (j < packed.cols) {
-      var i = j + 1
-      while (i < packed.rows) { packed(i, j) = lkk(i, j); i += 1 }
-      j += 1
+  /** [[lu]]'s part of [[factorSteps]]: the full square, and
+    * A_ij −= L_ik·U_kj. */
+  private[array] object Lu extends Factorization[(DMatrix, DMatrix)] {
+    def keep(i: Int, j: Int): Boolean = true
+    def stepPath(nb: Int, k: Int, bs: Int, budget: Long): String = luStepPathFor(nb, k, bs, budget)
+    def step(k: Int, diag: Block): PanelStep = {
+      val (lkk, ukk) = localLu(diag.toBreeze)
+      val packed = ukk.copy
+      var j = 0
+      while (j < packed.cols) {
+        var i = j + 1
+        while (i < packed.rows) { packed(i, j) = lkk(i, j); i += 1 }
+        j += 1
+      }
+      LuStep(k, packed.data, inv(lkk), inv(ukk))
     }
-    LuStep(k, packed.data, inv(lkk), inv(ukk))
-  }
-
-  /** out = b − lik·ukj — the trailing-update dgemm (α=−1, β=1). ONE body
-    * shared by the panel-shuffle and broadcast paths so the factors are
-    * bit-identical whichever path delivered the panels. */
-  private def luTrailingBlock(b: Block, lik: Block, ukj: Block): Block = {
-    val out = b.data.clone()
-    Gemm.dgemm(b.rows, b.cols, lik.cols, -1.0, lik.data, 0, lik.rows,
-      ukj.data, 0, ukj.rows, 1.0, out, 0, b.rows)
-    b.copy(data = out)
+    def right(i: Int, j: Int, k: Int): (Int, Int) = (k, j)
+    // L_ik feeds row i of the trailing square, U_kj its column j
+    def feeds(p: Block, k: Int, nb: Int): Iterator[(Int, Int)] =
+      if (p.bj == k && p.bi > k) Iterator.range(k + 1, nb).map(j => (p.bi, j))
+      else if (p.bi == k && p.bj > k) Iterator.range(k + 1, nb).map(i => (i, p.bj))
+      else Iterator.empty
+    def update(b: Block, l: Block, r: Block): Block = {
+      val out = b.data.clone()
+      Gemm.dgemm(b.rows, b.cols, l.cols, -1.0, l.data, 0, l.rows,
+        r.data, 0, r.rows, 1.0, out, 0, b.rows)
+      b.copy(data = out)
+    }
+    /** (L unit-lower, U upper) as block sets over their triangles. */
+    def unpack(state: RDD[((Int, Int), Block)], a: DMatrix): (DMatrix, DMatrix) = {
+      val spark = a.blocks.sparkSession
+      import spark.implicits._
+      val lBlocks = state.values.filter(b => b.bi >= b.bj)
+        .map(b => if (b.bi == b.bj) triangleOf(b, lower = true, unit = true) else b)
+      val uBlocks = state.values.filter(b => b.bi <= b.bj)
+        .map(b => if (b.bi == b.bj) triangleOf(b, lower = false, unit = false) else b)
+      (new DMatrix(spark.createDataset(lBlocks), a.nRows, a.nCols, a.blockSize),
+       new DMatrix(spark.createDataset(uBlocks), a.nRows, a.nCols, a.blockSize))
+    }
   }
 
   /** Blocked right-looking LU without pivoting — dask `da.linalg.lu`
     * (dask also factorizes blockwise with no cross-chunk pivoting and
-    * documents the square-chunked, well-conditioned contract). Same
-    * design as [[choleskyLower]]: ONE entry shuffle onto a fixed
-    * partitioner (absent blocks become zero blocks there, since the
-    * trailing updates fill them in), then nb sequential panel steps, each
-    * materialized by one job that also collects the next step's panel
-    * when that step broadcasts. Per step the path is
-    * [[luStepPathFor]]'s:
-    *  - `broadcast` (the panel — column k plus row k, (2(nb−k)−1)·bs²·8
-    *    bytes — fits `SPARK_GRAFT_CHOL_BC_BYTES`): the driver factors the
-    *    diagonal tile, solves the panel ([[LuStep]]) and broadcasts it;
-    *    the trailing update A_ij −= L_ik·U_kj is one narrow `mapValues`.
-    *    A factorization that broadcasts throughout runs nb + 1 jobs.
-    *  - `panel-shuffle` (panels over the budget): the panel is solved on
-    *    the executors and only panel copies cross an exchange — L_ik to
-    *    each partition holding a trailing block of row i, U_kj to each
-    *    holding one of column j — and the trailing update is a narrow
-    *    `zipPartitions` against them; the state never leaves its
-    *    partitioner.
-    * Both paths solve with the same [[LuStep]] and update with the same
-    * dgemm ([[luTrailingBlock]]), so the factors are bit-identical across
-    * budgets (LinAlgSpec pins it). Lineage is truncated with
-    * localCheckpoint every `checkpointEvery` steps. Returns (L unit-lower,
-    * U upper) as block sets over their triangles. */
+    * documents the square-chunked, well-conditioned contract) — on
+    * [[factorSteps]] over the full square, t = 1. A step broadcasts its
+    * panel (column k plus row k, (2(nb−k)−1)·bs²·8 bytes) when it fits
+    * the broadcast budget (`SPARK_GRAFT_BC_BYTES`, default 64 MB —
+    * [[luStepPathFor]]). Returns (L unit-lower, U upper) as block sets
+    * over their triangles. */
   def lu(a: DMatrix, checkpointEvery: Int = 6,
          bcBudgetOverride: Option[Long] = None): (DMatrix, DMatrix) = {
     require(a.nRows == a.nCols, "lu needs a square matrix")
-    val spark = a.blocks.sparkSession
-    val sc = spark.sparkContext
-    val bs = a.blockSize
     val nb = a.nbRows
-    val nParts = math.max(2, math.min(sc.defaultParallelism, nb * nb))
-    val part = new TilePartitioner(nParts, 1)
-    var state = factorState(a, part, (_, _) => true).cache()
-    var prev = state
-    val bcBudget = bcBudgetOverride.getOrElse(factorBcBytes)
-    def stepPath(k: Int): String = luStepPathFor(nb, k, bs, bcBudget)
-    def panelOf(rdd: RDD[((Int, Int), Block)], k: Int): Map[(Int, Int), Block] =
-      rdd.flatMap { case ((i, j), b) =>
-        if ((j == k && i >= k) || (i == k && j > k)) Iterator(b) else Iterator.empty
-      }.collect().map(b => (b.bi, b.bj) -> b).toMap
-    // step k's panel, collected by the job that materialized step k−1
-    var panelNext: Map[(Int, Int), Block] = null
-    for (k <- 0 until nb) {
-      var bcRelease: org.apache.spark.broadcast.Broadcast[_] = null
-      val next0 =
-        if (stepPath(k) == "broadcast") {
-          val panel = if (panelNext != null) panelNext else panelOf(state, k)
-          val step = luStep(k, panel((k, k)))
-          val bcPanel = sc.broadcast(panel.map { case (key, b) => key -> step.solve(b) })
-          bcRelease = bcPanel
-          state.mapValues { b =>
-            val p = bcPanel.value
-            if (b.bi < k || b.bj < k) b                              // finalized
-            else if (b.bi == k || b.bj == k) p((b.bi, b.bj))
-            else luTrailingBlock(b, p((b.bi, k)), p((k, b.bj)))
-          }
-        } else {
-          val step = luStep(k, state.lookup((k, k)).head)   // single-partition job
-          val updated = state.mapValues(step.solve)
-          // one copy of L_ik per partition holding a trailing block of row
-          // i, one of U_kj per partition holding one of column j; each
-          // copy is keyed by a trailing block of its target partition
-          val copies = updated.values.flatMap { p =>
-            val served =
-              if (p.bj == k && p.bi > k) Iterator.range(k + 1, nb).map(j => (p.bi, j))
-              else if (p.bi == k && p.bj > k) Iterator.range(k + 1, nb).map(i => (i, p.bj))
-              else Iterator.empty
-            served.map(key => part.getPartition(key) -> key).toMap.valuesIterator.map(_ -> p)
-          }.partitionBy(part)
-          // A_ij −= L_ik · U_kj for i > k, j > k: narrow on the state side
-          updated.zipPartitions(copies, preservesPartitioning = true) { (stateIt, copyIt) =>
-            val lCol = new java.util.HashMap[Int, Block]()   // i → L_ik
-            val uRow = new java.util.HashMap[Int, Block]()   // j → U_kj
-            copyIt.foreach { case (_, p) =>
-              if (p.bj == k) lCol.put(p.bi, p) else uRow.put(p.bj, p)
-            }
-            stateIt.map { case (key, b) =>
-              if (b.bi > k && b.bj > k) (key, luTrailingBlock(b, lCol.get(b.bi), uRow.get(b.bj)))
-              else (key, b)
-            }
-          }
-        }
-      var next = next0
-      if ((k + 1) % checkpointEvery == 0) next.localCheckpoint()
-      next = next.cache()
-      // materialize before dropping the parent; when the next step
-      // broadcasts, the same job collects its panel
-      if (k + 1 < nb && stepPath(k + 1) == "broadcast") panelNext = panelOf(next, k + 1)
-      else { panelNext = null; next.count() }
-      if (bcRelease != null) bcRelease.unpersist(false)
-      prev.unpersist(false)
-      prev = next
-      state = next
-    }
-    import spark.implicits._
-    val lBlocks = state.filter { case ((bi, bj), _) => bi >= bj }.values.map { b =>
-      if (b.bi == b.bj) {              // unpack: unit diag + strict lower
-        val out = b.data.clone()
-        var j = 0
-        while (j < b.cols) {
-          var i = 0
-          while (i < b.rows) {
-            if (j > i) out(i + j * b.rows) = 0.0
-            else if (j == i) out(i + j * b.rows) = 1.0
-            i += 1
-          }
-          j += 1
-        }
-        b.copy(data = out)
-      } else b
-    }
-    val uBlocks = state.filter { case ((bi, bj), _) => bi <= bj }.values.map { b =>
-      if (b.bi == b.bj) {              // unpack: upper incl diag
-        val out = b.data.clone()
-        var j = 0
-        while (j < b.cols) {
-          var i = j + 1
-          while (i < b.rows) { out(i + j * b.rows) = 0.0; i += 1 }
-          j += 1
-        }
-        b.copy(data = out)
-      } else b
-    }
-    (new DMatrix(spark.createDataset(lBlocks), a.nRows, a.nCols, a.blockSize),
-     new DMatrix(spark.createDataset(uBlocks), a.nRows, a.nCols, a.blockSize))
+    val parts = math.max(2, math.min(a.blocks.sparkSession.sparkContext.defaultParallelism, nb * nb))
+    factorSteps(a, Lu, new TilePartitioner(parts, 1), checkpointEvery,
+      bcBudgetOverride.getOrElse(DMatrix.bcBytes))
   }
 
   /** Dense bs×bs-local forward/back substitution: solve T·X = rhs for a
@@ -1023,8 +944,8 @@ object LinAlg {
 }
 
 /** (bi, bj) → the partition of its t×t tile: the one fixed partitioner a
-  * blocked factorization's state, and the tile-keyed panel copies that
-  * meet it, share (keys of one tile land together). */
+  * blocked factorization's state, and the panel copies that meet it,
+  * share (keys of one tile land together). */
 private class TilePartitioner(parts: Int, tile: Int) extends Partitioner {
   def numPartitions: Int = parts
   def getPartition(key: Any): Int = key match {

@@ -131,7 +131,11 @@ object Predict {
     * weight vector, margin cut, train slice, and SVC hyperparameters,
     * shared with `tools.Ml03HeadroomProbe` so the recorded headroom
     * numbers always describe exactly the gate's model. Returns
-    * (margin-filtered data with `features_v`, fitted model, wg). */
+    * (margin-filtered data with `features_v`, scoring model, wg). The
+    * scoring model is `copy(ParamMap.empty)` of the fitted one: the copy
+    * keeps uid, coefficients and intercept but not the training summary,
+    * whose DataFrame would pull the SparkSession into every scoring
+    * closure. */
   private[graft] def svcMarginFixture(s: SparkSession)
       : (DataFrame, org.apache.spark.ml.classification.LinearSVCModel, Array[Long]) = {
     import org.apache.spark.ml.classification.LinearSVC
@@ -152,7 +156,7 @@ object Predict {
     val model = new LinearSVC().setMaxIter(25).setRegParam(1e-6)
       .setFeaturesCol("features_v").setLabelCol("label")
       .fit(data.filter(col("row_id") % 20 === 0))       // 5% train slice
-    (data, model, wg)
+    (data, model.copy(org.apache.spark.ml.param.ParamMap.empty), wg)
   }
 
   def predictSvc(s: SparkSession, d: String): DataFrame = {

@@ -19,7 +19,7 @@ class GramSpec extends SparkSpec {
   }
 
   test("gramian broadcast budget selects a plan, never a result (0 = tiled, ∞ = broadcast)") {
-    // r16 guide §3.1: an operand within SPARK_GRAFT_BC_GEMM_BYTES ships
+    // r16 guide §3.1: an operand within SPARK_GRAFT_BC_BYTES ships
     // once as a broadcast and every lower block computes map-side with
     // zero shuffle; above the budget the triangular tiled stream runs.
     // On the integer fixture both must be EXACT, so equal.

@@ -140,18 +140,18 @@ class LinAlgSpec extends SparkSpec {
   }
 
   test("cholesky trailing-update tile width never changes the factor (t = 1, 2, 4)") {
-    // r15: the tile-keyed panel-shipping update must be bit-stable in
-    // PLAN SHAPE only — every tile width yields the same L (each block's
-    // update consumes exactly one (L_ik, L_jk) pair regardless of which
-    // tile delivered it). bcBudgetOverride = 0 forces the tile path for
-    // every step (r16: small fixtures would otherwise broadcast and
-    // never exercise the tiles this test pins).
+    // the panel-shuffle update must be stable in PLAN SHAPE only — every
+    // tile width of the state's partitioner yields the same L (each
+    // block's update consumes exactly one (L_ik, L_jk) pair regardless of
+    // which copy delivered it). Budget 0 forces the panel-shuffle path
+    // for every step (small fixtures would otherwise broadcast and never
+    // exercise the tiles this test pins).
     val b0 = DMatrix.randInt(spark, 160, 160, 16, 29L, mod = 10L)   // 10×10 block grid
     val spd = b0.transpose.multiply(b0) + (DMatrix.eye(spark, 160, 16) * 1600.0)
     val want = bchol(spd.toLocal)
     for (t <- Seq(1, 2, 4)) {
-      val l = LinAlg.choleskyLower(spd, checkpointEvery = 3, tileOverride = Some(t),
-                                   bcBudgetOverride = Some(0L)).toLocal
+      val l = LinAlg.factorSteps(spd, LinAlg.Cholesky, new TilePartitioner(4, t),
+                                 checkpointEvery = 3, budget = 0L).toLocal
       assert(maxAbs(l - want) < 1e-6, s"tile=$t drifted from Breeze cholesky")
     }
   }
@@ -261,6 +261,56 @@ class LinAlgSpec extends SparkSpec {
     assert(maxAbs(l.toLocal * u.toLocal - sq.toLocal) < 1e-9)
   }
 
+  test("job audit: cholesky runs nb + 1 jobs on either step path") {
+    val n = 96; val bs = 16                          // nb = 6
+    val b0 = DMatrix.randInt(spark, n, n, bs, 103L, mod = 10L)
+    val spd = (b0.transpose.multiply(b0) + (DMatrix.eye(spark, n, bs) * (10.0 * n))).persist()
+    spd.blocks.rdd.count(): Unit                     // A's own build stays outside the group
+    try {
+      val want = bchol(spd.toLocal)
+      // broadcast: the entry job reads panel 0, each step's job panel k+1;
+      // panel-shuffle: the same jobs read the next diagonal block instead
+      for (budget <- Seq(Long.MaxValue, 0L)) {
+        val (l, jobs) = countJobs(LinAlg.choleskyLower(spd, bcBudgetOverride = Some(budget)))
+        assert(jobs == 6 + 1, s"budget $budget: cholesky ran $jobs jobs")
+        assert(maxAbs(l.toLocal - want) < 1e-9)
+      }
+    } finally spd.unpersist(): Unit
+  }
+
+  test("fillPattern: block-diagonal adds no keys; arrowhead and a cascade fill in") {
+    val diag = (0 until 4).map(d => (d, d))
+    assert(LinAlg.fillPattern(LinAlg.Cholesky, 4, diag) == diag.toSet)
+    assert(LinAlg.fillPattern(LinAlg.Lu, 4, diag) == diag.toSet)
+    // the arrowhead (see `arrowhead`): L_20·L_10ᵀ fills (2, 1), and for
+    // LU L_10·U_02 fills (1, 2) as well; diagonal keys are always held
+    val arrowLower = Seq((1, 0), (2, 0), (1, 1))
+    assert(LinAlg.fillPattern(LinAlg.Cholesky, 3, arrowLower) ==
+      Set((0, 0), (1, 0), (2, 0), (1, 1), (2, 1), (2, 2)))
+    assert(LinAlg.fillPattern(LinAlg.Lu, 3, arrowLower ++ Seq((0, 1), (0, 2))) ==
+      (for (i <- 0 until 3; j <- 0 until 3) yield (i, j)).toSet)
+    // elimination, not one pass over A: (2, 1) fills at step 0, then
+    // L_31·L_21ᵀ fills (3, 2) at step 1 although A has no (3, 0)
+    assert(LinAlg.fillPattern(LinAlg.Cholesky, 4, Seq((1, 0), (2, 0), (3, 1))) ==
+      diag.toSet ++ Set((1, 0), (2, 0), (3, 1), (2, 1), (3, 2)))
+  }
+
+  test("block-sparse cholesky and lu store only the fill pattern, on every path") {
+    val b0 = DMatrix.randInt(spark, 64, 64, 16, 31L, mod = 10L)   // nb=4
+    val full = b0.transpose.multiply(b0) + (DMatrix.eye(spark, 64, 16) * 640.0)
+    val blockDiag = new DMatrix(full.blocks.filter(b => b.bi == b.bj), 64, 64, 16)
+    val (arrow, arrowLocal) = arrowhead()
+    for (budget <- Seq(0L, Long.MaxValue)) {
+      assert(LinAlg.choleskyLower(blockDiag, bcBudgetOverride = Some(budget)).blocks.count() == 4)
+      val (l, u) = LinAlg.lu(blockDiag, bcBudgetOverride = Some(budget))
+      assert(l.blocks.count() == 4 && u.blocks.count() == 4)
+      // the arrowhead's absent (2, 1) fills in, so every lower key is held
+      val la = LinAlg.choleskyLower(arrow, bcBudgetOverride = Some(budget))
+      assert(la.blocks.count() == 6)
+      assert(maxAbs(la.toLocal - bchol(arrowLocal)) < 1e-9)
+    }
+  }
+
   test("luStepPathFor pins the bench, a24, 10k² and an over-budget shape") {
     val mb64 = 64L << 20
     // column k plus row k, (2(nb−k)−1)·bs²·8 bytes
@@ -285,12 +335,12 @@ class LinAlgSpec extends SparkSpec {
     // entry partitionBy)
     for (k <- 0 until 8)
       assert(LinAlg.cholStepPathFor(8, k, 256, mb64) == "broadcast")
-    // production grid (nb=32, bs=2000, 32 MB blocks): tile shuffles
+    // production grid (nb=32, bs=2000, 32 MB blocks): panel shuffles
     // until the trailing panel shrinks under the budget at k=30
-    assert(LinAlg.cholStepPathFor(32, 29, 2000, mb64) == "tile-shuffle")
+    assert(LinAlg.cholStepPathFor(32, 29, 2000, mb64) == "panel-shuffle")
     assert(LinAlg.cholStepPathFor(32, 30, 2000, mb64) == "broadcast")
-    // budget 0 pins the tile path everywhere (the invariance-sweep knob)
-    assert(LinAlg.cholStepPathFor(8, 7, 256, 0L) == "tile-shuffle")
+    // budget 0 pins the panel-shuffle path everywhere (the invariance-sweep knob)
+    assert(LinAlg.cholStepPathFor(8, 7, 256, 0L) == "panel-shuffle")
   }
 
   test("blocked cholesky at 2048² chunks 256: 8 panels, checkpoint cadence crossed") {

@@ -95,7 +95,7 @@ class MultiplyPathSpec extends SparkSpec {
     val a = intMat(spark, 300, 200, 64, 1L)     // 5x4 block grid
     val b = intMat(spark, 200, 30, 64, 2L)      // 4x1: single block-column
     assert(DMatrix.multiplyPathFor(a.nbRows, a.nbCols, 8L * 300 * 200,
-      b.nbRows, b.nbCols, 8L * 200 * 30, 4, DMatrix.bcGemmBytes) == "broadcast-right")
+      b.nbRows, b.nbCols, 8L * 200 * 30, 4, DMatrix.bcBytes) == "broadcast-right")
     assert(a.multiply(b).toLocal == a.toLocal * b.toLocal)
   }
 
@@ -103,7 +103,7 @@ class MultiplyPathSpec extends SparkSpec {
     val a = intMat(spark, 30, 200, 64, 3L)      // 1x4: single block-row
     val b = intMat(spark, 200, 300, 64, 4L)     // 4x5 block grid
     assert(DMatrix.multiplyPathFor(a.nbRows, a.nbCols, 8L * 30 * 200,
-      b.nbRows, b.nbCols, 8L * 200 * 300, 4, DMatrix.bcGemmBytes) == "broadcast-left")
+      b.nbRows, b.nbCols, 8L * 200 * 300, 4, DMatrix.bcBytes) == "broadcast-left")
     assert(a.multiply(b).toLocal == a.toLocal * b.toLocal)
   }
 

@@ -101,6 +101,23 @@ class MlSpec extends SparkSpec {
     assert(nPos > 0L && nPos < n)
   }
 
+  test("ml03's scoring model serializes without a SparkSession") {
+    // the model's UDF ships inside every scoring task; a fitted model's
+    // training summary would drag the session (and whatever state it
+    // holds) into that closure
+    val (_, model, _) = graft.ml.Predict.svcMarginFixture(spark)
+    val out = new java.io.ObjectOutputStream(new java.io.ByteArrayOutputStream()) {
+      enableReplaceObject(true)
+      override def replaceObject(obj: AnyRef): AnyRef = obj match {
+        case _: org.apache.spark.sql.SparkSession =>
+          throw new java.io.NotSerializableException("SparkSession reached from the scoring model")
+        case other => other
+      }
+    }
+    out.writeObject(model)
+    out.close()
+  }
+
   test("ml05: polynomial-kernel scorer is deterministic and nondegenerate") {
     val a = Predict.predictKernel(spark, sfDir).head()
     val b = Predict.predictKernel(spark, sfDir).head()

@@ -6,9 +6,8 @@
 #
 #   tools/run_all.sh            # gate @ sf0.01 + sf0.1, bench @ sf0.1, plans
 #   tools/run_all.sh quick      # gate @ sf0.01 only, no bench
-#   tools/run_all.sh budgets    # gate @ sf0.01 with both broadcast budgets
-#                               # (SPARK_GRAFT_BC_GEMM_BYTES and
-#                               # SPARK_GRAFT_CHOL_BC_BYTES) at 0, then at
+#   tools/run_all.sh budgets    # gate @ sf0.01 with the broadcast budget
+#                               # (SPARK_GRAFT_BC_BYTES) at 0, then at
 #                               # Long.MaxValue: every budget-gated dispatch
 #                               # path runs on its fallback side, then on
 #                               # its broadcast side; no tests, no bench
@@ -26,9 +25,8 @@ gate_sf001() {
 
 if [ "$MODE" = "budgets" ]; then
   for budget in 0 9223372036854775807; do
-    echo "=== correctness gate @ sf0.01, broadcast budgets = $budget ==="
-    SPARK_GRAFT_BC_GEMM_BYTES=$budget SPARK_GRAFT_CHOL_BC_BYTES=$budget \
-      gate_sf001 "/tmp/graft_gate_sf001_budget_$budget"
+    echo "=== correctness gate @ sf0.01, broadcast budget = $budget ==="
+    SPARK_GRAFT_BC_BYTES=$budget gate_sf001 "/tmp/graft_gate_sf001_budget_$budget"
   done
   echo "run_all: done ($MODE)"
   exit 0
