@@ -329,7 +329,7 @@ object ArrayQueries {
     var si = 0
     while (si < sv.length) { svt(si, ::) :*= sv(si); si += 1 }
     val recon = u.multiply(DMatrix.fromLocal(s, svt, 2000))
-    val checksum = recon.blocks.rdd.map { b =>
+    val checksum = recon.rdd.map { b =>
       var acc = 0L
       var i = 0
       while (i < b.data.length) { acc += math.round(b.data(i)); i += 1 }
@@ -402,7 +402,7 @@ object ArrayQueries {
     val base = DMatrix.randInt(s, n, n, bs, 97L, mod = 10L)
     val spd = base.gramian + (DMatrix.eye(s, n, bs) * (10.0 * n))
     val l = LinAlg.choleskyLower(spd)
-    val checksum = l.transpose.gramian.blocks.rdd.map { b =>
+    val checksum = l.transpose.gramian.rdd.map { b =>
       var acc = 0L
       var i = 0
       while (i < b.data.length) { acc += math.round(b.data(i)); i += 1 }

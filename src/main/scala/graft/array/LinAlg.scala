@@ -205,7 +205,7 @@ object LinAlg {
       }
       if (acc == null) Iterator.empty else Iterator.single(acc)
     }
-    var rs = a.blocks.rdd.map(_.toBreeze).mapPartitions(qrOfGroup)
+    var rs = a.rdd.map(_.toBreeze).mapPartitions(qrOfGroup)
     var width = rs.getNumPartitions
     while (width > arity) {
       val groups = math.max(1, (width + arity - 1) / arity)
@@ -242,12 +242,11 @@ object LinAlg {
     val a = singleColBlock(a0)
     val r = tsqr(a)
     val rInv = inv(r)
-    import a.blocks.sparkSession.implicits._
-    val qBlocks = a.blocks.map { b =>
+    val qBlocks = a.rdd.map { b =>
       val q = Gemm.multiplyBDM(b.toBreeze, rInv)  // paneled: blocks are taller than the fast-dgemm regime
       b.copy(data = q.data)
     }
-    (new DMatrix(qBlocks, a.nRows, a.nCols, a.blockSize), r)
+    (new DMatrix(qBlocks, a.nRows, a.nCols, a.blockSize, a.spark), r)
   }
 
   /** Driver-side SVD of a small matrix with fallbacks: the pure-Java
@@ -291,12 +290,11 @@ object LinAlg {
       vs(::, j) :*= inv
       j += 1
     }
-    import a.blocks.sparkSession.implicits._
-    val uBlocks = a.blocks.map { b =>
+    val uBlocks = a.rdd.map { b =>
       val u = Gemm.multiplyBDM(b.toBreeze, vs)
       b.copy(data = u.data)
     }
-    (new DMatrix(uBlocks, a.nRows, a.nCols, a.blockSize), s, v)
+    (new DMatrix(uBlocks, a.nRows, a.nCols, a.blockSize, a.spark), s, v)
   }
 
   /** One job over A's blocks against a local l-wide factor X: A·X for an
@@ -313,10 +311,10 @@ object LinAlg {
       val xs = x(r0 until r0 + rows, ::)
       (if (left) xs.t.copy else xs.copy).data
     }
-    val bc = a.blocks.sparkSession.sparkContext.broadcast(slices)
+    val bc = a.spark.sparkContext.broadcast(slices)
     val outStripes = if (left) a.nbCols else a.nbRows
-    val outParts = math.max(1, math.min(a.blocks.rdd.getNumPartitions, outStripes))
-    val partials = DMatrix.broadcastSkinny(a.blocks.rdd, bc, l, left, outParts).collect()
+    val outParts = math.max(1, math.min(a.rdd.getNumPartitions, outStripes))
+    val partials = DMatrix.broadcastSkinny(a.rdd, bc, l, left, outParts).collect()
     bc.unpersist(false)
     val out = if (left) BDM.zeros[Double](l, a.nCols.toInt) else BDM.zeros[Double](a.nRows.toInt, l)
     partials.foreach { case (s, data) =>
@@ -372,7 +370,7 @@ object LinAlg {
     val b = sketchProduct(a, q, left = true)                         // l × n
     val svd.SVD(uB, s, vt) = robustSvd(b)
     val u = q * uB(::, 0 until k)
-    (DMatrix.fromLocal(a.blocks.sparkSession, u, a.blockSize),
+    (DMatrix.fromLocal(a.spark, u, a.blockSize),
      s(0 until k).copy, vt(0 until k, ::).t.copy)
   }
 
@@ -479,7 +477,7 @@ object LinAlg {
     * (LinAlgSpec pins budget 0, a mid-run flip and ∞). */
   private[array] def factorSteps[R](a: DMatrix, f: Factorization[R], part: TilePartitioner,
                                     checkpointEvery: Int, budget: Long): R = {
-    val sc = a.blocks.sparkSession.sparkContext
+    val sc = a.spark.sparkContext
     val nb = a.nbRows; val n = a.nRows; val bs = a.blockSize
     def broadcasts(k: Int): Boolean = f.stepPath(nb, k, bs, budget) == "broadcast"
     // the keys step k reads on the driver
@@ -487,7 +485,7 @@ object LinAlg {
       if (k >= nb) _ => false
       else if (broadcasts(k)) { case (i, j) => (j == k && i >= k) || (i == k && j > k) }
       else _ == ((k, k))
-    val entry = a.blocks.rdd.filter(b => f.keep(b.bi, b.bj)).map(b => ((b.bi, b.bj), b))
+    val entry = a.rdd.filter(b => f.keep(b.bi, b.bj)).map(b => ((b.bi, b.bj), b))
       .partitionBy(part).cache()
     val need0 = driverKeys(0)
     val keyed = entry.map { case (key, b) => key -> Option.when(need0(key))(b) }.collect()
@@ -597,22 +595,14 @@ object LinAlg {
       * (Gemm scaladoc). */
     def update(b: Block, l: Block, r: Block): Block = {
       val ck = l.cols
-      val rT = new Array[Double](r.rows * ck)
-      var c = 0
-      while (c < ck) {
-        var i = 0
-        while (i < r.rows) { rT(c + i * ck) = r.data(i + c * r.rows); i += 1 }
-        c += 1
-      }
       val out = b.data.clone()
-      Gemm.dgemm(b.rows, b.cols, ck, -1.0, l.data, 0, l.rows, rT, 0, ck, 1.0, out, 0, b.rows)
+      Gemm.dgemm(b.rows, b.cols, ck, -1.0, l.data, 0, l.rows,
+        r.transpose.data, 0, ck, 1.0, out, 0, b.rows)
       b.copy(data = out)
     }
     def unpack(state: RDD[((Int, Int), Block)], a: DMatrix): DMatrix = {
-      val spark = a.blocks.sparkSession
-      import spark.implicits._
       val lower = state.values.map(b => if (b.bi == b.bj) triangleOf(b, lower = true, unit = false) else b)
-      new DMatrix(spark.createDataset(lower), a.nRows, a.nCols, a.blockSize)
+      new DMatrix(lower, a.nRows, a.nCols, a.blockSize, a.spark)
     }
   }
 
@@ -634,7 +624,7 @@ object LinAlg {
                     bcBudgetOverride: Option[Long] = None): DMatrix = {
     require(a.nRows == a.nCols, "cholesky needs a square matrix")
     val nb = a.nbRows
-    val slots = a.blocks.sparkSession.sparkContext.defaultParallelism
+    val slots = a.spark.sparkContext.defaultParallelism
     // Tile width: largest t whose step-0 trailing tile grid still fills
     // ≥¾ of a wave (same rule as the GEMM tiles). Small grids keep t=1
     // (parallelism over traffic — the whole factorization is sub-second
@@ -735,14 +725,12 @@ object LinAlg {
     }
     /** (L unit-lower, U upper) as block sets over their triangles. */
     def unpack(state: RDD[((Int, Int), Block)], a: DMatrix): (DMatrix, DMatrix) = {
-      val spark = a.blocks.sparkSession
-      import spark.implicits._
       val lBlocks = state.values.filter(b => b.bi >= b.bj)
         .map(b => if (b.bi == b.bj) triangleOf(b, lower = true, unit = true) else b)
       val uBlocks = state.values.filter(b => b.bi <= b.bj)
         .map(b => if (b.bi == b.bj) triangleOf(b, lower = false, unit = false) else b)
-      (new DMatrix(spark.createDataset(lBlocks), a.nRows, a.nCols, a.blockSize),
-       new DMatrix(spark.createDataset(uBlocks), a.nRows, a.nCols, a.blockSize))
+      (new DMatrix(lBlocks, a.nRows, a.nCols, a.blockSize, a.spark),
+       new DMatrix(uBlocks, a.nRows, a.nCols, a.blockSize, a.spark))
     }
   }
 
@@ -758,7 +746,7 @@ object LinAlg {
          bcBudgetOverride: Option[Long] = None): (DMatrix, DMatrix) = {
     require(a.nRows == a.nCols, "lu needs a square matrix")
     val nb = a.nbRows
-    val parts = math.max(2, math.min(a.blocks.sparkSession.sparkContext.defaultParallelism, nb * nb))
+    val parts = math.max(2, math.min(a.spark.sparkContext.defaultParallelism, nb * nb))
     factorSteps(a, Lu, new TilePartitioner(parts, 1), checkpointEvery,
       bcBudgetOverride.getOrElse(DMatrix.bcBytes))
   }
@@ -820,20 +808,20 @@ object LinAlg {
     require(b.nRows == t.nRows, s"dimension mismatch: ${t.nRows}x${t.nCols} vs rhs ${b.nRows}")
     require(b.nbCols == 1, "rhs must fit one block column (skinny solve)")
     require(b.blockSize == t.blockSize, "rhs must share the factor's chunking")
-    val spark = t.blocks.sparkSession
+    val spark = t.spark
     val bs = t.blockSize
     val nb = t.nbRows
     val nParts = math.max(2, math.min(spark.sparkContext.defaultParallelism, nb))
     // one partition per block column of the relevant triangle (Int key k
     // hashes to partition k under HashPartitioner(nb))
-    val tByCol = t.blocks.rdd
+    val tByCol = t.rdd
       .filter(blk => if (lower) blk.bi >= blk.bj else blk.bi <= blk.bj)
       .map(blk => (blk.bj, blk))
       .partitionBy(new org.apache.spark.HashPartitioner(nb))
       .cache()
     tByCol.count()
     val part = new org.apache.spark.HashPartitioner(nParts)
-    var state = b.blocks.rdd.map(blk => (blk.bi, blk)).partitionBy(part).cache()
+    var state = b.rdd.map(blk => (blk.bi, blk)).partitionBy(part).cache()
     state.count()
     var prev = state
     val order = if (lower) 0 until nb else (nb - 1) to 0 by -1
@@ -878,8 +866,7 @@ object LinAlg {
       step += 1
     }
     tByCol.unpersist(false)
-    import spark.implicits._
-    new DMatrix(spark.createDataset(state.values), b.nRows, b.nCols, bs)
+    new DMatrix(state.values, b.nRows, b.nCols, bs, spark)
   }
 
   /** General (multi-block-column) triangular solve: T·X = B where B is
@@ -896,25 +883,23 @@ object LinAlg {
     if (b.nbCols == 1) return solveTriangular(t, b, lower)
     import scala.concurrent.{Await, Future, ExecutionContext}
     import scala.concurrent.duration.Duration
-    val spark = t.blocks.sparkSession
+    val spark = t.spark
     val pool = java.util.concurrent.Executors.newFixedThreadPool(math.min(4, b.nbCols))
     implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
     try {
       val bs = b.blockSize
       val futures = (0 until b.nbCols).map { bj =>
         Future {
-          import spark.implicits._
           val width = DMatrix.blockDim(b.nCols, bs, bj)
-          val colBlocks = b.blocks.filter((blk: Block) => blk.bj == bj)
-            .map(blk => blk.copy(bj = 0))
-          val col = new DMatrix(colBlocks, b.nRows, width, bs)
+          val colBlocks = b.rdd.filter(blk => blk.bj == bj).map(blk => blk.copy(bj = 0))
+          val col = new DMatrix(colBlocks, b.nRows, width, bs, spark)
           // stays distributed: re-tag the column index on the solved
           // blocks (the X column never visits the driver)
-          solveTriangular(t, col, lower).blocks.map(blk => blk.copy(bj = bj))
+          solveTriangular(t, col, lower).rdd.map(blk => blk.copy(bj = bj))
         }
       }
       val all = futures.map(f => Await.result(f, Duration.Inf)).reduce(_ union _)
-      new DMatrix(all, b.nRows, b.nCols, bs)
+      new DMatrix(all, b.nRows, b.nCols, bs, spark)
     } finally pool.shutdown()
   }
 
@@ -927,7 +912,7 @@ object LinAlg {
   def inverse(a: DMatrix): DMatrix = {
     require(a.nRows == a.nCols, "inverse needs a square matrix")
     val (l, u) = lu(a)
-    val eye = DMatrix.eye(a.blocks.sparkSession, a.nRows, a.blockSize)
+    val eye = DMatrix.eye(a.spark, a.nRows, a.blockSize)
     val y = solveTriangularWide(l, eye, lower = true)    // L·Y = I
     solveTriangularWide(u, y, lower = false)             // U·X = Y
   }

@@ -92,7 +92,7 @@ object Sparse {
       .select(col("i").cast("long"), col("j").cast("long"), col("v").cast("double"))
       .as[(Long, Long, Double)].rdd
       .map { case (i, k, v) => ((k / bs).toInt, (i, k, v)) }
-    val bBlocks = b.blocks.rdd.map(bl => (bl.bi, bl))
+    val bBlocks = b.rdd.map(bl => (bl.bi, bl))
     val partials = cells.cogroup(bBlocks).flatMap { case (bk, (cs, bls)) =>
       val cellArr = cs.toArray
       if (cellArr.isEmpty) Iterator.empty
@@ -113,7 +113,7 @@ object Sparse {
     val blocks = partials.reduceByKey(DMatrix.addInto).map { case ((bi, bj), data) =>
       Block(bi, bj, DMatrix.blockDim(m, bs, bi), DMatrix.blockDim(nOut, bs, bj), data)
     }
-    new DMatrix(spark.createDataset(blocks), m, nOut, bs)
+    new DMatrix(blocks, m, nOut, bs, spark)
   }
 
   /** COO → blocked dense [[DMatrix]] (the scipy `.toarray()` analog,
@@ -137,6 +137,6 @@ object Sparse {
         }
         Block(bi, bj, rows, cols, data)
       }
-    new DMatrix(spark.createDataset(blocks), m, n, bs)
+    new DMatrix(blocks, m, n, bs, spark)
   }
 }

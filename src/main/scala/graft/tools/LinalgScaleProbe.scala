@@ -78,7 +78,7 @@ object LinalgScaleProbe {
       val x = DMatrix.randInt(spark, n, 5, 2000, 81L, mod = 10L)
       val y = DMatrix.randInt(spark, 5, n, 2000, 83L, mod = 10L)
       val a = x.multiply(y).persist()
-      a.blocks.rdd.count(): Unit
+      a.rdd.count(): Unit
       a
     }
     def rsvd(a: DMatrix): Double = {

@@ -158,24 +158,25 @@ class LinAlgSpec extends SparkSpec {
 
   test("cholesky panel-broadcast budget selects a plan, never a result (0 / flip / ∞)") {
     // r16 guide §3.1: below the byte budget the solved panel broadcasts
-    // and the trailing update is a narrow mapValues; above it, tile-keyed
-    // panel copies shuffle. Both paths drive the same dgemm with the same
+    // and the trailing update is a narrow mapValues; above it, the
+    // panel-shuffle step ships one copy of each panel block to every
+    // partition it feeds. Both paths drive the same dgemm with the same
     // explicit transpose, so the factor must be BIT-identical — budget 0
-    // (all tile-shuffle), ∞ (all broadcast), and a mid value that flips
-    // tile→broadcast at k=6 (exercising the pruned panel collect at the
-    // flip) all produce the same doubles.
+    // (all panel-shuffle), ∞ (all broadcast), and a mid value that flips
+    // panel-shuffle→broadcast at k=6 (the step-5 job collects the whole
+    // panel 6 at the flip) all produce the same doubles.
     val b0 = DMatrix.randInt(spark, 160, 160, 16, 29L, mod = 10L)   // nb=10, bs=16
     val spd = b0.transpose.multiply(b0) + (DMatrix.eye(spark, 160, 16) * 1600.0)
-    val lTile = LinAlg.choleskyLower(spd, checkpointEvery = 3,
+    val lShuf = LinAlg.choleskyLower(spd, checkpointEvery = 3,
                                      bcBudgetOverride = Some(0L)).toLocal
     val lBc = LinAlg.choleskyLower(spd, checkpointEvery = 3,
                                    bcBudgetOverride = Some(Long.MaxValue)).toLocal
     // (10−k)·16²·8 ≤ 8192 ⇔ nb−k ≤ 4 ⇔ broadcast from k = 6
     val lFlip = LinAlg.choleskyLower(spd, checkpointEvery = 3,
                                      bcBudgetOverride = Some(8192L)).toLocal
-    assert(lTile.data.sameElements(lBc.data), "broadcast path drifted from tile path")
-    assert(lTile.data.sameElements(lFlip.data), "mixed-path run drifted from tile path")
-    assert(maxAbs(lTile - bchol(spd.toLocal)) < 1e-6)
+    assert(lShuf.data.sameElements(lBc.data), "broadcast path drifted from the panel-shuffle path")
+    assert(lShuf.data.sameElements(lFlip.data), "mixed-path run drifted from the panel-shuffle path")
+    assert(maxAbs(lShuf - bchol(spd.toLocal)) < 1e-6)
   }
 
   test("cholesky of a block-diagonal SPD matrix: absent panel blocks are zero on both paths") {
