@@ -655,6 +655,7 @@ object ArrayQueries {
     val diag = covn.filter(col("i") === col("j"))
       .select(col("i").as("dj"), col("cov_n").as("dv"))
     val out = covn
+      // bounded: one diagonal row per matrix column, √ of covn's rows
       .join(broadcast(diag.select(col("dj").as("i"), col("dv").as("di"))), "i")
       .join(broadcast(diag.select(col("dj").as("j"), col("dv").as("djj"))), "j")
       .select(col("i"), col("j"),

@@ -368,10 +368,11 @@ class DMatrix(
     * keep-counts — that scan collects ONE count per block row
     * (metadata, O(m/bs), the two-pass pattern the text prefix scans
     * use), never mask data. The mask VALUES ship to the data blocks by
-    * broadcast when small (m doubles ≪ matrix volume), falling back to
-    * a block-row-keyed join for huge masks; either way the selected
+    * broadcast when the m 8-byte values fit the broadcast budget
+    * ([[DMatrix.bcBytes]]), falling back to a block-row-keyed join for
+    * huge masks; either way the selected
     * volume then makes exactly one keyed-assemble pass, like slice. */
-  def selectRows(mask: DMatrix, broadcastLimit: Long = 1L << 24): DMatrix = {
+  def selectRows(mask: DMatrix, broadcastLimit: Long = DMatrix.bcBytes / 8): DMatrix = {
     require(mask.nRows == nRows && mask.nCols == 1 && mask.blockSize == blockSize,
       s"mask must be ${nRows}×1 with blockSize $blockSize")
     val bs = blockSize
@@ -430,8 +431,9 @@ class DMatrix(
     * express: reordering and duplication).
     *
     * Scale shape: the index array is metadata (one long per OUTPUT
-    * row — dask materializes it on the client too), broadcast when
-    * small; for huge indices it shuffles as keyed requests grouped by
+    * row — dask materializes it on the client too), broadcast while the
+    * longs fit the broadcast budget ([[DMatrix.bcBytes]]); for huge
+    * indices it shuffles as keyed requests grouped by
     * source block row instead, so no executor ever holds more than its
     * own blocks' request slice. Either way each source block gathers
     * ONLY its referenced rows (repeats gathered once per reference) and
@@ -439,7 +441,7 @@ class DMatrix(
     * OUTPUT volume, like [[sliceStep]]; a target block's pieces tile it
     * disjointly (every output row has exactly one source), so the
     * groupByKey assemble holds one block per key, like [[rechunk]]. */
-  def takeRows(idx0: Array[Long], broadcastLimit: Long = 1L << 24): DMatrix = {
+  def takeRows(idx0: Array[Long], broadcastLimit: Long = DMatrix.bcBytes / 8): DMatrix = {
     require(idx0.nonEmpty, "empty index array")
     // numpy/dask negative-index convention: -1 is the last row
     val idx = idx0.map(i => if (i < 0) i + nRows else i)
@@ -529,7 +531,7 @@ class DMatrix(
   /** Column-axis fancy indexing `da.take(x, idx, axis=1)`: two narrow
     * transposes around [[takeRows]] — the transposes are pure block
     * maps, so the cost IS the row take's output-volume shuffle. */
-  def takeCols(idx: Array[Long], broadcastLimit: Long = 1L << 24): DMatrix =
+  def takeCols(idx: Array[Long], broadcastLimit: Long = DMatrix.bcBytes / 8): DMatrix =
     transpose.takeRows(idx, broadcastLimit).transpose
 
   /** Constant pad (numpy/dask `da.pad(x, ((rb,ra),(cb,ca)), mode=
@@ -823,10 +825,11 @@ class DMatrix(
     * block ships (it+1)+(gT−jt) ≈ gT+1 tile copies instead of 2·gT),
     * half the dgemm flops, half the output bytes — and on these paths
     * the result is exactly symmetric by construction (the mirror IS the
-    * transpose of the computed block). The deep-fallback path below runs
-    * the full `transpose.multiply(this)`, whose independently folded
-    * (j,i) blocks match (i,j) only to roundoff (exactly for the
-    * integer-domain fixtures). A single-block-column operand (the
+    * transpose of the computed block). The deep-fallback path is the
+    * exception: it runs the full `transpose.multiply(this)`, whose
+    * (j,i) blocks fold independently of (i,j), so its result is
+    * symmetric only to roundoff (exactly for the integer-domain
+    * fixtures). A single-block-column operand (the
     * tall-skinny QᵀQ / VᵀV shape) never shuffles at all: per-block local
     * syrk partials reduce into the one output block. Absent blocks mean
     * zero (same convention as [[multiply]]), so a triangular factor's
@@ -1640,8 +1643,10 @@ object DMatrix {
   /** The one broadcast budget — mirrors the spirit of
     * `spark.sql.autoBroadcastJoinThreshold`: an operand at most this many
     * bytes ships to every executor instead of joining. It gates the
-    * skinny-GEMM and gramian paths here and the Cholesky/LU panel steps
-    * in [[LinAlg]]. `SPARK_GRAFT_BC_BYTES`, default 64 MB (the l-wide
+    * skinny-GEMM and gramian paths, the row-index broadcasts of
+    * `selectRows`/`takeRows`/`takeCols` (8 bytes per row) here and the
+    * Cholesky/LU panel steps in [[LinAlg]].
+    * `SPARK_GRAFT_BC_BYTES`, default 64 MB (the l-wide
     * skinny factors it guards are ~1 MB at the flagship). */
   private[graft] def bcBytes: Long =
     sys.env.get("SPARK_GRAFT_BC_BYTES").map(_.toLong).getOrElse(64L << 20)

@@ -166,17 +166,17 @@ object IterativeQueries {
         struct(col("cust").as("src"), col("supp").as("dst")),
         struct(col("supp").as("src"), col("cust").as("dst")))).as("e"))
       .select(col("e.src").as("src"), col("e.dst").as("dst"))
-    // The degree table is NODE-sized — the family's broadcast-frontier
-    // contract (iterations already join node-sized rank frames broadcast)
-    // — but post-aggregation stats are blind here, so the planner chose a
-    // SortMergeJoin that exchanged every edge row (10 MB at sf0.1, the
-    // family's dominant construction shuffle — r16 plan audit). The hint
-    // pins the broadcast; ONE pinned frame still carries everything the
-    // loop reads (a separate deg persist was MEASURED slower: it adds a
-    // driver-synchronous job, and at this scale the family is job-count
-    // bound, not byte bound).
+    // The degree table is node-sized, so it grows with the graph and
+    // carries no hint. Post-aggregation stats are blind here, so the
+    // planner picks a SortMergeJoin; AQE turns it into a broadcast once
+    // the degree stage is measured under the threshold, but the edge
+    // side's exchange on src has run by then: at sf0.1 it writes 12.9 MB
+    // of the entry's 13.6 MB of shuffle (BENCH_NOTES.md has the walls).
+    // ONE pinned frame carries everything the loop reads (a separate
+    // deg persist was MEASURED slower: it adds a driver-synchronous job,
+    // and at this scale the family is job-count bound, not byte bound).
     val withDeg = ctx.persist(edges.join(
-      broadcast(edges.groupBy(col("src")).agg(count(lit(1)).as("od"))), "src"))
+      edges.groupBy(col("src")).agg(count(lit(1)).as("od")), "src"))
     val init = withDeg.select(col("src").as("v")).distinct()
       .select(col("v"), lit(10000L).as("r"))
     val (result, _) = ctx.iterate(init, Nil, steps = 3, checkpointEvery = 2) { (cur, _, _) =>

@@ -272,13 +272,12 @@ object Cluster {
     val spark = emb.sparkSession
     import spark.implicits._
     val (lastAssign, last) = fitted(emb, k, iters)
-    // ≤ k rows (one per non-empty cell), so the broadcast hint is
-    // bounded by construction, whatever the corpus size
     val centDf = last.cents.toDF("cell", "cv")
     val sq = col("qn") -
       lit(2L) * graft.functions.ArrayDotLong.dotLong(col("qv"), col("cv")) +
       graft.functions.ArrayDotLong.dotLong(col("cv"), col("cv"))
     lastAssign
+      // bounded: ≤ k codebook rows (one per non-empty cell)
       .join(broadcast(centDf), "cell")
       .withColumn("sq", sq)
       .groupBy(col("cell"))

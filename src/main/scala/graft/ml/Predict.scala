@@ -255,11 +255,12 @@ object Predict {
     val sxxC = (col("tsxx") - col("sxx")).cast("double")
     val sxyC = (col("tsxy") - col("sxy")).cast("double")
     val slope = (nC * sxyC - sxC * syC) / (nC * sxxC - sxC * sxC)
-    val models = fs.crossJoin(broadcast(tot))
+    val models = fs.crossJoin(tot)
       .select(col("fold"), (col("tn") - col("n")).as("n_train"), col("n").as("n_val"),
               slope.as("slope"), ((syC - slope * sxC) / nC).as("icept"))
     val resid = col("y").cast("double") -
       (col("icept") + col("slope") * col("x").cast("double"))
+    // bounded: one model row per fold
     val out = r.join(broadcast(models), "fold")
       .select(col("fold"), col("n_train"), col("n_val"), col("slope"), col("icept"),
               abs(round(resid)).cast("long").as("ae"))
@@ -324,6 +325,7 @@ object Predict {
     val std = sqrt((nd * sxxd - sxd * sxd) / (nd * (nd - lit(1.0))))
     cells.filter(col("vec_id") % 20 === 0 && col("dim") < 8)
       .select(col("vec_id"), col("dim").cast("long").as("dim"), col("q"))
+      // bounded: one row per embedding dimension (64)
       .join(broadcast(stats), "dim")
       .select(col("vec_id"), col("dim"),
         round((col("q").cast("double") - mean) / std, 6).as("z"),
@@ -483,6 +485,7 @@ object Predict {
       .groupBy(col("lang").as("c"), col("tok"))
       .agg(count(lit(1)).as("n_cw"))
     val classTot = prof.groupBy(col("c")).agg(sum(col("n_cw")).as("n_c"))
+    // bounded: one row per class (language)
     val rates = prof.join(broadcast(classTot), "c")
       .select(col("tok"), col("c"), expr("(n_cw * 1000000) div n_c").as("r_ppm"))
     val tf = toks.filter(col("doc_id") % 5 === 0)
@@ -580,8 +583,9 @@ object Predict {
     val rowT = cells.groupBy(col("f")).agg(sum(col("o")).as("r_tot"))
     val colT = cells.groupBy(col("b")).agg(sum(col("o")).as("c_tot"))
     val tot = cells.groupBy().agg(sum(col("o")).as("t_tot"))
+    // bounded: one row per return flag and per quantity decile
     cells.join(broadcast(rowT), "f").join(broadcast(colT), "b")
-      .crossJoin(broadcast(tot))
+      .crossJoin(tot)
       .select(col("f"), col("b"), col("o"), col("r_tot"), col("c_tot"), col("t_tot"),
               (col("o") * col("t_tot") - col("r_tot") * col("c_tot")).as("delta"))
       .select(col("f"), col("b"), col("o"), col("r_tot"), col("c_tot"),
@@ -613,6 +617,7 @@ object Predict {
       .agg(sum(col("ca")).as("ta"), sum(col("cb")).as("tb"))
     val p = col("ca").cast("double") / col("ta").cast("double")
     val q = col("cb").cast("double") / col("tb").cast("double")
+    // bounded: one row per order priority (5)
     cnt.join(broadcast(tot), "prio")
       .select(col("prio"), col("ca"), col("cb"),
         when(col("ca") > 0 && col("cb") > 0,

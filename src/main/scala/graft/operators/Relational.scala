@@ -67,6 +67,7 @@ object Relational {
     val nat = Tables.nation(s, d)
     li.join(ord, col("l_orderkey") === col("o_orderkey"))
       .join(cust, col("o_custkey") === col("c_custkey"))
+      // bounded: the 25-row nation table
       .join(broadcast(nat), col("c_nationkey") === col("n_nationkey"))
       .groupBy(col("n_name"))
       .agg(round(sum(col("l_extendedprice") * (lit(1) - col("l_discount"))), 2).as("revenue"))
@@ -1225,9 +1226,11 @@ object Relational {
   /** q56: pandas/dask `qcut` — label every row with its quartile bucket
     * under per-group EXACT quantile boundaries. The boundaries come from
     * the same [[rankScan]] machinery as q30 (one range exchange over the
-    * value-frequency table, bounded state at any scale), then broadcast
-    * back onto the fact scan as a tiny dim — the labeling pass is
-    * map-side, the fact table never re-shuffles for its labels. Bucket
+    * value-frequency table, bounded state at any scale), then join back
+    * onto the fact scan as a groups×3 dim. The dim is per key, so it
+    * carries no broadcast hint: Spark's size check broadcasts it while it
+    * is small (the labeling pass is then map-side) and shuffles it past
+    * the threshold. Bucket
     * rule is right-closed (v ≤ p25 → 0 … else 3, the pandas
     * convention); comparisons use the round(·,4)-stabilized boundaries
     * the q30 hash-match already proves identical cross-engine. Output
@@ -1240,7 +1243,7 @@ object Relational {
     val quarts = quartilesByKey(freq)
       .select(col("k"), round(col("p25"), 4).as("q1"),
               round(col("p50"), 4).as("q2"), round(col("p75"), 4).as("q3"))
-    cents.join(broadcast(quarts), "k")
+    cents.join(quarts, "k")
       .withColumn("bucket",
         when(col("v") <= col("q1"), 0L)
           .when(col("v") <= col("q2"), 1L)
@@ -1416,10 +1419,12 @@ object Relational {
     * exact integer domain: ranks come from a VALUE-FREQUENCY DIM (≤50
     * distinct quantities / ≤11 distinct discount-cents per group), not
     * from sorting the fact table — rank(v) = (running count of values
-    * ≤ v) − cnt(v) + 1 over the tiny dim, broadcast back onto the fact
-    * scan. The fact table never sorts and never re-shuffles for its
-    * ranks; the only full-data exchange is the final per-group power-sum
-    * agg (partial-aggregable). Sums accumulate as decimal(38,0) —
+    * ≤ v) − cnt(v) + 1 over the tiny dim, joined back onto the fact
+    * scan. The dims grow with the distinct values, so they carry no
+    * broadcast hint: while they are under the threshold Spark broadcasts
+    * them and the only full-data exchange is the final per-group
+    * power-sum agg (partial-aggregable). The fact table never sorts.
+    * Sums accumulate as decimal(38,0) —
     * rank products are n², so a 64-bit sum overflows around n≈2M rows
     * per group; decimal keeps the integer domain exact at any scale —
     * and the q49 closed-form corr runs ONE double tail, mirrored
@@ -1436,8 +1441,8 @@ object Relational {
                 (sum(col("cnt")).over(w) - col("cnt") + lit(1L)).as(rk))
     }
     val ranked = li
-      .join(broadcast(rankDim("x", "rx")), Seq("k", "x"))
-      .join(broadcast(rankDim("y", "ry")), Seq("k", "y"))
+      .join(rankDim("x", "rx"), Seq("k", "x"))
+      .join(rankDim("y", "ry"), Seq("k", "y"))
     val dec = "decimal(38,0)"
     val sums = ranked.groupBy(col("k")).agg(
       count(lit(1)).as("n"),
@@ -1556,9 +1561,10 @@ object Relational {
     * (pandas `(x - x.median()).abs().median()`) outlier pipelines use
     * where std is poisoned by the outliers themselves. Two passes of the
     * same [[rankScan]] machinery q30/q44 already prove exact: pass 1
-    * takes per-group medians off the value-frequency table, broadcasts
-    * the group-sized result back (the fact rows never re-shuffle for
-    * their median), pass 2 runs the identical rank probe over the
+    * takes per-group medians off the value-frequency table and joins the
+    * group-sized result back (no broadcast hint: Spark's size check
+    * broadcasts it while it is small), pass 2 runs the identical rank
+    * probe over the
     * absolute-deviation frequencies. Deviations stay integer by working
     * in median-units ×10⁴ (the median is a .5-interpolated integer, so
     * ×10⁴ is exact); the final /10⁴ is one mirrored IEEE division.
@@ -1571,7 +1577,7 @@ object Relational {
     val freq1 = cents.groupBy(col("k"), col("v")).agg(count(lit(1)).as("cnt"))
     val med = quartilesByKey(freq1)
       .select(col("k"), round(col("p50"), 4).as("med"))
-    val dev = cents.join(broadcast(med), "k")
+    val dev = cents.join(med, "k")
       .select(col("k"),
               abs(col("v") * 10000L - round(col("med") * 10000).cast("long")).as("dv"))
     val freq2 = dev.groupBy(col("k"), col("dv")).agg(count(lit(1)).as("cnt"))
@@ -1796,7 +1802,7 @@ object Relational {
     * exact "positively associated" test. */
   def basketRules(s: SparkSession, d: String): DataFrame = {
     val items = Tables.lineitem(s, d)
-      .join(broadcast(Tables.part(s, d).select(col("p_partkey"), col("p_brand"))),
+      .join(Tables.part(s, d).select(col("p_partkey"), col("p_brand")),
             col("l_partkey") === col("p_partkey"))
       .select(col("l_orderkey"), col("p_brand")).distinct()
     val baskets = items.groupBy(col("l_orderkey"))
@@ -1811,9 +1817,10 @@ object Relational {
       .groupBy(col("p.a").as("a"), col("p.b").as("b"))
       .agg(count(lit(1)).as("n_ab"))
     pairs
+      // bounded: one row per brand (25 in TPC-H)
       .join(broadcast(brandN.select(col("p_brand").as("a"), col("n_br").as("n_a"))), "a")
       .join(broadcast(brandN.select(col("p_brand").as("b"), col("n_br").as("n_b"))), "b")
-      .crossJoin(broadcast(nOrders))
+      .crossJoin(nOrders)
       .select(col("a"), col("b"), col("n_ab"), col("n_a"), col("n_b"),
               expr("(n_ab * 1000000) div n_ord").as("supp_ppm"),
               expr("(n_ab * 1000000) div n_a").as("conf_ppm"),

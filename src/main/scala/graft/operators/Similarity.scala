@@ -112,6 +112,7 @@ object Similarity {
     val cos = dotInt(col("qv"), col("nv")).cast("double") /
       (sqrt(col("qn").cast("double")) * sqrt(col("nn").cast("double")))
     val w = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("n_id"))
+    // bounded: the caller's query sample (1 in 50 of the corpus at most)
     broadcast(q).crossJoin(c)
       .filter(col("q_id") =!= col("n_id"))
       .select(col("q_id"), col("n_id"), cos.as("cos"))
@@ -357,6 +358,7 @@ object Similarity {
       dotInt(col("cv"), col("cv"))
     emb.select(col("vec_id"), quantize(col("embedding")).as("qv"))
       .withColumn("qn", dotInt(col("qv"), col("qv")))
+      // bounded: a k-row codebook (k ≤ 256)
       .join(broadcast(cents))
       .groupBy(col("vec_id"))
       .agg(min(d2 * 256L + col("cent_id")).as("key"))
@@ -517,6 +519,7 @@ object Similarity {
     val q = queries.select(col("vec_id").as("q_id"), quantize(col("embedding")).as("qv"))
     val c = corpus.select(col("vec_id").as("n_id"), quantize(col("embedding")).as("nv"))
     val w = Window.partitionBy(col("q_id")).orderBy(col("dot").desc, col("n_id"))
+    // bounded: the caller's query sample (1 in 50 of the corpus at most)
     broadcast(q).crossJoin(c)
       .filter(col("q_id") =!= col("n_id"))
       .select(col("q_id"), col("n_id"), dotInt(col("qv"), col("nv")).as("dot"))
@@ -568,6 +571,7 @@ object Similarity {
 
   private def pqCodesFrom(sv: DataFrame): DataFrame = {
     val d2 = col("sn") - lit(2L) * dotInt(col("sv"), col("cv")) + col("cn")
+    // bounded: the PqK × PqM-row codebook
     sv.join(broadcast(centsFrom(sv)), col("sub") === col("csub"))
       .groupBy(col("vec_id"), col("sub"))
       .agg(min(d2 * PqK + col("cent_id")).as("key"))
@@ -622,6 +626,7 @@ object Similarity {
     val emb = subset
     val sv = subVectors(emb)
     val d2 = col("sn") - lit(2L) * dotInt(col("sv"), col("cv")) + col("cn")
+    // bounded: the PqK × PqM-row codebook
     val enc = sv.join(broadcast(cents), col("sub") === col("csub"))
       .groupBy(col("vec_id"), col("sub"))
       .agg(min(d2 * PqK + col("cent_id")).as("key"))
@@ -693,10 +698,12 @@ object Similarity {
     val codes = pqCodesFrom(sv)
     val lutD2 = col("sn") - lit(2L) * dotInt(col("sv"), col("cv")) + col("cn")
     val lut = sv.filter(col("vec_id") % 50 === 0)
+      // bounded: the PqK × PqM-row codebook
       .join(broadcast(centsFrom(sv)), col("sub") === col("csub"))
       .select(col("vec_id").as("q_id"), col("sub").as("lsub"),
               col("cent_id"), lutD2.as("d2"))
     val w = Window.partitionBy(col("q_id")).orderBy(col("adist"), col("n_id"))
+    // bounded: the query sample's LUT, PqM × PqK rows per query
     val out = codes.join(broadcast(lut),
         col("sub") === col("lsub") && col("code") === col("cent_id") &&
           col("vec_id") =!= col("q_id"))
@@ -732,12 +739,14 @@ object Similarity {
     val cand = pqCodesFrom(sv).join(ivfCells(emb, cellsK), "vec_id")
     val lutD2 = col("sn") - lit(2L) * dotInt(col("sv"), col("cv")) + col("cn")
     val lut = sv.filter(col("vec_id") % 50 === 0)
+      // bounded: the PqK × PqM-row codebook
       .join(broadcast(centsFrom(sv)), col("sub") === col("csub"))
       .select(col("vec_id").as("q_id"), col("sub").as("lsub"),
               col("cent_id"), lutD2.as("d2"))
       .join(ivfCells(emb, cellsK).filter(col("vec_id") % 50 === 0)
               .select(col("vec_id").as("q_id"), col("cell").as("qcell")), "q_id")
     val w = Window.partitionBy(col("q_id")).orderBy(col("adist"), col("n_id"))
+    // bounded: the query sample's LUT, PqM × PqK rows per query
     val out = cand.join(broadcast(lut),
         col("sub") === col("lsub") && col("code") === col("cent_id") &&
           col("cell") === col("qcell") && col("vec_id") =!= col("q_id"))
@@ -772,6 +781,7 @@ object Similarity {
       .withColumn("na", dotInt(col("qa"), col("qa")))
     val c = emb.select(col("vec_id").as("n_id"), quantize(col("embedding")).as("qb"))
       .withColumn("nb", dotInt(col("qb"), col("qb")))
+    // bounded: the 1-in-probeMod query sample
     c.join(broadcast(q), col("q_id") =!= col("n_id"))
       .withColumn("dot", dotInt(col("qa"), col("qb")))
       .filter(col("dot") > 0 &&
@@ -810,6 +820,7 @@ object Similarity {
     val cos = dotInt(col("pv"), col("nv")).cast("double") /
       (sqrt(col("pn").cast("double")) * sqrt(col("nn").cast("double")))
     val w = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("n_id"))
+    // bounded: the 1-in-50 query sample, the same set as `exact`'s
     val approx = broadcast(probe)
       .join(cand, col("bucket") === col("b2") && col("q_id") =!= col("n_id"))
       .select(col("q_id"), col("n_id"), cos.as("cos"))

@@ -167,7 +167,7 @@ object TextOps {
       .distinct()
       .orderBy(col("h")).limit(k)
     val kth = hashes.agg(max(col("h")).as("kth"))
-    hashes.crossJoin(broadcast(kth))
+    hashes.crossJoin(kth)
       .select(col("h"),
         round(lit((k - 1).toDouble) * lit(1152921504606846976.0) /
           col("kth").cast("double"), 2).as("est_distinct"))
@@ -246,7 +246,7 @@ object TextOps {
     val freq = toks.groupBy(col("tok")).agg(count(lit(1)).as("cnt"))
     val total = freq.agg(sum(col("cnt")).as("n_total"))
     val out = toks.join(freq, "tok")
-      .crossJoin(broadcast(total))
+      .crossJoin(total)
       .select(col("doc_id"),
         (length(bin(col("n_total"))) - length(bin(col("cnt")))).as("surprise"))
       .groupBy(col("doc_id"))
@@ -358,7 +358,8 @@ object TextOps {
     val term = when(col("lcnt").isNotNull,
         lit(0.5) * p * log(p / m) + lit(0.5) * q * log(q / m))
       .otherwise(lit(0.5) * q * log(q / m))
-    val out = g.crossJoin(broadcast(gt)).crossJoin(broadcast(lt))
+    // bounded: lt has one row per language
+    val out = g.crossJoin(gt).crossJoin(broadcast(lt))
       .join(l, Seq("lang", "tok"), "left")
       .select(col("lang"), floor(term * lit(1.0e9)).cast("long").as("nano"))
       .groupBy(col("lang"))
@@ -404,6 +405,7 @@ object TextOps {
       .filter(col("rank") <= 20)
       .select(col("tok"), col("n"))
     val out = cellsOf(probes)
+      // bounded: the depth × 256 counter table (1,024 rows)
       .join(broadcast(counters), Seq("r", "bucket"))
       .groupBy(col("tok"), col("n"))
       .agg(min(col("cnt")).as("cms_est"))
@@ -555,10 +557,11 @@ object TextOps {
     val docs = Tables.documents(s, d).select(col("doc_id"), col("lang"))
     val counts = docs.groupBy(col("lang")).agg(count(lit(1)).as("cnt"))
     val floorCnt = counts.agg(min(col("cnt")).as("mn"))
-    val rates = counts.crossJoin(broadcast(floorCnt))
+    val rates = counts.crossJoin(floorCnt)
       .select(col("lang"), expr("mn * 10000 div cnt").as("rate_bp"))
     val keepHash = conv(substring(md5(col("doc_id").cast("string")), 1, 15), 16, 10)
       .cast("long") % 10000L
+    // bounded: one rate row per language
     docs.join(broadcast(rates), "lang")
       .filter(keepHash < col("rate_bp"))
       .select(col("doc_id"), col("lang"))
@@ -672,15 +675,14 @@ object TextOps {
     * all exact integers.
     *
     * Distributed shape: the benchmark side collapses to DISTINCT 60-bit
-    * gram hashes (eval suites are tiny relative to the corpus — a few MB
-    * even for a full eval harness) and BROADCASTS; the corpus side is a
-    * map-only explode of per-doc distinct gram hashes probed against
-    * that broadcast, then one groupBy on doc_id. The full text never
-    * shuffles, and at 100 TB the only exchange is the (doc_id, counts)
-    * aggregation over matched grams — contaminated docs only, a tiny
-    * fraction of the corpus. Joining on h64 hashes (8 bytes) rather
-    * than gram strings keeps the broadcast and probe narrow; both
-    * engines hash identically, so any collision is shared and the
+    * gram hashes, 1/17 of the corpus's grams, so it grows with the input
+    * and carries no broadcast hint: while it is under the broadcast
+    * threshold Spark broadcasts it and the corpus side is a map-only
+    * explode of per-doc distinct gram hashes probed against it, then one
+    * groupBy on doc_id; above the threshold both sides shuffle on the
+    * 8-byte hash. The full text never shuffles. Joining on h64 hashes
+    * (8 bytes) rather than gram strings keeps both join sides narrow;
+    * both engines hash identically, so any collision is shared and the
     * result stays bit-equal.
     *
     * explode_outer, not explode: InferFiltersFromGenerate fires only on
@@ -702,7 +704,7 @@ object TextOps {
     val corpus = grams.filter(col("doc_id") % 17 =!= 0)
       .select(col("doc_id"), size(col("shs")).as("n_grams"), explode_outer(col("shs")).as("sh"))
       .select(col("doc_id"), col("n_grams"), TextSim.h64(col("sh")).as("h"))
-    corpus.join(broadcast(bench), "h")
+    corpus.join(bench, "h")
       .groupBy(col("doc_id"))
       .agg(min(col("n_grams")).as("n_grams"), count(lit(1)).as("n_hit"))
       .withColumn("keep",
@@ -910,6 +912,7 @@ object TextOps {
       .orderBy(desc("cnt"), asc("w")).limit(1000)
       .select(col("w"), lit(1L).as("in_vocab"))
     ws.select(col("doc_id"), explode(col("ws")).as("w"))
+      // bounded: limit(1000)
       .join(broadcast(top), Seq("w"), "left")
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_tokens"),
@@ -1121,12 +1124,13 @@ object TextOps {
   def temperatureMix(s: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(s, d).select(col("doc_id"), col("lang"))
     val counts = docs.groupBy(col("lang")).agg(count(lit(1)).as("cnt"))
-    val rates = counts.crossJoin(broadcast(counts.agg(min(col("cnt")).as("mn"))))
+    val rates = counts.crossJoin(counts.agg(min(col("cnt")).as("mn")))
       .select(col("lang"), col("cnt"),
         floor(sqrt(col("mn").cast("double") / col("cnt").cast("double")) * 10000.0)
           .cast("long").as("rate_bp"))
     val keepHash = conv(substring(md5(col("doc_id").cast("string")), 1, 15), 16, 10)
       .cast("long") % 10000L
+    // bounded: one rate row per language
     docs.join(broadcast(rates), "lang")
       .filter(keepHash < col("rate_bp"))
       .groupBy(col("lang")).agg(count(lit(1)).as("n_kept"))
@@ -1187,6 +1191,7 @@ object TextOps {
       .crossJoin(nt)
       .filter(col("df") * 2 < col("nn"))
       .orderBy(col("df").desc, col("tok")).limit(5)
+    // bounded: limit(5)
     val out = tf.join(broadcast(qterms), "tok")
       .withColumn("idf_bits",
         (length(bin(col("nn"))) - length(bin(col("df")))).cast("long"))
@@ -1228,7 +1233,7 @@ object TextOps {
     val scored = pairs
       .join(uni.select(col("tok").as("a"), col("c").as("c_a")), "a")
       .join(uni.select(col("tok").as("b"), col("c").as("c_b")), "b")
-      .crossJoin(broadcast(nTot))
+      .crossJoin(nTot)
       .select(col("a"), col("b"), col("c_ab"),
               expr("((c_ab * n_tot) div c_a * 1000000) div c_b").as("score"))
     scored.orderBy(col("score").desc, col("a"), col("b")).limit(20)
@@ -1411,12 +1416,13 @@ object TextOps {
                          count(when(isTgt, 1)).as("tt"))
     val profile = tok.groupBy(col("b"))
       .agg(count(lit(1)).as("cr"), count(when(isTgt, 1)).as("ct"))
-    val scores = profile.crossJoin(broadcast(totals))
+    val scores = profile.crossJoin(totals)
       .select(col("b"),
         floor(log(((col("ct") + 1L) * (col("tr") + B)).cast("double") /
                   ((col("cr") + 1L) * (col("tt") + B)).cast("double")) * lit(1.0e9))
           .cast("long").as("s"))
     val weights = tok.groupBy(col("doc_id"), col("b")).agg(count(lit(1)).as("cnt"))
+      // bounded: one score row per hash bucket (B = 128)
       .join(broadcast(scores), Seq("b"))
       .groupBy(col("doc_id"))
       .agg(sum(col("cnt")).cast("long").as("n_tokens"),

@@ -28,7 +28,7 @@ object PlanDump {
     "t22_repetition" ->
       "Repetition quality filter: shingle array, distinct and counts are one fused map-only projection over the documents scan — zero exchanges in the plan.",
     "t23_decontaminate" ->
-      "Benchmark decontamination: the eval-side distinct gram hashes broadcast (BroadcastHashJoin); the corpus side is a map-only explode probed against that broadcast, so the only exchange is the (doc_id, counts) aggregation over matched grams.",
+      "Benchmark decontamination: the eval-side distinct gram hashes carry no hint (they grow with the corpus); at gate scale Spark's size check broadcasts them (BroadcastHashJoin) and the corpus side is a map-only explode probed against them, so the only corpus exchange is the (doc_id, counts) aggregation over matched grams. Past the threshold both sides shuffle on the 8-byte hash.",
     "t25_chunk_dedup" ->
       "Chunk-level dedup: the owner election aggregates ONLY (digest, packed id) — partial before its exchange. At gate scale AQE broadcasts the elected-owner map back (BuildRight), so chunk text crosses just ONE exchange (the doc_id reassembly); past the broadcast threshold the join degrades to a shuffled equi-join and the at-scale bound is two text-bearing exchanges — the election stays digest-only either way.",
     "t26_filter_funnel" ->
@@ -54,7 +54,7 @@ object PlanDump {
     "q54_dedup_keep_last" ->
       "keep='last' dedup as an aggregation: max_by over the packed order key plans as partial → exchange → final HashAggregate (one state row per key, map-side combined) — no Window operator and no sort of the duplicates.",
     "q56_qcut" ->
-      "qcut labeling: the quartile boundaries (driver-coordinated rankScan output, groups×3 rows) come back as a BroadcastHashJoin build side — the fact scan is labeled map-side and its only exchange is the final (group, bucket) aggregation, not a re-shuffle for labels.",
+      "qcut labeling: the quartile boundaries (driver-coordinated rankScan output, groups×3 rows) carry no hint; at gate scale Spark's size check makes them the BroadcastHashJoin build side, so the fact scan is labeled map-side and its only exchange is the final (group, bucket) aggregation. Past the threshold the labeling join shuffles.",
     "q57_ohlc" ->
       "OHLC resample: open/high/low/close/count all evaluate in ONE HashAggregate pair (partial min_by/max_by/min/max combine map-side) over a single hashpartitioning(user_id, week) exchange — no window, no sort, no join.",
     "t40_hll_sketch" ->
@@ -62,7 +62,7 @@ object PlanDump {
     "t39_bpe_pairs" ->
       "BPE pair counting: the pair explode fuses into the scan, counts partial-combine, and the global top-50 rank filter rewrites to TopKPerKey (map-side bounded heaps) — no Window, no global sort of the pair vocabulary. (q44/q30's quartiles now run driver-coordinated rank probes over a range exchange — their returned frames are LocalTableScans, so the interesting structure lives in Relational.rankScan, not a dumpable plan.)",
     "q62_spearman" ->
-      "Spearman rank correlation: BOTH rank dims (value-frequency tables, <= 50/<= 11 distinct values per group) come back as BroadcastHashJoin build sides — the fact table is ranked map-side and its ONLY exchange is the final per-group power-sum aggregation (decimal sums partial-combine).",
+      "Spearman rank correlation: the two rank dims (value-frequency tables, <= 50/<= 11 distinct values per group) carry no hint; at gate scale Spark's size check makes both BroadcastHashJoin build sides, so the fact table is ranked map-side and its ONLY exchange is the final per-group power-sum aggregation (decimal sums partial-combine). Past the threshold the rank joins shuffle.",
     "q63_rolling_corr" ->
       "Rolling correlation: all six power sums (n, Σx, Σy, Σxy, Σx², Σy²) evaluate in ONE Window operator over a single hashpartitioning(sk) exchange — the trailing 20-row frame maintains them incrementally; the corr tail is a projection.",
     "q64_pivot_table" ->

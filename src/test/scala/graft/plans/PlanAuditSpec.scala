@@ -315,6 +315,63 @@ class PlanAuditSpec extends SparkSpec {
     }
   }
 
+  test("keyless aggregates broadcast without a hint: the BNLJ builds on the one-row aggregate") {
+    // Each entry attaches a computed scalar with crossJoin(<keyless
+    // aggregate>) and no broadcast hint. Spark sizes a keyless aggregate
+    // at one row, so its own size check must still plan a
+    // BroadcastNestedLoopJoin that builds on that row (the first
+    // aggregate down the build side has no grouping keys) — never a
+    // CartesianProduct or a build on the data side. t32/t46/t54/ml06
+    // localCheckpoint inside the entry, so the plans come from every SQL
+    // execution the entry and its noop write start, read through a
+    // listener; a marked sentinel query drains the listener bus.
+    import org.apache.spark.sql.catalyst.optimizer.BuildRight
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.QueryStageExec
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
+    import org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec
+    import org.apache.spark.sql.util.QueryExecutionListener
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec => nodes(q.plan)
+      case r: ReusedExchangeExec => nodes(r.child)
+      case o => o.children.flatMap(nodes)
+    })
+    def executedPlans(name: String): Seq[SparkPlan] = {
+      val marker = s"plan-audit-${System.nanoTime}"
+      val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+      val done = new java.util.concurrent.CountDownLatch(1)
+      def seen(qe: QueryExecution): Unit =
+        if (qe.logical.toString.contains(marker)) done.countDown()
+        else plans.add(qe.executedPlan): Unit
+      val listener = new QueryExecutionListener {
+        override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = seen(qe)
+        override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = seen(qe)
+      }
+      spark.listenerManager.register(listener)
+      try {
+        run(name).write.format("noop").mode("overwrite").save()
+        spark.range(1).selectExpr(s"'$marker' AS marker").collect(): Unit
+        assert(done.await(30, java.util.concurrent.TimeUnit.SECONDS), "listener bus never drained")
+        plans.toArray(Array.empty[SparkPlan]).toSeq
+      } finally spark.listenerManager.unregister(listener)
+    }
+    for (name <- Seq("t13_kmv_sketch", "t18_domain_mix", "t32_surprisal",
+                     "t42_temperature_mix", "t46_js_divergence", "t49_collocations",
+                     "t54_dsir", "ml06_kfold_cv", "ml16_chi2", "q77_basket")) {
+      val bnljs = executedPlans(name).flatMap(nodes)
+        .collect { case j: BroadcastNestedLoopJoinExec => j }
+      val scalarBuild = bnljs.exists { j =>
+        val build = if (j.buildSide == BuildRight) j.right else j.left
+        nodes(build).collectFirst { case a: BaseAggregateExec => a }
+          .exists(_.groupingExpressions.isEmpty)
+      }
+      assert(scalarBuild,
+        s"$name: no BroadcastNestedLoopJoin builds on a keyless aggregate:\n${bnljs.mkString("\n")}")
+    }
+  }
+
   test("global sweep: no entry plans a cartesian product or nested-loop join") {
     // Every gate entry's plan, one regression gate: an accidental cross
     // join (dropped join condition, non-equi rewrite gone wrong) is the
@@ -323,9 +380,10 @@ class PlanAuditSpec extends SparkSpec {
     // documented design:
     //  - e01 / mm04: brute-force kNN baselines — the broadcast query set
     //    streams against the corpus (Similarity.bruteKnn);
-    //  - t13 / t18: crossJoin(broadcast(<1-row aggregate>)) — attaching a
-    //    computed scalar (kth-min threshold / global min rate) without a
-    //    driver-side collect; a BNLJ over one broadcast row.
+    //  - t13 / t18: crossJoin(<1-row aggregate>) — attaching a computed
+    //    scalar (kth-min threshold / global min rate) without a
+    //    driver-side collect; Spark sizes the keyless aggregate at one
+    //    row and broadcasts it, a BNLJ over one row.
     // Entries that eagerly localCheckpoint collapse their upstream plan
     // to an RDD scan; their join shapes are asserted by their own specs —
     // this sweep still covers everything visible in the returned plan.
@@ -343,20 +401,20 @@ class PlanAuditSpec extends SparkSpec {
                           // (q_id =!= n_id) condition by design
                           "e10_range_search",
                           "t13_kmv_sketch", "t18_domain_mix",
-                          // t49: t18's shape — crossJoin(broadcast(<1-row
-                          // token total>)) feeding the ppm PMI ratio
+                          // t49: t18's shape — crossJoin(<1-row token
+                          // total>) feeding the ppm PMI ratio
                           "t49_collocations",
-                          // t42: t18's shape — crossJoin(broadcast(<1-row
-                          // global min>)) to attach a computed scalar
+                          // t42: t18's shape — crossJoin(<1-row global
+                          // min>) to attach a computed scalar
                           "t42_temperature_mix",
-                          // ml06: crossJoin(broadcast(<1-row totals>)) —
-                          // attaching the total sufficient statistics
+                          // ml06: crossJoin(<1-row totals>) — attaching
+                          // the total sufficient statistics
                           "ml06_kfold_cv",
-                          // q77: t18's shape — crossJoin(broadcast(<1-row
-                          // basket total>)) feeding the support/lift ppm
+                          // q77: t18's shape — crossJoin(<1-row basket
+                          // total>) feeding the support/lift ppm
                           "q77_basket",
-                          // ml16: t18's shape — crossJoin(broadcast(<1-row
-                          // grand total>)) feeding the chi-square margins
+                          // ml16: t18's shape — crossJoin(<1-row grand
+                          // total>) feeding the chi-square margins
                           "ml16_chi2")
     // Flagship-scale linalg entries are excluded: building their final
     // DataFrame executes tens of seconds of eager RDD block algebra

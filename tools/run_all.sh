@@ -6,11 +6,15 @@
 #
 #   tools/run_all.sh            # gate @ sf0.01 + sf0.1, bench @ sf0.1, plans
 #   tools/run_all.sh quick      # gate @ sf0.01 only, no bench
-#   tools/run_all.sh budgets    # gate @ sf0.01 with the broadcast budget
-#                               # (SPARK_GRAFT_BC_BYTES) at 0, then at
-#                               # Long.MaxValue: every budget-gated dispatch
-#                               # path runs on its fallback side, then on
-#                               # its broadcast side; no tests, no bench
+#   tools/run_all.sh budgets    # gate @ sf0.01 three times: with the
+#                               # broadcast budget (SPARK_GRAFT_BC_BYTES)
+#                               # at 0, then at Long.MaxValue, so every
+#                               # budget-gated dispatch path runs on its
+#                               # fallback side, then on its broadcast
+#                               # side; then with both Spark broadcast
+#                               # thresholds at -1, so every DataFrame
+#                               # join without a broadcast hint shuffles;
+#                               # no tests, no bench
 #
 # Bench passes merge best-of-samples per code state (see Bench.scala);
 # run the script twice for a tighter committed bench_out.json.
@@ -28,6 +32,9 @@ if [ "$MODE" = "budgets" ]; then
     echo "=== correctness gate @ sf0.01, broadcast budget = $budget ==="
     SPARK_GRAFT_BC_BYTES=$budget gate_sf001 "/tmp/graft_gate_sf001_budget_$budget"
   done
+  echo "=== correctness gate @ sf0.01, Spark broadcast thresholds = -1 ==="
+  SPARK_GRAFT_CONF="spark.sql.autoBroadcastJoinThreshold=-1;spark.sql.adaptive.autoBroadcastJoinThreshold=-1" \
+    gate_sf001 /tmp/graft_gate_sf001_no_autobroadcast
   echo "run_all: done ($MODE)"
   exit 0
 fi
