@@ -1,6 +1,8 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import graft.core.EntryMetrics
+import graft.core.EntryMetrics.jstr
 
 /** Benchmark harness (driver contract): runs every SparkEntry query on
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line with per-query seconds.
@@ -99,11 +101,11 @@ object Bench {
     // that the second rep sheds (measured — BENCH_NOTES round 9).
     val heavyReps = sys.env.getOrElse("SPARK_GRAFT_BENCH_HEAVY_REPS", "2").toInt.max(1)
     val spark = graft.core.GraftSession.local()
-    // §2A A19: per-entry stage/shuffle/GC/spill breakdowns, written next
-    // to the wall-times so a slow number can be attributed (host noise vs
-    // real shuffle/spill growth) instead of argued about.
-    val metrics = new graft.core.EntryMetrics()
-    spark.sparkContext.addSparkListener(metrics)
+    // §2A A19: per-entry stage/shuffle/GC/spill/driver-gap/Catalyst/
+    // streaming breakdowns, written next to the wall-times so a slow
+    // number can be attributed (host noise vs real shuffle/spill growth)
+    // instead of argued about.
+    val metrics = EntryMetrics.attach(spark)
     // optional args: entry names — restricts the run for local iteration
     // (the driver always invokes with no args = full suite).
     val qs0 = SparkEntry.queries
@@ -116,28 +118,15 @@ object Bench {
         "a01_matmul", "a06_tsqr_gram")
       .foreach(k => qs.get(k).foreach(fn => try runNoop(spark, fn, sfDir) catch { case _: Throwable => () }))
     val errors = scala.collection.mutable.Map[String, String]()
-    def timedRep(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Option[Double] = {
-      // GC OUTSIDE the timed region: ~70 queries leave unreferenced
-      // checkpoint blocks / broadcasts that only the ContextCleaner can
-      // reclaim, and it only runs on driver GC — without this, queries
-      // late in the run pay accumulated cleanup debt (measured ~10×
-      // inflation on the final queries vs their isolated cost).
-      System.gc()
-      val w0 = System.currentTimeMillis()
-      val t0 = System.nanoTime()
+    def timedRep(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Option[Double] =
       try {
-        runNoop(spark, fn, sfDir)
-        val dt = (System.nanoTime() - t0) / 1e9
-        metrics.window(name, w0, System.currentTimeMillis())
+        val (_, dt) = metrics.timed(name)(runNoop(spark, fn, sfDir))
         System.err.println(f"[bench]   $name rep: $dt%.3f s")
         Some(dt)
-      }
-      catch { case e: Throwable =>
-        metrics.window(name, w0, System.currentTimeMillis())
+      } catch { case e: Throwable =>
         errors(name) = Option(e.getMessage).getOrElse(e.getClass.getName).take(200)
         None
       }
-    }
     val firstPass = qs.toSeq.sortBy(_._1).map { case (name, fn) =>
       val nReps = if (graft.array.ArrayQueries.flagship.contains(name)) heavyReps else reps
       System.err.println(s"[bench] running $name x$nReps")
@@ -202,12 +191,10 @@ object Bench {
         (m ++ carried, prevN + 1)
       case _ => (results, 1)
     }
-    def jstr(s: String) = "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"")
-      .replaceAll("[\\x00-\\x1f]", " ") + "\""
     // Drain the listener BEFORE assembling the line: the noise flags
     // below attach this pass's A19 breakdown to each flagged entry.
-    try metrics.drain(spark) catch { case _: Throwable => () }
-    val breakdowns = try metrics.breakdowns catch { case _: Throwable => Map.empty[String, graft.core.EntryMetrics#Breakdown] }
+    try metrics.drain() catch { case _: Throwable => () }
+    val breakdowns = try metrics.breakdowns catch { case _: Throwable => Map.empty[String, EntryMetrics.Breakdown] }
     // NOISE FLAGS: any entry whose THIS-PASS median exceeds 2× the best
     // already recorded for this sf (previous bench_out.json, ANY code id
     // — that is exactly the cross-round comparison the verdicts keep

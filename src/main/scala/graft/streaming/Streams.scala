@@ -41,8 +41,9 @@ object Streams {
     * advanced watermark evict state and EMIT watermark-gated rows; an
     * append-mode watermarked INNER interval join (st07) emits complete
     * results from data batches alone, so its trailing batch is pure
-    * trigger latency — StProbe measured it at ~0.9-1.3 s, and the paired
-    * subset bench confirms −0.7..−1.3 s on st07 with identical rows.
+    * trigger latency — the micro-batches' `durationMs` progress put it
+    * at ~0.9-1.3 s, and the paired subset bench confirms −0.7..−1.3 s
+    * on st07 with identical rows.
     * Everything else keeps the engine default, each for a measured
     * reason (r16): st03/st09 EMIT from the no-data batch (session flush,
     * outer-join null extension); the complete-mode drives (st01/st06/

@@ -3,6 +3,8 @@ package graft.tools
 import org.apache.spark.sql.SparkSession
 import graft.array.{DMatrix, LinAlg}
 import java.nio.file.{Files, Paths}
+import graft.core.EntryMetrics
+import graft.core.EntryMetrics.jstr
 
 /** Linalg-flagship scaling probe (round-13 directive #2): the array
   * side's 100 TB story was plan-shape-only — this measures it.
@@ -54,8 +56,7 @@ object LinalgScaleProbe {
       .split(",").map(_.trim.toInt).toSeq
     val reps = sys.env.getOrElse("SPARK_GRAFT_SCALE_REPS", "1").toInt.max(1)
     val spark = graft.core.GraftSession.local()
-    val metrics = new graft.core.EntryMetrics()
-    spark.sparkContext.addSparkListener(metrics)
+    val metrics = EntryMetrics.attach(spark)
 
     def gemm(n: Int): Double = {
       val bs = n / 10   // grid held at the flagship's 10×10 — see scaladoc
@@ -90,24 +91,15 @@ object LinalgScaleProbe {
     gemm(2000); svd(50000)
     locally { val w = rsvdPrep(4000); rsvd(w): Unit; w.unpersist(): Unit }
 
-    case class Pt(kernel: String, size: Long, volume: Double, sec: Double, bdKey: String)
+    case class Pt(kernel: String, size: Long, volume: Double, sec: Double)
     def run(kernel: String, size: Int, volume: Double)(f: => Double): Pt = {
-      // window each rep separately and attribute the breakdown of the
-      // MIN rep only: on this host rep 1 pays the cold-JVM page-fault
-      // tax (BENCH_NOTES r14), and summing its GC into the recorded
-      // min-of point would misstate the steady-state shape
-      val times = (1 to reps).map { rep =>
-        System.gc()
-        val w0 = System.currentTimeMillis()
-        val t0 = System.nanoTime()
-        val r = f
-        val dt = (System.nanoTime() - t0) / 1e9
-        metrics.window(s"$kernel@$size#$rep", w0, System.currentTimeMillis())
+      val times = (1 to reps).map { _ =>
+        val (r, dt) = metrics.timed(s"$kernel@$size")(f)
         if (r.isNaN) System.err.println("nan checksum")
         dt
       }
       System.err.println(f"[linalg] $kernel n=$size: min ${times.min}%.2f s")
-      Pt(kernel, size, volume, times.min, s"$kernel@$size#${times.indexOf(times.min) + 1}")
+      Pt(kernel, size, volume, times.min)
     }
 
     val pts =
@@ -119,29 +111,24 @@ object LinalgScaleProbe {
         a.unpersist(): Unit
         p
       }
-    metrics.drain(spark)
+    metrics.drain()
     val bd = metrics.breakdowns
 
-    def jstr(s: String) = "\"" + s + "\""
     val byKernel = pts.groupBy(_.kernel)
     val kernelJson = Seq("gemm", "svd", "rsvd").filter(byKernel.contains).map { kname =>
       val ps = byKernel(kname).sortBy(_.size)
-      val lnPts = ps.map(p => (math.log(p.volume), math.log(p.sec)))
-      val n = lnPts.size
-      val (sx, sy) = (lnPts.map(_._1).sum, lnPts.map(_._2).sum)
-      val sxy = lnPts.map(p => p._1 * p._2).sum
-      val sxx = lnPts.map(p => p._1 * p._1).sum
       // single-point runs (size list overridden to one value) have no
       // pairwise exponents and no meaningful OLS slope — build the field
       // list from non-empty fragments so the JSON stays valid either way
-      val slope = if (n >= 2)
-        Some(f""""ols_exponent":${(n * sxy - sx * sy) / (n * sxx - sx * sx)}%.3f""")
+      val slope = if (ps.size >= 2)
+        Some(f""""ols_exponent":${ScaleProbe.logLogSlope(ps.map(p => (p.volume, p.sec)))}%.3f""")
       else None
       val pairs = ps.sliding(2).collect { case Seq(a, b) =>
         f""""${a.size}->${b.size}":${math.log(b.sec / a.sec) / math.log(b.volume / a.volume)}%.3f"""
       }.toSeq
       val perSize = ps.map { p =>
-        val extra = bd.get(p.bdKey)   // the min rep's window — no rep averaging
+        // the fastest rep's, like `sec` (rep 1 pays the cold-JVM tax, BENCH_NOTES r14)
+        val extra = bd.get(s"${p.kernel}@${p.size}")
           .map(x => f""","shuffle_mb":${x.shuffleReadBytes / 1e6}%.1f,"gc_sec":${x.gcMs / 1e3}%.2f,"spill_mb":${(x.spillMemBytes + x.spillDiskBytes) / 1e6}%.1f""")
           .getOrElse("")
         f""""${p.size}":{"sec":${p.sec}%.3f$extra}"""

@@ -1,16 +1,21 @@
 package graft.tools
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import graft.core.EntryMetrics
 
-/** Regenerates PLANS.md: the executed physical plans of representative
-  * gate entries, as evidence for the plan-shape properties PlanAuditSpec
-  * asserts (pushdown, pruning, broadcast, TopKPerKey, digest-only
-  * shuffles). Run: `sbt "runMain graft.tools.PlanDump"`. */
+/** Writes the final plan each entry's noop write ran (AQE's, query stages
+  * included), captured by [[EntryMetrics]] after the entry ran. With no
+  * args: PLANS.md, the plans of representative gate entries, as evidence
+  * for the plan-shape properties PlanAuditSpec asserts. With
+  * `<outDir> <entry> [entry...]`: `<outDir>/<entry>.txt` per entry, its
+  * plan and per-stage profile (tasks, shuffle read and write, wall, run
+  * and GC time) — where the RDD-backed linalg entries, a LocalTableScan
+  * checksum on the SQL side, show which operations shuffled how many
+  * bytes. SF dir via SPARK_GRAFT_SF_DIR (default sf0.01). */
 object PlanDump {
   private val picks: Seq[(String, String)] = Seq(
     "a58_sparse_ewise" ->
-      "Sparse elementwise algebra stays relational: add is union + two-phase hash agg (partial combine before its exchange), multiply is an equi-join of the two supports — present cells shuffle, absent cells never exist, nothing densifies.",
+      "Sparse elementwise algebra stays relational: add is union + two-phase hash agg (partial combine before its exchange), multiply is an equi-join of the two supports (at gate scale Spark's size check broadcasts one support, BuildRight; past the threshold the present cells shuffle) — absent cells never exist, nothing densifies.",
     "q02_project_filter" ->
       "Filter + projection reach the parquet scan: PushedFilters is populated and ReadSchema is pruned to 3 of 16 lineitem columns.",
     "q03_revenue_by_nation" ->
@@ -20,7 +25,7 @@ object PlanDump {
     "t05_dedup_exact" ->
       "Exact dedup shuffles only (md5 digest, doc_id) — the text column is pruned before the exchange.",
     "e04_embed_neardup" ->
-      "Embedding near-dup: LSH band/bucket equi-join (ShuffledHashJoin/SortMergeJoin on band keys), never a cartesian product.",
+      "Embedding near-dup: the LSH band/bucket equi-join runs inside the entry, which checkpoints the surviving near-dup pairs — so the write's executed plan is only a scan of that checkpoint (Scan ExistingRDD); PlanAuditSpec's sweep keeps cartesian products out of it.",
     "q25_salted_agg" ->
       "Skew-salted aggregation: two-stage agg over the salted key, then the de-salted final — partial combine happens before both exchanges.",
     "q33_json_extract" ->
@@ -66,7 +71,7 @@ object PlanDump {
     "q63_rolling_corr" ->
       "Rolling correlation: all six power sums (n, Σx, Σy, Σxy, Σx², Σy²) evaluate in ONE Window operator over a single hashpartitioning(sk) exchange — the trailing 20-row frame maintains them incrementally; the corr tail is a projection.",
     "q64_pivot_table" ->
-      "Multi-aggregate pivot: (count, sum) for every type cell ride one two-stage HashAggregate pair — partial pivotfirst combines map-side, so the user-keyed exchange carries 6 cells per user per partition, not rows.",
+      "Multi-aggregate pivot: (count, sum) per (user, type) partial-combine before a (user_id, event_type) exchange; then partial pivotfirst combines those cells map-side, so the user-keyed exchange carries 6 cells per user per partition, not rows.",
     "t45_weighted_sample" ->
       "Weighted sampling (A-ES): the −ln(u)/w key is fused into the scan projection and the per-language rank filter rewrites to TopKPerKey — each map partition pre-cuts to 20 rows per stratum before the single exchange.",
     "q61_ewma" ->
@@ -74,7 +79,7 @@ object PlanDump {
     "q66_interval_coverage" ->
       "Interval coverage: the ±1 boundary union feeds ONE hashpartitioning(user_id) exchange that serves the running-count window, the lead() window AND the final per-user roll-up (subset rule) — a single shuffle of 2·|events| skinny rows, no joins anywhere.",
     "t48_bm25" ->
-      "Integer BM25: tokens shuffle once into the (doc, term) tf aggregate (partial_count map-side); the derived 5-term query comes back as a BroadcastHashJoin build side over tf; the top-20 is TakeOrderedAndProject — no sort of the corpus, the raw text never joins.",
+      "Integer BM25: the entry checkpoints its scored top-20, so the write's executed plan is a scan of that checkpoint (Scan ExistingRDD). Inside the entry, tokens shuffle once into the (doc, term) tf aggregate (partial_count map-side); the derived 5-term query comes back as a BroadcastHashJoin build side over tf; the top-20 is TakeOrderedAndProject — no sort of the corpus, the raw text never joins.",
     "e13_knn_classify" ->
       "kNN classifier: the probe set broadcasts against the streamed corpus (the documented bruteKnn BNLJ baseline); votes aggregate partial-first on (q_id, label), and the winner filter rewrites to TopKPerKey — bounded heaps, no per-query sort.",
     "q69_drawdown" ->
@@ -98,7 +103,7 @@ object PlanDump {
     "q79_bootstrap" ->
       "Poisson bootstrap: md5-uniform inverse-CDF replication via array_repeat+explode is map-only over the orders scan; the only exchange is the 5-row priority aggregate's partial-combined shuffle.",
     "ml13_centroid_text" ->
-      "Centroid text classifier: train/test token aggregates partial-combine before their token-keyed exchanges; the class-total attaches as a |classes|-row broadcast while the tf->profile join deliberately shuffles on the vocabulary-sized token key; the per-doc argmax window partitions on doc_id (<= |classes| rows per key).",
+      "Centroid text classifier: train/test token aggregates partial-combine before their token-keyed exchanges; the class-total attaches as a |classes|-row broadcast; the tf->profile join on the vocabulary-sized token key carries no hint (at gate scale Spark's size check broadcasts the test-side tf aggregate, BuildLeft; past the threshold it shuffles on the token); the per-doc argmax rank filter rewrites to TopKPerKey on doc_id (<= |classes| rows per key).",
     "ml14_stump" ->
       "Decision stump: the fact table collapses via partial-combined groupBy to the 50-value feature histogram BEFORE any window — the cumulative sweep, totals, and argmin windows all run on 50 rows in one task, the xgboost histogram layout.",
     "ml15_auc" ->
@@ -106,11 +111,11 @@ object PlanDump {
     "t50_gopher_rules" ->
       "Gopher quality rules: one corpus scan, ZERO exchanges — token/line arrays staged in their own projection (the t06/t35 re-inline discipline), every rule an integer cross-multiplication in the same WholeStageCodegen span.",
     "t51_bigram_lm" ->
-      "Bigram-LM scoring: map-only bigram expansion; model counts partial-combine into vocab^2/vocab aggregates; scoring joins key on the bigram and context (corpus-growing keys - shuffled equi-joins, NOT broadcast); one last partial-combined per-doc mean.",
+      "Bigram-LM scoring: map-only bigram expansion; model counts partial-combine into vocab^2/vocab aggregates; scoring joins key on the bigram and context (corpus-growing keys, no hint: at gate scale Spark's size check broadcasts both model sides, past the threshold they shuffle); one last partial-combined per-doc mean.",
     "t52_skipgram" ->
       "Skip-gram co-occurrence: distance-1/2 pairs from two slice-zips (map-only), (min,max) normalization collapses orientation, min-support 5 cuts the tail pre-shuffle, and the top-20 plans as TakeOrderedAndProject - never a global sort.",
     "a52_bincount" ->
-      "Weighted bincount: co-partitioned block join (narrow, zip's shape), per-partition open-address bin accumulation - the shuffle carries <= 48 (bin, count, mass) partials per map partition, never cells.",
+      "Weighted bincount: co-partitioned block join (narrow, zip's shape), per-partition open-address bin accumulation - the RDD shuffle carries <= 48 (bin, count, mass) partials per map partition, never cells; the SQL plan only range-sorts the bins.",
     "a53_row_median" ->
       "Row median: ONE exchange on the row key gathers each row's cells; sorted-gather state is bounded by matrix WIDTH (the fixed schema axis) - the two middle order statistics come from element_at on the sorted array.",
     "a54_histogram2d" ->
@@ -153,22 +158,45 @@ object PlanDump {
   def main(args: Array[String]): Unit = {
     val spark = graft.core.GraftSession.local()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val sb = new StringBuilder
-    sb.append("# PLANS — executed physical plans of representative gate entries\n\n")
-    sb.append(s"Generated by `graft.tools.PlanDump` against `$sfDir`. These are the\n")
-    sb.append("plan-shape properties PlanAuditSpec locks in as regression gates;\n")
-    sb.append("this file makes them reviewable without running anything.\n")
-    for ((name, why) <- picks) {
-      val df = graft.SparkEntry.queries(name)(spark, sfDir)
-      df.write.format("noop").mode("overwrite").save()   // executes → final AQE plan
-      val p = df.queryExecution.executedPlan
-      val fin = p match { case a: AdaptiveSparkPlanExec => a.executedPlan; case o => o }
-      sb.append(s"\n## $name\n\n$why\n\n```\n")
-      sb.append(fin.toString.linesIterator.take(60).mkString("\n"))
-      sb.append("\n```\n")
+    val metrics = EntryMetrics.attach(spark)
+    // the entry's own executions (eager checkpoints) end before its
+    // write does, so the write's plan is the last one captured
+    def run(name: String): String = {
+      val (_, plans) = metrics.capture(metrics.timed(name)(
+        graft.SparkEntry.queries(name)(spark, sfDir).write.format("noop").mode("overwrite").save()))
+      EntryMetrics.finalPlan(plans.last).toString
     }
-    Files.writeString(Paths.get("PLANS.md"), sb.toString)
-    println("wrote PLANS.md")
+    if (args.isEmpty) {
+      val sb = new StringBuilder
+      sb.append("# PLANS — executed physical plans of representative gate entries\n\n")
+      sb.append(s"Generated by `graft.tools.PlanDump` against `$sfDir`. These are the\n")
+      sb.append("plan-shape properties PlanAuditSpec locks in as regression gates;\n")
+      sb.append("this file makes them reviewable without running anything. Each plan is the\n")
+      sb.append("final one the entry's noop write ran, captured after it ran: `QueryStage`\n")
+      sb.append("and `AQEShuffleRead` nodes show AQE's runtime rewrites.\n")
+      for ((name, why) <- picks) {
+        sb.append(s"\n## $name\n\n$why\n\n```\n")
+        sb.append(run(name).linesIterator.take(60).mkString("\n"))
+        sb.append("\n```\n")
+      }
+      Files.writeString(Paths.get("PLANS.md"), sb.toString)
+      println("wrote PLANS.md")
+    } else {
+      val outDir = Paths.get(args(0))
+      Files.createDirectories(outDir)
+      for (n <- args.drop(1)) {
+        val plan = run(n)
+        val rows = metrics.stageProfile(n)
+        val profile = rows.map { case EntryMetrics.Stage(id, callsite, _, wallMs, b) =>
+          f"  stage $id%4d  tasks=${b.tasks}%-5d shuffleRead=${b.shuffleReadBytes / 1e6}%9.2f MB  shuffleWrite=${b.shuffleWriteBytes / 1e6}%9.2f MB  wall=$wallMs%6d ms run=${b.runMs}%7d ms gc=${b.gcMs}%5d ms  $callsite"
+        }
+        val total = rows.map(_.b).foldLeft(EntryMetrics.Breakdown())(_ + _)
+        Files.writeString(outDir.resolve(s"$n.txt"),
+          (s"== $n: executed plan (final, post-AQE) ==" +: plan +: "== stage profile ==" +: profile :+
+            f"  TOTAL shuffleRead=${total.shuffleReadBytes / 1e6}%.2f MB shuffleWrite=${total.shuffleWriteBytes / 1e6}%.2f MB over ${rows.length} stages")
+            .mkString("", "\n", "\n"))
+      }
+    }
     spark.stop()
   }
 }

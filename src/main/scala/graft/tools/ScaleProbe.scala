@@ -3,6 +3,8 @@ package graft.tools
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths}
+import graft.core.EntryMetrics
+import graft.core.EntryMetrics.jstr
 
 /** Scaling-exponent probe: measures how the heaviest pipeline entries'
   * wall time grows with INPUT VOLUME, turning the repo's plan-shape
@@ -24,7 +26,7 @@ import java.nio.file.{Files, Paths}
   *
   * Per (entry, K): `reps` noop-sink runs, MIN wall time (the probe asks
   * what the plan costs, not what host noise adds), plus the A19
-  * breakdown (shuffle bytes, GC, spill) for the last rep window.
+  * breakdown (shuffle bytes, GC, spill) of that same fastest rep.
   * Exponents are pairwise log-ratios e = ln(t_b/t_a)/ln(b/a) and the
   * 3-point OLS slope of ln t vs ln K. Linear scaling reads e ≈ 1
   * (fixed 32-way parallelism, so time tracks volume); sub-linear means
@@ -34,6 +36,15 @@ import java.nio.file.{Files, Paths}
   * shuffle MB, exponents) — the evidence artifact BENCH_NOTES cites.
   */
 object ScaleProbe {
+
+  /** OLS slope of ln y against ln x — the scaling exponent of (x, y)
+    * points; 0 for fewer than two points. */
+  private[tools] def logLogSlope(pts: Seq[(Double, Double)]): Double = {
+    val ln = pts.map { case (x, y) => (math.log(x), math.log(y)) }
+    val (n, sx, sy) = (ln.size, ln.map(_._1).sum, ln.map(_._2).sum)
+    if (n < 2) 0.0
+    else (n * ln.map(p => p._1 * p._2).sum - sx * sy) / (n * ln.map(p => p._1 * p._1).sum - sx * sx)
+  }
 
   private val Entries = Seq(
     "t21_dedup_clusters", // LSH band → candidate → CC: the dedup kernel
@@ -135,8 +146,7 @@ object ScaleProbe {
     val base = sys.env.getOrElse("SPARK_GRAFT_SCALE_DIR", "/tmp/graft_scaleprobe")
     val only = if (args.isEmpty) Entries else Entries.filter(args.contains)
     val spark = graft.core.GraftSession.local()
-    val metrics = new graft.core.EntryMetrics()
-    spark.sparkContext.addSparkListener(metrics)
+    val metrics = EntryMetrics.attach(spark)
     // e04's GATE entry now requirePins the law to the oracle constant
     // (it fails loudly when a fixture outgrows the floor — by design);
     // the probe corpora outgrow it on purpose, so probe the production
@@ -160,38 +170,24 @@ object ScaleProbe {
     val results = for (name <- only; k <- scales) yield {
       val fn = qs(name)
       val times = (1 to reps).map { _ =>
-        System.gc()
-        val w0 = System.currentTimeMillis()
-        val t0 = System.nanoTime()
-        fn(spark, s"$base/x$k").write.format("noop").mode("overwrite").save()
-        val dt = (System.nanoTime() - t0) / 1e9
-        metrics.window(s"$name@x$k", w0, System.currentTimeMillis())
-        dt
+        metrics.timed(s"$name@x$k")(fn(spark, s"$base/x$k").write.format("noop").mode("overwrite").save())._2
       }
       System.err.println(f"[scale] $name x$k: min ${times.min}%.2f s (${times.map(t => f"$t%.2f").mkString(", ")})")
       (name, k, times.min)
     }
-    metrics.drain(spark)
+    metrics.drain()
     val bd = metrics.breakdowns
 
-    def jstr(s: String) = "\"" + s + "\""
     val byEntry = results.groupBy(_._1)
     val entryJson = only.map { name =>
       val pts = byEntry(name).sortBy(_._2)
-      val lnPts = pts.map { case (_, k, t) => (math.log(k.toDouble), math.log(t)) }
-      val n = lnPts.size
-      val (sx, sy) = (lnPts.map(_._1).sum, lnPts.map(_._2).sum)
-      val sxy = lnPts.map(p => p._1 * p._2).sum
-      val sxx = lnPts.map(p => p._1 * p._1).sum
-      val slope = if (n >= 2) (n * sxy - sx * sy) / (n * sxx - sx * sx) else 0.0
+      val slope = logLogSlope(pts.map { case (_, k, t) => (k.toDouble, t) })
       val pair = pts.sliding(2).collect { case Seq((_, ka, ta), (_, kb, tb)) =>
         f""""x$ka->x$kb":${math.log(tb / ta) / math.log(kb.toDouble / ka)}%.3f"""
       }.mkString(",")
       val perScale = pts.map { case (_, k, t) =>
-        // windows share a key across reps, so breakdown sums over reps —
-        // divide back to per-rep averages for comparability with `sec`
-        val b = bd.get(s"$name@x$k")
-        val extra = b.map(x => f""","shuffle_mb":${x.shuffleReadBytes / 1e6 / reps}%.1f,"gc_sec":${x.gcMs / 1e3 / reps}%.2f,"spill_mb":${(x.spillMemBytes + x.spillDiskBytes) / 1e6 / reps}%.1f,"input_mb":${x.inputBytes / 1e6 / reps}%.1f""").getOrElse("")
+        val b = bd.get(s"$name@x$k")   // the fastest rep's, like `sec`
+        val extra = b.map(x => f""","shuffle_mb":${x.shuffleReadBytes / 1e6}%.1f,"gc_sec":${x.gcMs / 1e3}%.2f,"spill_mb":${(x.spillMemBytes + x.spillDiskBytes) / 1e6}%.1f,"input_mb":${x.inputBytes / 1e6}%.1f""").getOrElse("")
         f""""x$k":{"sec":$t%.3f$extra}"""
       }.mkString(",")
       f"""${jstr(name)}:{"ols_exponent":$slope%.3f,$pair,$perScale}"""
@@ -231,20 +227,10 @@ object ScaleProbe {
           val summ = Similarity.pqSummaryOf(emb, emb.filter(col("vec_id") < nCore))
           val nKept = Similarity.pqPreVerify(candCore, summ,
             Similarity.pqCentDotTable(emb), tau).count()
-          def timed(f: => Long): (Double, Long) = {
-            System.gc()
-            val t0 = System.nanoTime()
-            val n = f
-            ((System.nanoTime() - t0) / 1e9, n)
-          }
-          val w0 = System.currentTimeMillis()
-          val (secCap, outCap) = timed(
+          val (outCap, secCap) = metrics.timed(s"densecore_capped@x$k")(
             Similarity.embedNearDupsCapped(emb, tau, ppb, 4, cap).count())
-          metrics.window(s"densecore_capped@x$k", w0, System.currentTimeMillis())
-          val w1 = System.currentTimeMillis()
-          val (secUncap, outUncap) = timed(
+          val (outUncap, secUncap) = metrics.timed(s"densecore_uncapped@x$k")(
             Similarity.embedNearDups(emb, tau, ppb, 4).count())
-          metrics.window(s"densecore_uncapped@x$k", w1, System.currentTimeMillis())
           require(outCap == outUncap,
             s"dense-core x$k: capped output $outCap != uncapped $outUncap")
           emb.unpersist(false); bl.unpersist(false); candCore.unpersist(false)
@@ -252,7 +238,7 @@ object ScaleProbe {
             f"out=$outCap capped=$secCap%.2f s uncapped=$secUncap%.2f s hottest=$hottest")
           (k, nCore, nBg, ppb, hottest, nCand, nKept, outCap, secCap, secUncap)
         }
-        metrics.drain(spark)
+        metrics.drain()
         val dbd = metrics.breakdowns
         val parts = stats.map { case (k, nCore, nBg, ppb, hottest, nCand, nKept, out, sc, su) =>
           def sh(w: String) = dbd.get(s"densecore_$w@x$k")

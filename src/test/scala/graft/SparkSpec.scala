@@ -43,6 +43,9 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
       (out, jobs.get())
     } finally sc.removeSparkListener(lis)
   }
+
+  /** The recorder attached to the shared session. */
+  def metrics: graft.core.EntryMetrics = SparkSpec.metrics
 }
 
 object SparkSpec {
@@ -55,4 +58,5 @@ object SparkSpec {
     graft.core.GraftSession.breezeWarm
     s
   }
+  lazy val metrics: graft.core.EntryMetrics = graft.core.EntryMetrics.attach(session)
 }

@@ -2,8 +2,6 @@ package graft.array
 
 import graft.SparkSpec
 import breeze.linalg.{DenseMatrix => BDM, cholesky => bchol}
-import org.apache.spark.sql.execution.QueryExecution
-import org.apache.spark.sql.util.QueryExecutionListener
 import org.apache.spark.storage.StorageLevel
 
 /** DMatrix keeps its blocks in one `RDD[Block]`: block algebra never plans
@@ -12,27 +10,10 @@ import org.apache.spark.storage.StorageLevel
 class BlockStoreSpec extends SparkSpec {
 
   /** Runs `body` and returns its result with the number of SQL executions
-    * it started. Execution listeners are called from the listener bus, so
-    * a marked sentinel query runs last: once its callback arrives, every
-    * earlier execution's has too. */
+    * it started, as the listener's capture saw them end. */
   private def countSqlExecutions[T](body: => T): (T, Int) = {
-    val marker = s"sql-audit-${System.nanoTime}"
-    val executions = new java.util.concurrent.atomic.AtomicInteger()
-    val done = new java.util.concurrent.CountDownLatch(1)
-    def seen(qe: QueryExecution): Unit =
-      if (qe.logical.toString.contains(marker)) done.countDown()
-      else executions.incrementAndGet(): Unit
-    val listener = new QueryExecutionListener {
-      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = seen(qe)
-      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = seen(qe)
-    }
-    spark.listenerManager.register(listener)
-    try {
-      val out = body
-      spark.range(1).selectExpr(s"'$marker' AS marker").collect(): Unit
-      assert(done.await(30, java.util.concurrent.TimeUnit.SECONDS), "listener bus never drained")
-      (out, executions.get())
-    } finally spark.listenerManager.unregister(listener)
+    val (out, plans) = metrics.capture(body)
+    (out, plans.size)
   }
 
   private def maxAbs(m: BDM[Double]): Double = breeze.linalg.max(breeze.numerics.abs(m))

@@ -118,47 +118,22 @@ class MultiplyPathSpec extends SparkSpec {
   test("svdCompressed never re-shuffles the fat matrix (metrics-pinned scale shape)") {
     // The r14 weak mark in reverse: the whole rSVD pipeline's shuffle
     // traffic must stay l-wide-partials-sized — a small fraction of
-    // |A| — not a multiple of it. Stages are attributed by JOB GROUP
-    // (thread-local), so parallel suites sharing the session can't
-    // pollute the measurement.
-    import org.apache.spark.scheduler._
+    // |A| — not a multiple of it. Stages are attributed by the wall-clock
+    // window of the call, after a drain proves every stage event arrived.
     val n = 1536; val bs = 256                     // 6x6 grid, |A| ~ 18.9 MB
     val x = intMat(spark, n, 4, bs, 21L)
     val y = intMat(spark, 4, n, bs, 23L)
     val a = x.multiply(y).persist()
-    a.blocks.rdd.count(): Unit                     // A's own build stays OUTSIDE the group
-    val group = s"rsvd-shuffle-audit-${System.nanoTime}"
-    val myStages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
-    val read = new java.util.concurrent.atomic.AtomicLong()
-    val lis = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        if (group == Option(j.properties).map(_.getProperty("spark.jobGroup.id")).orNull)
-          j.stageIds.foreach(id => myStages.add(id): Unit)
-      override def onStageCompleted(s: SparkListenerStageCompleted): Unit =
-        if (myStages.contains(s.stageInfo.stageId))
-          read.addAndGet(s.stageInfo.taskMetrics.shuffleReadMetrics.totalBytesRead): Unit
-    }
-    spark.sparkContext.addSparkListener(lis)
+    a.blocks.rdd.count(): Unit                     // A's own build stays OUTSIDE the window
     try {
-      spark.sparkContext.setJobGroup(group, "rsvd shuffle audit")
-      val (_, sv, _) = LinAlg.svdCompressed(a, k = 4, oversample = 0, seed = 5L)
-      spark.sparkContext.clearJobGroup()
+      val ((_, sv, _), _) = metrics.timed("rsvd")(LinAlg.svdCompressed(a, k = 4, oversample = 0, seed = 5L))
       assert(sv(0) > 0.0)
-      // settle the async listener bus: poll until the byte count is
-      // stable (events are normally delivered within milliseconds)
-      var last = -1L; var settled = 0; val deadline = System.currentTimeMillis() + 5000
-      while (settled < 3 && System.currentTimeMillis() < deadline) {
-        val cur = read.get()
-        if (cur == last) settled += 1 else { settled = 0; last = cur }
-        Thread.sleep(100)
-      }
+      metrics.drain()
+      val read = metrics.breakdowns("rsvd").shuffleReadBytes
       val aBytes = 8L * n * n
-      assert(read.get() < aBytes / 8,
-        s"rSVD shuffled ${read.get()} bytes — more than |A|/8 ($aBytes/8); " +
+      assert(read < aBytes / 8,
+        s"rSVD shuffled ${read} bytes — more than |A|/8 ($aBytes/8); " +
           "a skinny multiply has fallen off the broadcast path")
-    } finally {
-      spark.sparkContext.removeSparkListener(lis)
-      a.unpersist(): Unit
-    }
+    } finally a.unpersist(): Unit
   }
 }

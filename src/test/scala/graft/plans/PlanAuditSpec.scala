@@ -1,9 +1,11 @@
 package graft.plans
 
 import graft.{SparkEntry, SparkSpec}
+import graft.core.EntryMetrics
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.FileSourceScanExec
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
 
 /** Scale-discipline audit: the plan-shape properties each operator
   * family's 100 TB story rests on, asserted against the REAL executed
@@ -24,6 +26,20 @@ class PlanAuditSpec extends SparkSpec {
 
   private def scans(df: DataFrame): Seq[FileSourceScanExec] =
     df.queryExecution.executedPlan.collect { case s: FileSourceScanExec => s }
+
+  /** Every node of a plan, through adaptive plans, query stages and
+    * reused exchanges. */
+  private def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+    case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+    case q: QueryStageExec => nodes(q.plan)
+    case r: ReusedExchangeExec => nodes(r.child)
+    case o => o.children.flatMap(nodes)
+  })
+
+  /** Writes `df` to a noop sink and returns the final plan that write ran
+    * (AQE's, after execution), captured from the execution listener. */
+  private def writtenPlan(df: DataFrame): SparkPlan =
+    EntryMetrics.finalPlan(metrics.capture(df.write.format("noop").mode("overwrite").save())._2.last)
 
   test("q02 filter+projection: predicate pushed to the scan, columns pruned") {
     val df = run("q02_project_filter")
@@ -182,16 +198,13 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("q51 SQL front door: pushdown and pruning hold through spark.sql too") {
-    val df = run("q51_sql_frontdoor")
-    df.write.format("noop").mode("overwrite").save()   // finalize the AQE plan
-    val p = df.queryExecution.executedPlan
-    val fin = p match { case a: AdaptiveSparkPlanExec => a.executedPlan; case o => o }
-    val scan = fin.collect { case s: FileSourceScanExec => s }.head
+    val fin = writtenPlan(run("q51_sql_frontdoor"))
+    val scan = nodes(fin).collect { case s: FileSourceScanExec => s }.head
     assert(scan.metadata.get("PushedFilters").exists(_ != "[]"),
       s"no pushed filters through the SQL path: ${scan.metadata}")
     assert(scan.schema.fieldNames.length <= 5,
       s"SQL path lost column pruning: ${scan.schema.fieldNames.mkString(",")}")
-    val plan = planString(df)
+    val plan = fin.toString
     assert(plan.contains("partial_"), "SQL aggregation must combine map-side")
   }
 
@@ -231,8 +244,7 @@ class PlanAuditSpec extends SparkSpec {
     import org.apache.spark.sql.functions.col
     val codes = graft.operators.Similarity.pqCodes(
       graft.core.Tables.embeddings(spark, sfDir))
-    codes.write.mode("overwrite").format("noop").save()
-    val plan = planString(codes)
+    val plan = writtenPlan(codes).toString
     assert(plan.contains("BroadcastHashJoin"),
       s"the centroid join must broadcast:\n$plan")
     val keyed = plan.linesIterator.filter(_.contains("Exchange hashpartitioning")).toList
@@ -253,11 +265,8 @@ class PlanAuditSpec extends SparkSpec {
     import org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec
     import org.apache.spark.sql.catalyst.optimizer.BuildLeft
     import org.apache.spark.sql.functions.col
-    val df = run("e13_knn_classify")
-    df.write.mode("overwrite").format("noop").save()
-    val p = df.queryExecution.executedPlan
-    val fin = p match { case a: AdaptiveSparkPlanExec => a.executedPlan; case o => o }
-    val bnljs = fin.collect { case j: BroadcastNestedLoopJoinExec => j }
+    val fin = writtenPlan(run("e13_knn_classify"))
+    val bnljs = nodes(fin).collect { case j: BroadcastNestedLoopJoinExec => j }
     assert(bnljs.nonEmpty, s"e13 must plan its kNN baseline as a BNLJ:\n$fin")
     bnljs.foreach { j =>
       assert(j.buildSide == BuildLeft,
@@ -323,40 +332,13 @@ class PlanAuditSpec extends SparkSpec {
     // aggregate down the build side has no grouping keys) — never a
     // CartesianProduct or a build on the data side. t32/t46/t54/ml06
     // localCheckpoint inside the entry, so the plans come from every SQL
-    // execution the entry and its noop write start, read through a
-    // listener; a marked sentinel query drains the listener bus.
+    // execution the entry and its noop write start, captured from the
+    // execution listener.
     import org.apache.spark.sql.catalyst.optimizer.BuildRight
-    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
-    import org.apache.spark.sql.execution.adaptive.QueryStageExec
     import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
-    import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
     import org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec
-    import org.apache.spark.sql.util.QueryExecutionListener
-    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
-      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
-      case q: QueryStageExec => nodes(q.plan)
-      case r: ReusedExchangeExec => nodes(r.child)
-      case o => o.children.flatMap(nodes)
-    })
-    def executedPlans(name: String): Seq[SparkPlan] = {
-      val marker = s"plan-audit-${System.nanoTime}"
-      val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
-      val done = new java.util.concurrent.CountDownLatch(1)
-      def seen(qe: QueryExecution): Unit =
-        if (qe.logical.toString.contains(marker)) done.countDown()
-        else plans.add(qe.executedPlan): Unit
-      val listener = new QueryExecutionListener {
-        override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = seen(qe)
-        override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = seen(qe)
-      }
-      spark.listenerManager.register(listener)
-      try {
-        run(name).write.format("noop").mode("overwrite").save()
-        spark.range(1).selectExpr(s"'$marker' AS marker").collect(): Unit
-        assert(done.await(30, java.util.concurrent.TimeUnit.SECONDS), "listener bus never drained")
-        plans.toArray(Array.empty[SparkPlan]).toSeq
-      } finally spark.listenerManager.unregister(listener)
-    }
+    def executedPlans(name: String): Seq[SparkPlan] =
+      metrics.capture(run(name).write.format("noop").mode("overwrite").save())._2
     for (name <- Seq("t13_kmv_sketch", "t18_domain_mix", "t32_surprisal",
                      "t42_temperature_mix", "t46_js_divergence", "t49_collocations",
                      "t54_dsir", "ml06_kfold_cv", "ml16_chi2", "q77_basket")) {

@@ -16,6 +16,10 @@
 #                               # join without a broadcast hint shuffles;
 #                               # no tests, no bench
 #
+# The plan dump is `graft.tools.PlanDump` with no args (executed plans
+# captured after each entry ran); with `<outDir> <entry…>` it writes one
+# file per entry with its plan and per-stage profile instead.
+#
 # Bench passes merge best-of-samples per code state (see Bench.scala);
 # run the script twice for a tighter committed bench_out.json.
 set -euo pipefail
