@@ -1,6 +1,7 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import graft.core.EntryMetrics.jstr
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -47,6 +48,12 @@ object Verify {
       "canonicalize to a scalar first, e.g. array_join(sort_array(...), '|')")
   }
 
+  /** The oracle SQL map as one JSON object. Every control char is escaped
+    * (by [[EntryMetrics.jstr]]): a tab or CR left raw in an oracle string
+    * would make the compare harness's json.load fail. */
+  private[graft] def oracleJson(sql: Map[String, String]): String =
+    sql.map { case (k, v) => s"${jstr(k)}: ${jstr(v)}" }.mkString("{", ",", "}")
+
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
     // optional 3rd arg: comma-separated entry names — local iteration only
@@ -59,21 +66,7 @@ object Verify {
     selected.foreach { case (name, fn) =>
       if (!runEntry(spark, name, fn, sfDir, outDir)) failed += 1
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), oracleJson(SparkEntry.oracleSql))
     if (failed > 0)
       System.err.println(s"[verify] $failed of ${selected.size} entries FAILED (see *_error markers)")
     spark.stop()

@@ -2,6 +2,7 @@ package graft.array
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.core.GraftContext
 
 /** Driver-gate entries for the dask.array rebuild (SURVEY.md §2.B3).
   *
@@ -649,12 +650,11 @@ object ArrayQueries {
     * Plan: the a35 Gram + column-sum pipeline, then the 48-row diagonal
     * joined back twice — broadcast-sized at any matrix width that has a
     * computable dense correlation matrix. */
-  def corrcoefEntry(s: SparkSession, d: String): DataFrame = {
-    val covn = covEntry(s, d)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+  def corrcoefEntry(s: SparkSession, d: String): DataFrame = GraftContext.scoped(s) { ctx =>
+    val covn = ctx.pin(covEntry(s, d))
     val diag = covn.filter(col("i") === col("j"))
       .select(col("i").as("dj"), col("cov_n").as("dv"))
-    val out = covn
+    covn
       // bounded: one diagonal row per matrix column, √ of covn's rows
       .join(broadcast(diag.select(col("dj").as("i"), col("dv").as("di"))), "i")
       .join(broadcast(diag.select(col("dj").as("j"), col("dv").as("djj"))), "j")
@@ -663,8 +663,6 @@ object ArrayQueries {
                     sqrt(col("di").cast("double") * col("djj").cast("double")), 6)
                 .as("corr"))
       .localCheckpoint(true)
-    covn.unpersist(false)
-    out
   }
 
   /** Circular shift + row reversal (dask `da.roll` / `da.flipud`) on a

@@ -13,16 +13,25 @@ import scala.collection.mutable
   * TE/function.py:258-382, SS/wukong/scheduler.py:2794-2848).
   *
   * Spark executors are already long-lived, so "Lambda reuse" parity is
-  * about the *semantics*: data pinned across jobs (persist + eager
-  * materialization), values shipped once (broadcast), and iteration
-  * loops whose lineage cannot grow unboundedly (localCheckpoint every N
-  * steps — SURVEY §7.5 known-hard #5). `stop()` is the explicit
-  * iteration-terminator (`<key>---iteration = -1`).
+  * about the *semantics*: data pinned across jobs, values shipped once
+  * (broadcast), and iteration loops whose lineage cannot grow
+  * unboundedly (localCheckpoint every N steps — SURVEY §7.5 known-hard
+  * #5). `stop()` is the explicit iteration-terminator
+  * (`<key>---iteration = -1`).
+  *
+  * Pin scope (SURVEY A11: Wukong drops a cached result once all of its
+  * dependents have run, TE/function.py:2365-2450). Every DataFrame an
+  * operator reuses across branches or jobs is pinned through a context,
+  * and the context owns the pin: [[GraftContext.scoped]] releases all of
+  * them when its body returns or throws, and [[release]] drops one
+  * earlier (a loop swapping its state frame). Pins are released when the
+  * scope ends, so a DataFrame result that reads a pin must be detached
+  * inside the scope (`localCheckpoint(true)`) or built from driver values.
   *
   * Job discipline: one Spark job round trip costs tens of ms of driver
   * time, the Spark analog of the invocation cost Wukong's "become"
-  * avoids. So materializing a frame is one pass over the persisted frame
-  * (not `count()`, which is two jobs under AQE), and [[iterate]]
+  * avoids. So [[persist]] fills a cache with one pass over the pinned
+  * frame (not `count()`, which is two jobs under AQE), and [[iterate]]
   * returns each step's statistics from that same job through
   * `Dataset.observe` instead of running an aggregate per step.
   */
@@ -30,17 +39,30 @@ final class GraftContext(val spark: SparkSession) {
   private val pinned = mutable.ListBuffer[DataFrame]()
   private val Observed = "graft.step"
 
-  /** persist: pin and eagerly materialize (Wukong persisted eagerly —
-    * the flag forced executor-side writes). One job: a pass over the
-    * pinned frame fills its cache. Returns the same frame. */
-  def persist(df: DataFrame,
-              level: StorageLevel = StorageLevel.MEMORY_AND_DISK): DataFrame = {
-    materialize(df, Nil, level)
+  /** Pins `df` at the one storage level, MEMORY_AND_DISK, and starts no
+    * job: the first action that reads it fills the cache. Returns the
+    * same frame. */
+  def pin(df: DataFrame): DataFrame = {
+    df.persist(StorageLevel.MEMORY_AND_DISK)
     pinned += df
     df
   }
 
-  /** Pins `df` and fills its cache in ONE job that also returns the
+  /** Pins `df` and fills its cache now (Wukong persisted eagerly — the
+    * flag forced executor-side writes), in one pass over the frame.
+    * Returns the same frame. */
+  def persist(df: DataFrame): DataFrame = {
+    materialize(pin(df), Nil)
+    df
+  }
+
+  /** Drops one pin before the scope ends. */
+  def release(df: DataFrame): Unit = {
+    df.unpersist(false)
+    pinned -= df
+  }
+
+  /** Fills the cache of the pinned `df` in ONE job that also returns the
     * values of the `observe` aggregates over its rows (an empty Row when
     * none are asked for). The frame itself is persisted and its observed
     * view is executed, so the cache entry is keyed by `df`'s plan — the
@@ -55,9 +77,7 @@ final class GraftContext(val spark: SparkSession) {
     * `Observation`: that registers the session's ObservationManager,
     * which is not serializable, and spark.ml closures that capture the
     * session (LinearSVC's training summary) then fail to serialize. */
-  private def materialize(df: DataFrame, observe: Seq[Column],
-                          level: StorageLevel = StorageLevel.MEMORY_AND_DISK): Row = {
-    df.persist(level)
+  private def materialize(df: DataFrame, observe: Seq[Column]): Row = {
     val viewed = if (observe.isEmpty) df else df.observe(Observed, observe.head, observe.tail: _*)
     val qe = viewed.queryExecution
     SQLExecution.withNewExecutionId(qe, Some("materialize"))(qe.toRdd.foreach(_ => ()))
@@ -85,26 +105,33 @@ final class GraftContext(val spark: SparkSession) {
     * until [[stop]]) and its observed values. */
   def iterate(init: DataFrame, observe: Seq[Column], steps: Int, checkpointEvery: Int = 8)
              (step: (DataFrame, Row, Int) => DataFrame): (DataFrame, Row) = {
-    var cur = init
+    var cur = pin(init)
     var stats = materialize(cur, observe)
     for (i <- 0 until steps) {
       var next = step(cur, stats, i)
       if ((i + 1) % checkpointEvery == 0)
         next = next.localCheckpoint(false)
-      stats = materialize(next, observe)
-      cur.unpersist(false)
+      stats = materialize(pin(next), observe)
+      release(cur)
       cur = next
     }
-    pinned += cur   // released by stop() — the final frame stays pinned
-                    // only for the session's lifetime, not the JVM's
     (cur, stats)
   }
 
-  /** Explicit session stop: release every pinned dataset (the
-    * iteration-counter `-1` terminator analog). */
+  /** Explicit session stop: release every pin (the iteration-counter
+    * `-1` terminator analog). */
   def stop(): Unit = {
     pinned.foreach(_.unpersist(false))
     pinned.clear()
+  }
+}
+
+object GraftContext {
+  /** Runs `body` with a fresh context and releases every pin it made when
+    * `body` returns or throws. */
+  def scoped[T](spark: SparkSession)(body: GraftContext => T): T = {
+    val ctx = new GraftContext(spark)
+    try body(ctx) finally ctx.stop()
   }
 }
 
@@ -119,18 +146,16 @@ object IterativeQueries {
     * was cached: one scan of parquet total, then one job per cached
     * iteration — the Wukong iterative-session shape. */
   def iterativeTrim(s: SparkSession, d: String): DataFrame = {
-    val ctx = new GraftContext(s)
     val init = Tables.orders(s, d)
       .select(round(col("o_totalprice") * 100).cast("long").as("cents"))
     // each materialization observes (n, Σ) of the frame it caches: step
     // i filters with its input's stats, and the final frame's stats are
     // the answer — no aggregate job of its own anywhere in the loop
-    val (_, last) = ctx.iterate(init,
+    val (_, last) = GraftContext.scoped(s)(_.iterate(init,
         Seq(count(lit(1)).as("n"), sum(col("cents")).as("s")),
         steps = 3, checkpointEvery = 2) { (cur, stats, _) =>
       cur.filter(col("cents") * (2L * stats.getLong(0)) <= lit(3L * stats.getLong(1)))
-    }
-    ctx.stop()
+    })
     import s.implicits._
     Seq((last.getLong(0), last.getLong(1))).toDF("n_orders", "sum_cents")
   }
@@ -150,8 +175,7 @@ object IterativeQueries {
     * unrolled iterations hash-match DuckDB bit-for-bit. Edges keep
     * lineitem multiplicity (each line is one interaction); suppliers
     * offset by 10⁷ into a disjoint node-id range. */
-  def pagerank(s: SparkSession, d: String): DataFrame = {
-    val ctx = new GraftContext(s)
+  def pagerank(s: SparkSession, d: String): DataFrame = GraftContext.scoped(s) { ctx =>
     val pairs = Tables.orders(s, d).select(col("o_orderkey"), col("o_custkey"))
       .join(Tables.lineitem(s, d).select(col("l_orderkey"), col("l_suppkey")),
             col("o_orderkey") === col("l_orderkey"))
@@ -185,9 +209,7 @@ object IterativeQueries {
         .groupBy(col("dst")).agg(sum(col("c")).as("acc"))
         .select(col("dst").as("v"), (lit(1500L) + col("acc")).as("r"))
     }
-    val out = result.localCheckpoint(true)   // node-sized; detaches from the pins
-    ctx.stop()
-    out
+    result.localCheckpoint(true)   // node-sized
   }
 
   /** i03: TRIANGLE COUNTING over the supplier co-purchase graph (edge =
@@ -202,25 +224,23 @@ object IterativeQueries {
     * all arithmetic is integer counts. Output is the graph profile
     * (nodes/edges/max-degree/wedges/triangles) — global closure stats
     * every graph pipeline reports. */
-  def triangles(s: SparkSession, d: String): DataFrame = {
+  def triangles(s: SparkSession, d: String): DataFrame = GraftContext.scoped(s) { ctx =>
     val li = Tables.lineitem(s, d).select(col("l_orderkey"), col("l_suppkey"))
-    val e0 = li.select(col("l_orderkey"), col("l_suppkey").as("a"))
+    val e0 = ctx.pin(li.select(col("l_orderkey"), col("l_suppkey").as("a"))
       .join(li.select(col("l_orderkey"), col("l_suppkey").as("b")), "l_orderkey")
       .filter(col("a") < col("b"))
-      .select(col("a"), col("b")).distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .select(col("a"), col("b")).distinct())
     val deg = e0.select(explode(array(col("a"), col("b"))).as("v"))
       .groupBy(col("v")).agg(count(lit(1)).as("deg"))
     // orient each edge from lower to higher (deg, id) rank
     val withDeg = e0
       .join(deg.withColumnRenamed("v", "a").withColumnRenamed("deg", "da"), "a")
       .join(deg.withColumnRenamed("v", "b").withColumnRenamed("deg", "db"), "b")
-    val oriented = withDeg.select(
+    val oriented = ctx.pin(withDeg.select(
         when(col("da") < col("db") || (col("da") === col("db") && col("a") < col("b")),
              struct(col("a").as("u"), col("b").as("w")))
           .otherwise(struct(col("b").as("u"), col("a").as("w"))).as("e"))
-      .select(col("e.u").as("u"), col("e.w").as("w"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .select(col("e.u").as("u"), col("e.w").as("w")))
     // Wedges never materialize: the unordered wedge count is Σ_u C(c_u, 2)
     // straight off the out-degrees, and triangles come from the edge-local
     // identity  Δ = Σ_{(u,v)∈E⃗} |N⁺(u) ∩ N⁺(v)|  (orientation is a DAG, so
@@ -234,10 +254,9 @@ object IterativeQueries {
     // arrays (the orientation caps every out-list at O(√m)), which is the
     // same O(m^1.5) asymptotic the wedge join already paid — minus the
     // exchange, the sort, and the 3·10⁸-row semi-join build side.
-    val adj = oriented.groupBy(col("u"))
+    val adj = ctx.pin(oriented.groupBy(col("u"))
       .agg(sort_array(collect_list(col("w"))).as("nbrs"),
-           count(lit(1)).as("c"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+           count(lit(1)).as("c")))
     val wedgeCnt = adj.agg(expr("sum(c * (c - 1)) div 2").as("n_wedges"))
     // The attach-by-w exchange below is the ONE stage whose rows carry
     // the O(√m)-bounded out-lists — Σc² array elements in aggregate
@@ -261,16 +280,13 @@ object IterativeQueries {
       .join(adj.select(col("u").as("w"), col("nbrs").as("nw")), Seq("w"))
       .select(size(array_intersect(col("nu"), col("nw"))).as("t"))
       .agg(sum(col("t")).cast("long").as("n_triangles"))
-    val out = e0.agg(count(lit(1)).as("n_edges")).crossJoin(
+    e0.agg(count(lit(1)).as("n_edges")).crossJoin(
         deg.agg(count(lit(1)).as("n_nodes"), max(col("deg")).as("max_deg")))
       .crossJoin(wedgeCnt)
       .crossJoin(tri)
       .select(col("n_nodes"), col("n_edges"), col("max_deg"),
               col("n_wedges"), col("n_triangles"))
       .localCheckpoint(true)
-    adj.unpersist(false)
-    oriented.unpersist(false); e0.unpersist(false)
-    out
   }
 
   /** i04: multi-source BFS hop distance — the frontier-relaxation
@@ -286,8 +302,7 @@ object IterativeQueries {
     * how large the edge set, and lineage truncates via ctx.iterate.
     * Output: nodes per hop level (unreached nodes carry no row), the
     * reachability histogram a 100 TB graph job reports. */
-  def bfsLayers(s: SparkSession, d: String): DataFrame = {
-    val ctx = new GraftContext(s)
+  def bfsLayers(s: SparkSession, d: String): DataFrame = GraftContext.scoped(s) { ctx =>
     val pairs = Tables.orders(s, d).select(col("o_orderkey"), col("o_custkey"))
       .join(Tables.lineitem(s, d).select(col("l_orderkey"), col("l_suppkey")),
             col("o_orderkey") === col("l_orderkey"))
@@ -309,10 +324,8 @@ object IterativeQueries {
             .select(edges("dst").as("v"), (col("dist") + 1L).as("dist")))
         .groupBy(col("v")).agg(min(col("dist")).as("dist"))
     }
-    val out = dists.groupBy(col("dist"))
+    dists.groupBy(col("dist"))
       .agg(count(lit(1)).as("n_nodes")).localCheckpoint(true)
-    ctx.stop()
-    out
   }
 
   /** i05: WEIGHTED SSSP (k-round Bellman–Ford) — the weighted upgrade
@@ -323,8 +336,7 @@ object IterativeQueries {
     * (v, dist) pairs shuffle, the lineage is checkpoint-trimmed by
     * [[iterate]], and the output buckets distances (quantity sums are
     * domain-bounded ≤ 150) rather than dumping node vectors. */
-  def ssspBuckets(s: SparkSession, d: String): DataFrame = {
-    val ctx = new GraftContext(s)
+  def ssspBuckets(s: SparkSession, d: String): DataFrame = GraftContext.scoped(s) { ctx =>
     val pairs = Tables.orders(s, d).select(col("o_orderkey"), col("o_custkey"))
       .join(Tables.lineitem(s, d)
               .select(col("l_orderkey"), col("l_suppkey"), col("l_quantity")),
@@ -349,10 +361,8 @@ object IterativeQueries {
             .select(edges("dst").as("v"), (col("dist") + col("w")).as("dist")))
         .groupBy(col("v")).agg(min(col("dist")).as("dist"))
     }
-    val out = dists.groupBy(col("dist"))
+    dists.groupBy(col("dist"))
       .agg(count(lit(1)).as("n_nodes")).localCheckpoint(true)
-    ctx.stop()
-    out
   }
 
   /** i06: K-CORE PEELING — the degeneracy-ordering kernel under
@@ -371,36 +381,31 @@ object IterativeQueries {
     * endpoint, degrees are (v, deg) pairs, and the per-round profile
     * is checkpointed so lineage stays flat however many rounds run.
     * Oracle: the same three rounds unrolled as CTEs. */
-  def kcorePeel(s: SparkSession, d: String): DataFrame = {
+  def kcorePeel(s: SparkSession, d: String): DataFrame = GraftContext.scoped(s) { ctx =>
     val k = 4
     val raw = s.range(600).select(
       ((col("id") * 2 * 1103515245L + 17L) % 2147483647L % 200L).as("u"),
       (((col("id") * 2 + 1) * 1103515245L + 17L) % 2147483647L % 200L).as("v"))
-    var edges = raw.filter(col("u") =!= col("v"))
+    var edges = ctx.pin(raw.filter(col("u") =!= col("v"))
       .select(least(col("u"), col("v")).as("a"), greatest(col("u"), col("v")).as("b"))
-      .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .distinct())
     val profiles = (1 to 3).map { r =>
       val deg = edges.select(explode(array(col("a"), col("b"))).as("v"))
         .groupBy(col("v")).agg(count(lit(1)).as("deg"))
-      val keep = deg.filter(col("deg") >= k).select(col("v"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val next = edges
+      val keep = ctx.pin(deg.filter(col("deg") >= k).select(col("v")))
+      val next = ctx.pin(edges
         .join(keep.withColumnRenamed("v", "a"), Seq("a"), "left_semi")
         .join(keep.withColumnRenamed("v", "b"), Seq("b"), "left_semi")
-        .select(col("a"), col("b"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .select(col("a"), col("b")))
       val prof = keep.agg(count(lit(1)).as("n_nodes"))
         .crossJoin(next.agg(count(lit(1)).as("n_edges")))
         .select(lit(r.toLong).as("round"), col("n_nodes"), col("n_edges"))
-        .localCheckpoint(true) // materialize before the inputs unpersist
-      edges.unpersist(false); keep.unpersist(false)
+        .localCheckpoint(true)
+      ctx.release(edges); ctx.release(keep)
       edges = next
       prof
     }
-    val out = profiles.reduce(_ unionByName _)
-    edges.unpersist(false)
-    out
+    profiles.reduce(_ unionByName _)
   }
 
   val queries: Map[String, Q] = Map(

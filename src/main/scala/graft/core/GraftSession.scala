@@ -95,6 +95,16 @@ object GraftSession {
         }
     } catch { case _: Exception => () }
 
+  /** Runs `body` with the session conf `key` set to `value`, then puts the
+    * prior value back, or unsets `key` if it was unset before — also
+    * when `body` throws. */
+  def withConf[T](s: SparkSession, kv: (String, String))(body: => T): T = {
+    val (key, value) = kv
+    val prev = s.conf.getOption(key)
+    s.conf.set(key, value)
+    try body finally prev.fold(s.conf.unset(key))(s.conf.set(key, _))
+  }
+
   /** Local session sized from SPARK_GRAFT_CPUS (default 32, matching the
     * harness). SPARK_GRAFT_CONF="k=v;k=v" applies LAST, so a drive can
     * flip runtime knobs (spark.sql.adaptive.enabled=false,

@@ -1,7 +1,7 @@
 package graft.delayed
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import graft.core.Tables
+import graft.core.{GraftContext, Tables}
 
 /** Driver-gate entries for the delayed/futures surface (SURVEY.md §2.B5).
   * Semantics mirror reference workloads; results are exactly
@@ -64,15 +64,13 @@ object DelayedQueries {
     * into the result. The source is persisted and materialized ONCE
     * before the fan-out — the 16 jobs read the cache, not 16 parquet
     * scans (the reference's scatter-then-compute discipline). */
-  def futuresMap(s: SparkSession, d: String): DataFrame = {
+  def futuresMap(s: SparkSession, d: String): DataFrame = GraftContext.scoped(s) { ctx =>
     import org.apache.spark.sql.functions._
     import s.implicits._
     val client = new Client(s)
-    val base = Tables.orders(s, d)
+    val base = ctx.persist(Tables.orders(s, d)
       .select(col("o_orderkey"),
-              round(col("o_totalprice") * 100).cast("long").as("cents"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    base.count()
+              round(col("o_totalprice") * 100).cast("long").as("cents")))
     val futures = client.map((0 until 16).toSeq) { t =>
       val r = base.filter(col("o_orderkey") % 16 === t)
         .agg(count(lit(1)).as("n"), sum(col("cents")).as("sc")).head()
@@ -83,7 +81,6 @@ object DelayedQueries {
       else (t.toLong, r.getLong(0), r.getLong(1))
     }
     val rows = client.gather(futures).filter(_._2 > 0L)
-    base.unpersist(false)
     s.createDataset(rows).toDF("slice", "n_orders", "sum_cents")
   }
 

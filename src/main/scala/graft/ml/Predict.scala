@@ -2,7 +2,7 @@ package graft.ml
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.Tables
+import graft.core.{GraftContext, Tables}
 import graft.sources.Generators
 
 /** ML parallel batch prediction — SURVEY.md §2.B4, the rebuild of the
@@ -233,15 +233,14 @@ object Predict {
     * the sum of |rounded residual| — integer, so exact cross-engine.
     * Scale: two passes over the data total (stats + scoring),
     * regardless of fold count. */
-  def kfoldCv(s: SparkSession, d: String): DataFrame = {
+  def kfoldCv(s: SparkSession, d: String): DataFrame = GraftContext.scoped(s) { ctx =>
     val folds = 5
     val h = conv(substring(md5(concat_ws("_", col("l_orderkey"),
       col("l_linenumber"))), 1, 15), 16, 10).cast("long") % folds
-    val r = Tables.lineitem(s, d).select(
+    val r = ctx.pin(Tables.lineitem(s, d).select(
         round(col("l_quantity") * 100).cast("long").as("x"),
         round(col("l_extendedprice") * 100).cast("long").as("y"),
-        h.as("fold"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        h.as("fold")))
     val xd = col("x").cast("decimal(19,0)"); val yd = col("y").cast("decimal(19,0)")
     val fs = r.groupBy(col("fold")).agg(
       count(lit(1)).as("n"), sum(col("x")).as("sx"), sum(col("y")).as("sy"),
@@ -261,7 +260,7 @@ object Predict {
     val resid = col("y").cast("double") -
       (col("icept") + col("slope") * col("x").cast("double"))
     // bounded: one model row per fold
-    val out = r.join(broadcast(models), "fold")
+    r.join(broadcast(models), "fold")
       .select(col("fold"), col("n_train"), col("n_val"), col("slope"), col("icept"),
               abs(round(resid)).cast("long").as("ae"))
       .groupBy(col("fold"), col("n_train"), col("n_val"))
@@ -269,8 +268,6 @@ object Predict {
            round(max(col("icept")), 4).as("icept"),
            sum(col("ae")).as("sae"))
       .localCheckpoint(true)
-    r.unpersist(false)
-    out
   }
 
   /** ml07: hashing-trick text featurization + linear scoring — the
@@ -369,12 +366,11 @@ object Predict {
     * model to executors, ONE 4-long partial per partition back — the
     * driver holds model-sized state only, at any data scale. Output:
     * (epoch, misclassified count, w) — the training curve. */
-  def parallelSgd(s: SparkSession, d: String): DataFrame = {
-    val facts = Tables.lineitem(s, d).select(
+  def parallelSgd(s: SparkSession, d: String): DataFrame = GraftContext.scoped(s) { ctx =>
+    val facts = ctx.pin(Tables.lineitem(s, d).select(
         col("l_quantity").cast("long").as("x1"),
         round(col("l_discount") * 100).cast("long").as("x2"),
-        when(col("l_returnflag") === "R", 1L).otherwise(-1L).as("y"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        when(col("l_returnflag") === "R", 1L).otherwise(-1L).as("y")))
     var w = (0L, 0L, 0L)
     val curve = (1 to 3).map { epoch =>
       val m = col("y") * (lit(w._1) * col("x1") + lit(w._2) * col("x2") + lit(w._3))
@@ -387,7 +383,6 @@ object Predict {
       w = (w._1 + g.getLong(1), w._2 + g.getLong(2), w._3 + g.getLong(3))
       (epoch.toLong, g.getLong(0), w._1, w._2, w._3)
     }
-    facts.unpersist(false)
     import s.implicits._
     curve.toDF("epoch", "mis", "w1", "w2", "wb")
   }

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.core.Tables
+import graft.core.{GraftContext, Tables}
 
 /** Similarity search over the `embeddings` table (vec_id, embedding
   * FLOAT[64], label) — SURVEY-mandated ANN for the training-data
@@ -126,26 +126,24 @@ object Similarity {
     * The (vec, bucket) frame feeds both join sides, so it is pinned —
     * otherwise the quantize + numPlanes-hyperplane bucket pipeline
     * recomputes (and recompiles) per branch. */
-  def annTopK(emb: DataFrame, k: Int, numPlanes: Int = DefaultPlanes): DataFrame = {
-    val withB = emb.select(col("vec_id"), quantize(col("embedding")).as("qv"))
-      .withColumn("qn", dotInt(col("qv"), col("qv")))   // norm once per vector
-      .join(lshBuckets(emb, numPlanes), "vec_id")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val a = withB.select(col("bucket"), col("vec_id").as("q_id"), col("qv"), col("qn"))
-    val b = withB.select(col("bucket").as("b2"), col("vec_id").as("n_id"),
-                         col("qv").as("nv"), col("qn").as("nn"))
-    val cos = dotInt(col("qv"), col("nv")).cast("double") /
-      (sqrt(col("qn").cast("double")) * sqrt(col("nn").cast("double")))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("n_id"))
-    val out = a.join(b, col("bucket") === col("b2") && col("q_id") =!= col("n_id"))
-      .select(col("q_id"), col("n_id"), cos.as("cos"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("q_id"), col("n_id"), col("rank"))
-      .localCheckpoint(true)
-    withB.unpersist(false)
-    out
-  }
+  def annTopK(emb: DataFrame, k: Int, numPlanes: Int = DefaultPlanes): DataFrame =
+    GraftContext.scoped(emb.sparkSession) { ctx =>
+      val withB = ctx.pin(emb.select(col("vec_id"), quantize(col("embedding")).as("qv"))
+        .withColumn("qn", dotInt(col("qv"), col("qv")))   // norm once per vector
+        .join(lshBuckets(emb, numPlanes), "vec_id"))
+      val a = withB.select(col("bucket"), col("vec_id").as("q_id"), col("qv"), col("qn"))
+      val b = withB.select(col("bucket").as("b2"), col("vec_id").as("n_id"),
+                           col("qv").as("nv"), col("qn").as("nn"))
+      val cos = dotInt(col("qv"), col("nv")).cast("double") /
+        (sqrt(col("qn").cast("double")) * sqrt(col("nn").cast("double")))
+      val w = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("n_id"))
+      a.join(b, col("bucket") === col("b2") && col("q_id") =!= col("n_id"))
+        .select(col("q_id"), col("n_id"), cos.as("cos"))
+        .withColumn("rank", row_number().over(w))
+        .filter(col("rank") <= k)
+        .select(col("q_id"), col("n_id"), col("rank"))
+        .localCheckpoint(true)
+    }
 
   /** Banded sign-bit LSH: `numBands` independent buckets per vector, each
     * from `planesPerBand` hyperplane signs — the cosine analog of the
@@ -179,24 +177,18 @@ object Similarity {
     * the cluster, then verified with the exact quantized cosine and kept
     * at `cos >= minCos`. The candidate join moves only (band, bucket,
     * vec_id); the 64-dim vectors ship once per side, joined back on
-    * vec_id. Same staging discipline as TextSim.nearDupPairs: shared
-    * frames pinned and materialized, small pair output checkpointed,
-    * pins released. */
+    * vec_id. Same staging as TextSim.nearDupPairs: the shared frames
+    * are pinned and the small pair output is checkpointed. */
   def embedNearDups(emb: DataFrame, minCos: Double,
-                    planesPerBand: Int = 4, numBands: Int = 4): DataFrame = {
-    val withQ = emb.select(col("vec_id"), quantize(col("embedding")).as("qv"))
-      .withColumn("qn", dotInt(col("qv"), col("qv")))   // norm once per vector
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val bands = bandedLsh(emb, planesPerBand, numBands)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    bands.count()   // materialize both pins before the multi-branch joins
-    val cand = bandPairs(bands).distinct()
-    val out = exactCosVerify(cand, withQ, minCos)
-      .localCheckpoint(true)   // small: the surviving near-dup pairs
-    withQ.unpersist(false)
-    bands.unpersist(false)
-    out
-  }
+                    planesPerBand: Int = 4, numBands: Int = 4): DataFrame =
+    GraftContext.scoped(emb.sparkSession) { ctx =>
+      val withQ = ctx.pin(emb.select(col("vec_id"), quantize(col("embedding")).as("qv"))
+        .withColumn("qn", dotInt(col("qv"), col("qv"))))   // norm once per vector
+      val bands = ctx.persist(bandedLsh(emb, planesPerBand, numBands))
+      val cand = bandPairs(bands).distinct()
+      exactCosVerify(cand, withQ, minCos)
+        .localCheckpoint(true)   // small: the surviving near-dup pairs
+    }
 
   /** Same-(band, bucket) candidate pairs (vec_a < vec_b) from a banded
     * LSH frame — the equi-join that replaces the all-pairs product. */
@@ -262,48 +254,42 @@ object Similarity {
                           occupancyCap: Long = 4096L): DataFrame = {
     if (minCos < 0)
       return embedNearDups(emb, minCos, planesPerBand, numBands)
-    val withQ = emb.select(col("vec_id"), quantize(col("embedding")).as("qv"))
-      .withColumn("qn", dotInt(col("qv"), col("qv")))   // norm once per vector
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val bands = bandedLsh(emb, planesPerBand, numBands)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    bands.count()   // materialize both pins before the multi-branch joins
-    val sizes = bands.groupBy(col("band"), col("bucket"))
-      .agg(count(lit(1)).as("occ"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val occRow = sizes.agg(max(col("occ"))).first()
-    val maxOcc = if (occRow.isNullAt(0)) 0L else occRow.getLong(0)
-    // The PQ codebook is the subvectors of the corpus vectors with
-    // vec_id < PqK; a corpus whose ids all start above PqK has no
-    // codebook, and the pre-verify's inner joins would silently drop
-    // every big-bucket candidate — detect that ONCE (a pushed-down
-    // id-range count, metadata-scale) and fall back to the exact path.
-    // MUST stay `lazy`: the probe is priced for the rare dense-core
-    // branch only — it evaluates solely when `maxOcc > occupancyCap`
-    // reaches it below, and hoisting it eagerly would put a corpus scan
-    // on every call's hot path (VERDICT r14 nit).
-    lazy val codebookBuildable =
-      emb.filter(col("vec_id") < PqK).limit(1).count() > 0
-    val cand =
-      if (maxOcc <= occupancyCap || !codebookBuildable) bandPairs(bands).distinct()
-      else {
-        val sized = bands.join(sizes, Seq("band", "bucket"))
-        val small = sized.filter(col("occ") <= occupancyCap)
-        val big = sized.filter(col("occ") > occupancyCap)
-        // summaries only for members of oversized buckets — at scale the
-        // dense core is a small fraction of the corpus
-        val bigMembers = big.select(col("vec_id")).distinct()
-        val summ = pqSummaryOf(emb, emb.join(bigMembers, Seq("vec_id"), "left_semi"))
-        val kept = pqPreVerify(bandPairs(big).distinct(), summ,
-                               pqCentDotTable(emb), minCos)
-        bandPairs(small).unionByName(kept).distinct()
-      }
-    val out = exactCosVerify(cand, withQ, minCos)
-      .localCheckpoint(true)   // small: the surviving near-dup pairs
-    withQ.unpersist(false)
-    bands.unpersist(false)
-    sizes.unpersist(false)
-    out
+    GraftContext.scoped(emb.sparkSession) { ctx =>
+      val withQ = ctx.pin(emb.select(col("vec_id"), quantize(col("embedding")).as("qv"))
+        .withColumn("qn", dotInt(col("qv"), col("qv"))))   // norm once per vector
+      val bands = ctx.persist(bandedLsh(emb, planesPerBand, numBands))
+      val sizes = ctx.pin(bands.groupBy(col("band"), col("bucket"))
+        .agg(count(lit(1)).as("occ")))
+      val occRow = sizes.agg(max(col("occ"))).first()
+      val maxOcc = if (occRow.isNullAt(0)) 0L else occRow.getLong(0)
+      // The PQ codebook is the subvectors of the corpus vectors with
+      // vec_id < PqK; a corpus whose ids all start above PqK has no
+      // codebook, and the pre-verify's inner joins would silently drop
+      // every big-bucket candidate — detect that ONCE (a pushed-down
+      // id-range count, metadata-scale) and fall back to the exact path.
+      // MUST stay `lazy`: the probe is priced for the rare dense-core
+      // branch only — it evaluates solely when `maxOcc > occupancyCap`
+      // reaches it below, and hoisting it eagerly would put a corpus scan
+      // on every call's hot path (VERDICT r14 nit).
+      lazy val codebookBuildable =
+        emb.filter(col("vec_id") < PqK).limit(1).count() > 0
+      val cand =
+        if (maxOcc <= occupancyCap || !codebookBuildable) bandPairs(bands).distinct()
+        else {
+          val sized = bands.join(sizes, Seq("band", "bucket"))
+          val small = sized.filter(col("occ") <= occupancyCap)
+          val big = sized.filter(col("occ") > occupancyCap)
+          // summaries only for members of oversized buckets — at scale the
+          // dense core is a small fraction of the corpus
+          val bigMembers = big.select(col("vec_id")).distinct()
+          val summ = pqSummaryOf(emb, emb.join(bigMembers, Seq("vec_id"), "left_semi"))
+          val kept = pqPreVerify(bandPairs(big).distinct(), summ,
+                                 pqCentDotTable(emb), minCos)
+          bandPairs(small).unionByName(kept).distinct()
+        }
+      exactCosVerify(cand, withQ, minCos)
+        .localCheckpoint(true)   // small: the surviving near-dup pairs
+    }
   }
 
   /** [[annTopK]] with the plane count sized by [[numPlanesFor]] — one
@@ -371,26 +357,24 @@ object Similarity {
     * scale candidates come from the query's cell list only (real IVF
     * probes the nprobe nearest cells; nprobe=1 here keeps the oracle
     * one equi-join). Same staging discipline as annTopK. */
-  def ivfTopK(emb: DataFrame, topK: Int, k: Int = 8): DataFrame = {
-    val withCell = emb.select(col("vec_id"), quantize(col("embedding")).as("qv"))
-      .withColumn("qn", dotInt(col("qv"), col("qv")))   // norm once per vector
-      .join(ivfCells(emb, k), "vec_id")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val a = withCell.select(col("cell"), col("vec_id").as("q_id"), col("qv"), col("qn"))
-    val b = withCell.select(col("cell").as("c2"), col("vec_id").as("n_id"),
-                            col("qv").as("nv"), col("qn").as("nn"))
-    val cos = dotInt(col("qv"), col("nv")).cast("double") /
-      (sqrt(col("qn").cast("double")) * sqrt(col("nn").cast("double")))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("n_id"))
-    val out = a.join(b, col("cell") === col("c2") && col("q_id") =!= col("n_id"))
-      .select(col("q_id"), col("n_id"), cos.as("cos"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= topK)
-      .select(col("q_id"), col("n_id"), col("rank"))
-      .localCheckpoint(true)
-    withCell.unpersist(false)
-    out
-  }
+  def ivfTopK(emb: DataFrame, topK: Int, k: Int = 8): DataFrame =
+    GraftContext.scoped(emb.sparkSession) { ctx =>
+      val withCell = ctx.pin(emb.select(col("vec_id"), quantize(col("embedding")).as("qv"))
+        .withColumn("qn", dotInt(col("qv"), col("qv")))   // norm once per vector
+        .join(ivfCells(emb, k), "vec_id"))
+      val a = withCell.select(col("cell"), col("vec_id").as("q_id"), col("qv"), col("qn"))
+      val b = withCell.select(col("cell").as("c2"), col("vec_id").as("n_id"),
+                              col("qv").as("nv"), col("qn").as("nn"))
+      val cos = dotInt(col("qv"), col("nv")).cast("double") /
+        (sqrt(col("qn").cast("double")) * sqrt(col("nn").cast("double")))
+      val w = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("n_id"))
+      a.join(b, col("cell") === col("c2") && col("q_id") =!= col("n_id"))
+        .select(col("q_id"), col("n_id"), cos.as("cos"))
+        .withColumn("rank", row_number().over(w))
+        .filter(col("rank") <= topK)
+        .select(col("q_id"), col("n_id"), col("rank"))
+        .localCheckpoint(true)
+    }
 
   // ---- driver-gate queries ----
 
@@ -693,8 +677,8 @@ object Similarity {
     * the (q_id, n_id) partial-sum aggregation. Real deployments compose
     * this with [[ivfCells]] (IVF-PQ: probe a cell list, ADC-scan within);
     * the gate keeps them separate so each stays an equi-join oracle. */
-  def pqTopK(emb: DataFrame, topK: Int): DataFrame = {
-    val sv = subVectors(emb).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+  def pqTopK(emb: DataFrame, topK: Int): DataFrame = GraftContext.scoped(emb.sparkSession) { ctx =>
+    val sv = ctx.pin(subVectors(emb))
     val codes = pqCodesFrom(sv)
     val lutD2 = col("sn") - lit(2L) * dotInt(col("sv"), col("cv")) + col("cn")
     val lut = sv.filter(col("vec_id") % 50 === 0)
@@ -704,7 +688,7 @@ object Similarity {
               col("cent_id"), lutD2.as("d2"))
     val w = Window.partitionBy(col("q_id")).orderBy(col("adist"), col("n_id"))
     // bounded: the query sample's LUT, PqM × PqK rows per query
-    val out = codes.join(broadcast(lut),
+    codes.join(broadcast(lut),
         col("sub") === col("lsub") && col("code") === col("cent_id") &&
           col("vec_id") =!= col("q_id"))
       .groupBy(col("q_id"), col("vec_id").as("n_id"))
@@ -713,8 +697,6 @@ object Similarity {
       .filter(col("rank") <= topK)
       .select(col("q_id"), col("n_id"), col("rank"), col("adist"))
       .localCheckpoint(true)
-    sv.unpersist(false)
-    out
   }
 
   /** e08: PQ-compressed ADC top-3 for every 50th vector (exact oracle —
@@ -734,31 +716,30 @@ object Similarity {
     * vec_id, both narrow — probed by a BROADCAST of the per-query
     * (cell, LUT) table; the only exchange is the (q_id, n_id)
     * partial-agged ADC sum. */
-  def ivfPqTopK(emb: DataFrame, topK: Int, cellsK: Int = 8): DataFrame = {
-    val sv = subVectors(emb).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val cand = pqCodesFrom(sv).join(ivfCells(emb, cellsK), "vec_id")
-    val lutD2 = col("sn") - lit(2L) * dotInt(col("sv"), col("cv")) + col("cn")
-    val lut = sv.filter(col("vec_id") % 50 === 0)
-      // bounded: the PqK × PqM-row codebook
-      .join(broadcast(centsFrom(sv)), col("sub") === col("csub"))
-      .select(col("vec_id").as("q_id"), col("sub").as("lsub"),
-              col("cent_id"), lutD2.as("d2"))
-      .join(ivfCells(emb, cellsK).filter(col("vec_id") % 50 === 0)
-              .select(col("vec_id").as("q_id"), col("cell").as("qcell")), "q_id")
-    val w = Window.partitionBy(col("q_id")).orderBy(col("adist"), col("n_id"))
-    // bounded: the query sample's LUT, PqM × PqK rows per query
-    val out = cand.join(broadcast(lut),
-        col("sub") === col("lsub") && col("code") === col("cent_id") &&
-          col("cell") === col("qcell") && col("vec_id") =!= col("q_id"))
-      .groupBy(col("q_id"), col("vec_id").as("n_id"))
-      .agg(sum(col("d2")).as("adist"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= topK)
-      .select(col("q_id"), col("n_id"), col("rank"), col("adist"))
-      .localCheckpoint(true)
-    sv.unpersist(false)
-    out
-  }
+  def ivfPqTopK(emb: DataFrame, topK: Int, cellsK: Int = 8): DataFrame =
+    GraftContext.scoped(emb.sparkSession) { ctx =>
+      val sv = ctx.pin(subVectors(emb))
+      val cand = pqCodesFrom(sv).join(ivfCells(emb, cellsK), "vec_id")
+      val lutD2 = col("sn") - lit(2L) * dotInt(col("sv"), col("cv")) + col("cn")
+      val lut = sv.filter(col("vec_id") % 50 === 0)
+        // bounded: the PqK × PqM-row codebook
+        .join(broadcast(centsFrom(sv)), col("sub") === col("csub"))
+        .select(col("vec_id").as("q_id"), col("sub").as("lsub"),
+                col("cent_id"), lutD2.as("d2"))
+        .join(ivfCells(emb, cellsK).filter(col("vec_id") % 50 === 0)
+                .select(col("vec_id").as("q_id"), col("cell").as("qcell")), "q_id")
+      val w = Window.partitionBy(col("q_id")).orderBy(col("adist"), col("n_id"))
+      // bounded: the query sample's LUT, PqM × PqK rows per query
+      cand.join(broadcast(lut),
+          col("sub") === col("lsub") && col("code") === col("cent_id") &&
+            col("cell") === col("qcell") && col("vec_id") =!= col("q_id"))
+        .groupBy(col("q_id"), col("vec_id").as("n_id"))
+        .agg(sum(col("d2")).as("adist"))
+        .withColumn("rank", row_number().over(w))
+        .filter(col("rank") <= topK)
+        .select(col("q_id"), col("n_id"), col("rank"), col("adist"))
+        .localCheckpoint(true)
+    }
 
   /** e09: IVF-PQ nearest same-cell neighbor by ADC (exact oracle). */
   def ivfPqQuery(s: SparkSession, d: String): DataFrame =

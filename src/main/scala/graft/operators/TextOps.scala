@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.core.Tables
+import graft.core.{GraftContext, Tables}
 
 /** Text-analysis operators for a training-data pipeline over the
   * `documents` table: token counting, quality scoring, language profiling,
@@ -190,20 +190,18 @@ object TextOps {
     * + global top-k over ≤ k·|langs| rows. A sketch smaller than k IS
     * the exact distinct set, so the estimate switches to the exact
     * count there — deterministic in both engines. */
-  def kmvUnion(s: SparkSession, d: String): DataFrame = {
+  def kmvUnion(s: SparkSession, d: String): DataFrame = GraftContext.scoped(s) { ctx =>
     import org.apache.spark.sql.expressions.Window
     val k = 64
     val scale = 1152921504606846976.0          // 2^60: h64's hash range
-    val hashes = Tables.documents(s, d)
+    val hashes = ctx.pin(Tables.documents(s, d)
       .select(col("lang"), explode(TextSim.words(col("text"))).as("tok"))
       .select(col("lang"), TextSim.h64(col("tok")).as("h"))
-      .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val perLang = hashes
+      .distinct())
+    val perLang = ctx.pin(hashes
       .withColumn("rn", row_number().over(
         Window.partitionBy(col("lang")).orderBy(col("h"))))
-      .filter(col("rn") <= k)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .filter(col("rn") <= k))
     def estimate(grouped: DataFrame): DataFrame =
       grouped.select(col("lang"), col("n_sk"), col("kth"),
         when(col("n_sk") < k, col("n_sk").cast("double"))
@@ -217,10 +215,7 @@ object TextOps {
     val unionRows = estimate(union
       .agg(count(lit(1)).as("n_sk"), max(col("h")).as("kth"))
       .select(lit("ALL").as("lang"), col("n_sk"), col("kth")))
-    val out = langRows.unionByName(unionRows).localCheckpoint(true)
-    hashes.unpersist(false)
-    perLang.unpersist(false)
-    out
+    langRows.unionByName(unionRows).localCheckpoint(true)
   }
 
   /** t32: UNIGRAM-SURPRISAL quality scoring — the LM-perplexity-style
@@ -239,13 +234,12 @@ object TextOps {
     * handles (pinned generally in PlanAuditSpec) — then a per-doc
     * aggregate of two longs. The corpus total joins as a broadcast
     * 1-row frame (never a driver collect). */
-  def surprisalScore(s: SparkSession, d: String): DataFrame = {
-    val toks = TextSim.spread(Tables.documents(s, d))
-      .select(col("doc_id"), explode(TextSim.words(col("text"))).as("tok"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+  def surprisalScore(s: SparkSession, d: String): DataFrame = GraftContext.scoped(s) { ctx =>
+    val toks = ctx.pin(TextSim.spread(Tables.documents(s, d))
+      .select(col("doc_id"), explode(TextSim.words(col("text"))).as("tok")))
     val freq = toks.groupBy(col("tok")).agg(count(lit(1)).as("cnt"))
     val total = freq.agg(sum(col("cnt")).as("n_total"))
-    val out = toks.join(freq, "tok")
+    toks.join(freq, "tok")
       .crossJoin(total)
       .select(col("doc_id"),
         (length(bin(col("n_total"))) - length(bin(col("cnt")))).as("surprise"))
@@ -256,8 +250,6 @@ object TextOps {
         floor(col("surprise_sum") * 1000 / col("n_tokens")).cast("long")
           .as("mean_permille"))
       .localCheckpoint(true)
-    toks.unpersist(false)
-    out
   }
 
   /** The composed corpus-cleaning pipeline a training-data run actually
@@ -343,11 +335,10 @@ object TextOps {
     * rows keyed on (lang, tok) — the heavy join is an equi-join on
     * that key, text never shuffles, and the 1-row corpus total plus
     * the |langs|-row totals broadcast. */
-  def jsDivergence(s: SparkSession, d: String): DataFrame = {
-    val tk = Tables.documents(s, d)
+  def jsDivergence(s: SparkSession, d: String): DataFrame = GraftContext.scoped(s) { ctx =>
+    val tk = ctx.pin(Tables.documents(s, d)
       .select(col("lang"), explode(TextSim.words(col("text"))).as("tok"))
-      .filter(col("tok") =!= "")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .filter(col("tok") =!= ""))
     val g = tk.groupBy(col("tok")).agg(count(lit(1)).as("gcnt"))
     val gt = g.agg(sum(col("gcnt")).cast("long").as("gtot"))
     val l = tk.groupBy(col("lang"), col("tok")).agg(count(lit(1)).as("lcnt"))
@@ -359,7 +350,7 @@ object TextOps {
         lit(0.5) * p * log(p / m) + lit(0.5) * q * log(q / m))
       .otherwise(lit(0.5) * q * log(q / m))
     // bounded: lt has one row per language
-    val out = g.crossJoin(gt).crossJoin(broadcast(lt))
+    g.crossJoin(gt).crossJoin(broadcast(lt))
       .join(l, Seq("lang", "tok"), "left")
       .select(col("lang"), floor(term * lit(1.0e9)).cast("long").as("nano"))
       .groupBy(col("lang"))
@@ -367,8 +358,6 @@ object TextOps {
       .select(col("lang"), col("n_vocab"), col("jsd_nano"),
               round(col("jsd_nano").cast("double") / lit(1.0e9), 6).as("jsd"))
       .localCheckpoint(true)
-    tk.unpersist(false)
-    out
   }
 
   /** t47: COUNT-MIN SKETCH heavy-hitter estimation — the point-query
@@ -383,7 +372,7 @@ object TextOps {
     * taking the min — the CMS one-sided guarantee est ≥ true holds by
     * construction and is spec-pinned. Deterministic md5 row-salted
     * hashes make the sketch identical on any engine. */
-  def cmsHeavyHitters(s: SparkSession, d: String): DataFrame = {
+  def cmsHeavyHitters(s: SparkSession, d: String): DataFrame = GraftContext.scoped(s) { ctx =>
     val depth = 4
     def h(r: Int, c: Column): Column =
       conv(substring(md5(concat(lit(s"${r}_"), c).cast("binary")), 1, 15), 16, 10)
@@ -392,10 +381,9 @@ object TextOps {
       base.select(col("*"), explode(array((0 until depth).map(r =>
           struct(lit(r.toLong).as("r"), h(r, col("tok")).as("bucket"))): _*)).as("c"))
         .select(base.columns.map(col) :+ col("c.r").as("r") :+ col("c.bucket").as("bucket"): _*)
-    val toks = Tables.documents(s, d)
+    val toks = ctx.pin(Tables.documents(s, d)
       .select(explode(TextSim.words(col("text"))).as("tok"))
-      .filter(col("tok") =!= "")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .filter(col("tok") =!= ""))
     val counters = cellsOf(toks.select(col("tok"))).drop("tok")
       .groupBy(col("r"), col("bucket")).agg(count(lit(1)).as("cnt"))
     val wTop = org.apache.spark.sql.expressions.Window
@@ -404,14 +392,12 @@ object TextOps {
       .withColumn("rank", row_number().over(wTop))
       .filter(col("rank") <= 20)
       .select(col("tok"), col("n"))
-    val out = cellsOf(probes)
+    cellsOf(probes)
       // bounded: the depth × 256 counter table (1,024 rows)
       .join(broadcast(counters), Seq("r", "bucket"))
       .groupBy(col("tok"), col("n"))
       .agg(min(col("cnt")).as("cms_est"))
       .localCheckpoint(true)
-    toks.unpersist(false)
-    out
   }
 
   /** Global vocabulary top-k: explode normalized tokens, count, keep the
@@ -482,17 +468,14 @@ object TextOps {
     * pattern `|l||r|` unable to match across symbol boundaries. Tokens
     * are [a-z]-only so the separator never collides with content.
     * Output: the merge table (round, left, right, pair count). */
-  def bpeTrain(s: SparkSession, d: String): DataFrame = {
+  def bpeTrain(s: SparkSession, d: String): DataFrame = GraftContext.scoped(s) { ctx =>
     import s.implicits._
     val rounds = BpeTrainRounds
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    var vocab = Tables.documents(s, d)
+    var vocab = ctx.persist(Tables.documents(s, d)
       .select(explode(expr("regexp_extract_all(lower(text), '[a-z]+', 0)")).as("tok"))
       .filter(length(col("tok")) >= 2)
       .groupBy(col("tok")).agg(count(lit(1)).as("n"))
-      .select(regexp_replace(col("tok"), "(.)", "|$1|").as("seq"), col("n"))
-      .persist(lvl)
-    vocab.count()
+      .select(regexp_replace(col("tok"), "(.)", "|$1|").as("seq"), col("n")))
     val merges = scala.collection.mutable.ArrayBuffer[(Long, String, String, Long)]()
     for (r <- 1 to rounds) {
       val topRow = vocab
@@ -511,15 +494,12 @@ object TextOps {
         merges += ((r.toLong, l, rt, c))
         // symbols are [a-z]+ by construction, so the interpolation is a
         // fixed literal pattern, never an injection surface
-        val next = vocab
-          .select(expr(s"replace(seq, '|$l||$rt|', '|$l$rt|')").as("seq"), col("n"))
-          .persist(lvl)
-        next.count()
-        vocab.unpersist(false)
+        val next = ctx.persist(vocab
+          .select(expr(s"replace(seq, '|$l||$rt|', '|$l$rt|')").as("seq"), col("n")))
+        ctx.release(vocab)
         vocab = next
       }
     }
-    vocab.unpersist(false)
     s.createDataset(merges.toSeq)
       .toDF("round", "left_sym", "right_sym", "pair_n")
       .orderBy(col("round"))
@@ -1176,15 +1156,14 @@ object TextOps {
     * term) tf table; df is a second vocab-sized agg over tf; the 5-term
     * query broadcasts back onto tf (map-side), and top-20 is a
     * TakeOrdered — no sort of the corpus, no joins on raw text. */
-  def bm25TopDocs(s: SparkSession, d: String): DataFrame = {
+  def bm25TopDocs(s: SparkSession, d: String): DataFrame = GraftContext.scoped(s) { ctx =>
     val ws = TextSim.spread(Tables.documents(s, d))
       .select(col("doc_id"), TextSim.words(col("text")).as("ws"))
       .filter(size(col("ws")) >= 1)
     val toks = ws.select(col("doc_id"), size(col("ws")).cast("long").as("dl"),
                          explode(col("ws")).as("tok"))
-    val tf = toks.groupBy(col("doc_id"), col("tok"))
-      .agg(count(lit(1)).as("tf"), max(col("dl")).as("dl"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val tf = ctx.pin(toks.groupBy(col("doc_id"), col("tok"))
+      .agg(count(lit(1)).as("tf"), max(col("dl")).as("dl")))
     val nt = ws.agg(count(lit(1)).as("nn"),
                     sum(size(col("ws")).cast("long")).as("tt"))
     val qterms = tf.groupBy(col("tok")).agg(count(lit(1)).as("df"))
@@ -1192,7 +1171,7 @@ object TextOps {
       .filter(col("df") * 2 < col("nn"))
       .orderBy(col("df").desc, col("tok")).limit(5)
     // bounded: limit(5)
-    val out = tf.join(broadcast(qterms), "tok")
+    tf.join(broadcast(qterms), "tok")
       .withColumn("idf_bits",
         (length(bin(col("nn"))) - length(bin(col("df")))).cast("long"))
       .withColumn("part", col("idf_bits") *
@@ -1200,9 +1179,7 @@ object TextOps {
       .groupBy(col("doc_id"))
       .agg(sum(col("part")).as("bm25_sc"), count(lit(1)).as("n_qterms"))
       .orderBy(col("bm25_sc").desc, col("doc_id")).limit(20)
-      .localCheckpoint(true)   // 20 rows; detach before releasing tf
-    tf.unpersist(false)
-    out
+      .localCheckpoint(true)   // 20 rows
   }
 
   /** t49: COLLOCATION MINING — the phrase-detection pass (word2vec-
@@ -1403,14 +1380,13 @@ object TextOps {
     * and doc weights are pure int64 sums of cnt·s. The int64 products
     * inside the ratio stay below 2^53 at gate scale; a full-corpus run
     * would subtract logs instead. */
-  def dsirResample(s: SparkSession, d: String): DataFrame = {
+  def dsirResample(s: SparkSession, d: String): DataFrame = GraftContext.scoped(s) { ctx =>
     val B = 128L
-    val tok = TextSim.spread(Tables.documents(s, d))
+    val tok = ctx.pin(TextSim.spread(Tables.documents(s, d))
       .select(col("doc_id"), explode(TextSim.words(col("text"))).as("tok"))
       .filter(col("tok") =!= "")
       .select(col("doc_id"),
-        (conv(substring(md5(col("tok")), 1, 15), 16, 10).cast("long") % B).as("b"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        (conv(substring(md5(col("tok")), 1, 15), 16, 10).cast("long") % B).as("b")))
     val isTgt = col("doc_id") % 5 === 0
     val totals = tok.agg(count(lit(1)).as("tr"),
                          count(when(isTgt, 1)).as("tt"))
@@ -1427,13 +1403,11 @@ object TextOps {
       .groupBy(col("doc_id"))
       .agg(sum(col("cnt")).cast("long").as("n_tokens"),
            sum(col("cnt") * col("s")).cast("long").as("weight"))
-    val out = weights.orderBy(col("weight").desc, col("doc_id")).limit(20)
+    weights.orderBy(col("weight").desc, col("doc_id")).limit(20)
       .withColumn("rank", row_number().over(
         Window.orderBy(col("weight").desc, col("doc_id"))).cast("long"))
       .select(col("rank"), col("doc_id"), col("n_tokens"), col("weight"))
       .localCheckpoint(true)
-    tok.unpersist(false)
-    out
   }
 
   /** t56: ZIPF RANK-FREQUENCY SLOPE — the log-log OLS fit of token

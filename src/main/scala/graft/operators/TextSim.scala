@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.Tables
+import graft.core.{GraftContext, Tables}
 
 /** Fuzzy / near-duplicate deduplication for a training-data pipeline:
   * MinHash signatures, banded LSH bucketing, SimHash fingerprints and
@@ -160,53 +160,45 @@ object TextSim {
     * expression into every read (256 array-min lambdas of generated
     * code — measured >3× the staged cost; the same duplication
     * nearDupPairs avoids by pinning). The small bucket aggregate is
-    * checkpointed eagerly so the signature cache can be released before
-    * returning — no per-call pins survive for the JVM lifetime (the
-    * round-3 shape checkpointed the signatures and never released
-    * them). Cost: the aggregation job runs at construction time. */
-  def lshBuckets(docs: DataFrame): DataFrame = {
-    val sig = minhashSignatures(docs)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val out = sig
+    * checkpointed eagerly, inside the pin scope (the round-3 shape
+    * checkpointed the signatures and never released them). Cost: the
+    * aggregation job runs at construction time. */
+  def lshBuckets(docs: DataFrame): DataFrame = GraftContext.scoped(docs.sparkSession) { ctx =>
+    val sig = ctx.pin(minhashSignatures(docs))
+    sig
       .select(col("doc_id"), explode(bandKeys(col("sig"))).as("bk"))
       .groupBy(col("bk.band").as("band"), col("bk.bucket").as("bucket"))
       .agg(count(lit(1)).as("n_docs"), min(col("doc_id")).as("min_doc"))
       .filter(col("n_docs") >= 2)
       .localCheckpoint(true)   // small: one row per colliding bucket
-    sig.unpersist(false)
-    out
   }
 
   /** Candidate pairs (a < b) sharing >= 1 LSH band, verified with exact
     * 3-gram-set Jaccard counts. The join key is the band bucket — the
     * candidate set is the union of small per-bucket products, never an
     * all-pairs cross join. */
-  def nearDupPairs(docs: DataFrame): DataFrame = {
+  def nearDupPairs(docs: DataFrame): DataFrame = GraftContext.scoped(docs.sparkSession) { ctx =>
     // The hash/signature pipeline feeds FOUR plan branches (two candidate
     // sides + two shingle-set joins); without pinning, Spark recomputes
-    // the md5 pass per branch (measured 4× the cost). Persist once, let
-    // the joins read the cache, checkpoint the (small) pair list, release.
-    val base = docs.select(col("doc_id"), words(col("text")).as("ws"))
+    // the md5 pass per branch (measured 4× the cost).
+    val base = ctx.pin(docs.select(col("doc_id"), words(col("text")).as("ws"))
       .filter(size(col("ws")) >= 3)
       .select(col("doc_id"), shingles3(col("ws")).as("shs"))
       .select(col("doc_id"), transform(col("shs"), s => h64(s) % P).as("hs"),
-              array_distinct(col("shs")).as("shset"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // bands is also pinned: it feeds both self-join sides, and its
-    // signature expression is heavy to regenerate (16 hash-min lambdas —
-    // recomputation would also recompile the codegen stage twice).
+              array_distinct(col("shs")).as("shset")))
+    // bands is also pinned, and filled eagerly: it feeds both self-join
+    // sides, and its signature expression is heavy to regenerate (16
+    // hash-min lambdas — recomputation would also recompile the codegen
+    // stage twice). Left lazy, the four cache-reading branches race cache
+    // population inside one job and AQE plans the self-join with unknown
+    // stats (observed bimodal 2s-vs-30s runs); one pass fills base and
+    // bands, and the joins then plan against real cached sizes.
     // sig gets its own projection first: bandKeys reads the signature 16
     // times, and passing the signature EXPRESSION would inline all 16
     // hash-mins per read (256 array-min lambdas of generated code).
-    val bands = base.select(col("doc_id"), signature(col("hs")).as("sig"))
+    val bands = ctx.persist(base.select(col("doc_id"), signature(col("hs")).as("sig"))
       .select(col("doc_id"), explode(bandKeys(col("sig"))).as("bk"))
-      .select(col("doc_id"), col("bk.band").as("band"), col("bk.bucket").as("bucket"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // Materialize eagerly: left lazy, the four cache-reading branches race
-    // cache population inside one job and AQE plans the self-join with
-    // unknown stats (observed bimodal 2s-vs-30s runs). One count fills
-    // base+bands; the joins then plan against real cached sizes.
-    bands.count()
+      .select(col("doc_id"), col("bk.band").as("band"), col("bk.bucket").as("bucket")))
     // Shuffle discipline (the part that survives 100 TB):
     //  1. only (band-key, doc_id) flows through the candidate self-join —
     //     never the text or shingle arrays;
@@ -224,16 +216,13 @@ object TextSim {
       .select(col("doc_a"), col("doc_b"))
       .distinct()
     val shsets = base.select(col("doc_id"), col("shset"))
-    val out = cand
+    cand
       .join(shsets.select(col("doc_id").as("doc_a"), col("shset").as("sa")), "doc_a")
       .join(shsets.select(col("doc_id").as("doc_b"), col("shset").as("sb")), "doc_b")
       .select(col("doc_a"), col("doc_b"),
         size(array_intersect(col("sa"), col("sb"))).as("inter"),
         size(array_union(col("sa"), col("sb"))).as("uni"))
-      .localCheckpoint(true)   // materialize the pair list (small vs corpus)
-    base.unpersist(false)
-    bands.unpersist(false)
-    out
+      .localCheckpoint(true)   // the pair list: small vs corpus
   }
 
   /** 16-bit SimHash over word tokens: bit j set iff the sum of ±1 votes
@@ -318,34 +307,33 @@ object TextSim {
     * `src`, `dst`; one row per direction not required — symmetrized
     * here). Returns (id, label) with label = the component's min id.
     * See [[dedupClusters]] for the algorithm and scale notes. */
-  def connectedComponents(pairs: DataFrame): DataFrame = {
-    val edges = pairs.select(col(pairs.columns(0)).as("src"), col(pairs.columns(1)).as("dst"))
-    val sym = edges.union(edges.select(col("dst"), col("src")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    var labels = sym.select(col("src").as("id")).distinct()
-      .withColumn("label", col("id"))
-      .localCheckpoint(true)
-    var changed = 1L
-    var rounds = 0
-    while (changed > 0 && rounds < 40) {
-      val nbrMin = sym.join(labels, sym("src") === labels("id"))
-        .groupBy(sym("dst").as("nid")).agg(min(labels("label")).as("nmin"))
-      val stepped = labels.join(nbrMin, labels("id") === nbrMin("nid"), "left")
-        .select(labels("id").as("id"),
-                least(labels("label"), coalesce(col("nmin"), labels("label"))).as("label"))
-      // pointer jump: every label is itself a node id, so one self-join
-      // rewrites label -> label(label), compressing chains geometrically
-      val jumped = stepped.as("a").join(stepped.as("b"), col("a.label") === col("b.id"))
-        .select(col("a.id").as("id"), col("b.label").as("label"))
-        .localCheckpoint(true)   // truncate per-round lineage; labels stay tiny
-      changed = jumped.except(labels).count()
-      labels = jumped
-      rounds += 1
+  def connectedComponents(pairs: DataFrame): DataFrame =
+    GraftContext.scoped(pairs.sparkSession) { ctx =>
+      val edges = pairs.select(col(pairs.columns(0)).as("src"), col(pairs.columns(1)).as("dst"))
+      val sym = ctx.pin(edges.union(edges.select(col("dst"), col("src"))))
+      var labels = sym.select(col("src").as("id")).distinct()
+        .withColumn("label", col("id"))
+        .localCheckpoint(true)
+      var changed = 1L
+      var rounds = 0
+      while (changed > 0 && rounds < 40) {
+        val nbrMin = sym.join(labels, sym("src") === labels("id"))
+          .groupBy(sym("dst").as("nid")).agg(min(labels("label")).as("nmin"))
+        val stepped = labels.join(nbrMin, labels("id") === nbrMin("nid"), "left")
+          .select(labels("id").as("id"),
+                  least(labels("label"), coalesce(col("nmin"), labels("label"))).as("label"))
+        // pointer jump: every label is itself a node id, so one self-join
+        // rewrites label -> label(label), compressing chains geometrically
+        val jumped = stepped.as("a").join(stepped.as("b"), col("a.label") === col("b.id"))
+          .select(col("a.id").as("id"), col("b.label").as("label"))
+          .localCheckpoint(true)   // truncate per-round lineage; labels stay tiny
+        changed = jumped.except(labels).count()
+        labels = jumped
+        rounds += 1
+      }
+      require(changed == 0, s"connected components did not converge in $rounds rounds")
+      labels
     }
-    require(changed == 0, s"connected components did not converge in $rounds rounds")
-    sym.unpersist(false)
-    labels
-  }
 
   def dedupClusters(docs: DataFrame): DataFrame = {
     val pairs = nearDupPairs(docs)
@@ -449,12 +437,11 @@ object TextSim {
     * Unlike LSH there are no hash-family false negatives — this is the
     * pipeline you run when the dedup must be exact, at the price of the
     * df-ranking shuffle. */
-  def prefixJoinPairs(docs: DataFrame): DataFrame = {
+  def prefixJoinPairs(docs: DataFrame): DataFrame = GraftContext.scoped(docs.sparkSession) { ctx =>
     import org.apache.spark.sql.expressions.Window
-    val base = docs.select(col("doc_id"), words(col("text")).as("ws"))
+    val base = ctx.pin(docs.select(col("doc_id"), words(col("text")).as("ws"))
       .filter(size(col("ws")) >= 3)
-      .select(col("doc_id"), array_distinct(shingles3(col("ws"))).as("shset"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .select(col("doc_id"), array_distinct(shingles3(col("ws"))).as("shset")))
     val toks = base.select(col("doc_id"), size(col("shset")).as("n"),
                            explode(col("shset")).as("sh"))
     val dfreq = toks.groupBy(col("sh")).agg(count(lit(1)).as("dfreq"))
@@ -472,7 +459,7 @@ object TextSim {
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
       .distinct()
     val shsets = base.select(col("doc_id"), col("shset"))
-    val out = cand
+    cand
       .join(shsets.select(col("doc_id").as("doc_a"), col("shset").as("sa")), "doc_a")
       .join(shsets.select(col("doc_id").as("doc_b"), col("shset").as("sb")), "doc_b")
       .select(col("doc_a"), col("doc_b"),
@@ -480,8 +467,6 @@ object TextSim {
         size(array_union(col("sa"), col("sb"))).as("uni"))
       .filter(col("inter") * 10 >= col("uni") * 8)
       .localCheckpoint(true)   // verified pair list: tiny vs corpus
-    base.unpersist(false)
-    out
   }
 
   def prefixJoinQuery(s: SparkSession, d: String): DataFrame =
@@ -503,14 +488,11 @@ object TextSim {
     * exchange; the 128-byte prefixes join back per side on doc_id, so
     * each doc ships ≤128 chars once per side — cheaper than t09's
     * shingle-set join-back. */
-  def editDistPairs(docs: DataFrame): DataFrame = {
-    val sig = minhashSignatures(docs)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val bands = sig
+  def editDistPairs(docs: DataFrame): DataFrame = GraftContext.scoped(docs.sparkSession) { ctx =>
+    val sig = ctx.pin(minhashSignatures(docs))
+    val bands = ctx.persist(sig
       .select(col("doc_id"), explode(bandKeys(col("sig"))).as("bk"))
-      .select(col("doc_id"), col("bk.band").as("band"), col("bk.bucket").as("bucket"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    bands.count()   // materialize before the self-join (the t09 AQE-stats discipline)
+      .select(col("doc_id"), col("bk.band").as("band"), col("bk.bucket").as("bucket")))
     val cand = bands.select(col("band"), col("bucket"), col("doc_id").as("doc_a"))
       .join(bands.select(col("band").as("band2"), col("bucket").as("bucket2"),
                          col("doc_id").as("doc_b")),
@@ -520,7 +502,7 @@ object TextSim {
       .distinct()
     val pref = docs.select(col("doc_id"),
       substring(TextOps.normalize(col("text")), 1, 128).as("p"))
-    val out = cand
+    cand
       .join(pref.select(col("doc_id").as("doc_a"), col("p").as("pa")), "doc_a")
       .join(pref.select(col("doc_id").as("doc_b"), col("p").as("pb")), "doc_b")
       .select(col("doc_a"), col("doc_b"),
@@ -531,9 +513,6 @@ object TextSim {
       .select(col("doc_a"), col("doc_b"), col("lev"),
         when(col("lev") * 5 <= col("mx"), 1L).otherwise(0L).as("keep"))
       .localCheckpoint(true)   // pair list: tiny vs corpus
-    sig.unpersist(false)
-    bands.unpersist(false)
-    out
   }
 
   def editDistQuery(s: SparkSession, d: String): DataFrame =
@@ -556,7 +535,7 @@ object TextSim {
     * is exactly what makes symmetric Jaccard blind to quotes). Exact
     * verification via array_intersect on surviving pairs; output is only
     * the verified pairs with their integer permille containment. */
-  def containmentPairs(docs: DataFrame): DataFrame = {
+  def containmentPairs(docs: DataFrame): DataFrame = GraftContext.scoped(docs.sparkSession) { ctx =>
     import org.apache.spark.sql.expressions.Window
     val corpus = docs.select(col("doc_id"), words(col("text")).as("ws"))
       .filter(size(col("ws")) >= 3)
@@ -564,9 +543,8 @@ object TextSim {
       .filter(col("doc_id") % 17 === 0 && size(col("ws")) >= 10)
       .select((col("doc_id") + 1000000L).as("doc_id"),
               slice(col("ws"), 1, 8).as("ws"))
-    val base = corpus.unionByName(quotes)
-      .select(col("doc_id"), array_distinct(shingles3(col("ws"))).as("shset"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val base = ctx.pin(corpus.unionByName(quotes)
+      .select(col("doc_id"), array_distinct(shingles3(col("ws"))).as("shset")))
     val toks = base.select(col("doc_id"), size(col("shset")).as("n"),
                            explode(col("shset")).as("sh"))
     val dfreq = toks.groupBy(col("sh")).agg(count(lit(1)).as("dfreq"))
@@ -580,7 +558,7 @@ object TextSim {
       .filter(col("doc_a") =!= col("doc_b"))
       .select(col("doc_a"), col("doc_b"))
       .distinct()
-    val out = cand
+    cand
       .join(base.select(col("doc_id").as("doc_a"), col("shset").as("sa")), "doc_a")
       .join(base.select(col("doc_id").as("doc_b"), col("shset").as("sb")), "doc_b")
       .select(col("doc_a"), col("doc_b"),
@@ -590,8 +568,6 @@ object TextSim {
       .select(col("doc_a"), col("doc_b"),
         expr("inter * 1000 div na").as("containment_pm"))
       .localCheckpoint(true)   // verified containments: tiny vs corpus
-    base.unpersist(false)
-    out
   }
 
   def containmentQuery(s: SparkSession, d: String): DataFrame =

@@ -3,6 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.Tables
+import graft.core.GraftSession.withConf
 
 /** File-format parity — SURVEY.md §2.B1.9: the reference ships protocol
   * handlers for external formats (h5py/netcdf/arrow) though its repo
@@ -267,11 +268,9 @@ object FileFormats {
     base.write.mode("overwrite").partitionBy("event_type").parquet(tmp)
     val fixed = base.filter(col("event_type") === "click")
       .withColumn("cents", col("cents") * 2)
-    val key = "spark.sql.sources.partitionOverwriteMode"
-    val prev = s.conf.getOption(key)
-    s.conf.set(key, "dynamic")
-    try fixed.write.mode("overwrite").partitionBy("event_type").parquet(tmp)
-    finally prev.fold(s.conf.unset(key))(s.conf.set(key, _))
+    withConf(s, "spark.sql.sources.partitionOverwriteMode" -> "dynamic") {
+      fixed.write.mode("overwrite").partitionBy("event_type").parquet(tmp)
+    }
     s.read.parquet(tmp)
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n"), sum(col("cents")).as("sum_cents"),

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode,
   StatefulProcessor, TTLConfig, TimeMode, TimerValues, Trigger, ValueState}
+import graft.core.GraftSession.withConf
 
 /** Structured Streaming surface — SURVEY.md §2.B6 stretch capability
   * (the reference has no streaming subsystem; its closest constructs are
@@ -29,12 +30,8 @@ object Streams {
     * session default); the fixture drives pin it to 8 for the drive only,
     * restoring the session conf after. Plan shape is unchanged.
     */
-  private def withStatePartitions[T](s: SparkSession, n: Int)(body: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = s.conf.get(key)
-    s.conf.set(key, n.toString)
-    try body finally s.conf.set(key, prev)
-  }
+  private def withStatePartitions[T](s: SparkSession, n: Int)(body: => T): T =
+    withConf(s, "spark.sql.shuffle.partitions" -> n.toString)(body)
 
   /** Skips the trailing no-data micro-batch for a drive whose DECLARED
     * ROW SET cannot depend on it. A no-data batch exists to let the
@@ -52,12 +49,8 @@ object Streams {
     * measured SLOWER with the flag off. On an unbounded production
     * stream this knob is irrelevant — there is always a next data batch;
     * it only exists for finite AvailableNow drains. */
-  private def withoutNoDataBatch[T](s: SparkSession)(body: => T): T = {
-    val key = "spark.sql.streaming.noDataMicroBatches.enabled"
-    val prev = s.conf.get(key)
-    s.conf.set(key, "false")
-    try body finally s.conf.set(key, prev)
-  }
+  private def withoutNoDataBatch[T](s: SparkSession)(body: => T): T =
+    withConf(s, "spark.sql.streaming.noDataMicroBatches.enabled" -> "false")(body)
 
   /** Fixture-drive wrapper for the input-driven-emission entries: reduced
     * state partitions + no trailing no-data batch. */
@@ -709,11 +702,8 @@ object Streams {
     * restored after so the other streaming entries keep the session
     * default store. */
   def streamedTransformState(s: SparkSession, d: String): DataFrame = withStatePartitions(s, 4) {
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = s.conf.getOption(provKey)
-    s.conf.set(provKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withConf(s, "spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
       import java.nio.file.{Files, Paths, StandardCopyOption}
       val ev = s.read.parquet(s"$d/events.parquet")
         .select(col("event_id"), col("user_id"),
@@ -747,9 +737,6 @@ object Streams {
         .agg(max(struct(col("n"), col("sumCents"), col("maxCents"))).as("m"))
         .select(col("user_id"), col("m.n").as("n_events"),
                 col("m.sumCents").as("sum_cents"), col("m.maxCents").as("max_cents"))
-    } finally prev match {
-      case Some(v) => s.conf.set(provKey, v)
-      case None    => s.conf.unset(provKey)
     }
   }
 

@@ -3,8 +3,10 @@ package graft.tools
 import java.nio.file.{Files, Paths}
 import graft.core.EntryMetrics
 
-/** Writes the final plan each entry's noop write ran (AQE's, query stages
-  * included), captured by [[EntryMetrics]] after the entry ran. With no
+/** Writes the final plan (AQE's, query stages included) of every SQL
+  * execution an entry ran, in the order they ended: its own eager jobs
+  * (checkpoints, materialized pins, collects), then its noop write —
+  * captured by [[EntryMetrics]] after the entry ran. With no
   * args: PLANS.md, the plans of representative gate entries, as evidence
   * for the plan-shape properties PlanAuditSpec asserts. With
   * `<outDir> <entry> [entry...]`: `<outDir>/<entry>.txt` per entry, its
@@ -25,7 +27,7 @@ object PlanDump {
     "t05_dedup_exact" ->
       "Exact dedup shuffles only (md5 digest, doc_id) — the text column is pruned before the exchange.",
     "e04_embed_neardup" ->
-      "Embedding near-dup: the LSH band/bucket equi-join runs inside the entry, which checkpoints the surviving near-dup pairs — so the write's executed plan is only a scan of that checkpoint (Scan ExistingRDD); PlanAuditSpec's sweep keeps cartesian products out of it.",
+      "Embedding near-dup, five executions: the id count that sizes the band width; the one pass that fills the pinned (vec_id, band, bucket) frame; the bucket-occupancy maximum over that cache; the checkpointed pairs — a (band, bucket) equi-join of the cached bands (never a cartesian product; at gate scale the build side broadcasts), distinct before the exact-cosine join-back on vec_id; and the write, a scan of that checkpoint (Scan ExistingRDD).",
     "q25_salted_agg" ->
       "Skew-salted aggregation: two-stage agg over the salted key, then the de-salted final — partial combine happens before both exchanges.",
     "q33_json_extract" ->
@@ -79,7 +81,7 @@ object PlanDump {
     "q66_interval_coverage" ->
       "Interval coverage: the ±1 boundary union feeds ONE hashpartitioning(user_id) exchange that serves the running-count window, the lead() window AND the final per-user roll-up (subset rule) — a single shuffle of 2·|events| skinny rows, no joins anywhere.",
     "t48_bm25" ->
-      "Integer BM25: the entry checkpoints its scored top-20, so the write's executed plan is a scan of that checkpoint (Scan ExistingRDD). Inside the entry, tokens shuffle once into the (doc, term) tf aggregate (partial_count map-side); the derived 5-term query comes back as a BroadcastHashJoin build side over tf; the top-20 is TakeOrderedAndProject — no sort of the corpus, the raw text never joins.",
+      "Integer BM25, two executions: the checkpoint of the scored top-20, where tokens shuffle once into the (doc, term) tf aggregate (partial_count map-side), the derived 5-term query comes back as a BroadcastHashJoin build side over tf, and the top-20 is TakeOrderedAndProject — no sort of the corpus, the raw text never joins; then the write, a scan of that checkpoint (Scan ExistingRDD).",
     "e13_knn_classify" ->
       "kNN classifier: the probe set broadcasts against the streamed corpus (the documented bruteKnn BNLJ baseline); votes aggregate partial-first on (q_id, label), and the winner filter rewrites to TopKPerKey — bounded heaps, no per-query sort.",
     "q69_drawdown" ->
@@ -151,32 +153,34 @@ object PlanDump {
     "q83_expectations" ->
       "Expectations audit: range/null/FK rules are conditional sums riding ONE scan + ONE left join (the FK check shares the join instead of a second anti-join pass); the 1-row result unpivots via stack - audit cost = one pass however many rules.",
   )
-  // i03/i04/i05 return eagerly localCheckpoint'ed frames (their plans
-  // collapse to an RDD scan here); their join/agg shapes are asserted by
-  // their own specs and documented in SURVEY §8 instead.
+  // i03/i04/i05 are not picked: their join/agg shapes are asserted by
+  // their own specs and documented in SURVEY §8.
 
   def main(args: Array[String]): Unit = {
     val spark = graft.core.GraftSession.local()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     val metrics = EntryMetrics.attach(spark)
-    // the entry's own executions (eager checkpoints) end before its
-    // write does, so the write's plan is the last one captured
     def run(name: String): String = {
       val (_, plans) = metrics.capture(metrics.timed(name)(
         graft.SparkEntry.queries(name)(spark, sfDir).write.format("noop").mode("overwrite").save()))
-      EntryMetrics.finalPlan(plans.last).toString
+      val shown = plans.map(p => EntryMetrics.finalPlan(p).toString.stripTrailing)
+      if (shown.size == 1) shown.head
+      else shown.zipWithIndex.map { case (p, i) =>
+        s"-- execution ${i + 1} of ${shown.size}${if (i == shown.size - 1) " (the write)" else ""} --\n$p"
+      }.mkString("\n")
     }
     if (args.isEmpty) {
       val sb = new StringBuilder
       sb.append("# PLANS — executed physical plans of representative gate entries\n\n")
       sb.append(s"Generated by `graft.tools.PlanDump` against `$sfDir`. These are the\n")
       sb.append("plan-shape properties PlanAuditSpec locks in as regression gates;\n")
-      sb.append("this file makes them reviewable without running anything. Each plan is the\n")
-      sb.append("final one the entry's noop write ran, captured after it ran: `QueryStage`\n")
-      sb.append("and `AQEShuffleRead` nodes show AQE's runtime rewrites.\n")
+      sb.append("this file makes them reviewable without running anything. Each entry shows\n")
+      sb.append("the final plan of every SQL execution it ran, in order, its noop write last,\n")
+      sb.append("captured after it ran: `QueryStage` and `AQEShuffleRead` nodes show AQE's\n")
+      sb.append("runtime rewrites.\n")
       for ((name, why) <- picks) {
         sb.append(s"\n## $name\n\n$why\n\n```\n")
-        sb.append(run(name).linesIterator.take(60).mkString("\n"))
+        sb.append(run(name))
         sb.append("\n```\n")
       }
       Files.writeString(Paths.get("PLANS.md"), sb.toString)
@@ -192,7 +196,7 @@ object PlanDump {
         }
         val total = rows.map(_.b).foldLeft(EntryMetrics.Breakdown())(_ + _)
         Files.writeString(outDir.resolve(s"$n.txt"),
-          (s"== $n: executed plan (final, post-AQE) ==" +: plan +: "== stage profile ==" +: profile :+
+          (s"== $n: executed plans (final, post-AQE) ==" +: plan +: "== stage profile ==" +: profile :+
             f"  TOTAL shuffleRead=${total.shuffleReadBytes / 1e6}%.2f MB shuffleWrite=${total.shuffleWriteBytes / 1e6}%.2f MB over ${rows.length} stages")
             .mkString("", "\n", "\n"))
       }

@@ -3,7 +3,7 @@ package graft.tools
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths}
-import graft.core.EntryMetrics
+import graft.core.{EntryMetrics, GraftContext}
 import graft.core.EntryMetrics.jstr
 
 /** Scaling-exponent probe: measures how the heaviest pipeline entries'
@@ -205,24 +205,20 @@ object ScaleProbe {
       else {
         import graft.operators.Similarity
         val tau = 0.5; val cap = 96L
-        val stats = scales.map { k =>
+        val stats = scales.map(k => GraftContext.scoped(spark) { ctx =>
           val nCore = 150 * k; val nBg = 50 * k
-          val emb = DenseCore.corpus(spark, nCore, nBg, kTemplates = 8, seed = 42L)
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          emb.count()
+          val emb = ctx.persist(DenseCore.corpus(spark, nCore, nBg, kTemplates = 8, seed = 42L))
           val ppb = Similarity.planesPerBandFor(nCore.toLong + nBg)
-          val bl = Similarity.bandedLsh(emb, ppb, 4)
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          val bl = ctx.pin(Similarity.bandedLsh(emb, ppb, 4))
           val hottest = bl.groupBy("band", "bucket").count()
             .agg(max("count")).first().getLong(0)
-          val candCore = bl.select(col("band"), col("bucket"), col("vec_id").as("vec_a"))
+          val candCore = ctx.pin(bl.select(col("band"), col("bucket"), col("vec_id").as("vec_a"))
             .join(bl.select(col("band").as("b2"), col("bucket").as("k2"),
                             col("vec_id").as("vec_b")),
                   col("band") === col("b2") && col("bucket") === col("k2") &&
                     col("vec_a") < col("vec_b"))
             .select(col("vec_a"), col("vec_b")).distinct()
-            .filter(col("vec_a") < nCore && col("vec_b") < nCore)
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+            .filter(col("vec_a") < nCore && col("vec_b") < nCore))
           val nCand = candCore.count()
           val summ = Similarity.pqSummaryOf(emb, emb.filter(col("vec_id") < nCore))
           val nKept = Similarity.pqPreVerify(candCore, summ,
@@ -233,11 +229,10 @@ object ScaleProbe {
             Similarity.embedNearDups(emb, tau, ppb, 4).count())
           require(outCap == outUncap,
             s"dense-core x$k: capped output $outCap != uncapped $outUncap")
-          emb.unpersist(false); bl.unpersist(false); candCore.unpersist(false)
           System.err.println(f"[scale] dense_core x$k: cand=$nCand kept=$nKept " +
             f"out=$outCap capped=$secCap%.2f s uncapped=$secUncap%.2f s hottest=$hottest")
           (k, nCore, nBg, ppb, hottest, nCand, nKept, outCap, secCap, secUncap)
-        }
+        })
         metrics.drain()
         val dbd = metrics.breakdowns
         val parts = stats.map { case (k, nCore, nBg, ppb, hottest, nCand, nKept, out, sc, su) =>

@@ -31,6 +31,14 @@ class VerifySpec extends SparkSpec {
     assert(!Files.exists(Paths.get(s"$out/x98_ok._error")))
   }
 
+  test("oracle_sql.json escapes a quote, backslash, tab, newline and \\u0001 so Jackson reads them back") {
+    val sql = "SELECT \"a\\b\"\tFROM t\nWHERE x = '\u0001'"
+    val json = Verify.oracleJson(Map("x97_escape" -> sql))
+    val back = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readValue(json, classOf[java.util.Map[String, String]])
+    assert(back.get("x97_escape") == sql, s"round trip changed the string: $json")
+  }
+
   test("no two modules register the same entry name; every oracle key has a query") {
     // SparkEntry.queries is a ++ of per-module Maps: a name collision
     // would silently DROP the earlier module's entry from the gate —

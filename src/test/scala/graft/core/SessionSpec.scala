@@ -112,6 +112,18 @@ class SessionSpec extends SparkSpec {
     ctx.stop()
   }
 
+  test("job audit: ctx.persist of a one-groupBy frame runs 3 jobs") {
+    // map stage, the cache fill AQE plans as a stage of its own, and the
+    // materializing pass — the baseline a 2-job materialization must beat
+    GraftContext.scoped(spark) { ctx =>
+      val (df, jobs) = countJobs(ctx.persist(spark.range(0, 5000, 1, 4)
+        .groupBy((col("id") % 7).as("k")).agg(count(lit(1)).as("n"))))
+      assert(jobs == 3, s"persist ran $jobs jobs")
+      val (n, reread) = countJobs(df.collect().length)
+      assert(n == 7 && reread == 1, s"re-reading the pinned frame ran $reread jobs")
+    }
+  }
+
   test("an observed step over an empty frame gets n = 0 and a null sum, without throwing or hanging") {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
