@@ -95,14 +95,15 @@ object GraftSession {
         }
     } catch { case _: Exception => () }
 
-  /** Runs `body` with the session conf `key` set to `value`, then puts the
-    * prior value back, or unsets `key` if it was unset before — also
-    * when `body` throws. */
-  def withConf[T](s: SparkSession, kv: (String, String))(body: => T): T = {
-    val (key, value) = kv
-    val prev = s.conf.getOption(key)
-    s.conf.set(key, value)
-    try body finally prev.fold(s.conf.unset(key))(s.conf.set(key, _))
+  /** Runs `body` with each session conf key of `kvs` set to its value,
+    * then puts each prior value back, or unsets a key that was unset
+    * before — also when `body` throws. */
+  def withConf[T](s: SparkSession, kvs: (String, String)*)(body: => T): T = kvs match {
+    case Seq() => body
+    case (key, value) +: rest =>
+      val prev = s.conf.getOption(key)
+      s.conf.set(key, value)
+      try withConf(s, rest: _*)(body) finally prev.fold(s.conf.unset(key))(s.conf.set(key, _))
   }
 
   /** Local session sized from SPARK_GRAFT_CPUS (default 32, matching the

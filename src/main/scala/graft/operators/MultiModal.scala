@@ -246,12 +246,7 @@ object MultiModal {
       .repartitionByRange(col("asset_id"))
       .sortWithinPartitions(col("asset_id"))
       .as[(Long, Long)].rdd
-    val totals = sorted
-      .mapPartitionsWithIndex { case (pid, it) =>
-        var b = 0L; it.foreach(b += _._2); Iterator.single((pid, b))
-      }
-      .collect().sortBy(_._1).map(_._2)
-    val offsets = s.sparkContext.broadcast(totals.scanLeft(0L)(_ + _))
+    val (offsets, _) = Relational.partitionOffsets(sorted)(_._2)
     sorted.mapPartitionsWithIndex { case (pid, it) =>
         var cum = offsets.value(pid)
         it.map { case (id, b) => val start = cum; cum += b; (start / cap, id, b) }

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.rdd.RDD
 import graft.core.Tables
 
 /** Relational / dataframe operator inventory — SURVEY.md §2.B2.
@@ -928,6 +930,21 @@ object Relational {
            countDistinct(col("o_orderkey")).as("n_orders"))
   }
 
+  /** Pass 1 of the two-pass prefix scan over a range-sorted RDD (q37,
+    * t20, t36, mm06): one job reduces each partition to its summed
+    * `weight` (P longs collected). Returns the broadcast exclusive
+    * offsets — partition p's is the weight of partitions 0 until p — and
+    * the total. Pass 2 streams each partition of the SAME RDD once from
+    * its offset, so Spark reuses the range-shuffle stage and the
+    * partitioning cannot drift between the passes. */
+  private[graft] def partitionOffsets[T](sorted: RDD[T])(weight: T => Long)
+      : (Broadcast[Array[Long]], Long) = {
+    val offsets = sorted
+      .mapPartitions(it => Iterator.single(it.foldLeft(0L)((w, x) => w + weight(x))))
+      .collect().scanLeft(0L)(_ + _)
+    (sorted.sparkContext.broadcast(offsets), offsets.last)
+  }
+
   /** q37: GLOBAL rank + decile without a global sort point — the window
     * `row_number() OVER (ORDER BY …)` every analyst writes, whose stock
     * plan funnels the whole table through ONE partition (Spark even
@@ -953,13 +970,8 @@ object Relational {
       .sortWithinPartitions(col("rev_cents").desc, col("o_custkey"))
       .select(col("o_custkey").cast("long"), col("rev_cents"))
       .as[(Long, Long)].rdd
-    val counts = sorted
-      .mapPartitionsWithIndex { case (pid, it) =>
-        var c = 0L; it.foreach(_ => c += 1); Iterator.single((pid, c))
-      }
-      .collect().sortBy(_._1).map(_._2)
-    val n = math.max(counts.sum, 1L)
-    val offsets = s.sparkContext.broadcast(counts.scanLeft(0L)(_ + _))
+    val (offsets, total) = partitionOffsets(sorted)(_ => 1L)
+    val n = math.max(total, 1L)
     sorted.mapPartitionsWithIndex { case (pid, it) =>
         var r = offsets.value(pid)
         it.map { case (cust, cents) =>

@@ -597,14 +597,7 @@ object TextOps {
       .sortWithinPartitions(col("doc_id"))
       .as[(Long, Long)]
       .rdd
-    val partTotals = sorted
-      .mapPartitionsWithIndex { case (pid, it) =>
-        var sum = 0L
-        it.foreach(sum += _._2)
-        Iterator.single((pid, sum))
-      }
-      .collect().sortBy(_._1).map(_._2)
-    val offsets = s.sparkContext.broadcast(partTotals.scanLeft(0L)(_ + _))
+    val (offsets, _) = Relational.partitionOffsets(sorted)(_._2)
     sorted
       .mapPartitionsWithIndex { case (pid, it) =>
         var cum = offsets.value(pid)
@@ -984,12 +977,7 @@ object TextOps {
       .repartitionByRange(col("h"), col("doc_id"))
       .sortWithinPartitions(col("h"), col("doc_id"))
       .as[(Long, Long)].rdd
-    val counts = sorted
-      .mapPartitionsWithIndex { case (pid, it) =>
-        var c = 0L; it.foreach(_ => c += 1); Iterator.single((pid, c))
-      }
-      .collect().sortBy(_._1).map(_._2)
-    val offsets = s.sparkContext.broadcast(counts.scanLeft(0L)(_ + _))
+    val (offsets, _) = Relational.partitionOffsets(sorted)(_ => 1L)
     sorted.mapPartitionsWithIndex { case (pid, it) =>
         var r = offsets.value(pid)
         it.map { case (id, hv) => r += 1; (id, hv, r) }

@@ -1,10 +1,13 @@
 package graft.streaming
 
+import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.attribute.FileTime
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode,
-  StatefulProcessor, TTLConfig, TimeMode, TimerValues, Trigger, ValueState}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout,
+  OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, Trigger, ValueState}
 import graft.core.GraftSession.withConf
+import graft.sources.FileFormats.scratch
 
 /** Structured Streaming surface — SURVEY.md §2.B6 stretch capability
   * (the reference has no streaming subsystem; its closest constructs are
@@ -17,45 +20,6 @@ import graft.core.GraftSession.withConf
   * a MemoryStream in tests — the plan is source-agnostic.
   */
 object Streams {
-
-  /** Runs a finite fixture drive with a reduced state-partition count.
-    *
-    * Stateful operators allocate one state store per shuffle partition,
-    * and EVERY micro-batch pays per-store overhead (HDFS-backed store
-    * snapshot/commit + task scheduling) regardless of row counts — at
-    * fixture scale that fixed cost dominates the streaming suite (~23 s
-    * across st03/05/07/09 measured round 9). The state-partition count is
-    * a per-query DEPLOYMENT knob (it's baked into the checkpoint, sized
-    * to match cluster parallelism in production — 100 TB runs keep the
-    * session default); the fixture drives pin it to 8 for the drive only,
-    * restoring the session conf after. Plan shape is unchanged.
-    */
-  private def withStatePartitions[T](s: SparkSession, n: Int)(body: => T): T =
-    withConf(s, "spark.sql.shuffle.partitions" -> n.toString)(body)
-
-  /** Skips the trailing no-data micro-batch for a drive whose DECLARED
-    * ROW SET cannot depend on it. A no-data batch exists to let the
-    * advanced watermark evict state and EMIT watermark-gated rows; an
-    * append-mode watermarked INNER interval join (st07) emits complete
-    * results from data batches alone, so its trailing batch is pure
-    * trigger latency — the micro-batches' `durationMs` progress put it
-    * at ~0.9-1.3 s, and the paired subset bench confirms −0.7..−1.3 s
-    * on st07 with identical rows.
-    * Everything else keeps the engine default, each for a measured
-    * reason (r16): st03/st09 EMIT from the no-data batch (session flush,
-    * outer-join null extension); the complete-mode drives (st01/st06/
-    * st12) and un-watermarked drives measured FLAT — they never schedule
-    * one; the staged maxFilesPerTrigger drives (st05/st08/st10/st11)
-    * measured SLOWER with the flag off. On an unbounded production
-    * stream this knob is irrelevant — there is always a next data batch;
-    * it only exists for finite AvailableNow drains. */
-  private def withoutNoDataBatch[T](s: SparkSession)(body: => T): T =
-    withConf(s, "spark.sql.streaming.noDataMicroBatches.enabled" -> "false")(body)
-
-  /** Fixture-drive wrapper for the input-driven-emission entries: reduced
-    * state partitions + no trailing no-data batch. */
-  private def withFixtureDrive[T](s: SparkSession, n: Int)(body: => T): T =
-    withStatePartitions(s, n)(withoutNoDataBatch(s)(body))
 
   /** Tumbling-window per-type counts with an event-time watermark: late
     * events beyond `watermarkDelay` are dropped, state for closed
@@ -223,32 +187,120 @@ object Streams {
       .select(col("user_id"), col("start_ts"), col("end_ts"), col("n_events"),
               (col("end_ts") - col("start_ts")).as("duration_sec"))
 
-  // ---- driver-gate query ----
+  // ---- the fixture drive ----
 
-  private val sinkSeq = new java.util.concurrent.atomic.AtomicInteger(0)
+  private val runSeq = new java.util.concurrent.atomic.AtomicInteger(0)
+
+  /** 4 state partitions: the conf every drive starts under. */
+  private val StatePartitions = "spark.sql.shuffle.partitions" -> "4"
+  /** No trailing no-data micro-batch: st07's drive. */
+  private[graft] val NoDataBatchOff = "spark.sql.streaming.noDataMicroBatches.enabled" -> "false"
+  /** The RocksDB state store: st11's drive. */
+  private[graft] val RocksDb = "spark.sql.streaming.stateStore.providerClass" ->
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+
+  /** Drives one finite fixture stream to its end: starts `w` under
+    * `Trigger.AvailableNow` with [[StatePartitions]] and `confs` set, and
+    * waits until every file its source saw at start has been processed.
+    * Every streaming entry runs its query here.
+    *
+    *  - Conf capture. A query copies the session conf into its own
+    *    session at `start()`, so the confs are set only while it starts.
+    *    Its micro-batches, and a `foreachBatch` body (which runs in the
+    *    stream's session), keep them; staging and result jobs run at
+    *    session defaults, and the shared conf changes only for the length
+    *    of `start()`.
+    *  - 4 state partitions. A stateful operator keeps one state store per
+    *    shuffle partition, and every micro-batch pays a fixed cost per
+    *    store (snapshot, commit, task scheduling) whatever its row count.
+    *    At fixture scale that cost dominated the streaming suite (~23 s
+    *    across st03/05/07/09, round 9). The count is a per-query
+    *    deployment knob: it is baked into the checkpoint, and a production
+    *    stream sizes it to the cluster.
+    *  - [[NoDataBatchOff]], st07 only. A no-data batch lets an advanced
+    *    watermark evict state and emit watermark-gated rows. An
+    *    append-mode inner interval join emits its whole pair set from data
+    *    batches alone, so for st07 that batch was pure latency (0.9–1.3 s
+    *    of `durationMs`; −0.7..−1.3 s in a paired subset bench, identical
+    *    rows). The other drives keep the default, each for a measured
+    *    reason (r16): st03 and st09 emit from that batch (session flush,
+    *    outer-join null extension); the complete-mode drives (st01, st06,
+    *    st12) and the un-watermarked ones never schedule it; the staged
+    *    `maxFilesPerTrigger` drives (st05, st08, st10, st11) measured
+    *    slower without it. An unbounded stream always has a next data
+    *    batch, so the knob only matters to finite drains.
+    *  - [[RocksDb]], st11 only: `transformWithState` requires it; every
+    *    other drive keeps the session's default store.
+    *
+    * The query is stopped on every exit, so a failed or interrupted drive
+    * leaves no active query. A failed micro-batch surfaces as the
+    * `StreamingQueryException` that `awaitTermination` throws. */
+  private[graft] def drive(s: SparkSession, w: DataStreamWriter[_],
+                           confs: (String, String)*): Unit = {
+    val q = withConf(s, StatePartitions +: confs: _*)(w.trigger(Trigger.AvailableNow()).start())
+    try q.awaitTermination() finally q.stop()
+  }
+
+  /** Drives `ds` into a memory sink in output mode `mode` and returns its
+    * rows. Spark registers a temp view per memory sink, which would keep
+    * the rows in memory until the JVM exits; the returned frame is
+    * bound before that view is dropped and reads the sink directly. */
+  private[graft] def drain(ds: Dataset[_], mode: String, confs: (String, String)*): DataFrame = {
+    val s = ds.sparkSession
+    val sink = s"graft_st_sink_${runSeq.incrementAndGet()}"
+    try {
+      drive(s, ds.writeStream.format("memory").queryName(sink).outputMode(mode), confs: _*)
+      s.table(sink)
+    } finally s.catalog.dropTempView(sink)
+  }
+
+  /** Returns a maker of file-source streams over fixture table `table`
+    * under `d`: each stream's one micro-batch is the table's one parquet
+    * file, with `ts`, where present, normalized as the batch loader does.
+    * The schema is read once; each call is a source of its own (st07 and
+    * st09 join two). */
+  private def fixture(s: SparkSession, d: String, table: String): () => DataFrame = {
+    val schema = s.read.parquet(s"$d/$table.parquet").schema
+    () => {
+      val src = s.readStream.schema(schema).option("pathGlobFilter", s"$table.parquet").parquet(d)
+      if (schema.fieldNames.contains("ts")) graft.core.Tables.normalizeTs(src) else src
+    }
+  }
+
+  /** Moves the one parquet file under `from` into `dir` as micro-batch
+    * `idx` of a file-source stream. The source orders files by
+    * (modTime, path), so both are pinned. */
+  private def place(from: String, dir: String, idx: Int): Unit = {
+    val part = new java.io.File(from).listFiles().filter(_.getName.endsWith(".parquet")).head
+    val target = Paths.get(dir, f"f$idx%02d.parquet")
+    Files.createDirectories(target.getParent)
+    Files.move(part.toPath, target, StandardCopyOption.REPLACE_EXISTING)
+    Files.setLastModifiedTime(target, FileTime.fromMillis(1700000000000L + idx * 60000L))
+  }
+
+  /** Writes `df` as one parquet file and places it in `dir` as
+    * micro-batch `idx`. */
+  private def stage(df: DataFrame, dir: String, idx: Int): Unit = {
+    val tmp = s"${dir}_stage"
+    df.coalesce(1).write.mode("overwrite").parquet(tmp)
+    place(tmp, dir, idx)
+  }
+
+  // ---- the st entries ----
 
   /** st01: the streaming path end-to-end against the events fixture —
     * `readStream` (file source) → watermark + tumbling day windows →
-    * memory sink, drained with Trigger.AvailableNow, checked against the
-    * same SQL as the batch q17 pipeline. Complete output mode because a
-    * finite fixture never advances the watermark past its last window
-    * (append mode would hold the tail windows back forever); on an
-    * unbounded production stream the same plan runs in append mode with
-    * watermark-driven state eviction. */
-  def streamedEventCounts(s: SparkSession, d: String): DataFrame = withStatePartitions(s, 4) {
-    val raw = s.read.parquet(s"$d/events.parquet")
-    val src = s.readStream.schema(raw.schema)
-      .option("pathGlobFilter", "events.parquet").parquet(d)
-    // shared ts normalization (Long nanos or TIMESTAMP_NTZ → TIMESTAMP)
-    val events = graft.core.Tables.normalizeTs(src)
-    val counts = windowedCounts(events)
+    * memory sink, checked against the same SQL as the batch q17
+    * pipeline. Complete output mode because a finite fixture never
+    * advances the watermark past its last window (append mode would hold
+    * the tail windows back forever); on an unbounded production stream
+    * the same plan runs in append mode with watermark-driven state
+    * eviction. */
+  def streamedEventCounts(s: SparkSession, d: String): DataFrame = {
+    val counts = windowedCounts(fixture(s, d, "events")())
       .select(date_format(col("window_start"), "yyyy-MM-dd").as("day"),
               col("event_type"), col("n_events"), col("sum_value"))
-    val sink = s"graft_st01_sink_${sinkSeq.incrementAndGet()}"
-    val q = counts.writeStream.format("memory").queryName(sink)
-      .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    s.table(sink)
+    drain(counts, "complete")
   }
 
   /** st12: SLIDING (hopping) windows — the one event-time window shape
@@ -257,26 +309,18 @@ object Streams {
     * Streaming implements this by expanding each row to its window set
     * before the keyed aggregation (the state grows with windows-per-
     * event × keys, which is why the slide ratio — not the event rate —
-    * is the state knob at 100 TB). Same complete/AvailableNow drive and
+    * is the state knob at 100 TB). Same complete-mode drain and
     * watermark as st01; the oracle mirrors the expansion as a UNION ALL
     * of the two day-aligned window starts. */
-  def streamedSlidingCounts(s: SparkSession, d: String): DataFrame = withStatePartitions(s, 4) {
-    val raw = s.read.parquet(s"$d/events.parquet")
-    val src = s.readStream.schema(raw.schema)
-      .option("pathGlobFilter", "events.parquet").parquet(d)
-    val events = graft.core.Tables.normalizeTs(src)
-    val counts = events
+  def streamedSlidingCounts(s: SparkSession, d: String): DataFrame = {
+    val counts = fixture(s, d, "events")()
       .withWatermark("ts", "1 hour")
       .groupBy(window(col("ts"), "2 days", "1 day").as("w"), col("event_type"))
       .agg(count(lit(1)).as("n_events"),
            round(sum(col("value")), 2).as("sum_value"))
       .select(unix_timestamp(col("w.start")).as("wstart"),
               col("event_type"), col("n_events"), col("sum_value"))
-    val sink = s"graft_st12_sink_${sinkSeq.incrementAndGet()}"
-    val q = counts.writeStream.format("memory").queryName(sink)
-      .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    s.table(sink)
+    drain(counts, "complete")
   }
 
   /** st02: sessionization end-to-end on the streaming path — the events
@@ -284,21 +328,12 @@ object Streams {
     * gap-closed session. The oracle reconstructs sessions in SQL (lag >
     * gap marks a boundary, running sum numbers the sessions) and drops
     * each user's final session, which the stream correctly holds open. */
-  def streamedSessions(s: SparkSession, d: String): DataFrame = withStatePartitions(s, 4) {
+  def streamedSessions(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val raw = s.read.parquet(s"$d/events.parquet")
-    val src = s.readStream.schema(raw.schema)
-      .option("pathGlobFilter", "events.parquet").parquet(d)
-    val events = graft.core.Tables.normalizeTs(src)
-    val ev = events.select(col("user_id"),
+    val ev = fixture(s, d, "events")().select(col("user_id"),
         unix_timestamp(col("ts")).cast("long")).as[(Long, Long)]
-    val sink = s"graft_st02_sink_${sinkSeq.incrementAndGet()}"
-    val q = sessionize(ev, 1800L)
-      .toDF("user_id", "start_ts", "end_ts", "n_events", "duration_sec")
-      .writeStream.format("memory").queryName(sink)
-      .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    s.table(sink)
+    drain(sessionize(ev, 1800L)
+      .toDF("user_id", "start_ts", "end_ts", "n_events", "duration_sec"), "append")
   }
 
   /** st03: native-session_window sessionization end-to-end, with every
@@ -311,13 +346,13 @@ object Streams {
     * emits them all in the trailing no-data batch, and the sentinel
     * itself is filtered out after the watermark node. Oracle: full
     * session reconstruction INCLUDING each user's final session. */
-  def streamedSessionsFlushed(s: SparkSession, d: String): DataFrame = withStatePartitions(s, 4) {
+  def streamedSessionsFlushed(s: SparkSession, d: String): DataFrame = {
     val batch = graft.core.Tables.events(s, d)
     // floor to whole seconds: the oracle sessionizes over floor(epoch(ts)),
     // and native session_window merges on raw event time — grain must match
     val ev = batch.select(col("user_id").cast("long").as("user_id"),
       timestamp_seconds(unix_timestamp(col("ts"))).as("ts"))
-    val dir = graft.sources.FileFormats.scratch(s"st03_src_${sinkSeq.incrementAndGet()}")
+    val dir = scratch(s"st03_src_${runSeq.incrementAndGet()}")
     ev.write.mode("overwrite").parquet(dir)
     val maxTs = ev.agg(max(unix_timestamp(col("ts")))).head().getLong(0)
     ev.sparkSession.range(1)
@@ -325,12 +360,8 @@ object Streams {
               timestamp_seconds(lit(maxTs + 1800L + 600L)).as("ts"))
       .write.mode("append").parquet(dir)
     val src = s.readStream.schema("user_id LONG, ts TIMESTAMP").parquet(dir)
-    val sink = s"graft_st03_sink_${sinkSeq.incrementAndGet()}"
-    val q = sessionWindows(src, "30 minutes")
-      .writeStream.format("memory").queryName(sink)
-      .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    s.table(sink).filter(col("user_id") >= 0)   // drop the sentinel's own session
+    drain(sessionWindows(src, "30 minutes"), "append")
+      .filter(col("user_id") >= 0)   // drop the sentinel's own session
   }
 
   /** st04: streaming ingestion-dedup — the streaming form of the t05
@@ -343,19 +374,10 @@ object Streams {
     * time-bounded production variant swaps in
     * `dropDuplicatesWithinWatermark` — same plan shape, evictable
     * state. */
-  def streamedDedup(s: SparkSession, d: String): DataFrame = withStatePartitions(s, 4) {
-    val raw = s.read.parquet(s"$d/documents.parquet")
-    val src = s.readStream.schema(raw.schema)
-      .option("pathGlobFilter", "documents.parquet").parquet(d)
-    val sink = s"graft_st04_sink_${sinkSeq.incrementAndGet()}"
-    val q = src
+  def streamedDedup(s: SparkSession, d: String): DataFrame =
+    drain(fixture(s, d, "documents")()
       .select(graft.operators.TextOps.fingerprint(col("text")).as("fp"))
-      .dropDuplicates("fp")
-      .writeStream.format("memory").queryName(sink)
-      .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    s.table(sink)
-  }
+      .dropDuplicates("fp"), "append")
 
   /** st05: WATERMARK-BOUNDED streaming dedup — the production variant
     * st04's unbounded-history design deliberately leaves out:
@@ -364,9 +386,9 @@ object Streams {
     * evictable at any stream length (the 100 TB shape: state ∝ the
     * horizon's traffic, not all history).
     *
-    * The fixture drive stages three single-file micro-batches (file
-    * source, maxFilesPerTrigger=1, mod-times pin the order) exercising
-    * BOTH sides of the horizon deterministically:
+    * The fixture drive stages single-file micro-batches (file source,
+    * maxFilesPerTrigger=1, mod-times pin the order) exercising BOTH
+    * sides of the horizon deterministically:
     *  - batch 1: every distinct doc fingerprint at T0 → all emit;
     *  - batch 2: the same fingerprints at T0+700 — the watermark is still
     *    T0+500−600 < T0, state is live → all DROPPED; plus one heartbeat
@@ -381,42 +403,24 @@ object Streams {
     * Output: each fingerprint at epoch T0 and T0+200000, heartbeat once —
     * closed-form from `documents`, so the horizon behavior itself is
     * hash-checked against the oracle. */
-  def streamedDedupBounded(s: SparkSession, d: String): DataFrame = withStatePartitions(s, 4) {
+  def streamedDedupBounded(s: SparkSession, d: String): DataFrame = {
     val T0 = 1700000000L
     val fps = s.read.parquet(s"$d/documents.parquet")
       .select(graft.operators.TextOps.fingerprint(col("text")).as("fp"))
       .distinct()
-    val dir = graft.sources.FileFormats.scratch(s"st05_src_${sinkSeq.incrementAndGet()}")
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
-    def stage(df: DataFrame, idx: Int): Unit = {
-      val tmp = graft.sources.FileFormats.scratch(s"st05_stage_$idx")
-      df.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .filter(_.getName.endsWith(".parquet")).head
-      val target = java.nio.file.Paths.get(dir, f"f$idx%02d.parquet")
-      java.nio.file.Files.move(part.toPath, target,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      // the file source orders batches by (modTime, path): pin both
-      java.nio.file.Files.setLastModifiedTime(target,
-        java.nio.file.attribute.FileTime.fromMillis(1700000000000L + idx * 60000L))
-    }
-    stage(fps.select(col("fp"), timestamp_seconds(lit(T0)).as("ts")), 0)
+    val dir = scratch(s"st05_src_${runSeq.incrementAndGet()}")
+    stage(fps.select(col("fp"), timestamp_seconds(lit(T0)).as("ts")), dir, 0)
     stage(fps.select(col("fp"), timestamp_seconds(lit(T0 + 700L)).as("ts"))
       .unionAll(s.range(1).select(lit("heartbeat").as("fp"),
-        timestamp_seconds(lit(T0 + 100000L)).as("ts"))), 1)
+        timestamp_seconds(lit(T0 + 100000L)).as("ts"))), dir, 1)
     stage(s.range(1).select(lit("heartbeat").as("fp"),
-      timestamp_seconds(lit(T0 + 100001L)).as("ts")), 2)
-    stage(fps.select(col("fp"), timestamp_seconds(lit(T0 + 200000L)).as("ts")), 3)
+      timestamp_seconds(lit(T0 + 100001L)).as("ts")), dir, 2)
+    stage(fps.select(col("fp"), timestamp_seconds(lit(T0 + 200000L)).as("ts")), dir, 3)
     val src = s.readStream.schema("fp STRING, ts TIMESTAMP")
       .option("maxFilesPerTrigger", "1").parquet(dir)
-    val sink = s"graft_st05_sink_${sinkSeq.incrementAndGet()}"
-    val q = src.withWatermark("ts", "600 seconds")
+    drain(src.withWatermark("ts", "600 seconds")
       .dropDuplicatesWithinWatermark("fp")
-      .select(col("fp"), unix_timestamp(col("ts")).as("epoch"))
-      .writeStream.format("memory").queryName(sink)
-      .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    s.table(sink)
+      .select(col("fp"), unix_timestamp(col("ts")).as("epoch")), "append")
   }
 
   type Q = (SparkSession, String) => DataFrame
@@ -429,15 +433,11 @@ object Streams {
     * The customer dim grows with the input, so it carries no broadcast
     * hint: the planner broadcasts it while its scan is under
     * `spark.sql.autoBroadcastJoinThreshold` and shuffles both sides
-    * above it. Same complete/AvailableNow drive as st01. */
-  def streamedEnriched(s: SparkSession, d: String): DataFrame = withStatePartitions(s, 4) {
-    val raw = s.read.parquet(s"$d/events.parquet")
-    val src = s.readStream.schema(raw.schema)
-      .option("pathGlobFilter", "events.parquet").parquet(d)
-    val events = graft.core.Tables.normalizeTs(src)
+    * above it. Same complete-mode drain as st01. */
+  def streamedEnriched(s: SparkSession, d: String): DataFrame = {
     val dim = s.read.parquet(s"$d/customer.parquet")
       .select(col("c_custkey"), col("c_mktsegment"))
-    val enriched = events
+    val enriched = fixture(s, d, "events")()
       .withWatermark("ts", "1 hour")
       .join(dim, col("user_id") === col("c_custkey"))
       .groupBy(window(col("ts"), "1 day").as("w"), col("c_mktsegment"))
@@ -445,12 +445,28 @@ object Streams {
            round(sum(col("value")), 2).as("sum_value"))
       .select(date_format(col("w.start"), "yyyy-MM-dd").as("day"),
               col("c_mktsegment"), col("n_events"), col("sum_value"))
-    val sink = s"graft_st06_sink_${sinkSeq.incrementAndGet()}"
-    val q = enriched.writeStream.format("memory").queryName(sink)
-      .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    s.table(sink)
+    drain(enriched, "complete")
   }
+
+  /** Clicks and purchases of the events fixture as two watermarked
+    * streams, the sides of st07's and st09's interval joins. */
+  private def clicksAndPurchases(s: SparkSession, d: String): (DataFrame, DataFrame) = {
+    val events = fixture(s, d, "events")
+    val clicks = events().filter(col("event_type") === "click")
+      .select(col("event_id").as("click_id"), col("user_id").as("click_user"),
+              col("ts").as("click_ts"))
+      .withWatermark("click_ts", "1 hour")
+    val purchases = events().filter(col("event_type") === "purchase")
+      .select(col("event_id").as("purch_id"), col("user_id").as("purch_user"),
+              col("ts").as("purch_ts"), col("value"))
+      .withWatermark("purch_ts", "1 hour")
+    (clicks, purchases)
+  }
+
+  /** A purchase within an hour after a click by the same user. */
+  private val withinHour = col("click_user") === col("purch_user") &&
+    col("purch_ts") >= col("click_ts") &&
+    col("purch_ts") <= col("click_ts") + expr("INTERVAL 1 HOUR")
 
   /** st07: stream-stream INTERVAL join — the attribution shape behind
     * every "purchase within an hour of a click" pipeline: two live
@@ -464,31 +480,12 @@ object Streams {
     * Inner join, so the finite AvailableNow drain emits the complete
     * pair set regardless of watermark timing; the oracle is the plain
     * batch self-join. */
-  def streamedAttribution(s: SparkSession, d: String): DataFrame = withFixtureDrive(s, 4) {
-    val raw = s.read.parquet(s"$d/events.parquet")
-    def src(): DataFrame = graft.core.Tables.normalizeTs(
-      s.readStream.schema(raw.schema)
-        .option("pathGlobFilter", "events.parquet").parquet(d))
-    val clicks = src().filter(col("event_type") === "click")
-      .select(col("event_id").as("click_id"), col("user_id").as("click_user"),
-              col("ts").as("click_ts"))
-      .withWatermark("click_ts", "1 hour")
-    val purchases = src().filter(col("event_type") === "purchase")
-      .select(col("event_id").as("purch_id"), col("user_id").as("purch_user"),
-              col("ts").as("purch_ts"), col("value"))
-      .withWatermark("purch_ts", "1 hour")
-    val joined = clicks.join(purchases,
-        col("click_user") === col("purch_user") &&
-          col("purch_ts") >= col("click_ts") &&
-          col("purch_ts") <= col("click_ts") + expr("INTERVAL 1 HOUR"))
+  def streamedAttribution(s: SparkSession, d: String): DataFrame = {
+    val (clicks, purchases) = clicksAndPurchases(s, d)
+    drain(clicks.join(purchases, withinHour)
       .select(col("click_id"), col("purch_id"),
               col("click_user").as("user_id"),
-              round(col("value"), 2).as("purch_value"))
-    val sink = s"graft_st07_sink_${sinkSeq.incrementAndGet()}"
-    val q = joined.writeStream.format("memory").queryName(sink)
-      .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    s.table(sink)
+              round(col("value"), 2).as("purch_value")), "append", NoDataBatchOff)
   }
 
   /** st09: stream-stream LEFT OUTER interval join — st07's attribution
@@ -507,31 +504,11 @@ object Streams {
     * emitted from the inner path). The no-data final micro-batch
     * (noDataMicroBatches, on by default) is what flushes the evictable
     * outer rows before termination. */
-  def streamedAttributionOuter(s: SparkSession, d: String): DataFrame = withStatePartitions(s, 4) {
-    val raw = s.read.parquet(s"$d/events.parquet")
-    def src(): DataFrame = graft.core.Tables.normalizeTs(
-      s.readStream.schema(raw.schema)
-        .option("pathGlobFilter", "events.parquet").parquet(d))
-    val clicks = src().filter(col("event_type") === "click")
-      .select(col("event_id").as("click_id"), col("user_id").as("click_user"),
-              col("ts").as("click_ts"))
-      .withWatermark("click_ts", "1 hour")
-    val purchases = src().filter(col("event_type") === "purchase")
-      .select(col("event_id").as("purch_id"), col("user_id").as("purch_user"),
-              col("ts").as("purch_ts"), col("value"))
-      .withWatermark("purch_ts", "1 hour")
-    val joined = clicks.join(purchases,
-        col("click_user") === col("purch_user") &&
-          col("purch_ts") >= col("click_ts") &&
-          col("purch_ts") <= col("click_ts") + expr("INTERVAL 1 HOUR"),
-        "left_outer")
+  def streamedAttributionOuter(s: SparkSession, d: String): DataFrame = {
+    val (clicks, purchases) = clicksAndPurchases(s, d)
+    drain(clicks.join(purchases, withinHour, "left_outer")
       .select(col("click_id"), col("click_user").as("user_id"),
-              col("purch_id"), round(col("value"), 2).as("purch_value"))
-    val sink = s"graft_st09_sink_${sinkSeq.incrementAndGet()}"
-    val q = joined.writeStream.format("memory").queryName(sink)
-      .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    s.table(sink)
+              col("purch_id"), round(col("value"), 2).as("purch_value")), "append")
   }
 
   /** st08: `foreachBatch` idempotent UPSERT sink — the programmatic
@@ -546,41 +523,29 @@ object Streams {
     * final table profile equals the batch-dedup oracle only if the
     * upsert is idempotent. maxFilesPerTrigger=1 forces one batch per
     * staged file. */
-  def streamedUpsert(s: SparkSession, d: String): DataFrame = withStatePartitions(s, 4) {
+  def streamedUpsert(s: SparkSession, d: String): DataFrame = {
     val batch0 = graft.core.Tables.events(s, d)
     val purch = batch0.filter(col("event_type") === "purchase")
       .select(col("event_id"), col("user_id"),
               round(col("value") * 100).cast("long").as("cents"))
-    val run = sinkSeq.incrementAndGet()
-    val srcDir = graft.sources.FileFormats.scratch(s"st08_src_$run")
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(srcDir))
+    val run = runSeq.incrementAndGet()
+    val srcDir = scratch(s"st08_src_$run")
     // overlapping slices — %3==0 rows appear in EVERY batch — staged in
     // ONE routed job: each row explodes to the batch indices that must
-    // carry it and the write partitions by batch, instead of three
-    // separate jobs each re-scanning events (was batch0 = %3<=1,
-    // batch1 = %3!=1, batch2 = %3!=2; the routing below is that same
-    // membership table by residue). partitionBy drops the routing
+    // carry it and the write partitions by batch (batch 0 = %3<=1,
+    // batch 1 = %3!=1, batch 2 = %3!=2). partitionBy drops the routing
     // column from the data files, so the staged schema is unchanged.
     val routed = purch.withColumn("b", explode(
       when(col("event_id") % 3 === 0, array(lit(0), lit(1), lit(2)))
         .when(col("event_id") % 3 === 1, array(lit(0), lit(2)))
         .otherwise(array(lit(1)))))
-    val stageTmp = graft.sources.FileFormats.scratch(s"st08_stage_$run")
+    val stageTmp = scratch(s"st08_stage_$run")
     routed.coalesce(1).write.partitionBy("b").mode("overwrite").parquet(stageTmp)
-    (0 to 2).foreach { idx =>
-      val part = new java.io.File(s"$stageTmp/b=$idx").listFiles()
-        .filter(_.getName.endsWith(".parquet")).head
-      val target = java.nio.file.Paths.get(srcDir, f"f$idx%02d.parquet")
-      java.nio.file.Files.move(part.toPath, target,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      java.nio.file.Files.setLastModifiedTime(target,
-        java.nio.file.attribute.FileTime.fromMillis(1700000000000L + idx * 60000L))
-    }
-    val tgt = graft.sources.FileFormats.scratch(s"st08_tgt_$run")
+    (0 to 2).foreach(idx => place(s"$stageTmp/b=$idx", srcDir, idx))
+    val tgt = scratch(s"st08_tgt_$run")
     val src = s.readStream.schema("event_id LONG, user_id LONG, cents LONG")
       .option("maxFilesPerTrigger", "1").parquet(srcDir)
-    val q = src.writeStream.foreachBatch { (b: DataFrame, _: Long) =>
-      import java.nio.file.{Files, Paths, StandardCopyOption}
+    drive(s, src.writeStream.foreachBatch { (b: DataFrame, _: Long) =>
       val sp = b.sparkSession
       val (tgtP, prevP, swapP) =
         (Paths.get(tgt), Paths.get(tgt + "_prev"), Paths.get(tgt + "_next"))
@@ -605,8 +570,7 @@ object Streams {
       Files.move(swapP, tgtP, StandardCopyOption.ATOMIC_MOVE)
       graft.sources.FileFormats.deleteTree(prevP)
       ()
-    }.trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
+    })
     s.read.parquet(tgt)
       .agg(count(lit(1)).as("n"), sum(col("event_id")).as("sum_ids"),
            sum(col("cents")).as("sum_cents"),
@@ -629,39 +593,24 @@ object Streams {
     * fall short. The parquet sink's own `_spark_metadata` commit log
     * makes the read-back exactly-once too. StreamingSpec additionally
     * pins run 2's numInputRows to exactly the gen-2 row count. */
-  def streamedIncrementalResume(s: SparkSession, d: String): DataFrame = withStatePartitions(s, 4) {
-    val run = sinkSeq.incrementAndGet()
-    val srcDir = graft.sources.FileFormats.scratch(s"st10_src_$run")
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(srcDir))
-    val ckpt = graft.sources.FileFormats.scratch(s"st10_ckpt_$run")
-    val outDir = graft.sources.FileFormats.scratch(s"st10_out_$run")
+  def streamedIncrementalResume(s: SparkSession, d: String): DataFrame = {
+    val run = runSeq.incrementAndGet()
+    val srcDir = scratch(s"st10_src_$run")
+    val ckpt = scratch(s"st10_ckpt_$run")
+    val outDir = scratch(s"st10_out_$run")
     val ev = graft.core.Tables.events(s, d)
       .select(col("event_id"), col("event_type"),
               round(col("value") * 100).cast("long").as("cents"))
-    def stage(df: DataFrame, idx: Int): Unit = {
-      val tmp = graft.sources.FileFormats.scratch(s"st10_stage_$run")
-      df.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .filter(_.getName.endsWith(".parquet")).head
-      val target = java.nio.file.Paths.get(srcDir, f"f$idx%02d.parquet")
-      java.nio.file.Files.move(part.toPath, target,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      java.nio.file.Files.setLastModifiedTime(target,
-        java.nio.file.attribute.FileTime.fromMillis(1700000000000L + idx * 60000L))
-    }
-    def drain(): Unit = {
-      val q = s.readStream
-        .schema("event_id LONG, event_type STRING, cents LONG")
-        .parquet(srcDir)
-        .writeStream.format("parquet").option("path", outDir)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    }
-    stage(ev.filter(col("event_id") % 2 === 0), 0)
-    drain()
-    stage(ev.filter(col("event_id") % 2 === 1), 1)
-    drain()                      // same checkpoint: resumes past gen 1
+    def resume(): Unit = drive(s, s.readStream
+      .schema("event_id LONG, event_type STRING, cents LONG")
+      .parquet(srcDir)
+      .writeStream.format("parquet").option("path", outDir)
+      .option("checkpointLocation", ckpt)
+      .outputMode("append"))
+    stage(ev.filter(col("event_id") % 2 === 0), srcDir, 0)
+    resume()
+    stage(ev.filter(col("event_id") % 2 === 1), srcDir, 1)
+    resume()                     // same checkpoint: resumes past gen 1
     s.read.parquet(outDir)
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n"), sum(col("cents")).as("sum_cents"),
@@ -697,47 +646,24 @@ object Streams {
     * genuinely carries across batches: each batch emits the key's
     * updated profile, and the LAST update per user — selected by the
     * monotone event count — must equal the plain batch aggregate over
-    * all events, which is exactly what the oracle computes. RocksDB is
-    * required by the API; the provider conf is pinned for the drive and
-    * restored after so the other streaming entries keep the session
-    * default store. */
-  def streamedTransformState(s: SparkSession, d: String): DataFrame = withStatePartitions(s, 4) {
-    withConf(s, "spark.sql.streaming.stateStore.providerClass" ->
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
-      import java.nio.file.{Files, Paths, StandardCopyOption}
-      val ev = s.read.parquet(s"$d/events.parquet")
-        .select(col("event_id"), col("user_id"),
-                round(col("value") * 100).cast("long").as("cents"))
-      val run = sinkSeq.incrementAndGet()
-      val dir = graft.sources.FileFormats.scratch(s"st11_src_$run")
-      Files.createDirectories(Paths.get(dir))
-      def stage(df: DataFrame, idx: Int): Unit = {
-        val tmp = graft.sources.FileFormats.scratch(s"st11_stage_$run")
-        df.coalesce(1).write.mode("overwrite").parquet(tmp)
-        val part = new java.io.File(tmp).listFiles()
-          .filter(_.getName.endsWith(".parquet")).head
-        val target = Paths.get(dir, f"f$idx%02d.parquet")
-        Files.move(part.toPath, target, StandardCopyOption.REPLACE_EXISTING)
-        Files.setLastModifiedTime(target,
-          java.nio.file.attribute.FileTime.fromMillis(1700000000000L + idx * 60000L))
-      }
-      stage(ev.filter(col("event_id") % 2 === 0), 0)
-      stage(ev.filter(col("event_id") % 2 === 1), 1)
-      import s.implicits._
-      val src = s.readStream.schema("event_id BIGINT, user_id BIGINT, cents BIGINT")
-        .option("maxFilesPerTrigger", "1").parquet(dir)
-      val updates = src.select(col("user_id"), col("cents")).as[(Long, Long)]
-        .groupByKey(_._1)
-        .transformWithState(new SpendProcessor, TimeMode.None(), OutputMode.Append())
-      val sink = s"graft_st11_sink_$run"
-      val q = updates.writeStream.format("memory").queryName(sink)
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      s.table(sink).groupBy(col("userId").as("user_id"))
-        .agg(max(struct(col("n"), col("sumCents"), col("maxCents"))).as("m"))
-        .select(col("user_id"), col("m.n").as("n_events"),
-                col("m.sumCents").as("sum_cents"), col("m.maxCents").as("max_cents"))
-    }
+    * all events, which is exactly what the oracle computes. */
+  def streamedTransformState(s: SparkSession, d: String): DataFrame = {
+    import s.implicits._
+    val ev = s.read.parquet(s"$d/events.parquet")
+      .select(col("event_id"), col("user_id"),
+              round(col("value") * 100).cast("long").as("cents"))
+    val dir = scratch(s"st11_src_${runSeq.incrementAndGet()}")
+    stage(ev.filter(col("event_id") % 2 === 0), dir, 0)
+    stage(ev.filter(col("event_id") % 2 === 1), dir, 1)
+    val src = s.readStream.schema("event_id BIGINT, user_id BIGINT, cents BIGINT")
+      .option("maxFilesPerTrigger", "1").parquet(dir)
+    val updates = src.select(col("user_id"), col("cents")).as[(Long, Long)]
+      .groupByKey(_._1)
+      .transformWithState(new SpendProcessor, TimeMode.None(), OutputMode.Append())
+    drain(updates, "append", RocksDb).groupBy(col("userId").as("user_id"))
+      .agg(max(struct(col("n"), col("sumCents"), col("maxCents"))).as("m"))
+      .select(col("user_id"), col("m.n").as("n_events"),
+              col("m.sumCents").as("sum_cents"), col("m.maxCents").as("max_cents"))
   }
 
   val queries: Map[String, Q] = Map(
@@ -769,25 +695,23 @@ object Streams {
     * they do in batch mode — only (id, meta) reach the state store.
     * Payloads are the deterministic mm01 LCG assets, so the oracle is
     * the decode in closed form. */
-  def streamedBlobIngest(s: SparkSession, d: String): DataFrame = withStatePartitions(s, 4) {
-    val run = sinkSeq.incrementAndGet()
-    val dir = graft.sources.FileFormats.scratch(s"st13_blobs_$run")
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
+  def streamedBlobIngest(s: SparkSession, d: String): DataFrame = {
+    val dir = scratch(s"st13_blobs_${runSeq.incrementAndGet()}")
+    Files.createDirectories(Paths.get(dir))
     // stage 30 assets as individual blob files (executor-side, the
-    // src09 local-scheme path); mtimes pin a deterministic batch order
+    // src09 local-scheme path), the directory's only files; mtimes pin
+    // a deterministic batch order
     s.range(30).foreach { i =>
       val len = 64 + (i % 32).toInt
       val bytes = Array.tabulate(len)(t =>
         (((i * 64L + t) * 1103515245L + 99L) % 2147483647L % 256L).toByte)
-      val p = java.nio.file.Paths.get(dir, f"asset_$i%03d.bin")
-      java.nio.file.Files.write(p, bytes)
-      java.nio.file.Files.setLastModifiedTime(p,
-        java.nio.file.attribute.FileTime.fromMillis(1700000000000L + i * 1000L))
+      val p = Paths.get(dir, f"asset_$i%03d.bin")
+      Files.write(p, bytes)
+      Files.setLastModifiedTime(p, FileTime.fromMillis(1700000000000L + i * 1000L))
       ()
     }
     val src = s.readStream.format("binaryFile")
       .schema("path STRING, modificationTime TIMESTAMP, length LONG, content BINARY")
-      .option("pathGlobFilter", "*.bin")
       .option("maxFilesPerTrigger", "10")
       .load(dir)
     val decoded = src.select(
@@ -797,16 +721,12 @@ object Streams {
       (conv(hex(substring(col("content"), 3, 1)), 16, 10).cast("long") * 256 +
        conv(hex(substring(col("content"), 4, 1)), 16, 10).cast("long")).as("height"),
       col("length").as("n_bytes"))
-    val profile = decoded.agg(
+    drain(decoded.agg(
       count(lit(1)).as("n_assets"), sum(col("asset_id")).as("sum_ids"),
       sum(col("width")).as("sum_w"), sum(col("height")).as("sum_h"),
-      sum(col("n_bytes")).as("sum_bytes"))
-    val sink = s"graft_st13_sink_$run"
-    val q = profile.writeStream.format("memory").queryName(sink)
-      .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    s.table(sink)
+      sum(col("n_bytes")).as("sum_bytes")), "complete")
   }
+
 
   val oracles: Map[String, String] = Map(
     // the staged-blob decode in closed form: byte t of asset i is

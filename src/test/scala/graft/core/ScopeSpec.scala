@@ -1,11 +1,16 @@
 package graft.core
 
 import graft.{SparkEntry, SparkSpec}
+import graft.streaming.Streams
+import org.apache.spark.sql.functions.{col, udf}
+import org.apache.spark.sql.streaming.StreamingQueryException
 import org.apache.spark.storage.StorageLevel
 
-/** The two scopes: [[GraftContext.scoped]] owns every DataFrame pin an
-  * entry makes, and [[GraftSession.withConf]] owns a session conf
-  * override. Both undo their effect when the body returns or throws. */
+/** The scopes: [[GraftContext.scoped]] owns every DataFrame pin an entry
+  * makes, [[GraftSession.withConf]] owns a session conf override, and
+  * [[Streams.drive]] owns a streaming query, its sink view and its
+  * fixture confs. Each undoes its effect when the body returns or
+  * throws. */
 class ScopeSpec extends SparkSpec {
   private def cache = spark.sharedState.cacheManager
 
@@ -72,5 +77,41 @@ class ScopeSpec extends SparkSpec {
     val out = GraftSession.withConf(spark, unset -> "on")(spark.conf.get(unset))
     assert(out == "on")
     assert(spark.conf.getOption(unset).isEmpty, "a key that was unset must be unset again")
+  }
+
+  /** The session confs a streaming drive sets while its query starts. */
+  private val driveConfs = Seq("spark.sql.shuffle.partitions",
+    Streams.NoDataBatchOff._1, Streams.RocksDb._1)
+
+  /** What a streaming call left behind: sink views, active queries and
+    * changed drive confs. */
+  private def streamLeftovers(before: Seq[Option[String]]): Seq[String] =
+    spark.catalog.listTables().collect().map(_.name).filter(_.startsWith("graft_st")).toSeq ++
+      spark.streams.active.map(q => s"active query ${q.name}") ++
+      driveConfs.zip(before).collect {
+        case (k, v) if spark.conf.getOption(k) != v => s"$k=${spark.conf.getOption(k)}"
+      }
+
+  test("every streaming entry leaves no sink view, no active query and its confs as found") {
+    val before = driveConfs.map(spark.conf.getOption)
+    val left = Streams.queries.keys.toSeq.sorted.flatMap { name =>
+      Streams.queries(name)(spark, sfDir).write.format("noop").mode("overwrite").save()
+      streamLeftovers(before).map(x => s"$name: $x")
+    }
+    assert(left.isEmpty, s"streaming entries left state behind:\n${left.mkString("\n")}")
+  }
+
+  test("a drive whose micro-batch throws surfaces the message and leaves nothing behind") {
+    val before = driveConfs.map(spark.conf.getOption)
+    val dir = java.nio.file.Files.createTempDirectory("graft_drive_fail_").resolve("src").toString
+    spark.range(0, 10, 1, 1).write.parquet(dir)
+    val failOn3 = udf { (v: Long) =>
+      if (v == 3L) throw new IllegalStateException("drive boom on row 3") else v }
+    val src = spark.readStream.schema("id LONG").parquet(dir).select(failOn3(col("id")).as("v"))
+    val err = intercept[StreamingQueryException] {
+      Streams.drain(src, "append", Streams.NoDataBatchOff, Streams.RocksDb)
+    }
+    assert(err.getMessage.contains("drive boom on row 3"), s"original message lost: $err")
+    assert(streamLeftovers(before).isEmpty, streamLeftovers(before).mkString(", "))
   }
 }

@@ -1,7 +1,7 @@
 package graft.plans
 
+import graft.SourceLint.{commentText, isComment, mainSources}
 import org.scalatest.funsuite.AnyFunSuite
-import scala.jdk.CollectionConverters._
 
 /** Lint: Spark's size check (`autoBroadcastJoinThreshold`, plus AQE's
   * runtime conversion) is the only rule that broadcasts a DataFrame join
@@ -16,15 +16,6 @@ class BroadcastHintSpec extends AnyFunSuite {
     * line of code rather than of a comment. */
   private val hint = """(?<![\w.`])broadcast\(""".r
   private val boundWord = """\bbounded\b""".r
-
-  private def isComment(line: String): Boolean = {
-    val t = line.trim
-    t.startsWith("//") || t.startsWith("*") || t.startsWith("/*")
-  }
-
-  private def commentText(line: String): String =
-    if (isComment(line)) line
-    else line.indexOf("//") match { case -1 => ""; case i => line.substring(i) }
 
   /** `file:line` of every hint without a bound comment in `lines`. */
   private def unbounded(file: String, lines: IndexedSeq[String]): Seq[String] =
@@ -47,16 +38,7 @@ class BroadcastHintSpec extends AnyFunSuite {
   }
 
   test("every DataFrame broadcast hint under src/main names its bound") {
-    val root = java.nio.file.Paths.get("src/main/scala")
-    assert(java.nio.file.Files.isDirectory(root), s"run from the repo root: $root")
-    val files = {
-      val s = java.nio.file.Files.walk(root)
-      try s.iterator().asScala.filter(_.toString.endsWith(".scala")).toVector finally s.close()
-    }
-    val offenders = files.sortBy(_.toString).flatMap { p =>
-      val src = scala.io.Source.fromFile(p.toFile, "UTF-8")
-      try unbounded(p.toString, src.getLines().toIndexedSeq) finally src.close()
-    }
+    val offenders = mainSources().flatMap { case (file, lines) => unbounded(file, lines) }
     assert(offenders.isEmpty,
       s"broadcast hints without a `bounded` comment in the 6 lines above:\n${offenders.mkString("\n")}")
   }
