@@ -121,7 +121,7 @@ object Bench {
     def timedRep(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Option[Double] =
       try {
         val (_, dt) = metrics.timed(name)(runNoop(spark, fn, sfDir))
-        System.err.println(f"[bench]   $name rep: $dt%.3f s")
+        System.err.println(f"[bench]   $name rep: $dt%.3f s, ${metrics.compiles(name).last} compiles")
         Some(dt)
       } catch { case e: Throwable =>
         errors(name) = Option(e.getMessage).getOrElse(e.getClass.getName).take(200)

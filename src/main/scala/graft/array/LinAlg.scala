@@ -26,16 +26,6 @@ import breeze.linalg.{DenseMatrix => BDM, DenseVector => BDV, qr, svd, cholesky 
   */
 object LinAlg {
 
-  /** Stack two R factors (or a partial stripe) and re-QR — the TSQR
-    * combiner step. */
-  private def stackR(top: BDM[Double], bot: BDM[Double]): BDM[Double] = {
-    if (top == null && bot == null) return null   // two empty partitions
-    if (top == null) return triOf(bot)
-    if (bot == null) return triOf(top)
-    val stacked = BDM.vertcat(top, bot)
-    qr.reduced(stacked).r
-  }
-
   /** Always QR — even when rows <= cols (a whole matrix fitting one
     * short/wide block): returning the raw block there would violate the
     * triangular-R contract that fixSigns and qrFactor assume.
@@ -45,10 +35,12 @@ object LinAlg {
     * it dominated the 200k×1,000 SVD flagship); qrR keeps the same
     * Householder math but feeds the trailing updates to the SIMD
     * VectorBLAS dgemm. Small/wide blocks stay on the battle-tested
-    * LAPACK path. */
-  private def triOf(m: BDM[Double]): BDM[Double] =
+    * LAPACK path, whose R is a view over the whole factored stack; it
+    * is copied out, so a task ships and the driver collects n×n values,
+    * not the stack's (an 8192×64 stripe's R held 524,288). */
+  private[array] def triOf(m: BDM[Double]): BDM[Double] =
     if (m.rows >= m.cols && m.cols >= 128 && m.rows.toLong * m.cols >= (1L << 20)) qrR(m)
-    else qr.reduced(m).r
+    else qr.reduced(m).r.copy
 
   /** R factor of a tall (m ≥ n) matrix by panel-blocked Householder QR —
     * the dgeqrf/dlarft/dlarfb decomposition with nb = 64 panels: panel

@@ -2,6 +2,7 @@ package graft.core
 
 import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
 import scala.jdk.CollectionConverters._
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
@@ -34,7 +35,7 @@ final class EntryMetrics private (spark: SparkSession)
   private val jobs = new ConcurrentHashMap[Int, (Long, Long)]()   // id -> (start, end)
   private val stages = new ConcurrentLinkedQueue[Stage]()
   private val events = new ConcurrentLinkedQueue[(Long, Breakdown)]()   // queries, batches
-  private val windows = new ConcurrentLinkedQueue[(String, Long, Long)]()
+  private val windows = new ConcurrentLinkedQueue[Window]()
   private val runsStarted = ConcurrentHashMap.newKeySet[java.util.UUID]()
   private val runsEnded = ConcurrentHashMap.newKeySet[java.util.UUID]()
   @volatile private var plans: ConcurrentLinkedQueue[SparkPlan] = null
@@ -88,18 +89,29 @@ final class EntryMetrics private (spark: SparkSession)
   }
 
   /** Runs `body` as one rep of `name`: its result, its wall seconds, and a
-    * window recorded even when `body` throws. A full GC runs first, OUTSIDE
+    * window recorded even when `body` throws, with the codegen compiles
+    * that ran in it (they run synchronously, inside the jobs and planning
+    * the body waits for). A full GC runs first, OUTSIDE
     * the timed region: earlier reps leave checkpoint blocks / broadcasts
     * that only the ContextCleaner reclaims, and it only runs on driver GC —
     * without this, late reps pay accumulated cleanup debt (measured ~10×
     * inflation on the final bench queries vs their isolated cost). */
   def timed[T](name: String)(body: => T): (T, Double) = {
     System.gc()
+    val (c0, cMs0) = codegenTotals()
     val w0 = System.currentTimeMillis()
     val t0 = System.nanoTime()
     try { val out = body; (out, (System.nanoTime() - t0) / 1e9) }
-    finally windows.add((name, w0, System.currentTimeMillis())): Unit
+    finally {
+      val w1 = System.currentTimeMillis()
+      val (c1, cMs1) = codegenTotals()
+      windows.add(Window(name, w0, w1, c1 - c0, math.max(0.0, cMs1 - cMs0))): Unit
+    }
   }
+
+  /** The codegen compiles of each rep of `name`, in start order. */
+  def compiles(name: String): Seq[Long] =
+    windows.asScala.filter(_.name == name).toSeq.sortBy(_.startMs).map(_.compiles)
 
   /** Waits until every event posted before this call has been delivered,
     * or throws after `timeoutMs` (a silent give-up would under-report).
@@ -151,21 +163,25 @@ final class EntryMetrics private (spark: SparkSession)
     * Each entry also carries that rep's index among its windows in start
     * order (0 = first rep; -1 for "_other"). */
   def selected: Map[String, (Int, Breakdown)] = {
-    val ws = windows.asScala.toVector.sortBy(_._2)
-    def owner(t: Long): Int = ws.indexWhere(w => t >= w._2 && t < w._3)
+    val ws = windows.asScala.toVector.sortBy(_.startMs)
+    def owner(t: Long): Int = ws.indexWhere(w => t >= w.startMs && t < w.endMs)
     val jobsBy = jobs.values.asScala.toVector.groupBy(j => owner(j._1))
     val recsBy = (stages.asScala.map(s => (s.submittedMs, s.b)) ++ events.asScala).toVector
       .groupBy(r => owner(r._1))
     def at(i: Int): Breakdown = {
       val js = jobsBy.getOrElse(i, Vector.empty)
       val sum = recsBy.getOrElse(i, Vector.empty).map(_._2).foldLeft(Breakdown())(_ + _)
-      val (busy, gap) = if (i < 0) (0.0, 0.0)
-        else driverGap((ws(i)._2.toDouble, ws(i)._3.toDouble),
-                       js.map { case (s, e) => (s.toDouble, e.toDouble) })
-      sum.copy(jobs = js.size, jobBusyMs = busy, driverGapMs = gap)
+      if (i < 0) sum.copy(jobs = js.size)
+      else {
+        val w = ws(i)
+        val (busy, gap) = driverGap((w.startMs.toDouble, w.endMs.toDouble),
+                                    js.map { case (s, e) => (s.toDouble, e.toDouble) })
+        sum.copy(jobs = js.size, jobBusyMs = busy, driverGapMs = gap,
+                 codegenCompiles = w.compiles, codegenMs = w.compileMs)
+      }
     }
-    val perEntry = ws.indices.groupBy(i => ws(i)._1).map { case (name, reps) =>
-      val best = reps.minBy(i => ws(i)._3 - ws(i)._2)
+    val perEntry = ws.indices.groupBy(i => ws(i).name).map { case (name, reps) =>
+      val best = reps.minBy(i => ws(i).endMs - ws(i).startMs)
       name -> (reps.indexOf(best), at(best))
     }
     perEntry + ("_other" -> (-1, at(-1)))
@@ -177,8 +193,8 @@ final class EntryMetrics private (spark: SparkSession)
   /** The stages of `name`'s best rep (the window [[selected]] picks), in
     * stage-id order. */
   def stageProfile(name: String): Seq[Stage] =
-    windows.asScala.filter(_._1 == name).minByOption(w => w._3 - w._2).toSeq.flatMap { w =>
-      stages.asScala.filter(s => s.submittedMs >= w._2 && s.submittedMs < w._3).toSeq.sortBy(_.id)
+    windows.asScala.filter(_.name == name).minByOption(w => w.endMs - w.startMs).toSeq.flatMap { w =>
+      stages.asScala.filter(s => s.submittedMs >= w.startMs && s.submittedMs < w.endMs).toSeq.sortBy(_.id)
     }
 
   /** One JSON object per entry, seconds/MB units, sorted by key — the
@@ -199,7 +215,8 @@ final class EntryMetrics private (spark: SparkSession)
         s""""analysis_sec":${sec(b.analysisMs)},"optimization_sec":${sec(b.optimizationMs)},""" +
         s""""planning_sec":${sec(b.planningMs)},"batches":${b.batches},""" +
         s""""batch_plan_sec":${sec(b.batchPlanMs)},"add_batch_sec":${sec(b.addBatchMs)},""" +
-        s""""commit_sec":${sec(b.commitMs)}}"""
+        s""""commit_sec":${sec(b.commitMs)},"codegen_compiles":${b.codegenCompiles},""" +
+        s""""codegen_sec":${sec(b.codegenMs)}}"""
     }.mkString(",")
     val head = extra.toSeq.sortBy(_._1).map { case (k, v) => s"${jstr(k)}:${jstr(v)}" }.mkString(",")
     // empty extra must not leave a leading comma (invalid JSON)
@@ -219,19 +236,37 @@ object EntryMetrics {
     m
   }
 
+  /** One timed rep: its entry, wall-clock bounds and codegen work. */
+  private final case class Window(name: String, startMs: Long, endMs: Long,
+                                  compiles: Long, compileMs: Double)
+
+  /** Codegen compiles so far in this JVM and their summed milliseconds,
+    * from Spark's `CodegenMetrics` compilation-time histogram. The count
+    * is exact; the sum is too while the histogram's reservoir still holds
+    * every sample (its first 1,028), and past that it is the count times
+    * the mean of the samples it keeps. */
+  private[graft] def codegenTotals(): (Long, Double) = {
+    val h = CodegenMetrics.METRIC_COMPILATION_TIME
+    val n = h.getCount
+    val kept = h.getSnapshot.getValues
+    (n, if (kept.isEmpty) 0.0 else kept.sum.toDouble * n / kept.length)
+  }
+
   /** What a window (or one event) cost. Each field means what its
     * counterpart in perfbench/metrics.py means: `jobBusyMs` is the union
     * of the window's job intervals clipped to it, `driverGapMs` the rest
     * of the window, the Catalyst and batch fields sum the SQL executions
     * and micro-batches that started in it (commit = walCommit +
-    * commitOffsets). */
+    * commitOffsets); the codegen fields are the window's compiles and
+    * their milliseconds (0 for events outside every window). */
   final case class Breakdown(
       jobs: Int = 0, stages: Int = 0, tasks: Int = 0, runMs: Long = 0L, gcMs: Long = 0L,
       shuffleReadBytes: Long = 0L, shuffleWriteBytes: Long = 0L, fetchWaitMs: Long = 0L,
       shuffleWriteMs: Long = 0L, spillMemBytes: Long = 0L, spillDiskBytes: Long = 0L,
       inputBytes: Long = 0L, peakMemBytes: Long = 0L, jobBusyMs: Double = 0.0, driverGapMs: Double = 0.0,
       sqlQueries: Int = 0, analysisMs: Long = 0L, optimizationMs: Long = 0L, planningMs: Long = 0L,
-      batches: Int = 0, batchPlanMs: Long = 0L, addBatchMs: Long = 0L, commitMs: Long = 0L) {
+      batches: Int = 0, batchPlanMs: Long = 0L, addBatchMs: Long = 0L, commitMs: Long = 0L,
+      codegenCompiles: Long = 0L, codegenMs: Double = 0.0) {
     def +(o: Breakdown): Breakdown = Breakdown(
       jobs + o.jobs, stages + o.stages, tasks + o.tasks, runMs + o.runMs, gcMs + o.gcMs,
       shuffleReadBytes + o.shuffleReadBytes, shuffleWriteBytes + o.shuffleWriteBytes,
@@ -241,7 +276,8 @@ object EntryMetrics {
       math.max(peakMemBytes, o.peakMemBytes), jobBusyMs + o.jobBusyMs, driverGapMs + o.driverGapMs,
       sqlQueries + o.sqlQueries, analysisMs + o.analysisMs, optimizationMs + o.optimizationMs,
       planningMs + o.planningMs, batches + o.batches, batchPlanMs + o.batchPlanMs,
-      addBatchMs + o.addBatchMs, commitMs + o.commitMs)
+      addBatchMs + o.addBatchMs, commitMs + o.commitMs,
+      codegenCompiles + o.codegenCompiles, codegenMs + o.codegenMs)
 
     /** Executor run time per second of job-busy time (`spark.parallelism`). */
     def parallelism: Double = if (jobBusyMs > 0) runMs / jobBusyMs else 0.0

@@ -13,6 +13,21 @@ import org.apache.spark.sql.SparkSession
   *  - `parquet.nanosAsLong`: the driver's `events` table carries
   *    TIMESTAMP(NANOS) which Spark's vectorized reader refuses; we read
   *    it as long and convert in Tables.events.
+  *  - `artifact.isolation.enabled=false`: one executor class loader for
+  *    every session. Spark 4.1 otherwise gives each session its own, and
+  *    every streaming query runs in a clone of its session, so each
+  *    streaming run got a fresh loader. `CodeGenerator.compile` keys its
+  *    cache by (context class loader, source), so every run recompiled
+  *    the same generated classes (st01: 14 per run) and kept its loader
+  *    and classes reachable. The library adds no per-session artifacts,
+  *    so nothing relies on the isolation.
+  *  - UI history capped at 50 SQL executions, jobs and stages: the UI is
+  *    off, but Spark still keeps its status store (default 1,000 of
+  *    each, with every plan metric), and nothing here reads it —
+  *    [[EntryMetrics]] listens to the events instead. Uncapped, a long
+  *    run's driver heap grew with every job it had ever run.
+  *
+  * `SPARK_GRAFT_CONF` (see [[local]]) can override each of these.
   */
 object GraftSession {
   def builder(master: String, cpus: String): SparkSession.Builder =
@@ -45,6 +60,14 @@ object GraftSession {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.artifact.isolation.enabled", "false")
+      .config("spark.sql.ui.retainedExecutions", RetainedUiHistory)
+      .config("spark.ui.retainedJobs", RetainedUiHistory)
+      .config("spark.ui.retainedStages", RetainedUiHistory)
+
+  /** How many finished SQL executions, jobs and stages the status store
+    * keeps. */
+  private val RetainedUiHistory = "50"
 
   /** Shuffle/spill scratch location. tmpfs is chosen only when /dev/shm
     * actually has room for the flagship shuffles (containers commonly cap

@@ -1,6 +1,9 @@
 package graft.core
 
+import java.util.concurrent.ConcurrentHashMap
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Loaders for the driver-generated TPC-H-ish testdata (see TESTDATA.md).
   *
@@ -14,8 +17,28 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  def apply(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    spark.read.schema(schemaOf(spark, path)).parquet(path)
+  }
+
+  /** Inferred schemas per session, by (path, length, modification time). */
+  private val schemas = java.util.Collections.synchronizedMap(
+    new java.util.WeakHashMap[SparkSession, ConcurrentHashMap[(String, Long, Long), StructType]]())
+
+  /** The schema Spark infers for the parquet file at `path`, inferred
+    * once per session and version of the file. Inference runs a one-task
+    * job on every `read.parquet`; a read given the schema runs none. The
+    * key holds the session (its confs shape the inferred types, e.g.
+    * `parquet.nanosAsLong`) and the file's length and modification time,
+    * so a rewritten file is inferred again. */
+  private[graft] def schemaOf(spark: SparkSession, path: String): StructType = {
+    val p = new Path(path)
+    val st = p.getFileSystem(spark.sessionState.newHadoopConf()).getFileStatus(p)
+    schemas.computeIfAbsent(spark, _ => new ConcurrentHashMap())
+      .computeIfAbsent((st.getPath.toString, st.getLen, st.getModificationTime),
+        _ => spark.read.parquet(path).schema)
+  }
 
   def region(s: SparkSession, d: String): DataFrame    = apply(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = apply(s, d, "nation")

@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout,
   OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, Trigger, ValueState}
 import graft.core.GraftSession.withConf
+import graft.core.Tables
 import graft.sources.FileFormats.scratch
 
 /** Structured Streaming surface — SURVEY.md §2.B6 stretch capability
@@ -260,10 +261,10 @@ object Streams {
     * The schema is read once; each call is a source of its own (st07 and
     * st09 join two). */
   private def fixture(s: SparkSession, d: String, table: String): () => DataFrame = {
-    val schema = s.read.parquet(s"$d/$table.parquet").schema
+    val schema = Tables.schemaOf(s, s"$d/$table.parquet")
     () => {
       val src = s.readStream.schema(schema).option("pathGlobFilter", s"$table.parquet").parquet(d)
-      if (schema.fieldNames.contains("ts")) graft.core.Tables.normalizeTs(src) else src
+      if (schema.fieldNames.contains("ts")) Tables.normalizeTs(src) else src
     }
   }
 
@@ -405,7 +406,7 @@ object Streams {
     * hash-checked against the oracle. */
   def streamedDedupBounded(s: SparkSession, d: String): DataFrame = {
     val T0 = 1700000000L
-    val fps = s.read.parquet(s"$d/documents.parquet")
+    val fps = Tables(s, d, "documents")
       .select(graft.operators.TextOps.fingerprint(col("text")).as("fp"))
       .distinct()
     val dir = scratch(s"st05_src_${runSeq.incrementAndGet()}")
@@ -435,7 +436,7 @@ object Streams {
     * `spark.sql.autoBroadcastJoinThreshold` and shuffles both sides
     * above it. Same complete-mode drain as st01. */
   def streamedEnriched(s: SparkSession, d: String): DataFrame = {
-    val dim = s.read.parquet(s"$d/customer.parquet")
+    val dim = Tables(s, d, "customer")
       .select(col("c_custkey"), col("c_mktsegment"))
     val enriched = fixture(s, d, "events")()
       .withWatermark("ts", "1 hour")
@@ -649,7 +650,7 @@ object Streams {
     * all events, which is exactly what the oracle computes. */
   def streamedTransformState(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val ev = s.read.parquet(s"$d/events.parquet")
+    val ev = Tables(s, d, "events")
       .select(col("event_id"), col("user_id"),
               round(col("value") * 100).cast("long").as("cents"))
     val dir = scratch(s"st11_src_${runSeq.incrementAndGet()}")

@@ -35,6 +35,31 @@ class LinAlgSpec extends SparkSpec {
     assert((0 until 20).forall(i => r(i, i) >= 0), "sign-normalized diagonal")
   }
 
+  test("tsqr ships compact n×n factors; R is bit-identical to the view-returning LAPACK R") {
+    import breeze.linalg.qr
+    val stripe = DMatrix.rand(spark, 8192, 64, 8192, 5L).toLocal
+    assert(LinAlg.triOf(stripe).data.length == 64 * 64)
+    assert(qr.reduced(stripe).r.data.length == 8192 * 64, "the LAPACK R is a view over the stack")
+    // the tree tsqr runs, with every R taken as the uncopied view: the
+    // same partitions, groups of 8 and final sign fix
+    val a = DMatrix.rand(spark, 8192, 64, 1024, 7L)
+    val parts = a.rdd.map(_.toBreeze).glom().collect()
+    assert(parts.length <= 8, s"${parts.length} partitions would add a combine round")
+    def viewR(m: BDM[Double]) = qr.reduced(m).r
+    val tops = parts.filter(_.nonEmpty).map { blocks =>
+      blocks.grouped(8).foldLeft(null: BDM[Double]) { (acc, g) =>
+        val stack = if (acc == null) g.toSeq else acc +: g.toSeq
+        viewR(if (stack.length == 1) stack.head else BDM.vertcat(stack: _*))
+      }
+    }
+    val expect = viewR(if (tops.length == 1) tops(0) else BDM.vertcat(tops.toIndexedSeq: _*)).copy
+    (0 until 64).foreach(i => if (expect(i, i) < 0) expect(i, ::) :*= -1.0)
+    val got = LinAlg.tsqr(a)
+    assert(got.rows == 64 && got.cols == 64)
+    assert(got.data.toSeq.map(java.lang.Double.doubleToRawLongBits) ==
+      expect.data.toSeq.map(java.lang.Double.doubleToRawLongBits), "R differs bitwise")
+  }
+
   test("qr: Q orthonormal and Q*R reconstructs A") {
     val a = DMatrix.rand(spark, 300, 16, 50, 11L)
     val (q, r) = LinAlg.qrFactor(a)

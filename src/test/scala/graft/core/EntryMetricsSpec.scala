@@ -94,6 +94,20 @@ class EntryMetricsSpec extends SparkSpec {
     assert(json.contains("\"e_reps\":{\"rep\":1,\"jobs\":3,\"stages\":3,"), json)
   }
 
+  test("each rep reports its codegen compiles: a second identical run compiles none") {
+    // a literal the JVM has not compiled yet, so the first rep compiles
+    val k = 1000003L + System.nanoTime() % 1000000L
+    def rep(): Unit = em.timed("e_codegen") {
+      spark.range(0, 1000, 1, 2).selectExpr(s"id * $k AS x").groupBy("x").count()
+        .write.format("noop").mode("overwrite").save()
+    }
+    rep(); rep()
+    val Seq(first, second) = em.compiles("e_codegen")
+    assert(first > 0 && second == 0, s"compiles per rep: $first, $second")
+    em.drain()
+    assert(em.toJson(Map.empty).contains("\"codegen_compiles\":"))
+  }
+
   test("an AvailableNow stream inside a window reports its micro-batches") {
     import org.apache.spark.sql.streaming.Trigger
     val dir = java.nio.file.Files.createTempDirectory("em-stream").toFile

@@ -166,11 +166,62 @@ class SessionSpec extends SparkSpec {
   }
 
   test("job audit: i01 runs one job per materialized frame") {
-    // the parquet reader's schema job, then init and 3 steps, one
-    // observed pass each; the output is a driver-side row (no job)
+    // init and 3 steps, one observed pass each; the output is a
+    // driver-side row (no job). The orders schema is read first, so its
+    // one-time inference job stays out of the count.
+    Tables.schemaOf(spark, s"$sfDir/orders.parquet")
     val (rows, jobs) = countJobs(IterativeQueries.iterativeTrim(spark, sfDir).collect())
     assert(rows.length == 1)
-    assert(jobs == 1 + 1 + 3, s"i01 ran $jobs jobs")
+    assert(jobs == 1 + 3, s"i01 ran $jobs jobs")
+  }
+
+  test("a fixture's schema is inferred once per file version: a reread starts no job") {
+    import org.apache.spark.sql.functions.lit
+    val dir = java.nio.file.Files.createTempDirectory("graftschema")
+    try {
+      // writes `df` as the one file `t.parquet`, the fixtures' layout
+      def put(df: org.apache.spark.sql.DataFrame): Unit = {
+        df.coalesce(1).write.mode("overwrite").parquet(s"$dir/w")
+        val part = new java.io.File(s"$dir/w").listFiles().filter(_.getName.endsWith(".parquet")).head
+        java.nio.file.Files.move(part.toPath, dir.resolve("t.parquet"),
+          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+      }
+      put(spark.range(0, 10, 1, 1).toDF("a"))
+      val (first, inferJobs) = countJobs(Tables(spark, dir.toString, "t"))
+      assert(inferJobs == 1, s"first read ran $inferJobs jobs")
+      val (again, rereadJobs) = countJobs(Tables(spark, dir.toString, "t"))
+      assert(rereadJobs == 0, s"a reread ran $rereadJobs jobs")
+      assert(again.schema == first.schema && again.count() == 10)
+      put(spark.range(0, 20, 1, 1).toDF("a").withColumn("b", lit("x")))
+      val (rewritten, jobs) = countJobs(Tables(spark, dir.toString, "t"))
+      assert(jobs == 1, s"a rewritten file ran $jobs jobs")
+      assert(rewritten.columns.toSeq == Seq("a", "b") && rewritten.count() == 20)
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+  }
+
+  test("a second st01 drive compiles no generated class") {
+    def drive(): Unit = graft.streaming.Streams.streamedEventCounts(spark, sfDir)
+      .write.format("noop").mode("overwrite").save()
+    drive()
+    val before = EntryMetrics.codegenTotals()._1
+    drive()
+    val compiles = EntryMetrics.codegenTotals()._1 - before
+    assert(compiles == 0, s"the second drive compiled $compiles classes")
+  }
+
+  test("the status store keeps at most 50 finished SQL executions and jobs") {
+    (1 to 60).foreach(i => spark.range(0, 4, 1, 1).selectExpr(s"id + $i AS v").collect())
+    metrics.drain()
+    val sc = spark.sparkContext
+    def finishedExecutions = spark.sharedState.statusStore.executionsList().count(_.completionTime.isDefined)
+    def finishedJobs = sc.statusTracker.getJobIdsForGroup(null).flatMap(sc.statusTracker.getJobInfo)
+      .count(_.status != org.apache.spark.JobExecutionStatus.RUNNING)
+    // the store trims itself on a worker thread once it passes the cap
+    val deadline = System.currentTimeMillis() + 30000
+    while ((finishedExecutions > 50 || finishedJobs > 50) && System.currentTimeMillis() < deadline)
+      Thread.sleep(50)
+    assert(finishedExecutions <= 50, s"$finishedExecutions finished executions retained")
+    assert(finishedJobs <= 50, s"$finishedJobs finished jobs retained")
   }
 
   test("i06 k-core peel matches a local reference loop and strictly shrinks") {

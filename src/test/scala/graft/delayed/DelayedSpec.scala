@@ -177,18 +177,15 @@ class DelayedSpec extends SparkSpec {
 
   test("client: a 10⁶-element map executes as ONE Spark job, not 10⁶ driver futures") {
     val client = new Client(spark)
-    val before = spark.sparkContext.statusTracker.getJobIdsForGroup(null).length
     // TaskContext is non-null ONLY inside a Spark task — each element
     // records where it actually ran
-    val fs = client.map(1 to 1000000)(i =>
-      (i.toLong * 2, org.apache.spark.TaskContext.get() != null))
-    val results = client.gather(fs)
+    val (results, jobs) = countJobs(client.gather(client.map(1 to 1000000)(i =>
+      (i.toLong * 2, org.apache.spark.TaskContext.get() != null))))
     assert(results.length == 1000000)
     assert(results.zipWithIndex.forall { case ((v, _), k) => v == (k + 1).toLong * 2 },
       "values must come back in element order")
     assert(results.forall(_._2), "every element must have run inside a Spark task")
-    val after = spark.sparkContext.statusTracker.getJobIdsForGroup(null).length
-    assert(after - before <= 2, s"expected one collect job, saw ${after - before}")
+    assert(jobs <= 2, s"expected one collect job, saw $jobs")
     // the small regime still uses the driver pool (element fns there
     // launch their own Spark jobs, which must not nest inside a task)
     val small = client.map(Seq(1, 2, 3))(_ => org.apache.spark.TaskContext.get() == null)
